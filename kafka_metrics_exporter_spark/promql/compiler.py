@@ -97,6 +97,16 @@ from kafka_metrics_exporter_spark.promql.parser import (
 _META_COLS = {"name", "ts", "value", "hist"}
 
 
+def _check_matcher_label(m: Matcher) -> None:
+    """A matcher on a sample column (``ts``/``value``/``hist``) names no
+    label; reject it here instead of as an ambiguous column later."""
+    if m.label in _META_COLS - {"name"}:
+        raise ValueError(
+            f"promql: matcher on {m.label!r}: ts/value/hist are the engine's "
+            f"reserved sample columns, not labels"
+        )
+
+
 def _matcher_pred(m: Matcher) -> Column:
     return _matcher_pred_on(F.coalesce(F.col(m.label), F.lit("")), m)
 
@@ -519,6 +529,7 @@ def _eval_selector(node: Selector, metrics: DataFrame, label_cols) -> _Vec:
         labels.add("__name__")
     absent: set[str] = set()
     for m in node.matchers:
+        _check_matcher_label(m)
         lbl = m.label
         if lbl == "__name__" and node.name is None:
             src = F.coalesce(F.col("name"), F.lit(""))
@@ -1505,6 +1516,7 @@ def _eval_info(node: Info, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     idf = info.df
     if node.matchers:
         for m in node.matchers:
+            _check_matcher_label(m)
             if m.label not in info.labels:
                 idf = idf.withColumn(m.label, F.lit(""))
             idf = idf.filter(_matcher_pred(m))
@@ -2028,15 +2040,8 @@ def _absent_labels(expr) -> dict[str, str]:
         else:
             out.pop(m.label, None)
             poisoned.add(m.label)
-    # the result frame's reserved columns — a label literally named
-    # value/ts would clobber the result column the anti-join just
-    # built (the count_values hazard, ADVICE r5: validate loudly)
-    clash = sorted(set(out) & {"value", "ts"})
-    if clash:
-        raise ValueError(
-            f"promql: absent() matcher label(s) {clash} conflict with "
-            f"the engine's reserved result columns"
-        )
+    # a value/ts label cannot reach here: _eval_selector rejects
+    # matchers on the reserved sample columns before the anti-join
     return out
 
 

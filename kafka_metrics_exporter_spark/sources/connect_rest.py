@@ -197,8 +197,9 @@ def connect_snapshot_body(
     re-keyed to JMX ObjectNames so ONE downstream pipeline handles both
     sources (reference Code/ConnectRESTMetrics.py:143-169 feeding
     Code/JMXScraper.py:166-183) — here normalize_scrapes consumes the
-    envelope with zero special-casing.  Runs inside a source task, so
-    each Connect endpoint is one partition of the polling DataSource.
+    envelope with zero special-casing.  Runs inside a source task: each
+    Connect endpoint is one target of the polling DataSource, fetched on
+    the thread pool of whichever partition's slice holds it.
     """
     fetcher = resolve_fetcher(fetcher_ref)
     opts = fetcher_opts or {}

@@ -4,10 +4,13 @@ The reference scatters one HTTP GET per scrape URL over a thread pool
 and gathers results into an in-memory snapshot
 (reference Code/JMXScraper.py:120-183).  Here the scrape catalog
 becomes input partitions of a custom Python DataSource (Spark 4 public
-API): each partition fetches one URL batch on an executor, so the
-thread-pool fan-out is replaced by Spark task parallelism — on a
-1000-executor cluster the same code polls 100k endpoints per trigger
-with no driver bottleneck.
+API): the targets (Jolokia URLs, then Connect REST endpoints) are cut
+into ``min(#targets, parallelism)`` contiguous slices, one partition
+each, and every partition fetches its slice on a thread pool of up to
+``POLL_THREADS`` threads.  One poll cycle is therefore one wave of
+tasks on the cluster's cores, and a dead host costs one timeout per
+slice, not one per task; on a 1000-executor cluster the same code polls
+100k endpoints per trigger with no driver bottleneck.
 
 Batch:   spark.read.format("jolokia").option(...).load()
 Stream:  spark.readStream.format("jolokia")...  (one poll per micro-
@@ -77,37 +80,56 @@ def build_url_catalog(
     return deduped
 
 
-class _UrlPartition(InputPartition):
-    def __init__(self, server_type: str, url: str, execution_ts: int, kind: str = "jolokia"):
-        self.server_type = server_type
-        self.url = url
+# threads per partition, the reference's default poll-thread count
+# (reference Code/JMXScraper.py:149-183)
+POLL_THREADS = 25
+
+
+class _SlicePartition(InputPartition):
+    def __init__(self, targets: list[tuple[str, str, str]], execution_ts: int):
+        # (kind, server_type, url); kind is "jolokia" (HTTP GET) or
+        # "connect" (two-phase REST)
+        self.targets = targets
         self.execution_ts = execution_ts
-        self.kind = kind  # "jolokia" HTTP GET | "connect" two-phase REST
+
+
+def _slices(items: list, n: int) -> list[list]:
+    """``items`` cut into ``n`` contiguous, near-equal, non-empty runs."""
+    size, extra = divmod(len(items), n)
+    bounds = [i * size + min(i, extra) for i in range(n + 1)]
+    return [items[a:b] for a, b in zip(bounds, bounds[1:])]
 
 
 def _read_partition(
-    part: _UrlPartition,
+    part: _SlicePartition,
     fetcher_ref: str,
     timeout: float,
     fetcher_opts: dict | None = None,
 ):
+    from concurrent.futures import ThreadPoolExecutor
+
+    # two-phase REST scan collapsed into a synthetic Jolokia body
+    # (S3/J4; reference Code/ConnectRESTMetrics.py:143-169)
+    from kafka_metrics_exporter_spark.sources.connect_rest import (
+        connect_snapshot_body,
+    )
+    from kafka_metrics_exporter_spark.sources.fetchers import resolve_fetcher
+
     opts = fetcher_opts or {}
-    if part.kind == "connect":
-        # two-phase REST scan collapsed into a synthetic Jolokia body
-        # (S3/J4; reference Code/ConnectRESTMetrics.py:143-169)
-        from kafka_metrics_exporter_spark.sources.connect_rest import (
-            connect_snapshot_body,
-        )
+    fetcher = resolve_fetcher(fetcher_ref)
 
-        body = connect_snapshot_body(part.url, fetcher_ref, timeout, fetcher_opts=opts)
-    else:
-        from kafka_metrics_exporter_spark.sources.fetchers import resolve_fetcher
+    def fetch(target: tuple[str, str, str]) -> str | None:
+        kind, _, url = target
+        if kind == "connect":
+            return connect_snapshot_body(url, fetcher_ref, timeout, fetcher_opts=opts)
+        return fetcher(url, timeout, **opts)
 
-        fetcher = resolve_fetcher(fetcher_ref)
-        body = fetcher(part.url, timeout, **opts)
-    status = 200 if body is not None else 599
-    # RAW_SCRAPE_SCHEMA order: target_url, server_type, execution_ts, status, body
-    yield (part.url, part.server_type, part.execution_ts, status, body)
+    with ThreadPoolExecutor(min(len(part.targets), POLL_THREADS)) as pool:
+        bodies = list(pool.map(fetch, part.targets))
+    for (_, server_type, url), body in zip(part.targets, bodies):
+        status = 200 if body is not None else 599
+        # RAW_SCRAPE_SCHEMA order: target_url, server_type, execution_ts, status, body
+        yield (url, server_type, part.execution_ts, status, body)
 
 
 class _JolokiaReaderMixin:
@@ -127,6 +149,9 @@ class _JolokiaReaderMixin:
             "fetcher", "kafka_metrics_exporter_spark.sources.fetchers:http_fetcher"
         )
         self.timeout = float(options.get("timeout", "10"))
+        # slice count cap; read_jolokia sets it to the cluster's
+        # defaultParallelism, absent means one target per partition
+        self.parallelism = int(options.get("parallelism", "0"))
         self.connect_endpoints: list[str] = json.loads(
             options.get("connect_endpoints", "[]")
         )
@@ -183,19 +208,19 @@ class _JolokiaReaderMixin:
             catalog = list(
                 dict.fromkeys([*catalog, *self._discovered_catalog()])
             )
-        parts = [_UrlPartition(t, u, execution_ts) for t, u in catalog]
-        parts += [
-            _UrlPartition("KafkaConnect", ep, execution_ts, kind="connect")
-            for ep in self.connect_endpoints
-        ]
-        return parts
+        targets = [("jolokia", t, u) for t, u in catalog]
+        targets += [("connect", "KafkaConnect", ep) for ep in self.connect_endpoints]
+        if not targets:
+            return []
+        n = min(len(targets), self.parallelism or len(targets))
+        return [_SlicePartition(s, execution_ts) for s in _slices(targets, n)]
 
 
 class JolokiaBatchReader(_JolokiaReaderMixin, DataSourceReader):
     def partitions(self):
         return self._partitions(int(time.time() * 1000))
 
-    def read(self, partition: _UrlPartition):
+    def read(self, partition: _SlicePartition):
         yield from _read_partition(
             partition, self.fetcher_ref, self.timeout, self.fetcher_opts
         )
@@ -216,7 +241,7 @@ class JolokiaStreamReader(_JolokiaReaderMixin, DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         return self._partitions(int(end["ts"]))
 
-    def read(self, partition: _UrlPartition):
+    def read(self, partition: _SlicePartition):
         yield from _read_partition(
             partition, self.fetcher_ref, self.timeout, self.fetcher_opts
         )
@@ -232,6 +257,11 @@ class JolokiaDataSource(DataSource):
       catalog       — JSON [[server_type, url], ...] (build_url_catalog)
       fetcher       — "module:attr" fetcher ref (default stdlib urllib GET)
       timeout       — per-call seconds (default 10, reference Code/main.py:117)
+      parallelism   — internal: the partition count cap; the targets are
+                      cut into min(#targets, parallelism) contiguous
+                      slices, each fetched on up to POLL_THREADS threads
+                      (read_jolokia passes defaultParallelism; absent,
+                      every target is its own partition)
       auth_user     — basic-auth user (reference ConnectRESTMetrics.py:104-109)
       auth_password — basic-auth password
       tls_verify    — "true" to verify TLS certs (default false, like the
@@ -289,6 +319,7 @@ def read_jolokia(
         reader.format("jolokia")
         .option("catalog", json.dumps(list(catalog)))
         .option("timeout", str(timeout))
+        .option("parallelism", str(spark.sparkContext.defaultParallelism))
     )
     if fetcher:
         r = r.option("fetcher", fetcher)

@@ -39,7 +39,7 @@ def streaming_metrics(
 ) -> DataFrame:
     """Streaming normalized-metrics DataFrame: one poll cycle per
     micro-batch over the scrape catalog; Connect REST endpoints ride
-    as extra source partitions emitting synthetic Jolokia envelopes.
+    as extra source targets emitting synthetic Jolokia envelopes.
     With ``discovery`` set (a module:attr pod-lister ref), the catalog
     is re-resolved EVERY trigger — the reference's per-cycle K8s pod
     refresh (Code/main.py:274-282): a pod added mid-stream appears in
@@ -553,6 +553,9 @@ def alert_rules(
         # batch instead of paying a second source scan (optimization
         # r16, guide §1.2/§5: one pass per cycle over the batch)
         df = df.persist()
+        # the current group's persisted rule frames; the finally below
+        # releases them when a rule raises mid-group
+        group_persisted: list[DataFrame] = []
         try:
             hw = df.agg(
                 F.max(F.unix_micros(F.col("ts"))).alias("hw")
@@ -567,7 +570,6 @@ def alert_rules(
                 # unpersisting per-rule forced those consumers to
                 # recompute the full snap join against a state parquet
                 # _write_state may already have pruned (ADVICE r16)
-                group_persisted: list[DataFrame] = []
                 for i, rule in enumerate(g.rules):
                     out = plans[(g.name, i)].evaluate(cur)
                     if not isinstance(rule, AlertingRule):
@@ -676,6 +678,7 @@ def alert_rules(
                     # counting jobs and a recomputed snap join per rule
                     # per cycle for the same rows)
                     states = states.persist()
+                    group_persisted.append(states)
                     n_state = states.count()
                     result = states.select(
                         *label_cols,
@@ -692,7 +695,6 @@ def alert_rules(
                         new_state, g.name, rule.alert, batch_id, n_state
                     )
                     emit(g.name, rule.alert, result, batch_id)
-                    group_persisted.append(states)
                     # feed ALERTS back for later rules in the group
                     alert_series = _as_series(
                         states.select(
@@ -709,7 +711,10 @@ def alert_rules(
                     cur = _union_series(cur, alert_series)
                 for p in group_persisted:
                     p.unpersist()
+                group_persisted.clear()
         finally:
+            for p in group_persisted:
+                p.unpersist()
             df.unpersist()
 
     return (

@@ -242,6 +242,18 @@ def test_selector_and_matchers(tiny):
     assert out3.count() == 6
 
 
+@pytest.mark.parametrize("col", ["ts", "value", "hist"])
+def test_matcher_on_sample_column_fails_loudly(tiny, col):
+    """A matcher on a sample column names no label: a ValueError naming
+    it, not an ambiguous-column AnalysisException at execution."""
+    with pytest.raises(ValueError, match=f"matcher on '{col}'"):
+        compile_promql(f'm{{{col}="1"}}').evaluate(tiny)
+    with pytest.raises(ValueError, match=f"matcher on '{col}'"):
+        compile_promql(f'rate(m{{{col}=~"1.*"}}[1m])').evaluate(tiny)
+    with pytest.raises(ValueError, match=f"matcher on '{col}'"):
+        compile_promql(f'info(m, {{{col}="1"}})').evaluate(tiny)
+
+
 def test_rate_reset_clamp_and_first_sample(tiny):
     out = compile_promql("rate(m{topic = \"a\"}[1m])").evaluate(tiny)
     got = {r["ts"].minute: r["value"] for r in out.collect()}

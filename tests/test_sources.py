@@ -88,6 +88,92 @@ def test_jolokia_source_streaming_microbatch(spark, tmp_path):
     assert len(out) == 1 and out[0]["http_status"] == 200
 
 
+# --- Jolokia DataSource: one slice of targets per partition ---------------
+FAKE_BOTH = "tests.fake_connect_and_jolokia:fetch"
+ENDPOINTS = ["http://connect1:8083", "http://connect2:8083"]
+
+
+def _brokers(hosts: list[str]) -> list[tuple[str, str]]:
+    return build_url_catalog({"KafkaBroker": hosts}, common_mbeans=[])
+
+
+def test_jolokia_source_one_partition_per_core(spark):
+    p = spark.sparkContext.defaultParallelism
+    for n_hosts in (1, 2 * p):
+        cat = _brokers([f"kafka{i}:49901" for i in range(n_hosts)])
+        raw = read_jolokia(spark, cat, fetcher=FAKE_BOTH, connect_endpoints=ENDPOINTS)
+        assert raw.rdd.getNumPartitions() == min(n_hosts + len(ENDPOINTS), p)
+    # without the parallelism option every target is its own partition
+    raw = (
+        spark.read.format("jolokia")
+        .option("catalog", json.dumps(cat))
+        .option("fetcher", FAKE_BOTH)
+        .load()
+    )
+    assert raw.rdd.getNumPartitions() == len(cat)
+
+
+def test_jolokia_source_rows_in_catalog_order(spark):
+    p = spark.sparkContext.defaultParallelism
+    cat = build_url_catalog(
+        {
+            "KafkaBroker": [f"kafka{i}:49901" for i in range(2 * p)],
+            "ZooKeeper": ["zk1:8778"],
+        }
+    )
+    rows = read_jolokia(
+        spark, cat, fetcher=FAKE_BOTH, connect_endpoints=ENDPOINTS
+    ).collect()
+    assert [(r["server_type"], r["target_url"]) for r in rows] == [
+        *cat,
+        *(("KafkaConnect", ep) for ep in ENDPOINTS),
+    ]
+    assert all(r["http_status"] == 200 for r in rows)
+
+
+def test_jolokia_source_failed_fetch_fails_only_its_target(spark):
+    from pyspark.sql import functions as F
+
+    p = spark.sparkContext.defaultParallelism
+    hosts = [f"kafka{i}:49901" for i in range(3 * p)]
+    hosts[1] = "dead-kafka1:49901"
+    cat = _brokers(hosts)
+    rows = (
+        read_jolokia(
+            spark,
+            cat,
+            fetcher="tests.fake_slice_fetchers:fetch_failing_host",
+            connect_endpoints=ENDPOINTS,
+        )
+        .withColumn("part", F.spark_partition_id())
+        .collect()
+    )
+    dead = [r for r in rows if r["target_url"].startswith("http://dead-")]
+    assert len(dead) == 1
+    assert dead[0]["http_status"] == 599 and dead[0]["body"] is None
+    mates = [r for r in rows if r["part"] == dead[0]["part"]]
+    assert len(mates) > 1  # the dead target shares its slice
+    assert all(r["http_status"] == 200 for r in rows if r is not dead[0])
+    assert len(rows) == len(cat) + len(ENDPOINTS)
+
+
+def test_jolokia_source_fetches_a_slice_concurrently(spark):
+    """Every slice's targets meet at a barrier that a sequential fetch
+    of the slice cannot pass before its timeout."""
+    import uuid
+
+    p = spark.sparkContext.defaultParallelism
+    run, size = uuid.uuid4().hex[:8], 3
+    cat = _brokers(
+        [f"r{run}-s{s}-n{size}-{i}:8778" for s in range(p) for i in range(size)]
+    )
+    rows = read_jolokia(
+        spark, cat, fetcher="tests.fake_slice_fetchers:barrier_fetch"
+    ).collect()
+    assert len(rows) == p * size
+    assert all(r["http_status"] == 200 for r in rows)
+
+
 # --- Connect REST ----------------------------------------------------------
 def test_connect_rest_scan_two_phase(spark):
     scan = connect_rest_scan(
@@ -266,7 +352,7 @@ def test_merge_server_lists_union_and_new_types():
 
 
 def test_connect_endpoints_ride_the_datasource(spark):
-    """Connect REST endpoints become extra source partitions emitting a
+    """Connect REST endpoints become extra source targets emitting a
     synthetic Jolokia envelope that the stock normalizer consumes."""
     from kafka_metrics_exporter_spark.sources.jolokia import read_jolokia
 

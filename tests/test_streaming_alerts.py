@@ -30,7 +30,9 @@ groups:
 _SCHEMA = "name string, ts_s string, value double, topic string"
 
 
-def _drive(spark, tmp_path, batches, state_dir=None, **kwargs):
+def _drive(
+    spark, tmp_path, batches, state_dir=None, rules=_RULES, emit=None, **kwargs
+):
     from kafka_metrics_exporter_spark.streaming.pipeline import alert_rules
 
     src = tmp_path / "metrics"
@@ -48,13 +50,13 @@ def _drive(spark, tmp_path, batches, state_dir=None, **kwargs):
     )
     got = []
 
-    def emit(group, alert, df, batch_id):
+    def collect(group, alert, df, batch_id):
         got.append((group, alert, batch_id, df.collect()))
 
     q = alert_rules(
         stream,
-        _RULES,
-        emit,
+        rules,
+        emit or collect,
         checkpoint=str(tmp_path / "ckpt"),
         state_dir=state_dir or str(tmp_path / "state"),
         **kwargs,
@@ -130,6 +132,29 @@ def test_state_dir_keeps_bounded_versions(spark, tmp_path):
 
     versions = glob.glob(str(tmp_path / "state" / "live" / "Hot" / "v*"))
     assert 1 <= len(versions) <= 2  # keep_state_versions default
+
+
+def test_rule_error_mid_group_releases_persisted_frames(spark, tmp_path):
+    """A rule that raises mid-group must not leak the cycle frames the
+    group's earlier rules persisted (nor its own)."""
+    from pyspark.errors import StreamingQueryException
+
+    rules = _RULES + """  - alert: Hotter
+    expr: topic:m:max > 55
+  - alert: Hottest
+    expr: topic:m:max > 58
+"""
+
+    def emit(group, alert, df, batch_id):
+        if alert == "Hottest":
+            raise RuntimeError("emit failed")
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    batches = [[("m", "2024-01-01 00:00:30", 60.0, "t1")]]
+    with pytest.raises(StreamingQueryException, match="emit failed"):
+        _drive(spark, tmp_path, batches, rules=rules, emit=emit)
+    assert persistent().size() == before
 
 
 _TWO_CYCLES = [

@@ -8,7 +8,10 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -45,10 +48,21 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (and the
     llmdata extensions).  Each callable takes (spark, sf_dir) and
-    returns a DataFrame with columns aliased to match ``oracle_sql``."""
+    returns a DataFrame with columns aliased to match ``oracle_sql``.
+
+    Ordered stalest-first, so a gate that checks only a prefix checks
+    the least recently verified queries: each name sorts by the round
+    of the newest ``CORRECTNESS_r*.json`` naming it (never verified
+    first), ties in definition order."""
     from kafka_metrics_exporter_spark.plans import QUERIES
 
-    return dict(QUERIES)
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path, encoding="utf-8") as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, 0), rnd)
+    return {n: QUERIES[n] for n in sorted(QUERIES, key=lambda n: last.get(n, 0))}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,17 +1,10 @@
 """Query registry assembly.
 
 Imports execute the ``@query`` decorators in each module, filling
-``QUERIES`` / ``ORACLE_SQL`` in definition order; ``_reorder`` then
-rewrites both dicts so the driver's CORRECTNESS gate — which records
-only the FIRST 50 ``queries()`` entries in registration order — sees
-the entries that most need fresh verification this round.
-
-Window policy (VERDICT r3 item 1): every query that has never had a
-driver CORRECTNESS row, plus queries whose implementation changed this
-round, goes in slots 1-50; long-green core queries rotate out (they
-stay pinned by GOLDEN.json hashes and the pytest oracle harness).
-``tests/test_registry_window.py`` asserts the policy so a new query
-can't silently land outside the window.
+``QUERIES`` / ``ORACLE_SQL`` in definition order.  The driver contract
+(``__spark_entry__.queries()``) re-orders the registry stalest-first
+from the committed ``CORRECTNESS_r*.json`` files; the registry itself
+keeps no ordering state.
 """
 
 from kafka_metrics_exporter_spark.plans.queries import (  # noqa: F401
@@ -21,121 +14,3 @@ from kafka_metrics_exporter_spark.plans.queries import (  # noqa: F401
 from kafka_metrics_exporter_spark.plans import llm_queries  # noqa: E402,F401  (registers)
 from kafka_metrics_exporter_spark.plans import promql_queries  # noqa: E402,F401  (registers)
 from kafka_metrics_exporter_spark.plans import kibana_queries  # noqa: E402,F401  (registers)
-
-# Driver-side cap on recorded CORRECTNESS entries (observed r1-r3).
-CORRECTNESS_WINDOW = 50
-
-# The round this registry state targets.  tools/record_golden.py stamps
-# this into GOLDEN.json, and tests/test_registry_window.py asserts the
-# stamp matches — so every out-of-window exemption below is backed by a
-# GOLDEN re-record from THIS round's code, machine-checked (ADVICE r6:
-# exemptions must not be comment-only).
-CURRENT_ROUND = 17
-
-# Explicit first-window ordering for ROUND 17 (optimization round).
-#
-# The r16 gate RAN (CORRECTNESS_r16.json: 50/50 green), so the rotation
-# executes against it:
-#   - ALL 48 queries whose latest driver row is r15 (two gate-runs old,
-#     enumerated by test_rotation_promotes_stale_rows as r15-minus-r16)
-#     promote — no demotions this round, so STALE_OUT_OF_WINDOW is
-#     empty and no GOLDEN exemption re-record is required;
-#   - the 2 remaining slots go to the promql rows most affected by this
-#     round's plan-build batching (the _eval_selector rewrite + the
-#     vector-match include batching): promql_vector_matching and
-#     promql_info_join.  No query's SEMANTICS changed this round (the
-#     oracle hash of every row is byte-identical — full 152/152 sweep),
-#     so CHANGED_THIS_ROUND is empty; the two are promoted as the
-#     highest-value re-verification targets, not as semantic changes.
-#
-# Slot arithmetic: 48 stale promotions + 2 batching targets = 50.
-# Out-of-window debt after this rotation: the 50 r16-verified rows
-# (1 run old) only — r15's and r14's demotion ledgers were burned down
-# by the r16 rotation and this round's full promotion.  Every
-# out-of-window row remains replayed against its DuckDB oracle at
-# sf0.001 by tests/test_queries_oracle.py every session and hash-pinned
-# by GOLDEN.json.
-
-# Queries with no driver CORRECTNESS row in any EXISTING correctness
-# file — must be in-window.  (The 5 r16 registrations got their rows in
-# CORRECTNESS_r16.json; this optimization round registers nothing new.)
-NEW_THIS_ROUND: list[str] = []
-
-# Queries whose engine semantics changed this round — re-verification
-# required even though an older row is green (ADVICE r4).  None: this
-# is an optimization round; every result is hash-identical by
-# construction and verified by the full oracle sweep.
-CHANGED_THIS_ROUND: list[str] = []
-
-CHANGED_OUT_OF_WINDOW: list[str] = []
-
-# No demotions this round: all 48 r15-latest rows fit the window.
-STALE_OUT_OF_WINDOW: list[str] = []
-
-WINDOW_PRIORITY = [
-    # -- latest driver row is r15 (2 gate-runs old): full promotion ----
-    "a10_sum_without",
-    "a5_count_distinct",
-    "a9b_sum_of_topk",
-    "dedup_components_star",
-    "dedup_minhash_components",
-    "dedup_url",
-    "embed_binary_topk",
-    "embed_cluster_dedup",
-    "embed_ivfpq_topk",
-    "j1_cross_join",
-    "j7_range_join",
-    "kibana_bucket_correlation",
-    "kibana_composite",
-    "kibana_ks_test",
-    "kibana_pipeline",
-    "kibana_sampler",
-    "kibana_stats_tests",
-    "multimodal_channel_stats",
-    "multimodal_frames",
-    "o7_except_all",
-    "openmetrics_roundtrip",
-    "p1_objectname_pivot",
-    "pipe_bloom_decontaminate",
-    "pipe_corpus_build",
-    "pipe_dsir_resample",
-    "pipe_pack_chunks",
-    "promql_at_offset",
-    "promql_histogram_quantile_grid",
-    "promql_label_functions",
-    "promql_limit_sample",
-    "promql_over_time_pack",
-    "promql_quantile_agg",
-    "promql_resets_changes",
-    "promql_round_scalar",
-    "promql_rules_group",
-    "promql_set_ops",
-    "promql_topk_rate_grid",
-    "promql_vector_compare",
-    "rules_rewrite",
-    "streaming_alerts_replay",
-    "text_bpe_tokens",
-    "text_metrics",
-    "text_tfidf_topk",
-    "text_token_rarity",
-    "w11_rollup_cascade",
-    "w12_window_time_cascade",
-    "w7_session_window",
-    "w7b_sliding_window",
-    # -- r17 plan-build batching's most-affected paths (r16-verified,
-    # promoted for re-verification on the new build code) -------------
-    "promql_vector_matching",
-    "promql_info_join",
-]
-
-
-def _reorder() -> None:
-    for d in (QUERIES, ORACLE_SQL):
-        items = dict(d)
-        ordered = {n: items[n] for n in WINDOW_PRIORITY if n in items}
-        ordered.update({n: v for n, v in items.items() if n not in ordered})
-        d.clear()
-        d.update(ordered)
-
-
-_reorder()

@@ -4,6 +4,7 @@ cycle through catalog → stream → daily-parquet sink."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from kafka_metrics_exporter_spark.app import build_catalog, build_parser, main
 
@@ -388,12 +389,13 @@ def test_selector_filter_parse_errors():
         parse_selector_filters(["not-a-pair"])
 
 
+@pytest.mark.reference
 def test_cli_arg_parity_with_reference():
     """Walk every --flag in the reference's argparse setup
     (Code/main.py) and require each to be either accepted by our
     parser verbatim or explicitly mapped/diverged below — so a
     reference flag can never silently fall off the surface."""
-    ref = open("/root/reference/Code/main.py").read()
+    ref = open(reference_path("Code", "main.py")).read()
     ref_flags = set(re.findall(r"add_argument\('(--[a-z0-9-]+)'", ref))
     assert len(ref_flags) >= 25, "reference flag extraction broke"
 
@@ -404,7 +406,9 @@ def test_cli_arg_parity_with_reference():
     # with the reason)
     mapped = {
         # thread pools: Spark's scheduler owns parallelism (the source
-        # fans out one partition per URL; sinks are connector-managed)
+        # cuts its targets into min(#targets, defaultParallelism)
+        # slices, each fetched on up to POLL_THREADS threads; sinks are
+        # connector-managed)
         "--thread-count": None,
         "--jmx-poll-thread-count": None,
         "--connect-thread-count": None,
@@ -436,6 +440,7 @@ def test_cli_arg_parity_with_reference():
     assert not missing, f"reference CLI flags unaccounted for: {missing}"
 
 
+@pytest.mark.reference
 def test_kibana_url_runs_bootstrap(spark, tmp_path, monkeypatch):
     """--kibana-url + --es-url runs the sink DDL bootstrap before the
     stream starts (reference Code/ElasticSearchAppender.py:43-79)."""
@@ -458,7 +463,7 @@ def test_kibana_url_runs_bootstrap(spark, tmp_path, monkeypatch):
     rc = main(
         ["--jmx-kafka-server", "kafka1:49901", "--fetcher", FAKE,
          "--es-url", "http://es:9200", "--kibana-url", "http://kib:5601",
-         "--kibana-dashboards", "/root/reference/ELK/jmx_dashboard.json",
+         "--kibana-dashboards", reference_path("ELK", "jmx_dashboard.json"),
          "--checkpoint", str(tmp_path / "ckpt"), "--once"],
         spark=spark,
     )
@@ -468,7 +473,7 @@ def test_kibana_url_runs_bootstrap(spark, tmp_path, monkeypatch):
     # the reference's 32 saved objects imported under their export _ids
     import json as _json
 
-    objs = _json.load(open("/root/reference/ELK/jmx_dashboard.json"))
+    objs = _json.load(open(reference_path("ELK", "jmx_dashboard.json")))
     assert sum(1 for p in puts if p.startswith(".kibana/_doc/")) >= len(objs)
     assert any(o["_id"] in p for o in objs for p in puts)
 

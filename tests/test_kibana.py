@@ -6,9 +6,9 @@ shaped documents table) plus semantics units for each agg type.
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
+from conftest import HAVE_REFERENCE, reference_cases, reference_path
 from pyspark.sql import functions as F
 
 from kafka_metrics_exporter_spark.kibana import (
@@ -21,14 +21,16 @@ from kafka_metrics_exporter_spark.kibana.compiler import (
     TermsBucket,
 )
 
-_DASH = "/root/reference/ELK/jmx_dashboard.json"
-
-if not os.path.exists(_DASH):  # pragma: no cover
-    pytest.skip("reference ELK dashboard not present", allow_module_level=True)
+_DASH = reference_path("ELK", "jmx_dashboard.json")
 
 _VISES = [
-    o for o in json.load(open(_DASH)) if o.get("_type") == "visualization"
+    o
+    for o in (json.load(open(_DASH)) if HAVE_REFERENCE else [])
+    if o.get("_type") == "visualization"
 ]
+_VIS_CASES = reference_cases(
+    [pytest.param(v, id=v["_source"]["title"][:40]) for v in _VISES]
+)
 
 
 def _fields_of(state) -> set[str]:
@@ -45,6 +47,7 @@ def _fields_of(state) -> set[str]:
     return fields
 
 
+@pytest.mark.reference
 def test_corpus_is_the_documented_size():
     assert len(_VISES) == 27
 
@@ -90,9 +93,8 @@ def _synth_frame(spark, state):
     return df
 
 
-@pytest.mark.parametrize(
-    "vis", _VISES, ids=[v["_source"]["title"][:40] for v in _VISES]
-)
+@pytest.mark.reference
+@pytest.mark.parametrize("vis", _VIS_CASES)
 def test_corpus_vis_parses_compiles_runs(vis, spark):
     """Every corpus visualization must compile and execute end-to-end
     on a documents table carrying its fields."""
@@ -381,9 +383,8 @@ from kafka_metrics_exporter_spark.plans.fingerprint import (  # noqa: E402
 )
 
 
-@pytest.mark.parametrize(
-    "vis", _VISES, ids=[v["_source"]["title"][:40] for v in _VISES]
-)
+@pytest.mark.reference
+@pytest.mark.parametrize("vis", _VIS_CASES)
 def test_corpus_plans_have_no_single_partition_window(vis, spark):
     """VERDICT r5 item 1: a top-level ordered-terms bucket must rank
     the one-row-per-term aggregate with orderBy().limit() + broadcast
@@ -543,6 +544,7 @@ def test_terms_ordered_by_min(docs):
         )
 
 
+@pytest.mark.reference
 def test_compile_export_whole_dashboards():
     """Round-7 whole-export replay (the ES twin of
     promql.compile_dashboard): every aggs-bearing visualization of the

@@ -9,6 +9,7 @@ import datetime as dt
 import math
 
 import pytest
+from conftest import GRAFANA_DASHBOARDS
 from pyspark.sql import functions as F
 
 from kafka_metrics_exporter_spark.sources.openmetrics import (
@@ -212,6 +213,7 @@ def test_parse_plan_stays_jvm_side(spark):
     assert "EvalPython" not in plan
 
 
+@pytest.mark.reference
 def test_lake_replay_dashboard_e2e(spark, tmp_path):
     """VERDICT r7 item 6 — the scrape-dump-directory-as-a-lake story
     end-to-end: serialize an hourly series view to exposition text
@@ -270,10 +272,7 @@ def test_lake_replay_dashboard_e2e(spark, tmp_path):
     back_rows = {tuple(r[c] for c in cols) for r in back.collect()}
     assert orig_rows == back_rows  # the lake round trip is the identity
 
-    with open(
-        "/root/reference/Prometheus/jmxexporter_configs/grafana/dashboards/"
-        "ZooKeeper_Dashboard.json"
-    ) as fh:
+    with open(os.path.join(GRAFANA_DASHBOARDS, "ZooKeeper_Dashboard.json")) as fh:
         zk = json.load(fh)
     plans = compile_dashboard(zk, variables={"ServerName": "host0:1234"})
     assert len(plans) == 8

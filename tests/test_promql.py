@@ -18,11 +18,10 @@ import json
 import os
 
 import pytest
+from conftest import GRAFANA_DASHBOARDS, reference_cases
 from pyspark.sql import functions as F
 
 from kafka_metrics_exporter_spark.promql import compile_promql, parse
-
-_DASH_GLOB = "/root/reference/Prometheus/jmxexporter_configs/grafana/dashboards/*.json"
 
 
 def _corpus_exprs() -> list[str]:
@@ -38,20 +37,23 @@ def _corpus_exprs() -> list[str]:
             for v in node:
                 walk(v)
 
-    for path in sorted(glob.glob(_DASH_GLOB)):
+    for path in sorted(glob.glob(os.path.join(GRAFANA_DASHBOARDS, "*.json"))):
         with open(path, encoding="utf-8") as fh:
             walk(json.load(fh))
     return exprs
 
 
 CORPUS = _corpus_exprs()
+_EXPR_CASES = reference_cases(sorted(set(CORPUS)))
 
 
+@pytest.mark.reference
 def test_corpus_is_the_documented_size():
     assert len(CORPUS) == 49
 
 
-@pytest.mark.parametrize("expr", sorted(set(CORPUS)))
+@pytest.mark.reference
+@pytest.mark.parametrize("expr", _EXPR_CASES)
 def test_corpus_expr_parses(expr):
     parse(expr)  # must not raise
 
@@ -104,7 +106,8 @@ def corpus_metrics(spark):
     return spark.createDataFrame(rows, schema)
 
 
-@pytest.mark.parametrize("expr", sorted(set(CORPUS)))
+@pytest.mark.reference
+@pytest.mark.parametrize("expr", _EXPR_CASES)
 def test_corpus_expr_compiles_and_runs(expr, corpus_metrics):
     out = compile_promql(expr).evaluate(corpus_metrics)
     assert {"ts", "value"} <= set(out.columns)
@@ -146,6 +149,7 @@ def test_variable_interpolation_forms():
     assert interpolate_variables("$Unknown + $v", {"v": "1"}) == "$Unknown + 1"
 
 
+@pytest.mark.reference
 def test_corpus_variable_panels_execute_with_binding(corpus_metrics):
     """VERDICT r6 item 2: the ZooKeeper dashboard's six $ServerName
     panels, replayed as a USER would — with the template variable bound
@@ -1141,7 +1145,8 @@ def test_last_over_time_duplicate_timestamp_is_deterministic(spark):
     assert grid["2024-01-01 00:02:00"] == 9.0
 
 
-@pytest.mark.parametrize("expr", sorted(set(CORPUS)))
+@pytest.mark.reference
+@pytest.mark.parametrize("expr", _EXPR_CASES)
 def test_corpus_expr_runs_in_range_mode(expr, corpus_metrics):
     """VERDICT r4 item 2: every Grafana panel in the reference is a
     RANGE query, so the full 49-expression corpus must also compile and
@@ -1849,11 +1854,7 @@ def test_all_variable_in_multi_value_list():
     assert interpolate_variables("$v", {"v": ["a", "$__all"]}) == ".*"
 
 
-_DASH_DIR = os.path.join(
-    "/root/reference/Prometheus/jmxexporter_configs/grafana/dashboards"
-)
-
-
+@pytest.mark.reference
 def test_compile_dashboard_covers_all_reference_panels():
     """Round-7 whole-dashboard replay: every panel target of all three
     reference dashboards (25 + 16 + 8 = the 49-expr corpus) extracts,
@@ -1872,7 +1873,7 @@ def test_compile_dashboard_covers_all_reference_panels():
     }
     total = 0
     for fname, n in expected.items():
-        with open(os.path.join(_DASH_DIR, fname)) as fh:
+        with open(os.path.join(GRAFANA_DASHBOARDS, fname)) as fh:
             dash = json.load(fh)
         targets = dashboard_targets(dash)
         assert len(targets) == n, (fname, len(targets))
@@ -1884,18 +1885,19 @@ def test_compile_dashboard_covers_all_reference_panels():
         for key, plan in plans.items():
             assert plan.ast is not None, key
     assert total == 49  # the documented corpus size
-    with open(os.path.join(_DASH_DIR, "ZooKeeper_Dashboard.json")) as fh:
+    with open(os.path.join(GRAFANA_DASHBOARDS, "ZooKeeper_Dashboard.json")) as fh:
         zk = json.load(fh)
     assert "ServerName" in dashboard_variables(zk)
 
 
+@pytest.mark.reference
 def test_zookeeper_dashboard_replay_end_to_end(corpus_metrics):
     """The ZooKeeper dashboard replayed panel-by-panel with ServerName
     bound: every panel executes, and the variable-bearing ones return
     only the bound instance."""
     from kafka_metrics_exporter_spark.promql import compile_dashboard
 
-    with open(os.path.join(_DASH_DIR, "ZooKeeper_Dashboard.json")) as fh:
+    with open(os.path.join(GRAFANA_DASHBOARDS, "ZooKeeper_Dashboard.json")) as fh:
         dash = json.load(fh)
     plans = compile_dashboard(dash, variables={"ServerName": "host0:1234"})
     assert len(plans) == 8

@@ -4,6 +4,11 @@ re-runs the same gate at sf0.01)."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+
 import duckdb
 import pytest
 
@@ -25,6 +30,29 @@ def duck(sf_dir):
 
 def test_every_oracle_key_has_a_query():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_queries_order_is_stalest_first():
+    """A gate that checks only the first 50 ``queries()`` checks the 50
+    least recently verified: names sort by the newest committed
+    CORRECTNESS_r*.json naming them, never-verified names first, ties
+    in registry definition order."""
+    from kafka_metrics_exporter_spark.plans import QUERIES as REGISTRY
+
+    repo = os.path.dirname(os.path.abspath(entry_mod.__file__))
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        for name in json.load(open(path, encoding="utf-8")):
+            last[name] = max(last.get(name, 0), rnd)
+    order = list(QUERIES)
+    assert set(order) == set(REGISTRY)
+    rounds = [last.get(n, 0) for n in order]
+    assert rounds == sorted(rounds)
+    assert max(rounds[:50]) <= min(rounds[50:])
+    for rnd in set(rounds):
+        tied = [n for n in order if last.get(n, 0) == rnd]
+        assert tied == [n for n in REGISTRY if last.get(n, 0) == rnd]
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

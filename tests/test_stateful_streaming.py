@@ -4,7 +4,10 @@ batch 1 (maxFilesPerTrigger=1 forces one micro-batch per file)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from conftest import GRAFANA_DASHBOARDS
 
 from kafka_metrics_exporter_spark.streaming.stateful import streaming_rate
 
@@ -351,6 +354,7 @@ def test_promql_panels_grid_mode_per_microbatch(spark, tmp_path):
     assert 999.0 not in g1.values()
 
 
+@pytest.mark.reference
 def test_dashboard_panels_on_live_stream(spark, tmp_path):
     """Round-7 composition: a REAL reference dashboard (ZooKeeper, 8
     panel targets) dropped onto a live stream via dashboard_exprs →
@@ -363,10 +367,7 @@ def test_dashboard_panels_on_live_stream(spark, tmp_path):
     from kafka_metrics_exporter_spark.promql import dashboard_exprs
     from kafka_metrics_exporter_spark.streaming.pipeline import promql_panels
 
-    with open(
-        "/root/reference/Prometheus/jmxexporter_configs/grafana/dashboards/"
-        "ZooKeeper_Dashboard.json"
-    ) as fh:
+    with open(os.path.join(GRAFANA_DASHBOARDS, "ZooKeeper_Dashboard.json")) as fh:
         dash = json.load(fh)
     exprs = dashboard_exprs(dash, variables={"ServerName": "zk1:7000"})
     assert len(exprs) == 8

@@ -9,13 +9,6 @@ Usage: python tools/record_golden.py [query ...]
   With no args, rewrites GOLDEN.json from scratch.  With query names,
   re-records ONLY those rows (identical computation) and keeps the
   rest — for adding/refreshing a few queries without a full replay.
-
-Round stamps (ADVICE r10): each query row carries its own ``round`` —
-the plans.CURRENT_ROUND in effect when THAT row was recorded.  The
-file-level ``round`` is the round of the last FULL record; a partial
-record keeps it, so a partial run can never make carried-forward
-hashes look freshly attested.  tests/test_registry_window.py checks
-the per-query stamp for out-of-window exemptions.
 """
 
 from __future__ import annotations
@@ -37,39 +30,24 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from kafka_metrics_exporter_spark.session import get_spark
 
-    from kafka_metrics_exporter_spark.plans import CURRENT_ROUND
-
     spark = get_spark(app_name="record-golden", master="local[8]", shuffle_partitions=8)
     only = set(sys.argv[1:])
     golden: dict[str, dict] = {}
-    file_round = CURRENT_ROUND
     if only and os.path.exists(GOLDEN_PATH):
         prior = json.load(open(GOLDEN_PATH, encoding="utf-8"))
-        # a partial record attests only the named queries — keep the
-        # file-level round of the last FULL record, and make sure every
-        # carried-forward row keeps (or gains) its own stamp
-        file_round = prior.get("round", CURRENT_ROUND)
         live = set(entry_mod.queries())
-        golden = {
-            n: {**v, "round": v.get("round", file_round)}
-            for n, v in prior["queries"].items()
-            if n in live
-        }
+        golden = {n: v for n, v in prior["queries"].items() if n in live}
     for name, fn in entry_mod.queries().items():
         if only and name not in only:
             continue
         pdf = canon(fn(spark, SF_DIR).toPandas())
-        golden[name] = {
-            "rows": len(pdf),
-            "hash": value_hash(pdf),
-            "round": CURRENT_ROUND,
-        }
+        golden[name] = {"rows": len(pdf), "hash": value_hash(pdf)}
         print(f"{name}: rows={len(pdf)} hash={golden[name]['hash']}")
         spark.catalog.clearCache()
 
     with open(GOLDEN_PATH, "w", encoding="utf-8") as fh:
         json.dump(
-            {"sf_dir": SF_DIR, "round": file_round, "queries": golden},
+            {"sf_dir": SF_DIR, "queries": golden},
             fh,
             indent=1,
             sort_keys=True,

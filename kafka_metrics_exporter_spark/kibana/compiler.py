@@ -3,43 +3,52 @@
 The reference's ELK dashboard (ELK/jmx_dashboard.json:88-452, 27
 visualizations) drives Kibana aggregations over the flattened metric
 documents the exporter writes to Elasticsearch.  This module compiles
-exactly that agg vocabulary to Spark plans:
+those aggs, and the wider ES agg vocabulary around them, to Spark
+plans.  The README's "Kibana front end" row lists the supported kinds
+and their documented divergences from ES.
 
-- **bucket aggs** (schema ``bucket``/``segment``/``group``/``split``/
-  ``row``): ``terms`` (group by a field, keep the top ``size`` terms
-  per parent bucket, ordered by the term itself or by a metric),
-  ``date_histogram`` (fixed-interval time buckets; Kibana's
-  ``interval: auto`` derives the bucket width from the data's time
-  span exactly as ES does — see ``DateHistogramBucket`` — with
-  ``customInterval`` honored when the panel pins one), ``filters``
-  (named query_string predicates; a document
-  lands in every bucket it matches).
-- **metric aggs** (schema ``metric``): ``avg``/``max``/``sum``,
-  ``cardinality`` (exact countDistinct by default for oracle parity;
-  ``evaluate(..., approx_cardinality=True)`` switches every
-  cardinality — metric and terms-ordering — to HLL
-  ``approx_count_distinct``, which is what ES itself computes and what
-  a 100 TB deployment should run), and ``top_hits`` with
-  ``size: 1`` (the corpus's only size): the latest value per bucket by
-  ``sortField``/``sortOrder``, with the ``aggregate`` label
-  (average/concat/sum/max) degenerate over a single hit.
+Where a kind lives:
 
-Compiled output is one DataFrame: bucket key columns (aliased from
-``customLabel``) then metric columns.  Everything is built-in Column
-expressions — one hash aggregation over the bucket keys; a terms
-bucket ordered by a metric adds one aggregation at that bucket's level
-joined back (broadcast — term cardinality ≤ ``size`` per parent); a
-terms bucket ordered by ``_term`` is a rank window.  No UDFs, no
-collects, so plans scale exactly like the hand-written A*/W* suite.
+- ``_KINDS`` maps each visState ``type`` to its role and its parse
+  function.  The role decides where the parsed agg goes (bucket,
+  metric or one of the pipeline lists) and whether its ``schema`` must
+  be a bucket schema; a ``sole`` bucket kind must also be the request's
+  only bucket agg, with no pipeline aggs.
+- Everything else is the kind's dataclass: the ``parse`` staticmethod
+  validating its params, and the methods :meth:`KibanaPlan.evaluate`
+  calls — ``add_key`` for buckets (with the ``_Bucket`` flags the
+  shared stages read), ``aggs``/``join``/``finish``/``zero_names`` for
+  metrics, ``evaluate_alone`` for sole buckets, and ``column_names``/
+  ``outputs`` for everything that adds columns.
+
+``evaluate`` runs fixed stages; each kind fills in only its own part:
+
+1. a sole bucket kind (composite, significant_terms, significant_text,
+   categorize_text, frequent_item_sets) evaluates alone and returns;
+2. bucket keys, outermost first (samplers and nested reshape the doc
+   frame instead of adding a key);
+3. ONE hash aggregation over the bucket-key tuple of every metric's
+   aggregates; deferred metrics join back (top_hits/top_metrics with
+   size > 1, the string_stats entropy, median_absolute_deviation) and
+   multi-column metrics finish from their hidden partials;
+4. bucket-level cuts: terms-like size/order ranking, rare_terms long
+   tails, (date_)histogram min_doc_count filters and zero-fill;
+5. pipeline aggs in request order, then bucket_sort;
+6. the projection: key columns, then every agg's ``outputs()``.
+
+Aggregation is built-in Column expressions; the few eager passes
+(auto intervals, variable_width_histogram training, frequent_item_sets'
+closed-set table, categorize_text merging) are documented on their
+kinds.  A terms bucket ordered by a metric adds one aggregation at that
+bucket's level joined back, and no stage runs an unpartitioned window
+over an unbounded relation.
 
 Determinism: ES leaves top_hits ties on equal sort values unresolved;
 this compiler breaks them by a caller-named tiebreak column
 (``tiebreak=``) so results are stable under any partitioning — the
-documented engine choice (SURVEY §7.3 total-order rule).
-
-query_string subset (the corpus uses only these): ``field: value`` →
-equality on the resolved field; a bare quoted ``"phrase"`` → substring
-match on the resolver's default search field.
+documented engine choice (SURVEY §7.3 total-order rule).  The
+query_string subset the filter-like kinds use is implemented at the end
+of the module (``_query_string_pred``).
 """
 
 from __future__ import annotations
@@ -48,7 +57,7 @@ import json
 import math
 import re
 import unicodedata
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -72,10 +81,328 @@ _INTERVAL_UNITS_US = {
 
 
 # ---------------------------------------------------------------------------
+# kind protocol
+# ---------------------------------------------------------------------------
+class _Agg:
+    """Output protocol of metric and pipeline kinds."""
+
+    def column_names(self) -> list[str]:
+        return [self.label]
+
+    def outputs(self) -> list[Column]:
+        """The agg's columns in evaluate's final projection."""
+        return [F.col(n) for n in self.column_names()]
+
+
+class _Metric(_Agg):
+    """Metric-kind hooks, called by evaluate in metric order."""
+
+    #: deferred metrics join back after the main aggregation, in this
+    #: rank order (then metric order): top_hits, top_metrics, the
+    #: string_stats entropy, median_absolute_deviation; 0 = no join
+    join_rank = 0
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        """Aggregate expressions riding the main hash aggregation."""
+        return []
+
+    def join(self, out: DataFrame, df: DataFrame, keys: list[str],
+             ev: _Eval) -> DataFrame:
+        """Join deferred per-bucket columns onto the aggregated frame."""
+        return out
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        """Derive the output columns from hidden aggregated partials."""
+        return out
+
+    def zero_names(self) -> list[str]:
+        """Columns a zero-filled empty bucket sets to 0, not null."""
+        return []
+
+
+class _Bucket:
+    """Bucket-kind flags read by evaluate's shared stages, and hooks
+    with their defaults."""
+
+    keyed = True  # adds a key column (samplers and nested reshape docs)
+    ranked = False  # size/order cut by the terms ranking stage
+    sequence = False  # a histogram axis (pipelines, min_doc_count)
+    narrows = False  # keeps only the docs of ONE named bucket
+    drops_rows = False  # may drop docs (null key, size or tail cut)
+    explodes = False  # a doc may land in several buckets
+    #: sole-bucket kinds: ``evaluate_alone(df, ev)`` is the whole
+    #: evaluation
+    evaluate_alone = None
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        """Add this level's key column to the doc frame."""
+        raise NotImplementedError
+
+    def leaf_aggs(self) -> list[Column]:
+        """Hidden aggregates when this is the innermost bucket."""
+        return []
+
+    def level_aggs(self, i: int, buckets: tuple) -> list[Column]:
+        """Hidden aggregates for this level's post-aggregation cut."""
+        return []
+
+    def rank(self, out: DataFrame, df: DataFrame, prefix: list[str],
+             ev: _Eval) -> DataFrame:
+        """Terms-like size/order cut (stage 4a)."""
+        return out
+
+    def tail_cut(self, out: DataFrame, prefix: list[str],
+                 ev: _Eval) -> DataFrame:
+        """rare_terms long-tail cut (stage 4b)."""
+        return out
+
+    def level_cut(self, out, i, keys, mdc_src, metrics, ev) -> DataFrame:
+        """(date_)histogram min_doc_count cut or zero-fill (stage 4c)."""
+        return out
+
+
+class _Ranked(_Bucket):
+    """terms, multi_terms and the geo grids: keep the top ``size`` keys
+    per parent bucket by the key itself or by an ordering metric.
+    Protocol: ``order``, ``order_by``, ``order_metric``, ``size``."""
+
+    ranked = True
+    drops_rows = True
+
+    def rank(self, out: DataFrame, df: DataFrame, prefix: list[str],
+             ev: _Eval) -> DataFrame:
+        """A TOP-LEVEL bucket never uses a window: the windowed relation
+        would be the term × inner-bucket TUPLE table and
+        ``Window.partitionBy(F.lit(1))`` constant-folds to an EMPTY
+        partition spec — Spark moves the whole relation to one task
+        ("No Partition Defined for Window operation").  Instead the
+        top-N TERMS are picked from the one-row-per-term relation with
+        orderBy().limit() (TakeOrderedAndProject — ≤ size rows, no
+        shuffle concentration) and semi-joined back (broadcast: the
+        survivor side is ≤ size rows by construction).  Nested terms
+        keep the window — its partition spec (the parent bucket keys)
+        is real, so the rank distributes."""
+        direction = (
+            (lambda c: c.desc()) if self.order == "desc" else (lambda c: c.asc())
+        )
+        if self.order_by == "_term":
+            order_cols = [direction(F.col(self.label))]
+            if not prefix:
+                top_terms = (
+                    out.select(self.label).distinct().orderBy(*order_cols)
+                    .limit(self.size)
+                )
+                return out.join(
+                    F.broadcast(top_terms), [self.label], "left_semi"
+                )
+        else:
+            op, fld = self.order_metric
+            # the ordering metric is computed at THIS bucket's level
+            # (over the raw docs), not from leaf partials — matches ES,
+            # and stays exact for non-decomposable ops like cardinality
+            if op == "cardinality":
+                ord_expr = ev.count_distinct(ev.resolve(fld))
+            elif op == "count":
+                ord_expr = F.count(F.lit(1))
+            else:
+                ord_expr = {
+                    "avg": F.avg, "min": F.min, "max": F.max, "sum": F.sum
+                }[op](ev.resolve(fld).cast("double"))
+            lvl = df.groupBy(*[F.col(c) for c in prefix + [self.label]]).agg(
+                ord_expr.alias("__ord")
+            )
+            order_cols = [direction(F.col("__ord")), F.col(self.label).asc()]
+            if not prefix:
+                top_terms = (
+                    lvl.orderBy(*order_cols).limit(self.size).select(self.label)
+                )
+                return out.join(
+                    F.broadcast(top_terms), [self.label], "left_semi"
+                )
+            out = out.join(F.broadcast(lvl), prefix + [self.label], "left")
+        w = Window.partitionBy(*[F.col(c) for c in prefix]).orderBy(*order_cols)
+        # dense_rank, NOT row_number: the frame rows are bucket TUPLES
+        # (this term × every inner bucket), and ES's size keeps the
+        # top-N TERMS with all their children.  The order columns are
+        # constant within a term and distinct across terms (the term
+        # itself is the tiebreak), so dense_rank is exactly the term's
+        # rank repeated on each of its rows.
+        return (
+            out.withColumn("__rn", F.dense_rank().over(w))
+            .filter(F.col("__rn") <= self.size)
+            .drop("__rn", "__ord")
+        )
+
+
+class _Histogram(_Bucket):
+    """date_histogram and histogram: the sequence axis of parent
+    pipelines, and ES ``min_doc_count`` (round 12).  >= 2 keeps buckets
+    whose OWN-LEVEL doc count reaches the threshold; 0 zero-fills the
+    innermost histogram's empty buckets (:meth:`grid`)."""
+
+    sequence = True
+
+    def level_aggs(self, i: int, buckets: tuple) -> list[Column]:
+        """A hidden leaf count rolled up by a keys[:i+1] window at
+        stage 4c.  Validated here, loudly: an explode-type bucket nested
+        BELOW the histogram would inflate the level count (a doc lands
+        in several range/filter buckets), and a zero-filled EMPTY bucket
+        above other buckets has no child rows — the flattened relation
+        cannot represent it, so min_doc_count=0 requires the histogram
+        innermost."""
+        if self.min_doc_count == 1:
+            return []
+        exploding = [inner.label for inner in buckets[i + 1:] if inner.explodes]
+        if exploding:
+            raise ValueError(
+                f"kibana: min_doc_count on {self.label!r} cannot sit above "
+                f"row-exploding buckets {exploding} — the level doc "
+                f"count would be inflated"
+            )
+        if self.min_doc_count == 0 and i != len(buckets) - 1:
+            raise ValueError(
+                f"kibana: min_doc_count=0 needs {self.label!r} to be the "
+                f"innermost bucket — an empty bucket above other "
+                f"buckets has no child rows in the flattened result"
+            )
+        return [F.count(F.lit(1)).alias(f"__mdc_{self.label}")]
+
+    def level_cut(self, out, i, keys, mdc_src, metrics, ev) -> DataFrame:
+        """>= 2: the level count is the window-sum of leaf counts over
+        the keys up to this bucket when nothing below can drop rows
+        (exact: no exploding bucket sits below, validated in
+        :meth:`level_aggs`), else a pre-cut level count joined from the
+        ``mdc_src`` snapshot (ADVICE r12: inner size cuts / null drops
+        must not shrink the histogram's own doc count).  == 0:
+        ZERO-FILL — per parent bucket, generate the full key grid
+        between the first and last populated key (exactly ES's fill
+        span without extended_bounds), left-join the real rows on, and
+        give empty buckets doc_count/cardinality/sum 0 with every other
+        metric null (ES's empty-bucket values).  The grid is bounded by
+        span/interval per parent — bucket-table-sized, never
+        doc-sized; pipelines then run over the filled grid, deriving
+        the same values ES derives across empty buckets."""
+        if self.min_doc_count == 1:
+            return out
+        cnt_col = f"__mdc_{self.label}"
+        if self.min_doc_count >= 2:
+            lvl_keys = keys[: i + 1]
+            if self.label in mdc_src:
+                # inner buckets can DROP rows (terms/multi_terms size
+                # cut or null-key filter, rare_terms long tail,
+                # histogram null drop) — the leaf window-sum would
+                # undercount, so the level count comes from the pre-cut
+                # snapshot taken at this bucket's level (ADVICE r12).
+                # Level-bucket-sized relation joined on the level keys;
+                # like rare_terms, the qualifying side is unbounded (a
+                # time axis), so no forced broadcast — AQE picks the
+                # strategy.
+                lvl = mdc_src[self.label].groupBy(
+                    *[F.col(k) for k in lvl_keys]
+                ).agg(F.count(F.lit(1)).alias("__lvl"))
+                return (
+                    out.join(lvl, lvl_keys, "left")
+                    .filter(F.col("__lvl") >= self.min_doc_count)
+                    .drop("__lvl", cnt_col)
+                )
+            lvl_cnt = (
+                F.col(cnt_col)
+                if lvl_keys == keys
+                else F.sum(cnt_col).over(
+                    Window.partitionBy(*[F.col(k) for k in lvl_keys])
+                )
+            )
+            return out.withColumn("__lvl", lvl_cnt).filter(
+                F.col("__lvl") >= self.min_doc_count
+            ).drop("__lvl", cnt_col)
+        # min_doc_count == 0: zero-fill (this bucket is innermost)
+        out = out.drop(cnt_col)
+        prefix = keys[:-1]
+        gb = (
+            out.groupBy(*[F.col(k) for k in prefix])
+            if prefix
+            else out.groupBy()
+        )
+        grid = self.grid(gb, prefix, ev)
+        out_cols = out.columns
+        filled = grid.join(out, prefix + [self.label], "left")
+        dtypes = dict(filled.dtypes)
+        for n_ in [n for m in metrics for n in m.zero_names()]:
+            filled = filled.withColumn(
+                n_, F.coalesce(F.col(n_), F.lit(0).cast(dtypes[n_]))
+            )
+        return filled.select(*[F.col(c) for c in out_cols])
+
+
+@dataclass
+class _Eval:
+    """One evaluate() call's inputs, shared by the kind methods."""
+
+    state: VisState
+    resolve: object  # field name -> Column
+    count_distinct: object  # Column -> exact or HLL distinct count
+    tiebreak: str | None
+    default_search_field: str | None
+    auto_interval_buckets: int | None
+    auto_range: tuple | None
+    vwh_approx_seed: bool
+    # resolved date_histogram intervals by bucket label, in bucket order
+    # (auto mode resolves at evaluate time; the zero-fill grid and rate
+    # step by the RESOLVED interval)
+    intervals: dict = dc_field(default_factory=dict)
+    # the doc frame at each rare_terms bucket's level, by label
+    rare_src: dict = dc_field(default_factory=dict)
+
+
+def _join_back(out: DataFrame, per: DataFrame, keys: list[str]) -> DataFrame:
+    """Join a per-bucket frame onto the aggregated frame: on the bucket
+    keys, or — bucketless, one row — as a broadcast cross join."""
+    if keys:
+        return out.join(per, keys, "left")
+    return out.crossJoin(F.broadcast(per))
+
+
+def _matches(keyed_preds) -> Column:
+    """The array of keys whose predicate holds — the overlap-explode
+    shape of every bucket kind where a doc may land in several
+    buckets."""
+    return F.array_compact(
+        F.array(*[F.when(pred, F.lit(key)) for key, pred in keyed_preds])
+    )
+
+
+def _top_n_rows(df, keys, sort_col, sort_order, size, ev) -> DataFrame:
+    """The top ``size`` docs per bucket by ``sort_col``, numbered
+    ``__rn`` — the deterministic-tiebreak rank top_hits and top_metrics
+    share.  The tiebreak inherits the sort direction — exactly the
+    size-1 max_by/min_by struct comparison, so the first of N hits is
+    always the size-1 answer.  Nested under buckets the window
+    partitions by the full bucket-key tuple, so the rank distributes; a
+    bucketless panel takes orderBy().limit(size) (TakeOrderedAndProject)
+    instead of an unpartitioned window — the same global-sort-free
+    argument as the top-level terms cut — and numbers the <= size
+    survivors (a bounded window, the pipe_dsir_resample argument)."""
+    d = (lambda c: c.desc()) if sort_order == "desc" else (lambda c: c.asc())
+    order_cols = [
+        d(sort_col),
+        *([d(ev.resolve(ev.tiebreak))] if ev.tiebreak else []),
+    ]
+    if keys:
+        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order_cols)
+        ranked = df.withColumn("__rn", F.row_number().over(w))
+        return ranked.filter(F.col("__rn") <= size)
+    return (
+        df.orderBy(*order_cols)
+        .limit(size)
+        .withColumn("__rn", F.row_number().over(Window.orderBy(*order_cols)))
+    )
+
+
+# ---------------------------------------------------------------------------
 # AST
 # ---------------------------------------------------------------------------
 @dataclass(frozen=True)
-class TermsBucket:
+class TermsBucket(_Ranked):
     field: str
     size: int
     order: str  # 'asc' | 'desc'
@@ -88,9 +415,41 @@ class TermsBucket:
     # instead of dropping (round 12; None = drop, ES's default)
     missing: str | None = None
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        order_by = str(p.get("orderBy", "_term"))
+        return TermsBucket(
+            field=p["field"],
+            size=int(p.get("size", 5)),
+            order=p.get("order", "desc"),
+            order_by=order_by,
+            label=label,
+            order_metric=(
+                None if order_by == "_term"
+                else _order_metric_of(t, order_by, p, cx.by_id)
+            ),
+            missing=(
+                str(p["missing"]) if p.get("missing") is not None
+                else None
+            ),
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        v = ev.resolve(self.field).cast("string")
+        if self.missing is not None:
+            # ES `missing`: docs without the field land in this
+            # bucket value instead of dropping (round 12)
+            v = F.coalesce(v, F.lit(self.missing))
+        # ES drops docs missing the field from terms buckets
+        # (it never emits a null-keyed bucket) — round 12;
+        # previously a NULL key survived into a bucket row
+        return df.withColumn(self.label, v).filter(
+            F.col(self.label).isNotNull()
+        )
+
 
 @dataclass(frozen=True)
-class SignificantTermsBucket:
+class SignificantTermsBucket(_Bucket):
     """ES ``significant_terms`` (round 9): terms of ``field`` whose
     frequency in a FOREGROUND document set is anomalously high vs the
     whole relation (the background), scored with ES's default JLH:
@@ -107,9 +466,94 @@ class SignificantTermsBucket:
     label: str
     min_doc_count: int = 3
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        fg = p.get("foreground") or p.get("fg")
+        if not isinstance(fg, str) or not fg.strip():
+            raise ValueError(
+                "kibana: significant_terms needs an explicit "
+                "'foreground' query_string param (Kibana derives the "
+                "foreground from the dashboard search bar; this "
+                "engine has no ambient query)"
+            )
+        return SignificantTermsBucket(
+            field=p["field"],
+            size=int(p.get("size", 5)),
+            foreground=fg,
+            label=label,
+            min_doc_count=int(p.get("min_doc_count", 3)),
+        )
+
+    def evaluate_alone(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        """significant_terms: ONE scan computes both frequencies (each
+        row carries a foreground flag, so fg doc_count = sum(flag) and
+        bg_count = count(*) come out of the same term-keyed hash agg);
+        set sizes are a 1-row broadcast, scoring is row-local
+        arithmetic over exact integers, and the top-``size`` cut is a
+        TakeOrdered — no second pass over the documents, no
+        term-keyed re-shuffle.  Metric aggs evaluate over the
+        FOREGROUND rows per term (ES nests them under each bucket) via
+        conditional aggregation in the same pass."""
+        fg = _query_string_pred(
+            self.foreground, ev.resolve, df, ev.default_search_field
+        )
+        base = df.withColumn(
+            self.label, ev.resolve(self.field).cast("string")
+        ).withColumn("__fg", fg)
+        metric_aggs = []
+        for m in ev.state.metrics:
+            if not isinstance(m, MetricAgg):
+                raise ValueError(
+                    "kibana: significant_terms supports simple metric "
+                    "aggs only (count/avg/sum/min/max/cardinality)"
+                )
+            col = (
+                F.when(F.col("__fg"), ev.resolve(m.field))
+                if m.field
+                else F.lit(None)
+            )
+            metric_aggs.append(
+                _simple_metric_expr(
+                    m, col, F.sum(F.col("__fg").cast("long")), ev.count_distinct
+                )
+            )
+        per_term = base.groupBy(self.label).agg(
+            F.sum(F.col("__fg").cast("long")).alias("doc_count"),
+            F.count(F.lit(1)).alias("bg_count"),
+            *metric_aggs,
+        )
+        # set sizes roll up from the catalog-sized per-term table (the
+        # term partition is exhaustive), not from a second corpus scan
+        # (code-review r9: an independent base.agg() re-scanned the
+        # documents and re-evaluated the foreground predicate)
+        totals = per_term.agg(
+            F.sum("doc_count").alias("__subset"),
+            F.sum("bg_count").alias("__superset"),
+        )
+        # ES drops docs missing the field from term buckets but still
+        # counts them in the subset/superset set sizes (ADVICE r9) —
+        # totals above roll up ALL per_term rows including the
+        # NULL-key group; only the bucket OUTPUT excludes it.
+        kept = per_term.filter(
+            F.col(self.label).isNotNull()
+            & (F.col("doc_count") >= max(int(self.min_doc_count), 1))
+        ).crossJoin(F.broadcast(totals))
+        fgp = F.col("doc_count").cast("double") / F.col("__subset").cast("double")
+        bgp = F.col("bg_count").cast("double") / F.col("__superset").cast("double")
+        scored = kept.withColumn("score", (fgp - bgp) * (fgp / bgp)).filter(
+            F.col("score") > 0  # ES keeps only positively-significant terms
+        )
+        out = scored.orderBy(
+            F.col("score").desc(), F.col(self.label).asc()
+        ).limit(self.size)
+        return out.select(
+            self.label, "doc_count", "bg_count", "score",
+            *[m.label for m in ev.state.metrics],
+        )
+
 
 @dataclass(frozen=True)
-class SignificantTextBucket:
+class SignificantTextBucket(_Bucket):
     """ES ``significant_text`` (round 13): significant_terms over
     FREE TEXT — each document contributes its DISTINCT analyzed tokens
     (doc-frequency semantics), scored with the same JLH against the
@@ -126,9 +570,84 @@ class SignificantTextBucket:
     label: str
     min_doc_count: int = 3
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        fg = p.get("foreground") or p.get("fg")
+        if not isinstance(fg, str) or not fg.strip():
+            raise ValueError(
+                "kibana: significant_text needs an explicit "
+                "'foreground' query_string param (same contract as "
+                "significant_terms)"
+            )
+        if p.get("filter_duplicate_text"):
+            raise ValueError(
+                "kibana: significant_text filter_duplicate_text is "
+                "not modelled — run the corpus through "
+                "llmdata/dedup first"
+            )
+        return SignificantTextBucket(
+            field=p["field"],
+            size=int(p.get("size", 5)),
+            foreground=fg,
+            label=label,
+            min_doc_count=int(p.get("min_doc_count", 3)),
+        )
+
+    def evaluate_alone(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        """significant_text: standard-analyzer tokens (lowercase,
+        non-letter/digit splits), DISTINCT per document — ES's
+        doc-frequency semantics — then the significant_terms JLH over
+        one token-keyed hash aggregation.  Set sizes are DOC counts
+        from a 1-row aggregate over the doc frame (token totals would
+        overcount multi-token docs); the token explode is the same
+        scan-local array algebra as llmdata's shingle passes — the
+        shuffle carries (token, flag) pairs only."""
+        if ev.state.metrics:
+            raise ValueError(
+                "kibana: significant_text supports no sub-aggregations "
+                "(like ES)"
+            )
+        fg = _query_string_pred(
+            self.foreground, ev.resolve, df, ev.default_search_field
+        )
+        base = df.withColumn("__fg", fg)
+        totals = base.agg(
+            F.sum(F.col("__fg").cast("long")).alias("__subset"),
+            F.count(F.lit(1)).alias("__superset"),
+        )
+        tokens = F.array_distinct(
+            F.split(F.lower(ev.resolve(self.field).cast("string")),
+                    r"[^\p{L}\p{N}]+")
+        )
+        per_term = (
+            base.select("__fg", F.explode(tokens).alias(self.label))
+            .filter(F.col(self.label) != "")
+            .groupBy(self.label)
+            .agg(
+                F.sum(F.col("__fg").cast("long")).alias("doc_count"),
+                F.count(F.lit(1)).alias("bg_count"),
+            )
+        )
+        kept = per_term.filter(
+            F.col("doc_count") >= max(int(self.min_doc_count), 1)
+        ).crossJoin(F.broadcast(totals))
+        fgp = (
+            F.col("doc_count").cast("double") / F.col("__subset").cast("double")
+        )
+        bgp = (
+            F.col("bg_count").cast("double") / F.col("__superset").cast("double")
+        )
+        scored = kept.withColumn("score", (fgp - bgp) * (fgp / bgp)).filter(
+            F.col("score") > 0
+        )
+        out = scored.orderBy(
+            F.col("score").desc(), F.col(self.label).asc()
+        ).limit(self.size)
+        return out.select(self.label, "doc_count", "bg_count", "score")
+
 
 @dataclass(frozen=True)
-class CategorizeTextBucket:
+class CategorizeTextBucket(_Bucket):
     """ES ``categorize_text`` (round 14), the DETERMINISTIC core:
     log-pattern buckets keyed by the message's token sequence after
     the categorization tokenizer — lowercase standard-analyzer tokens
@@ -182,9 +701,269 @@ class CategorizeTextBucket:
     label: str
     similarity_threshold: int = 100
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: categorize_text needs a field")
+        sim = int(p.get("similarity_threshold", 100))
+        if not 1 <= sim <= 100:
+            raise ValueError(
+                "kibana: categorize_text similarity_threshold "
+                "must be in [1, 100]"
+            )
+        return CategorizeTextBucket(
+            field=p["field"],
+            size=int(p.get("size", 10)),
+            label=label,
+            similarity_threshold=sim,
+        )
+
+    def evaluate_alone(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        """Pattern buckets keyed by the digit-free token sequence (one
+        hash aggregation + TakeOrdered limit), merged by similarity
+        when ``similarity_threshold < 100`` (:meth:`merge_categories`)."""
+        # category key: lowercase standard-analyzer tokens with
+        # every digit-bearing token dropped (ES ML categorization:
+        # numbers never define a category) — scan-local column
+        # algebra, then ONE hash aggregation + TakeOrdered limit
+        toks = F.split(
+            F.lower(ev.resolve(self.field).cast("string")),
+            r"[^\p{L}\p{N}]+",
+        )
+        key = F.array_join(
+            F.filter(
+                toks,
+                lambda t: (t != "") & ~t.rlike(r"\p{N}"),
+            ),
+            " ",
+        )
+        keyed = df.withColumn(self.label, key).filter(
+            F.col(self.label) != ""
+        )
+        # metric sub-aggs (round 16, VERDICT r15 item 4): ES nests
+        # avg/min/max/sum/cardinality/count under pattern buckets.
+        # Exact path: finalize in the one hash aggregation.
+        # Merged path: decomposable partials (sum/min/max, avg as
+        # sum+count) aggregate per exact pattern, then combine
+        # through the rep join and finalize after the unanimity
+        # key — still category-scale past the first agg.
+        # Cardinality is NOT decomposable through partial merge:
+        # reject it loudly under threshold < 100.
+        for m in ev.state.metrics:
+            if not isinstance(m, MetricAgg) or m.op not in (
+                "count", "avg", "sum", "min", "max", "cardinality",
+            ):
+                raise ValueError(
+                    "kibana: categorize_text supports simple metric "
+                    "sub-aggs only (count/avg/sum/min/max/"
+                    "cardinality)"
+                )
+        if self.similarity_threshold >= 100:
+            aggs_ = [F.count(F.lit(1)).alias("doc_count")]
+            for m in ev.state.metrics:
+                aggs_.append(
+                    _simple_metric_expr(
+                        m,
+                        ev.resolve(m.field) if m.field else F.lit(None),
+                        F.count(F.lit(1)),
+                        ev.count_distinct,
+                    )
+                )
+            cats = keyed.groupBy(self.label).agg(*aggs_)
+        else:
+            partial_aggs: list[Column] = [
+                F.count(F.lit(1)).alias("doc_count")
+            ]
+            combiners: list[tuple[str, object]] = []
+            finals: list[Column] = []
+            for i, m in enumerate(ev.state.metrics):
+                if m.op == "cardinality":
+                    raise ValueError(
+                        "kibana: categorize_text cardinality does "
+                        "not merge under similarity_threshold < 100 "
+                        "(distinct counts are not decomposable "
+                        "partials); use similarity_threshold=100"
+                    )
+                val = (
+                    ev.resolve(m.field) if m.field else F.lit(None)
+                ).cast("double")
+                if m.op == "count":
+                    finals.append(F.col("doc_count").alias(m.label))
+                elif m.op == "avg":
+                    sn, cn = f"__ctm{i}_s", f"__ctm{i}_c"
+                    partial_aggs += [
+                        F.sum(val).alias(sn),
+                        F.count(val).alias(cn),
+                    ]
+                    combiners += [(sn, F.sum), (cn, F.sum)]
+                    finals.append(
+                        F.when(
+                            F.col(cn) > 0, F.col(sn) / F.col(cn)
+                        ).alias(m.label)
+                    )
+                else:  # sum / min / max
+                    fn = {"sum": F.sum, "min": F.min, "max": F.max}[
+                        m.op
+                    ]
+                    pn = f"__ctm{i}_{m.op}"
+                    partial_aggs.append(fn(val).alias(pn))
+                    combiners.append((pn, fn))
+                    finals.append(F.col(pn).alias(m.label))
+            cats = keyed.groupBy(self.label).agg(*partial_aggs)
+            cats = self.merge_categories(cats, tuple(combiners))
+            cats = cats.select(self.label, "doc_count", *finals)
+        return cats.orderBy(
+            F.col("doc_count").desc(), F.col(self.label).asc()
+        ).limit(self.size)
+
+    def merge_categories(
+        self, cats: DataFrame, partials: tuple = ()
+    ) -> DataFrame:
+        """categorize_text similarity merging (round 15) over the
+        ALREADY-AGGREGATED pattern table — the deterministic semantic
+        documented on :class:`CategorizeTextBucket`: same-length
+        positional similarity, frequency-seeded attachment, 6
+        pointer-jump rounds, unanimity-wildcard keys.  Every operation
+        is category-scale (patterns × patterns per length, patterns ×
+        tokens), never doc-scale.
+
+        Execution shape: fully LAZY, one plan, nothing persisted —
+        the pointer-jump self-joins double the LOGICAL lineage per
+        round, but every doubled subtree is the identical exchange and
+        Spark's ReuseExchange/ReuseSubquery executes the doc-scale
+        exact aggregation once (measured: an eager
+        persist-per-round variant paid a fresh AQE compile of the
+        doubled plan each round and ran 4x slower); the caller
+        applies the TakeOrdered size cut.
+
+        ``partials`` (round 16, metric sub-aggs): ``(column_name,
+        combiner)`` pairs — per-exact-pattern metric partials already
+        aggregated in ``cats`` that must ride the merge.  Each
+        combiner (F.sum / F.min / F.max — associative, so re-combining
+        when two merged groups collapse to the same wildcard key is
+        sound) is applied at both category-scale groupBys; the caller
+        finalizes (e.g. avg = sum/count) AFTER the merge."""
+        t = self.similarity_threshold / 100.0
+        # Truncate the doc-scale lineage ONCE before the pointer-jump
+        # rounds (optimization r16, guide §3.3: very large plans make
+        # planning itself the bottleneck — materialize intermediates).
+        # `cats` is the already-aggregated pattern table
+        # (category-scale, tens-to-thousands of rows), so the eager
+        # localCheckpoint is one tiny job; without it each of the 6
+        # self-join rounds DOUBLES a lineage that bottoms out in the
+        # doc-scale tokenize+aggregate (2^7 copies for Catalyst/AQE to
+        # analyze — ReuseExchange deduped the execution but not the
+        # compile).  The r15 "persist variant 4× slower" measurement
+        # persisted per round against the full doc-scale plan; with the
+        # lineage cut the remaining rounds are category-scale joins.
+        cats = cats.localCheckpoint(eager=True)
+        pats = cats.select(
+            F.col(self.label).alias("__ct_p"),
+            F.split(F.col(self.label), " ").alias("__ct_toks"),
+            F.size(F.split(F.col(self.label), " ")).alias("__ct_len"),
+            F.col("doc_count").alias("__ct_n"),
+            *[F.col(pn) for pn, _ in partials],
+        )
+        left = pats.select(
+            F.col("__ct_p").alias("p"), F.col("__ct_toks").alias("ptoks"),
+            F.col("__ct_len").alias("__ct_len"),
+        )
+        right = pats.select(
+            F.col("__ct_p").alias("q"), F.col("__ct_toks").alias("qtoks"),
+            F.col("__ct_len").alias("__ct_len"),
+            F.col("__ct_n").alias("qc"),
+        )
+        match = F.aggregate(
+            F.zip_with(
+                F.col("ptoks"), F.col("qtoks"),
+                lambda a, b_: F.when(a == b_, 1).otherwise(0),
+            ),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        pairs = (
+            left.join(right, "__ct_len")
+            .withColumn("__ct_m", match)
+            .filter(
+                F.col("__ct_m").cast("double")
+                / F.col("__ct_len").cast("double")
+                >= F.lit(t)
+            )
+        )
+        # rep(p): best-ranked similar pattern (doc_count desc, key
+        # asc) — min_by over (-count, key); p matches itself, so rep
+        # always exists and rank(rep(p)) <= rank(p): the pointer map
+        # is acyclic and rank-decreasing
+        rep = pairs.groupBy("p").agg(
+            F.min_by(
+                F.col("q"),
+                F.struct(
+                    (-F.col("qc")).alias("nc"), F.col("q").alias("q")
+                ),
+            ).alias("rep")
+        )
+        # same lineage cut for the pointer map: rep is category-sized
+        # (one row per pattern) and the 6 jump rounds double ITS
+        # lineage too — one more tiny eager job keeps the final plan at
+        # 2^6 checkpoint-leaf scans instead of 2^6 copies of the
+        # pairs-join subtree
+        rep = rep.localCheckpoint(eager=True)
+        for _ in range(6):  # closure for chains up to 2^6 = 64
+            hop = rep.select(
+                F.col("p").alias("__ct_hp"), F.col("rep").alias("__ct_hr")
+            )
+            rep = (
+                rep.join(hop, rep["rep"] == hop["__ct_hp"], "left")
+                .select(
+                    "p",
+                    F.coalesce(F.col("__ct_hr"), F.col("rep")).alias("rep"),
+                )
+            )
+        memb = rep.join(
+            pats,
+            rep["p"] == pats["__ct_p"],
+        ).select(
+            "rep", "__ct_toks", "__ct_len", "__ct_n",
+            *[pn for pn, _ in partials],
+        )
+        grouped = memb.groupBy("rep").agg(
+            F.collect_list("__ct_toks").alias("tls"),
+            F.max("__ct_len").alias("l"),
+            F.sum("__ct_n").alias("doc_count"),
+            *[fn(pn).alias(pn) for pn, fn in partials],
+        )
+        # unanimity-wildcard key: per position, the member token when
+        # every member agrees, else '*' (collect_list order is
+        # irrelevant — tls[0] is read only under unanimity)
+        merged_key = F.array_join(
+            F.transform(
+                F.sequence(F.lit(0), F.col("l") - 1),
+                lambda i: F.when(
+                    F.size(
+                        F.array_distinct(
+                            F.transform(
+                                F.col("tls"), lambda tk: F.get(tk, i)
+                            )
+                        )
+                    )
+                    == 1,
+                    F.get(F.element_at(F.col("tls"), 1), i),
+                ).otherwise(F.lit("*")),
+            ),
+            " ",
+        )
+        return (
+            grouped.withColumn(self.label, merged_key)
+            .groupBy(self.label)
+            .agg(
+                F.sum("doc_count").alias("doc_count"),
+                *[fn(pn).alias(pn) for pn, fn in partials],
+            )
+        )
+
 
 @dataclass(frozen=True)
-class FrequentItemSetsBucket:
+class FrequentItemSetsBucket(_Bucket):
     """ES ``frequent_item_sets`` (round 14): the co-occurring
     field=value combinations with support >= ``minimum_support`` —
     "which broker AND which error class fail together".  ES runs a
@@ -208,9 +987,179 @@ class FrequentItemSetsBucket:
     size: int
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        raw_ff = p.get("fields") or []
+        fis_fields = tuple(
+            str(f["field"] if isinstance(f, dict) else f)
+            for f in raw_ff
+        )
+        if len(fis_fields) < 2:
+            raise ValueError(
+                "kibana: frequent_item_sets needs at least two fields"
+            )
+        if len(set(fis_fields)) != len(fis_fields):
+            raise ValueError(
+                "kibana: frequent_item_sets fields must be distinct"
+            )
+        fis_sup = float(p.get("minimum_support", 0.1))
+        if not 0 < fis_sup <= 1:
+            raise ValueError(
+                "kibana: frequent_item_sets minimum_support must be "
+                "in (0, 1]"
+            )
+        fis_mss = int(p.get("minimum_set_size", 1))
+        if not 1 <= fis_mss <= 3:
+            raise ValueError(
+                "kibana: frequent_item_sets minimum_set_size must "
+                "be in [1, 3] (set size is capped at 3)"
+            )
+        return FrequentItemSetsBucket(
+            fields=fis_fields,
+            min_support=fis_sup,
+            min_set_size=fis_mss,
+            size=int(p.get("size", 10)),
+            label=label,
+        )
+
+    def evaluate_alone(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        if ev.state.metrics:
+            raise ValueError(
+                "kibana: frequent_item_sets carries only its "
+                "doc_count/support (sub-aggregations are not "
+                "modelled)"
+            )
+        # EXACT apriori, ZERO joins on the doc axis: each document
+        # carries at most one item per scalar field, so ALL its
+        # k<=3 item combinations are generated scan-locally from
+        # the sorted per-doc item array (the adjacency_matrix
+        # slice/transform trick, C(#fields, k) elements — a
+        # constant), then ONE explode + ONE hash aggregation keyed
+        # by the item-set array counts every level at once.
+        # Support compares count/total >= min_support with the
+        # SAME division-then-compare in the SQL twin.  The total
+        # rides the plan as a one-row broadcast cross-join (the
+        # bnl_join_onerow shape) instead of a plan-build
+        # df.count() — one job, not two (VERDICT r14 nit); an
+        # empty relation now yields an empty result (no items →
+        # no sets), ES's own response shape.
+        tot = df.agg(
+            F.count(F.lit(1)).cast("double").alias("__fis_total")
+        )
+        # the field list is STATIC, so the per-doc combinations are
+        # enumerated at COMPILE time (itertools over field subsets,
+        # k <= 3) into shallow guarded expressions — the nested
+        # slice/transform formulation codegen'd multi-second
+        # first-run compiles; this one is C(#fields, <=3) flat
+        # whens.  array_sort keys each set lexicographically.
+        from itertools import combinations as _combs
+
+        if len(self.fields) > 8:
+            raise ValueError(
+                "kibana: frequent_item_sets supports at most 8 "
+                "fields (C(8,3) static combinations)"
+            )
+        item = {
+            f_: F.concat(
+                F.lit(f_ + "="), ev.resolve(f_).cast("string")
+            )
+            for f_ in self.fields
+        }
+        combos = []
+        for k_ in (1, 2, 3):
+            for sub in _combs(self.fields, k_):
+                cond = ev.resolve(sub[0]).isNotNull()
+                for f_ in sub[1:]:
+                    cond = cond & ev.resolve(f_).isNotNull()
+                combos.append(
+                    F.when(
+                        cond,
+                        F.array_sort(
+                            F.array(*[item[f_] for f_ in sub])
+                        ),
+                    )
+                )
+        ex = df.select(
+            F.explode(
+                F.array_compact(F.array(*combos))
+            ).alias("__ks")
+        )
+        c = (
+            ex.groupBy("__ks")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .crossJoin(F.broadcast(tot))
+            .filter(
+                F.col("__n").cast("double") / F.col("__fis_total")
+                >= F.lit(self.min_support)
+            )
+            .withColumn("__sz", F.size("__ks"))
+        )
+        # the closedness pass references this table five times
+        # (three level slices + two subset explosions) — persist
+        # the AGGREGATED relation (<= sum_k C(#fields,k)/
+        # min_support rows, bounded by the support filter) so the
+        # doc-scale explode+aggregate runs once, not five times
+        c = c.persist()
+        c.count()
+        # closedness (like ES): drop a set when a superset has the
+        # SAME doc count — level k anti-joins the (k-subset, count)
+        # explosion of level k+1; both sides are the already-
+        # aggregated (frequent-set, count) table, never doc-sized
+        k0, k1, k2 = (F.col("__ks").getItem(i) for i in range(3))
+        sub2 = c.filter(F.col("__sz") == 2).select(
+            F.explode(
+                F.array(F.array(k0), F.array(k1))
+            ).alias("__ks_s"),
+            F.col("__n").alias("__sn"),
+        )
+        sub3 = c.filter(F.col("__sz") == 3).select(
+            F.explode(
+                F.array(
+                    F.array(k0, k1), F.array(k0, k2),
+                    F.array(k1, k2),
+                )
+            ).alias("__ks_s"),
+            F.col("__n").alias("__sn"),
+        )
+        closed = None
+        for lvl, subs in ((1, sub2), (2, sub3), (3, None)):
+            cur = c.filter(F.col("__sz") == lvl)
+            if subs is not None:
+                cur = cur.join(
+                    subs,
+                    (cur["__ks"] == subs["__ks_s"])
+                    & (cur["__n"] == subs["__sn"]),
+                    "left_anti",
+                )
+            closed = cur if closed is None else closed.unionByName(cur)
+        out = closed.filter(
+            F.col("__sz") >= self.min_set_size
+        ).select(
+            F.array_join("__ks", ", ").alias(self.label),
+            F.col("__sz").alias("set_size"),
+            F.col("__n").alias("doc_count"),
+            (
+                F.col("__n").cast("double") / F.col("__fis_total")
+            ).alias("support"),
+        )
+        out = out.orderBy(
+            F.col("doc_count").desc(), F.col(self.label).asc()
+        ).limit(self.size)
+        # the size-cut output is <= size rows by construction:
+        # materialize it eagerly so the persisted set table can be
+        # UNPERSISTED before returning — a long-lived session
+        # (streaming kibana_panels replays evaluate per
+        # micro-batch) no longer accumulates cached relations
+        # (ADVICE r14)
+        rows_local = out.collect()
+        c.unpersist(blocking=False)
+        return df.sparkSession.createDataFrame(
+            rows_local, schema=out.schema
+        )
+
 
 @dataclass(frozen=True)
-class CompositeBucket:
+class CompositeBucket(_Bucket):
     """ES ``composite`` aggregation (round 9): paginate ALL buckets of
     a multi-source key tuple in deterministic key order — the agg ES
     users reach for when a terms agg's ``size`` cap makes full exports
@@ -231,9 +1180,155 @@ class CompositeBucket:
     label: str
     after: tuple | None = None
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        raw_sources = p.get("sources")
+        if not isinstance(raw_sources, list) or not raw_sources:
+            raise ValueError(
+                "kibana: composite needs a non-empty 'sources' list"
+            )
+        srcs = []
+        for src in raw_sources:
+            # ES-proper source shape: {name: {kind: {...}}}
+            if not isinstance(src, dict) or len(src) != 1:
+                raise ValueError(
+                    f"kibana: composite source must be a one-entry "
+                    f"{{name: {{kind: ...}}}} dict, got {src!r}"
+                )
+            sname, body = next(iter(src.items()))
+            if not isinstance(body, dict) or len(body) != 1:
+                raise ValueError(
+                    f"kibana: bad composite source body {body!r}"
+                )
+            kind, spec = next(iter(body.items()))
+            if kind == "terms":
+                srcs.append((sname, str(spec["field"]), "terms", 0))
+            elif kind == "date_histogram":
+                iv, auto = _parse_interval_us(
+                    {"interval": spec.get("interval", "1h")}
+                )
+                if auto:
+                    raise ValueError(
+                        "kibana: composite date_histogram needs a "
+                        "fixed interval (no ambient time picker)"
+                    )
+                srcs.append((sname, str(spec["field"]), "date_histogram", iv))
+            elif kind == "histogram":
+                h_iv = float(spec.get("interval", 0))
+                if h_iv <= 0:
+                    raise ValueError(
+                        "kibana: composite histogram needs a "
+                        "positive numeric interval"
+                    )
+                srcs.append(
+                    (sname, str(spec["field"]), "histogram", h_iv)
+                )
+            else:
+                raise ValueError(
+                    f"kibana: unsupported composite source kind {kind!r}"
+                )
+        after = p.get("after")
+        if after is not None:
+            if not isinstance(after, (list, tuple)) or len(after) != len(srcs):
+                raise ValueError(
+                    "kibana: composite 'after' must list one value "
+                    "per source (the last key tuple of the previous "
+                    "page)"
+                )
+            after = tuple(after)
+        return CompositeBucket(
+            sources=tuple(srcs),
+            size=int(p.get("size", 10)),
+            label=label,
+            after=after,
+        )
+
+    def evaluate_alone(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        """composite: group by the full source-key tuple, page in
+        lexicographic key order from the ``after`` tuple.  The
+        after-predicate pushes BELOW the aggregation (it's a pure
+        function of the grouping keys), so each page scans only the
+        keys past the cursor, and the page cut itself is a TakeOrdered
+        — pagination over a 100 TB relation never materializes more
+        than ``size`` buckets per request.  Docs with a null source
+        key drop (ES ``missing_bucket: false``, the default)."""
+        key_cols: list[tuple[str, Column]] = []
+        for name, field, kind, interval in self.sources:
+            col = ev.resolve(field)
+            if kind == "terms":
+                key_cols.append((name, col.cast("string")))
+            elif kind == "histogram":
+                # ES's exact histogram key: floor(v / interval) *
+                # interval (negatives bucket DOWNWARD, like
+                # HistogramBucket)
+                v = col.cast("double")
+                key_cols.append(
+                    (
+                        name,
+                        F.floor(v / F.lit(interval)).cast("double")
+                        * F.lit(interval),
+                    )
+                )
+            else:
+                us = F.unix_micros(col.cast("timestamp"))
+                key_cols.append(
+                    (name, F.timestamp_micros(us - F.pmod(us, int(interval))))
+                )
+        for name, col in key_cols:
+            df = df.withColumn(name, col)
+        for name, _ in key_cols:
+            df = df.filter(F.col(name).isNotNull())
+        if self.after is not None:
+            # after values normalize per source kind: ES returns
+            # date_histogram keys as EPOCH-MILLIS numbers in the
+            # after_key, and a bare number vs a timestamp column is an
+            # AnalysisException (code-review r9); ISO strings cast.
+            def _after_lit(i: int) -> Column:
+                val = self.after[i]
+                if self.sources[i][2] == "date_histogram":
+                    if isinstance(val, (int, float)):
+                        return F.timestamp_millis(F.lit(int(val)))
+                    return F.lit(val).cast("timestamp")
+                if self.sources[i][2] == "histogram":
+                    return F.lit(float(val))
+                return F.lit(val)
+
+            # strictly-after, lexicographic over the source order:
+            # (k1 > a1) OR (k1 = a1 AND k2 > a2) OR ...
+            pred = None
+            for i, (name, _) in enumerate(key_cols):
+                clause = F.col(name) > _after_lit(i)
+                for j in range(i):
+                    pname = key_cols[j][0]
+                    clause = (F.col(pname) == _after_lit(j)) & clause
+                pred = clause if pred is None else pred | clause
+            df = df.filter(pred)
+        names = [n for n, _ in key_cols]
+        aggs_, metric_labels = [], []
+        metrics = list(ev.state.metrics) or [
+            MetricAgg(op="count", field="", label="count")
+        ]
+        for m in metrics:
+            if not isinstance(m, MetricAgg):
+                raise ValueError(
+                    "kibana: composite supports simple metric aggs only"
+                )
+            aggs_.append(
+                _simple_metric_expr(
+                    m,
+                    ev.resolve(m.field) if m.field else F.lit(None),
+                    F.count(F.lit(1)),
+                    ev.count_distinct,
+                )
+            )
+            metric_labels.append(m.label)
+        out = df.groupBy(*[F.col(n) for n in names]).agg(*aggs_)
+        out = out.orderBy(*[F.col(n).asc() for n in names]).limit(self.size)
+        return out.select(*names, *metric_labels)
+
 
 @dataclass(frozen=True)
-class DateHistogramBucket:
+class DateHistogramBucket(_Histogram):
     field: str
     interval_us: int
     label: str
@@ -263,18 +1358,160 @@ class DateHistogramBucket:
     # from evaluate()); None = a plain date_histogram.
     auto_buckets: "int | None" = None
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        interval_us, auto = _parse_interval_us(p)
+        mdc, eb = _parse_min_doc_count(p, _bound_us)
+        return DateHistogramBucket(
+            field=p["field"],
+            interval_us=interval_us,
+            label=label,
+            min_doc_count=mdc,
+            extended_bounds=eb,
+            auto=auto,
+        )
+
+    @staticmethod
+    def parse_auto(t, p, label, cx):
+        nb = int(p.get("buckets", 10))
+        if nb < 1:
+            raise ValueError(
+                "kibana: auto_date_histogram buckets must be >= 1"
+            )
+        return DateHistogramBucket(
+            field=p["field"],
+            interval_us=_INTERVAL_UNITS_US["h"],  # pre-resolve stub
+            label=label,
+            auto_buckets=nb,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # fixed-interval bucketing on epoch micros (date_trunc
+        # can't express "2h"); pmod keeps it exact integer math
+        us = F.unix_micros(ev.resolve(self.field).cast("timestamp"))
+        interval_us = self.interval_us
+        if self.auto_buckets is not None:
+            # ES auto_date_histogram: the interval comes from
+            # the POPULATED span via ES's own rounding ladder
+            # (one 1-row min/max aggregation, the same probe
+            # shape as Kibana auto mode below)
+            row = df.agg(
+                F.min(us).alias("lo"), F.max(us).alias("hi")
+            ).first()
+            interval_us = es_auto_date_interval_us(
+                row["lo"] or 0, row["hi"] or 0, self.auto_buckets
+            )
+        elif self.auto and ev.auto_interval_buckets is not None:
+            # real ES auto-interval semantics (the DEFAULT
+            # since round 7 — the corpus's six date_histograms
+            # all say interval:"auto", which real Kibana
+            # resolves from the time picker, never from the
+            # unused customInterval field): derive the interval
+            # from the request time range — or, if none was
+            # passed, from the data span (one 1-row min/max
+            # agg, what Kibana reads off its time picker).
+            # auto_interval_buckets=None opts back into the
+            # legacy customInterval pin.
+            if ev.auto_range is not None:
+                lo, hi = (_to_us(x) for x in ev.auto_range)
+            else:
+                row = df.agg(
+                    F.min(us).alias("lo"), F.max(us).alias("hi")
+                ).first()
+                lo, hi = row["lo"], row["hi"]
+            span = max(0, (hi or 0) - (lo or 0))
+            interval_us = auto_interval_us(span, ev.auto_interval_buckets)
+        ev.intervals[self.label] = interval_us
+        return df.withColumn(
+            self.label,
+            F.timestamp_micros(us - F.pmod(us, F.lit(interval_us))),
+        )
+
+    def grid(self, gb, prefix: list[str], ev: _Eval) -> DataFrame:
+        step = ev.intervals[self.label]
+        lo_agg = F.unix_micros(F.min(self.label))
+        hi_agg = F.unix_micros(F.max(self.label))
+        if self.extended_bounds is not None:
+            # ES: buckets cover the union of the populated span
+            # and the (interval-floored) extended bounds
+            eb_lo, eb_hi = (
+                (x // step) * step for x in self.extended_bounds
+            )
+            lo_agg = F.least(lo_agg, F.lit(eb_lo))
+            hi_agg = F.greatest(hi_agg, F.lit(eb_hi))
+        bounds = gb.agg(
+            lo_agg.alias("__lo"), hi_agg.alias("__hi")
+        )
+        grid = bounds.select(
+            *prefix,
+            F.explode(
+                F.sequence(F.col("__lo"), F.col("__hi"), F.lit(step))
+            ).alias("__g"),
+        ).select(
+            *prefix, F.timestamp_micros(F.col("__g")).alias(self.label)
+        )
+        return grid
+
 
 @dataclass(frozen=True)
-class FiltersBucket:
+class FiltersBucket(_Bucket):
     filters: tuple[tuple[str, str], ...]  # (label, query_string)
     label: str
     # ES other_bucket: collect documents matching NO filter under this
     # key (round 11.5); None = drop them, ES's default
     other_key: "str | None" = None
 
+    explodes = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        flt = tuple(
+            (
+                _slug(f.get("label") or f"filter_{i}"),
+                f["input"]["query"]["query_string"]["query"],
+            )
+            for i, f in enumerate(p.get("filters", []))
+        )
+        other_key = None
+        # ES: setting other_bucket_key implicitly enables
+        # other_bucket (second-review 11.5)
+        if p.get("other_bucket") or p.get("other_bucket_key") is not None:
+            other_key = _slug(str(p.get("other_bucket_key", "_other_")))
+            if other_key in {lbl for lbl, _ in flt}:
+                # ES keeps '_other_' distinct from a filter LABELED
+                # 'other'; this engine's slugged label space cannot,
+                # so a collision would silently merge non-matching
+                # docs into a real bucket — reject loudly
+                raise ValueError(
+                    f"kibana: other_bucket key {other_key!r} collides "
+                    f"with a filter label after slugging — rename one"
+                )
+        return FiltersBucket(filters=flt, label=label, other_key=other_key)
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # a doc lands in EVERY filter bucket it matches; with
+        # other_bucket set, a doc matching NOTHING lands in the
+        # other bucket instead of dropping (ES other_bucket)
+        matches = _matches(
+            (lbl, _query_string_pred(q, ev.resolve, df, ev.default_search_field))
+            for lbl, q in self.filters
+        )
+        if self.other_key is not None:
+            # bind the match array ONCE (optimization r16): the
+            # when/otherwise referenced it twice, so every
+            # filter predicate (fuzzy folds, proximity scans)
+            # evaluated twice per row
+            matches = _bind1(
+                matches,
+                lambda m: F.when(
+                    F.size(m) == 0, F.array(F.lit(self.other_key))
+                ).otherwise(m),
+            )
+        return df.withColumn(self.label, F.explode(matches))
+
 
 @dataclass(frozen=True)
-class VariableWidthHistogramBucket:
+class VariableWidthHistogramBucket(_Bucket):
     """ES ``variable_width_histogram`` (round 13): dynamically-sized
     numeric buckets targeting ``buckets`` clusters.  ES's algorithm is
     a shard-local streaming cluster merge — approximate AND
@@ -295,9 +1532,132 @@ class VariableWidthHistogramBucket:
     buckets: int
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        nb = int(p.get("buckets", 10))
+        if not 1 <= nb <= 100:
+            raise ValueError(
+                "kibana: variable_width_histogram buckets must be "
+                "in [1, 100]"
+            )
+        return VariableWidthHistogramBucket(
+            field=p["field"], buckets=nb, label=label
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        if self is not ev.state.buckets[0]:
+            raise ValueError(
+                "kibana: variable_width_histogram must be the "
+                "outermost bucket (ES rejects it under other "
+                "bucketing aggs)"
+            )
+        v = ev.resolve(self.field).cast("double")
+        df = df.filter(v.isNotNull())
+        k = self.buckets
+        probes = [(i + 0.5) / k for i in range(k)]
+        # exact quantile seeding is the oracle-parity
+        # default; vwh_approx_seed=True switches to
+        # percentile_approx — the 100 TB path (the later
+        # rounds are identical either way: scan-local
+        # assignment + k-row aggregates)
+        seed_fn = (
+            (lambda c_, ps: F.percentile_approx(
+                c_, ps, F.lit(10000)))
+            if ev.vwh_approx_seed
+            else F.percentile
+        )
+        # the Lloyd rounds re-read ONLY this one column: train
+        # on a persisted 1-column projection so the doc scan
+        # (and any upstream filters/joins) runs once, not once
+        # per round + once for seeding (VERDICT r13 item 2)
+        proj = df.select(v.alias("__v")).persist()
+        row = proj.agg(
+            seed_fn(
+                F.col("__v"),
+                F.array(*[F.lit(p_) for p_ in probes]),
+            ).alias("c")
+        ).first()
+        if row["c"] is None:
+            proj.unpersist(blocking=False)
+            raise ValueError(
+                "kibana: variable_width_histogram over an "
+                "empty relation"
+            )
+        # centroids round to 6 decimals after seeding and
+        # after every update: the sums are exact (scaled
+        # integral inputs aside, avg = exact-sum / count), so
+        # the rounding pins the one interpolated step and
+        # keeps every assignment bit-replayable in SQL
+        cents = [round(float(c), 6) for c in row["c"]]
+
+        def _assign(cs):
+            dists = F.array(*[F.abs(v - F.lit(c)) for c in cs])
+            # argmin, FIRST index on ties (list_position twin)
+            return F.array_position(dists, F.array_min(dists))
+
+        # each Lloyd round is ONE executor-side partial-sum
+        # pass (the train_pq_codebooks pattern,
+        # llmdata/similarity.py): every partition emits <= k
+        # (cluster, sum, count) rows — no shuffle, no
+        # groupBy — and the driver merges the partials in
+        # SORTED order so the fold is bit-deterministic.
+        # numpy argmin(|v - c|) (first index on ties) is the
+        # exact IEEE twin of the SQL _assign above, so the
+        # trained centroids stay SQL-replayable.
+        import numpy as np
+        import pandas as pd
+
+        def _round_partials(cs_list):
+            cs = np.asarray(cs_list, dtype="float64")
+
+            def go(batches):
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    vv = pdf["__v"].to_numpy(dtype="float64")
+                    cl = np.abs(
+                        vv[:, None] - cs[None, :]
+                    ).argmin(axis=1)
+                    cls, sums, ns = [], [], []
+                    for c in np.unique(cl):
+                        m = cl == c
+                        cls.append(int(c))
+                        sums.append(float(vv[m].sum()))
+                        ns.append(int(m.sum()))
+                    yield pd.DataFrame(
+                        {"cl": cls, "s": sums, "n": ns}
+                    )
+
+            return proj.mapInPandas(
+                go, "cl int, s double, n long"
+            ).collect()
+
+        for _ in range(3):
+            acc: dict[int, tuple[float, int]] = {}
+            for r in sorted(
+                _round_partials(cents),
+                key=lambda r: (r["cl"], r["n"], r["s"]),
+            ):
+                s0, n0 = acc.get(r["cl"], (0.0, 0))
+                acc[r["cl"]] = (s0 + r["s"], n0 + r["n"])
+            # an emptied cluster keeps its previous centroid
+            cents = [
+                round(acc[i][0] / acc[i][1], 6)
+                if i in acc else c
+                for i, c in enumerate(cents)
+            ]
+        proj.unpersist(blocking=False)
+        return df.withColumn(
+            self.label,
+            F.element_at(
+                F.array(*[F.lit(c) for c in cents]),
+                _assign(cents).cast("int"),
+            ),
+        )
+
 
 @dataclass(frozen=True)
-class AdjacencyMatrixBucket:
+class AdjacencyMatrixBucket(_Bucket):
     """ES ``adjacency_matrix`` (round 13): named query_string filters
     → one bucket per matching filter plus one per matching PAIR, keyed
     ``a&b`` (the ``separator`` param) with the names in LEXICOGRAPHIC
@@ -311,28 +1671,165 @@ class AdjacencyMatrixBucket:
     label: str
     separator: str = "&"
 
+    explodes = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        raw_flt = p.get("filters") or {}
+        if isinstance(raw_flt, dict):
+            pairs = list(raw_flt.items())
+        else:
+            pairs = [
+                (f.get("label") or f"filter_{i}",
+                 f["input"]["query"]["query_string"]["query"]
+                 if isinstance(f.get("input"), dict) else f["query"])
+                for i, f in enumerate(raw_flt)
+            ]
+        if not pairs:
+            raise ValueError(
+                "kibana: adjacency_matrix needs at least one filter"
+            )
+        if len(pairs) > 100:
+            # ES indices.query.bool.max_clause_count-backed default
+            raise ValueError(
+                "kibana: adjacency_matrix supports at most 100 filters"
+            )
+        sep = str(p.get("separator", "&"))
+        names = [str(k) for k, _ in pairs]
+        if len(set(names)) != len(names):
+            raise ValueError(
+                "kibana: adjacency_matrix filter names must be unique"
+            )
+        if any(sep in n for n in names):
+            raise ValueError(
+                "kibana: adjacency_matrix filter names must not "
+                "contain the separator"
+            )
+        return AdjacencyMatrixBucket(
+            # ES's AdjacencyMatrixAggregationBuilder sorts the
+            # keyed filters lexicographically before building
+            # intersection keys ("internally we want to have a
+            # fixed order of filters"), so 'big&hasB' — never
+            # 'hasB&big' — regardless of declaration order
+            # (ADVICE r13)
+            filters=tuple(
+                sorted(
+                    ((str(k), str(q)) for k, q in pairs),
+                    key=lambda kv: kv[0],
+                )
+            ),
+            label=label,
+            separator=sep,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # singleton buckets for every matching filter + pair
+        # buckets 'a&b' for every matching pair — b.filters is
+        # pre-sorted lexicographically at parse time (ES's
+        # fixed filter order, ADVICE r13), so i < j here IS
+        # name order.  Scan-local array algebra, then one
+        # explode; a doc matching k filters contributes
+        # k + k(k-1)/2 rows, k <= 100 by the parse-time cap
+        matches = _matches(
+            (name, _query_string_pred(q, ev.resolve, df, ev.default_search_field))
+            for name, q in self.filters
+        )
+        pair_keys = F.flatten(
+            F.transform(
+                matches,
+                lambda x, i: F.transform(
+                    F.slice(
+                        matches, i + F.lit(2),
+                        F.greatest(
+                            F.size(matches) - i - 1, F.lit(0)
+                        ),
+                    ),
+                    lambda y: F.concat_ws(self.separator, x, y),
+                ),
+            )
+        )
+        return df.withColumn(
+            self.label, F.explode(F.concat(matches, pair_keys))
+        )
+
 
 @dataclass(frozen=True)
-class MultiTermsBucket:
+class MultiTermsBucket(_Ranked):
     """ES ``multi_terms`` (round 11.5): a terms bucket over a TUPLE of
     fields, keyed by the '|'-joined key_as_string exactly as ES renders
     it; ordered by doc count (default), the joined key (``_key``), or —
     round 12, like terms — a sub-aggregation metric / custom orderAgg,
     with the joined key as tiebreak, size-cut like terms.  Docs missing
     ANY of the fields drop (ES ignores them).  ``order_by``/
-    ``order_metric`` mirror TermsBucket so the shared ranking loop
+    ``order_metric`` mirror TermsBucket so the shared ranking stage
     handles both."""
 
     fields: tuple[str, ...]
     size: int
     order: str  # asc | desc
     label: str
-    order_by: str = "_count"  # ranking loop: any non-_term = metric path
+    order_by: str = "_count"  # ranking stage: any non-_term = metric path
     order_metric: tuple[str, str] = ("count", "")
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        raw_terms = p.get("terms") or p.get("fields") or []
+        flds = tuple(
+            str(t["field"]) if isinstance(t, dict) else str(t)
+            for t in raw_terms
+        )
+        if len(flds) < 2:
+            raise ValueError(
+                "kibana: multi_terms needs at least two fields"
+            )
+        order = str(p.get("order", "desc"))
+        if order not in ("asc", "desc"):
+            raise ValueError("kibana: multi_terms order must be asc|desc")
+        # ES orders multi_terms buckets exactly like terms: by doc
+        # count (default), by the key tuple (_key), or by a
+        # sub-aggregation metric / custom orderAgg — resolved the same
+        # way as terms so the shared ranking stage handles both
+        order_by = str(p.get("orderBy", "_count"))
+        order_metric: "tuple[str, str] | None" = ("count", "")
+        if order_by in ("_key", "_term"):
+            order_by = "_term"  # ranking stage: key path (joined)
+        elif order_by != "_count":
+            order_metric = _order_metric_of(
+                "multi_terms", order_by, p, cx.by_id
+            )
+        return MultiTermsBucket(
+            fields=flds, size=int(p.get("size", 10)),
+            order=order, label=label,
+            order_by=order_by, order_metric=order_metric,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # key_as_string: the '|'-joined field tuple as ES
+        # renders multi_terms keys — with embedded separators
+        # ESCAPED (backslash doubles, '|' → '\|') so the join stays a
+        # BIJECTION of the tuple: ES keys on the value array,
+        # and a plain join would collapse ('a|b','c') with
+        # ('a','b|c') into one bucket (code-review 11.5).  For
+        # separator-free data the key renders exactly like ES.
+        # Docs missing ANY field drop first (concat_ws would
+        # silently skip the NULL and alias distinct tuples).
+        parts = [
+            F.regexp_replace(
+                ev.resolve(f).cast("string"), r"([\\|])", r"\\$1"
+            )
+            for f in self.fields
+        ]
+        raw = [ev.resolve(f).cast("string") for f in self.fields]
+        keep = raw[0].isNotNull()
+        for prt in raw[1:]:
+            keep = keep & prt.isNotNull()
+        return df.filter(keep).withColumn(
+            self.label, F.concat_ws("|", *parts)
+        )
 
 
 @dataclass(frozen=True)
-class RareTermsBucket:
+class RareTermsBucket(_Bucket):
     """ES ``rare_terms`` (round 11.5): the long-tail complement of
     terms — keep the keys whose doc count within the parent bucket is
     ≤ ``max_doc_count`` (ES caps it at 100).  ES computes this with a
@@ -345,9 +1842,63 @@ class RareTermsBucket:
     max_doc_count: int
     label: str
 
+    drops_rows = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        mdc = int(p.get("max_doc_count", 1))
+        if not 1 <= mdc <= 100:
+            # ES rejects max_doc_count above 100 (precision bound)
+            raise ValueError(
+                "kibana: rare_terms max_doc_count must be in [1, 100]"
+            )
+        return RareTermsBucket(
+            field=p["field"], max_doc_count=mdc, label=label
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # doc-frame snapshot taken AT this bucket's level: inner buckets
+        # may EXPLODE rows (overlapping ranges, multi-match filters) or
+        # DROP them (null-key filters), which would corrupt the rare doc
+        # count if taken afterwards (code-review 11.5)
+        v = ev.resolve(self.field).cast("string")
+        df = df.filter(v.isNotNull()).withColumn(self.label, v)
+        ev.rare_src[self.label] = df
+        return df
+
+    def leaf_aggs(self) -> list[Column]:
+        # an INNERMOST rare_terms bucket's doc count rides the main
+        # aggregation as a hidden column — its groups ARE the rare
+        # level, so no second scan/shuffle/join is needed
+        return [F.count(F.lit(1)).alias(f"__rt_{self.label}")]
+
+    def tail_cut(self, out: DataFrame, prefix: list[str], ev: _Eval) -> DataFrame:
+        """Keep the keys whose TOTAL doc count within their parent
+        bucket is ≤ max_doc_count.  An innermost bucket filters its
+        hidden leaf count; a bucket with buckets nested BELOW it counts
+        its own-level snapshot frame instead (inner explodes/filters
+        must not distort the count) and joins back KEY-KEYED: the
+        qualifying set is the LONG TAIL — potentially MOST keys — so
+        unlike the top-N semi-join (survivor side provably ≤ size rows)
+        nothing here may broadcast; the optimizer picks the strategy
+        (AQE-safe at any cardinality)."""
+        rt_col = f"__rt_{self.label}"
+        if rt_col in out.columns:
+            return out.filter(
+                F.col(rt_col) <= self.max_doc_count
+            ).drop(rt_col)
+        lvl = ev.rare_src[self.label].groupBy(
+            *[F.col(c) for c in prefix + [self.label]]
+        ).agg(F.count(F.lit(1)).alias("__rt"))
+        return (
+            out.join(lvl, prefix + [self.label], "left")
+            .filter(F.col("__rt") <= self.max_doc_count)
+            .drop("__rt")
+        )
+
 
 @dataclass(frozen=True)
-class FilterBucket:
+class FilterBucket(_Bucket):
     """ES single ``filter`` agg (round 13): one named bucket holding
     the documents that match a query_string — the narrowing wrapper ES
     users put around sub-aggs.  The flattened relation keeps a constant
@@ -358,9 +1909,30 @@ class FilterBucket:
     query: str
     label: str
 
+    narrows = True
+    drops_rows = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        q = p.get("query")
+        if q is None and isinstance(p.get("filter"), dict):
+            # ES-request shape: {"filter": {"query_string": {...}}}
+            # / Kibana's {"filter": {"query": ..., "language": ..}}
+            q = p["filter"].get("query")
+        if not isinstance(q, str) or not q.strip():
+            raise ValueError("kibana: filter agg needs a query string")
+        return FilterBucket(query=q, label=label)
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        return df.filter(
+            _query_string_pred(
+                self.query, ev.resolve, df, ev.default_search_field
+            )
+        ).withColumn(self.label, F.lit(self.label))
+
 
 @dataclass(frozen=True)
-class MissingBucket:
+class MissingBucket(_Bucket):
     """ES ``missing`` bucket agg (round 13): the single bucket of
     documents that LACK the field — the complement of every
     field-keyed bucket's null-drop.  Constant key column like
@@ -369,9 +1941,23 @@ class MissingBucket:
     field: str
     label: str
 
+    narrows = True
+    drops_rows = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: missing agg needs a field")
+        return MissingBucket(field=p["field"], label=label)
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        return df.filter(ev.resolve(self.field).isNull()).withColumn(
+            self.label, F.lit(self.label)
+        )
+
 
 @dataclass(frozen=True)
-class RateAgg:
+class RateAgg(_Metric):
     """ES ``rate`` metric agg (round 13): per-``unit`` rate of a sum
     (``mode="sum"``), of the number of field values
     (``mode="value_count"``), or of documents (no field) inside each
@@ -385,9 +1971,61 @@ class RateAgg:
     mode: str  # "sum" | "value_count"
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        unit = str(p.get("unit", "")) or None
+        if unit is not None and unit not in _RATE_UNIT_US:
+            raise ValueError(
+                f"kibana: rate unit must be one of "
+                f"{sorted(_RATE_UNIT_US)}, got {unit!r}"
+            )
+        mode = str(p.get("mode", "sum"))
+        if mode not in ("sum", "value_count"):
+            raise ValueError(
+                "kibana: rate mode must be sum|value_count"
+            )
+        if mode == "value_count" and not p.get("field"):
+            raise ValueError(
+                "kibana: rate mode=value_count needs a field"
+            )
+        return RateAgg(
+            field=p.get("field", "") or "",
+            # unit omitted: ES rates per the histogram's own
+            # interval — factor 1, marked with unit_us=0
+            unit_us=_RATE_UNIT_US[unit] if unit else 0,
+            mode=mode,
+            label=label,
+        )
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        # rate = bucket value · unit / interval, against the INNERMOST
+        # (auto_)date_histogram's resolved interval (ES: rate must sit
+        # under a date_histogram)
+        if not ev.intervals:
+            raise ValueError(
+                "kibana: rate agg requires an enclosing "
+                "(auto_)date_histogram bucket"
+            )
+        iv_us = list(ev.intervals.values())[-1]
+        factor = (self.unit_us / iv_us) if self.unit_us else 1.0
+        if not self.field:
+            base = F.count(F.lit(1)).cast("double")
+        elif self.mode == "value_count":
+            base = F.count(ev.resolve(self.field)).cast("double")
+        else:
+            # sum-family: an all-null bucket rates 0, like ES
+            base = F.coalesce(
+                F.sum(ev.resolve(self.field).cast("double")), F.lit(0.0)
+            )
+        return [(base * F.lit(factor)).alias(self.label)]
+
+    def zero_names(self) -> list[str]:
+        # count/sum-family: an empty bucket rates 0 (ES)
+        return [self.label]
+
 
 @dataclass(frozen=True)
-class TopMetricsAgg:
+class TopMetricsAgg(_Metric):
     """ES ``top_metrics`` (round 13): the metric field values of the
     top ``size`` documents by ``sort_field`` — what Kibana's "last
     value" reads.  size 1 rides the main hash aggregation as
@@ -404,16 +2042,139 @@ class TopMetricsAgg:
     def column_names(self) -> list[str]:
         return [f"{self.label}_{_slug(f)}" for f in self.fields]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        raw_fields = p.get("fields") or (
+            [p["field"]] if p.get("field") else []
+        )
+        if isinstance(raw_fields, (str, dict)):
+            raw_fields = [raw_fields]
+        flds2 = tuple(
+            f["field"] if isinstance(f, dict) else str(f)
+            for f in raw_fields
+        )
+        if not flds2:
+            raise ValueError("kibana: top_metrics needs metric fields")
+        tm_size = int(p.get("size", 1))
+        if not 1 <= tm_size <= 100:
+            # ES caps top_metrics size at 10 by default (index
+            # setting raises it); keep a hard sanity bound
+            raise ValueError(
+                "kibana: top_metrics size must be in [1, 100]"
+            )
+        sort_p = p.get("sort")
+        if isinstance(sort_p, dict):
+            (tm_sf, tm_so), = sort_p.items()
+        elif p.get("sortField"):
+            tm_sf = p["sortField"]
+            tm_so = p.get("sortOrder", "desc")
+        else:
+            # ES requires an explicit sort on top_metrics; a
+            # silent default would only surface later as an
+            # unresolved-column error deep in evaluate (ADVICE r13)
+            raise ValueError(
+                "kibana: top_metrics needs an explicit sort "
+                "('sort': {field: order} or sortField/sortOrder)"
+            )
+        if tm_so not in ("asc", "desc"):
+            raise ValueError("kibana: top_metrics sort must be asc|desc")
+        return TopMetricsAgg(
+            fields=flds2, sort_field=tm_sf, sort_order=tm_so,
+            label=label, size=tm_size,
+        )
+
+    @property
+    def join_rank(self) -> int:
+        # size > 1 ranks and joins back after the main aggregation
+        return 2 if self.size > 1 else 0
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        if self.size > 1:
+            return []
+        sort_col = ev.resolve(self.sort_field)
+        # ES skips documents whose sort field is missing; an unguarded
+        # struct is non-null even with a null field, and Spark's
+        # nulls-first-on-asc would make min_by pick exactly those docs
+        # (ADVICE r13).  A NULL ordering value makes max_by/min_by skip
+        # the row.
+        order = F.when(
+            sort_col.isNotNull(),
+            F.struct(
+                sort_col.alias("s"),
+                *([ev.resolve(ev.tiebreak).alias("t")] if ev.tiebreak else []),
+            ),
+        )
+        pick = F.max_by if self.sort_order == "desc" else F.min_by
+        return [
+            pick(ev.resolve(f_), order).alias(n_)
+            for f_, n_ in zip(self.fields, self.column_names())
+        ]
+
+    def join(self, out, df, keys, ev):
+        """size > 1: the top-N documents' values as one sort-ordered
+        ARRAY per metric field — exactly the ``top`` list ES returns."""
+        sort_col = ev.resolve(self.sort_field)
+        # ES skips docs missing the sort field (see aggs()); filter
+        # before the rank window so nulls-first-on-asc can't rank them
+        ranked = _top_n_rows(
+            df.filter(sort_col.isNotNull()), keys, sort_col,
+            self.sort_order, self.size, ev,
+        )
+        folds = [
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            F.col("__rn").alias("r"),
+                            ev.resolve(f_).alias("v"),
+                        )
+                    )
+                ),
+                lambda h: h["v"],
+            ).alias(n_)
+            for f_, n_ in zip(self.fields, self.column_names())
+        ]
+        per = ranked.groupBy(*[F.col(k) for k in keys]).agg(*folds)
+        return _join_back(out, per, keys)
+
 
 @dataclass(frozen=True)
-class MetricAgg:
+class MetricAgg(_Metric):
     op: str  # avg | min | max | sum | cardinality | count | value_count
     field: str
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if t == "value_count" and not p.get("field"):
+            raise ValueError("kibana: value_count needs a field")
+        return MetricAgg(op=t, field=p.get("field", ""), label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        if self.op == "count":
+            return [F.count(F.lit(1)).alias(self.label)]
+        if self.op == "value_count":
+            # ES value_count: non-null field VALUES, not docs
+            return [F.count(ev.resolve(self.field)).alias(self.label)]
+        fn = {
+            "avg": lambda c: F.avg(c.cast("double")),
+            "min": lambda c: F.min(c.cast("double")),
+            "max": lambda c: F.max(c.cast("double")),
+            "sum": lambda c: F.sum(c.cast("double")),
+            "cardinality": ev.count_distinct,
+        }[self.op]
+        return [fn(ev.resolve(self.field)).alias(self.label)]
+
+    def zero_names(self) -> list[str]:
+        # count-family aggs: ES returns 0 (not null) on an empty
+        # bucket — value_count included (ADVICE r12)
+        if self.op in ("count", "cardinality", "sum", "value_count"):
+            return [self.label]
+        return []
+
 
 @dataclass(frozen=True)
-class StringStatsAgg:
+class StringStatsAgg(_Metric):
     """ES ``string_stats`` (round 13): count of non-null values,
     min/max/avg byte-..character-length, and the Shannon entropy (log
     base 2) of the bucket's character distribution.  Lengths ride the
@@ -433,9 +2194,58 @@ class StringStatsAgg:
                       "entropy")
         ]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: string_stats needs a field")
+        if p.get("show_distribution"):
+            raise ValueError(
+                "kibana: string_stats show_distribution is not "
+                "modelled"
+            )
+        return StringStatsAgg(field=p["field"], label=label)
+
+    #: the entropy column joins back after the main aggregation
+    join_rank = 3
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        v = ev.resolve(self.field).cast("string")
+        ln = F.length(v)
+        names = self.column_names()
+        return [
+            F.count(v).alias(names[0]),
+            F.min(ln).alias(names[1]),
+            F.max(ln).alias(names[2]),
+            F.avg(ln.cast("double")).alias(names[3]),
+        ]
+
+    def join(self, out, df, keys, ev):
+        """Entropy: one char-keyed aggregation over the doc frame —
+        H = log2(T) - (1/T)*sum(c*log2 c) in a single pass — joined
+        back bucket-keyed (one row per bucket); a bucketless panel
+        folds to one row broadcast."""
+        v = ev.resolve(self.field).cast("string")
+        chars = df.filter(v.isNotNull()).select(
+            *[F.col(k) for k in keys],
+            F.explode(F.split(v, "(?!$)")).alias("__ch"),
+        ).filter(F.col("__ch") != "")
+        cc = chars.groupBy(
+            *[F.col(k) for k in keys], F.col("__ch")
+        ).agg(F.count(F.lit(1)).alias("__c"))
+        t = F.sum("__c").cast("double")
+        ent_expr = (
+            F.log2(t) - F.sum(F.col("__c") * F.log2("__c")) / t
+        ).alias(self.column_names()[4])
+        return _join_back(
+            out, cc.groupBy(*[F.col(k) for k in keys]).agg(ent_expr), keys
+        )
+
+    def zero_names(self) -> list[str]:
+        return [self.column_names()[0]]
+
 
 @dataclass(frozen=True)
-class MatrixStatsAgg:
+class MatrixStatsAgg(_Metric):
     """ES ``matrix_stats`` (round 14): cross-field numeric statistics
     over a tuple of fields — per-field mean / variance / skewness /
     kurtosis plus the pairwise covariance and correlation matrices,
@@ -477,9 +2287,119 @@ class MatrixStatsAgg:
                 ]
         return cols
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        raw_mx = p.get("fields") or []
+        if isinstance(raw_mx, str):
+            raw_mx = [raw_mx]
+        mx_fields = tuple(str(f) for f in raw_mx)
+        if len(mx_fields) < 2:
+            raise ValueError(
+                "kibana: matrix_stats needs at least two fields"
+            )
+        if len(set(mx_fields)) != len(mx_fields):
+            raise ValueError(
+                "kibana: matrix_stats fields must be distinct"
+            )
+        if p.get("missing"):
+            raise ValueError(
+                "kibana: matrix_stats per-field missing defaults "
+                "are not modelled — documents missing any field "
+                "drop (ES's default)"
+            )
+        return MatrixStatsAgg(fields=mx_fields, label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        # power sums Σx..Σx⁴/Σxy ride the main hash agg in
+        # DECIMAL(38,6) (partition-order-independent totals — survives
+        # AQE/retry re-summation); a doc missing ANY field is excluded
+        # from the whole matrix (ES default)
+        cols = [ev.resolve(f_).cast("double") for f_ in self.fields]
+        ok = cols[0].isNotNull()
+        for c_ in cols[1:]:
+            ok = ok & c_.isNotNull()
+
+        def dsum(e):
+            return F.sum(F.when(ok, e).cast("decimal(38,6)"))
+
+        pre = f"__mx_{self.label}"
+        exprs = [F.count(F.when(ok, F.lit(1))).alias(f"{self.label}_doc_count")]
+        for f_, c_ in zip(self.fields, cols):
+            sl = _slug(f_)
+            exprs += [
+                dsum(c_).alias(f"{pre}_{sl}_s1"),
+                dsum(c_ * c_).alias(f"{pre}_{sl}_s2"),
+                dsum(c_ * c_ * c_).alias(f"{pre}_{sl}_s3"),
+                dsum(c_ * c_ * c_ * c_).alias(f"{pre}_{sl}_s4"),
+            ]
+        for i_ in range(len(self.fields)):
+            for j_ in range(i_ + 1, len(self.fields)):
+                si, sj = _slug(self.fields[i_]), _slug(self.fields[j_])
+                exprs.append(
+                    dsum(cols[i_] * cols[j_]).alias(f"{pre}_{si}_{sj}_p")
+                )
+        return exprs
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        # ES MatrixStatsResults formulas from the exact
+        # fixed-point power sums: M2/M3/M4/C2 central moments
+        # derived in double; degenerate cases null (n<2 for
+        # the (n−1)-normalized stats, M2=0 for shape stats)
+        n = F.col(f"{self.label}_doc_count").cast("double")
+        mx_mean: dict[str, Column] = {}
+        mx_m2: dict[str, Column] = {}
+        for f_ in self.fields:
+            sl = _slug(f_)
+            s1 = F.col(f"__mx_{self.label}_{sl}_s1").cast("double")
+            s2 = F.col(f"__mx_{self.label}_{sl}_s2").cast("double")
+            s3 = F.col(f"__mx_{self.label}_{sl}_s3").cast("double")
+            s4 = F.col(f"__mx_{self.label}_{sl}_s4").cast("double")
+            mean = s1 / n
+            m2 = s2 - n * mean * mean
+            m3 = s3 - F.lit(3.0) * mean * s2 \
+                + F.lit(2.0) * n * mean * mean * mean
+            m4 = s4 - F.lit(4.0) * mean * s3 \
+                + F.lit(6.0) * mean * mean * s2 \
+                - F.lit(3.0) * n * mean * mean * mean * mean
+            mx_mean[f_], mx_m2[f_] = mean, m2
+            out = out.withColumn(
+                f"{self.label}_{sl}_mean", F.when(n > 0, mean)
+            ).withColumn(
+                f"{self.label}_{sl}_variance",
+                F.when(n >= 2, m2 / (n - F.lit(1.0))),
+            ).withColumn(
+                f"{self.label}_{sl}_skewness",
+                F.when(m2 > 0, F.sqrt(n) * m3 / F.pow(m2, 1.5)),
+            ).withColumn(
+                f"{self.label}_{sl}_kurtosis",
+                F.when(m2 > 0, n * m4 / (m2 * m2)),
+            )
+        for i_ in range(len(self.fields)):
+            for j_ in range(i_ + 1, len(self.fields)):
+                fi, fj = self.fields[i_], self.fields[j_]
+                si, sj = _slug(fi), _slug(fj)
+                p = F.col(
+                    f"__mx_{self.label}_{si}_{sj}_p"
+                ).cast("double")
+                c2 = p - n * mx_mean[fi] * mx_mean[fj]
+                out = out.withColumn(
+                    f"{self.label}_{si}_{sj}_covariance",
+                    F.when(n >= 2, c2 / (n - F.lit(1.0))),
+                ).withColumn(
+                    f"{self.label}_{si}_{sj}_correlation",
+                    F.when(
+                        (mx_m2[fi] > 0) & (mx_m2[fj] > 0),
+                        c2 / F.sqrt(mx_m2[fi] * mx_m2[fj]),
+                    ),
+                )
+        return out.drop(
+            *[c for c in out.columns
+              if c.startswith(f"__mx_{self.label}_")]
+        )
+
 
 @dataclass(frozen=True)
-class TTestAgg:
+class TTestAgg(_Metric):
     """ES ``t_test`` (round 14): Student's t between two populations —
     ``paired`` (per-doc differences of two fields), ``homoscedastic``
     (pooled variance) and ``heteroscedastic`` (Welch, ES's default;
@@ -508,9 +2428,143 @@ class TTestAgg:
     def column_names(self) -> list[str]:
         return [f"{self.label}_t", f"{self.label}_df", f"{self.label}_p"]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        side_a, side_b = p.get("a") or {}, p.get("b") or {}
+        if not side_a.get("field") or not side_b.get("field"):
+            raise ValueError(
+                "kibana: t_test needs a.field and b.field"
+            )
+        tt_type = str(p.get("type", "heteroscedastic"))
+        if tt_type not in (
+            "paired", "homoscedastic", "heteroscedastic"
+        ):
+            raise ValueError(
+                "kibana: t_test type must be paired|homoscedastic|"
+                "heteroscedastic"
+            )
+        if tt_type == "paired" and (
+            side_a.get("filter") or side_b.get("filter")
+        ):
+            # ES rejects filters on a paired t_test — the pairs
+            # come from the same documents by definition
+            raise ValueError(
+                "kibana: paired t_test must not have filters"
+            )
+        return TTestAgg(
+            a_field=str(side_a["field"]),
+            b_field=str(side_b["field"]),
+            a_filter=str(side_a.get("filter") or ""),
+            b_filter=str(side_b.get("filter") or ""),
+            test_type=tt_type,
+            label=label,
+        )
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        # per-side (or per-pair) DECIMAL(38,6) power sums ride the main
+        # hash agg (the matrix_stats determinism argument); population
+        # filters are scan-local query_string predicates
+        tva = ev.resolve(self.a_field).cast("double")
+        tvb = ev.resolve(self.b_field).cast("double")
+        pre = f"__tt_{self.label}"
+        if self.test_type == "paired":
+            tok = tva.isNotNull() & tvb.isNotNull()
+            td = tva - tvb
+            return [
+                F.count(F.when(tok, F.lit(1))).alias(f"{pre}_n"),
+                F.sum(F.when(tok, td).cast("decimal(38,6)"))
+                .alias(f"{pre}_s1"),
+                F.sum(F.when(tok, td * td).cast("decimal(38,6)"))
+                .alias(f"{pre}_s2"),
+            ]
+
+        def side(flt):
+            return _query_string_pred(
+                flt, ev.resolve, df, ev.default_search_field
+            ) if flt else F.lit(True)
+
+        exprs = []
+        for s_, pred, val in (
+            ("a", side(self.a_filter) & tva.isNotNull(), tva),
+            ("b", side(self.b_filter) & tvb.isNotNull(), tvb),
+        ):
+            exprs += [
+                F.count(F.when(pred, F.lit(1))).alias(f"{pre}_n{s_}"),
+                F.sum(F.when(pred, val).cast("decimal(38,6)"))
+                .alias(f"{pre}_s1{s_}"),
+                F.sum(F.when(pred, val * val).cast("decimal(38,6)"))
+                .alias(f"{pre}_s2{s_}"),
+            ]
+        return exprs
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        # derive (t, df) from the exact fixed-point sums; ES's
+        # p-value is the Student-t CDF of exactly this pair
+        # (see the dataclass docstring for the divergence note)
+        if self.test_type == "paired":
+            n = F.col(f"__tt_{self.label}_n").cast("double")
+            s1 = F.col(f"__tt_{self.label}_s1").cast("double")
+            s2 = F.col(f"__tt_{self.label}_s2").cast("double")
+            mean = s1 / n
+            var = (s2 - n * mean * mean) / (n - F.lit(1.0))
+            ok = (n >= 2) & (var > 0)
+            t_stat = mean / F.sqrt(var / n)
+            df_val = n - F.lit(1.0)
+        else:
+            na = F.col(f"__tt_{self.label}_na").cast("double")
+            nb = F.col(f"__tt_{self.label}_nb").cast("double")
+            ma = F.col(f"__tt_{self.label}_s1a").cast("double") / na
+            mb = F.col(f"__tt_{self.label}_s1b").cast("double") / nb
+            va_ = (
+                F.col(f"__tt_{self.label}_s2a").cast("double")
+                - na * ma * ma
+            ) / (na - F.lit(1.0))
+            vb_ = (
+                F.col(f"__tt_{self.label}_s2b").cast("double")
+                - nb * mb * mb
+            ) / (nb - F.lit(1.0))
+            if self.test_type == "homoscedastic":
+                sp2 = (
+                    (na - F.lit(1.0)) * va_
+                    + (nb - F.lit(1.0)) * vb_
+                ) / (na + nb - F.lit(2.0))
+                ok = (na >= 2) & (nb >= 2) & (sp2 > 0)
+                t_stat = (ma - mb) / F.sqrt(
+                    sp2 * (F.lit(1.0) / na + F.lit(1.0) / nb)
+                )
+                df_val = na + nb - F.lit(2.0)
+            else:  # heteroscedastic (Welch, ES default)
+                sea = va_ / na
+                seb = vb_ / nb
+                se2 = sea + seb
+                ok = (na >= 2) & (nb >= 2) & (se2 > 0)
+                t_stat = (ma - mb) / F.sqrt(se2)
+                df_val = (se2 * se2) / (
+                    sea * sea / (na - F.lit(1.0))
+                    + seb * seb / (nb - F.lit(1.0))
+                )
+        out = out.withColumn(
+            f"{self.label}_t", F.when(ok, t_stat)
+        ).withColumn(f"{self.label}_df", F.when(ok, df_val))
+        # ES's returned value: the two-sided p — the Student-t
+        # CDF of the (t, df) columns just materialized (plain
+        # column refs keep the CF expression compact; null
+        # t/df propagate).  Pure Column math, inside
+        # whole-stage codegen — see functions/stats.py.
+        out = out.withColumn(
+            f"{self.label}_p",
+            t_two_sided_p_col(
+                F.col(f"{self.label}_t"), F.col(f"{self.label}_df")
+            ),
+        )
+        return out.drop(
+            *[c for c in out.columns
+              if c.startswith(f"__tt_{self.label}_")]
+        )
+
 
 @dataclass(frozen=True)
-class BucketStatsTestAgg:
+class BucketStatsTestAgg(_Agg):
     """ES x-pack sibling significance pipelines (round 15):
     ``bucket_correlation`` (function ``count_correlation``) and
     ``bucket_count_ks_test`` — the stats-plugin companions to t_test /
@@ -566,9 +2620,88 @@ class BucketStatsTestAgg:
             return [self.label]
         return [f"{self.label}_{alt}" for alt in self.alternatives]
 
+    @staticmethod
+    def parse_correlation(t, p, label, cx):
+        # ES x-pack bucket_correlation (round 15): the only function is
+        # count_correlation; its indicator carries the per-bucket
+        # metric expectations, optional population fractions, and the
+        # TOTAL doc_count the bucket counts were drawn from (all
+        # literals — validated here, folded into compile-time
+        # constants at evaluation)
+        fn = p.get("function") or {}
+        if set(fn) != {"count_correlation"}:
+            raise ValueError(
+                "kibana: bucket_correlation supports exactly the "
+                "count_correlation function (like ES)"
+            )
+        ind = (fn["count_correlation"] or {}).get("indicator") or {}
+        exps = tuple(float(x) for x in ind.get("expectations") or ())
+        if len(exps) < 2:
+            raise ValueError(
+                "kibana: bucket_correlation indicator needs at "
+                "least two expectations"
+            )
+        fracs = tuple(float(x) for x in ind.get("fractions") or ())
+        if fracs and len(fracs) != len(exps):
+            raise ValueError(
+                "kibana: bucket_correlation fractions must match "
+                "expectations in length"
+            )
+        if fracs and (any(f < 0 for f in fracs) or sum(fracs) <= 0):
+            raise ValueError(
+                "kibana: bucket_correlation fractions must be "
+                "non-negative with a positive sum"
+            )
+        bc_n = int(ind.get("doc_count") or 0)
+        if bc_n <= 0:
+            raise ValueError(
+                "kibana: bucket_correlation indicator needs "
+                "doc_count > 0 (the population the bucket counts "
+                "are drawn from)"
+            )
+        return BucketStatsTestAgg(
+            op=t, source_label=_buckets_path(p), label=label,
+            expectations=exps, fractions=fracs, doc_count=bc_n, seq=cx.seq,
+        )
+
+    @staticmethod
+    def parse_ks_test(t, p, label, cx):
+        alts = tuple(
+            str(x) for x in p.get("alternative")
+            or ("less", "greater", "two_sided")
+        )
+        bad = [x for x in alts if x not in ("less", "greater",
+                                            "two_sided")]
+        if bad or len(set(alts)) != len(alts):
+            raise ValueError(
+                "kibana: bucket_count_ks_test alternative must be "
+                "distinct values from less|greater|two_sided"
+            )
+        if str(p.get("sampling_method") or "") != "uniform":
+            # ES defaults to upper_tail — an x-pack reweighting of
+            # significant-terms sampling this engine does not
+            # model; require the explicit uniform stance
+            raise ValueError(
+                "kibana: bucket_count_ks_test supports only "
+                "sampling_method 'uniform' (explicit; ES's default "
+                "upper_tail reweighting is not modelled)"
+            )
+        ks_fracs = tuple(float(x) for x in p.get("fractions") or ())
+        if ks_fracs and (
+            any(f < 0 for f in ks_fracs) or sum(ks_fracs) <= 0
+        ):
+            raise ValueError(
+                "kibana: bucket_count_ks_test fractions must be "
+                "non-negative with a positive sum"
+            )
+        return BucketStatsTestAgg(
+            op=t, source_label=_buckets_path(p), label=label,
+            fractions=ks_fracs, alternatives=alts, seq=cx.seq,
+        )
+
 
 @dataclass(frozen=True)
-class RandomSamplerBucket:
+class RandomSamplerBucket(_Bucket):
     """ES ``random_sampler`` (round 14): run the sub-aggregations over
     a random subset of documents — ES's own answer to the 100 TB
     problem.  ES hashes shard-relative doc ids with an optional seed
@@ -598,9 +2731,64 @@ class RandomSamplerBucket:
     id_field: str
     label: str
 
+    keyed = False
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if cx.buckets:
+            raise ValueError(
+                "kibana: random_sampler must be the first (top-"
+                "level) bucket agg, like ES"
+            )
+        prob = float(p.get("probability", 0))
+        # ES's own contract: (0, 0.5] or exactly 1
+        if not (0 < prob <= 0.5 or prob == 1.0):
+            raise ValueError(
+                "kibana: random_sampler probability must be in "
+                "(0, 0.5] or exactly 1"
+            )
+        if p.get("seed") is None:
+            # ES generates a seed when absent — non-reproducible;
+            # the deterministic stance requires one explicitly
+            raise ValueError(
+                "kibana: random_sampler needs an explicit seed "
+                "(deterministic, replayable sampling)"
+            )
+        if not p.get("id_field"):
+            raise ValueError(
+                "kibana: random_sampler needs id_field — ES hashes "
+                "shard-relative doc ids (not reproducible); the "
+                "deterministic twin hashes an explicit doc identity"
+            )
+        return RandomSamplerBucket(
+            probability=prob,
+            seed=int(p["seed"]),
+            id_field=str(p["id_field"]),
+            label=label,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # transparent deterministic filter, no key column: keep
+        # a doc iff md5(id ':' seed) residue falls below the
+        # probability cut — scan-local, reproducible across
+        # cluster layouts / AQE re-plans / engines (the
+        # llmdata md5_residue machinery; exact SQL twin)
+        from kafka_metrics_exporter_spark.llmdata.similarity import (
+            md5_residue,
+        )
+
+        keep_key = F.concat(
+            ev.resolve(self.id_field).cast("string"),
+            F.lit(":"), F.lit(str(self.seed)),
+        )
+        return df.filter(
+            md5_residue(keep_key) % F.lit(1_000_000)
+            < F.lit(int(round(self.probability * 1_000_000)))
+        )
+
 
 @dataclass(frozen=True)
-class DiversifiedSamplerBucket:
+class DiversifiedSamplerBucket(_Bucket):
     """ES ``diversified_sampler`` (round 14): run the sub-aggregations
     over a sample capped at ``max_docs_per_value`` documents per
     de-duplication key — the "don't let one hot user dominate the
@@ -620,9 +2808,65 @@ class DiversifiedSamplerBucket:
     id_field: str
     label: str
 
+    keyed = False
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if cx.buckets:
+            raise ValueError(
+                "kibana: diversified_sampler must be the first "
+                "(top-level) bucket agg, like ES"
+            )
+        if not p.get("field"):
+            raise ValueError(
+                "kibana: diversified_sampler needs the de-dup field"
+            )
+        mdpv = int(p.get("max_docs_per_value", 1))
+        if mdpv < 1:
+            raise ValueError(
+                "kibana: diversified_sampler max_docs_per_value "
+                "must be >= 1"
+            )
+        if p.get("seed") is None or not p.get("id_field"):
+            raise ValueError(
+                "kibana: diversified_sampler needs an explicit seed "
+                "and id_field (deterministic, replayable sampling — "
+                "see random_sampler)"
+            )
+        return DiversifiedSamplerBucket(
+            field=str(p["field"]),
+            max_docs_per_value=mdpv,
+            seed=int(p["seed"]),
+            id_field=str(p["id_field"]),
+            label=label,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # per-dedup-key cap: keep the first max_docs_per_value
+        # docs by md5(id ':' seed) residue (id tiebreak) —
+        # deterministic where ES is shard-order/score
+        # sensitive.  One hash-partitioned rank window on the
+        # key; per-key state is a counter, never doc bodies.
+        from kafka_metrics_exporter_spark.llmdata.similarity import (
+            md5_residue,
+        )
+
+        ds_id = ev.resolve(self.id_field).cast("string")
+        ds_res = md5_residue(
+            F.concat(ds_id, F.lit(":"), F.lit(str(self.seed)))
+        )
+        ds_w = Window.partitionBy(
+            ev.resolve(self.field).cast("string")
+        ).orderBy(ds_res.asc(), ds_id.asc())
+        return (
+            df.withColumn("__ds_rn", F.row_number().over(ds_w))
+            .filter(F.col("__ds_rn") <= self.max_docs_per_value)
+            .drop("__ds_rn")
+        )
+
 
 @dataclass(frozen=True)
-class SamplerBucket:
+class SamplerBucket(_Bucket):
     """ES plain ``sampler`` (round 15): run the sub-aggregations over
     the ``shard_size`` "best" documents.  ES keeps the top-SCORED docs
     per shard (score- and shard-layout-sensitive; with no scoring
@@ -644,9 +2888,58 @@ class SamplerBucket:
     id_field: str
     label: str
 
+    keyed = False
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if cx.buckets:
+            raise ValueError(
+                "kibana: sampler must be the first (top-level) "
+                "bucket agg, like ES"
+            )
+        shard_size = int(p.get("shard_size", 100))  # ES default
+        if shard_size < 1:
+            raise ValueError(
+                "kibana: sampler shard_size must be >= 1"
+            )
+        if p.get("seed") is None or not p.get("id_field"):
+            # ES keeps per-shard top-SCORED docs — score- and
+            # layout-sensitive; the deterministic twin needs an
+            # explicit identity + seed (random_sampler stance)
+            raise ValueError(
+                "kibana: sampler needs an explicit seed and "
+                "id_field (deterministic residue top-k where ES "
+                "keeps per-shard top-scored docs)"
+            )
+        return SamplerBucket(
+            shard_size=shard_size,
+            seed=int(p["seed"]),
+            id_field=str(p["id_field"]),
+            label=label,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # transparent deterministic top-k: the shard_size docs
+        # with the lowest md5(id ':' seed) residues (id
+        # tiebreak) — ONE TakeOrderedAndProject (bounded
+        # per-task heaps), never a full sort; ES keeps
+        # per-shard top-scored docs instead (dataclass
+        # docstring documents the divergence)
+        from kafka_metrics_exporter_spark.llmdata.similarity import (
+            md5_residue,
+        )
+
+        sp_id = ev.resolve(self.id_field).cast("string")
+        sp_res = md5_residue(
+            F.concat(sp_id, F.lit(":"), F.lit(str(self.seed)))
+        )
+        return df.orderBy(sp_res.asc(), sp_id.asc()).limit(
+            self.shard_size
+        )
+
 
 @dataclass(frozen=True)
-class IpRangeBucket:
+class IpRangeBucket(_Bucket):
     """ES ``ip_range`` bucket (round 15; IPv6 since round 16): half-open
     [from, to) ranges over an IP-string field, plus CIDR ``mask``
     entries (a /p mask is the range [network_address, network_address
@@ -676,9 +2969,122 @@ class IpRangeBucket:
     ranges: tuple[tuple[str, int | None, int | None], ...]  # (key, lo, hi)
     label: str
 
+    explodes = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: ip_range needs a field")
+        import ipaddress as _ip
+
+        def _ip_int(s, what):
+            # v4 and v6 share Lucene's 128-bit space: v4 maps to
+            # ::ffff:a.b.c.d (how ES's ip field compares both
+            # families), so cross-family ranges work like ES
+            try:
+                addr = _ip.ip_address(str(s))
+            except ValueError as e:
+                raise ValueError(
+                    f"kibana: ip_range {what} {s!r} is not a valid "
+                    f"IP address"
+                ) from e
+            return int(addr) + (
+                _V4_MAPPED_BASE if addr.version == 4 else 0
+            )
+
+        ipranges: list[tuple[str, int | None, int | None]] = []
+        for r in p.get("ranges", []):
+            if r.get("mask"):
+                try:
+                    net = _ip.ip_network(str(r["mask"]), strict=False)
+                except ValueError as e:
+                    raise ValueError(
+                        f"kibana: ip_range mask {r['mask']!r} is "
+                        f"not a valid CIDR"
+                    ) from e
+                base = int(net.network_address) + (
+                    _V4_MAPPED_BASE if net.version == 4 else 0
+                )
+                end = base + net.num_addresses
+                ipranges.append((
+                    str(r.get("key") or r["mask"]),
+                    base,
+                    # ::/0 ends at 2^128: unbounded above
+                    None if end >= (1 << 128) else end,
+                ))
+                continue
+            lo = (
+                _ip_int(r["from"], "from")
+                if r.get("from") is not None else None
+            )
+            hi = (
+                _ip_int(r["to"], "to")
+                if r.get("to") is not None else None
+            )
+            key = str(
+                r.get("key")
+                or f"{r.get('from') or '*'}-{r.get('to') or '*'}"
+            )
+            ipranges.append((key, lo, hi))
+        if not ipranges:
+            raise ValueError(
+                "kibana: ip_range needs at least one range"
+            )
+        return IpRangeBucket(
+            field=p["field"], ranges=tuple(ipranges), label=label
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # IP string -> two biased 64-bit words ONCE per row
+        # (the whole parse bound as a lambda leaf — project
+        # collapsing would otherwise re-run it once per range
+        # predicate), then the RangeBucket overlap-explode
+        # comparing (hi, lo) lexicographically against the
+        # parse-time 128-bit endpoints; malformed addresses
+        # stay null and match no range
+        ip_s = ev.resolve(self.field).cast("string")
+
+        # factory binds the captured ranges: pyspark derives a
+        # HOF lambda's arity from the Python signature, so
+        # default-arg closures would mis-arity the callback
+        def _make_ip_matches(_ranges):
+            def _ip_matches(w):
+                hi_w, lo_w = w["hi"], w["lo"]
+
+                def _ge(v):  # (hi_w, lo_w) >= v, unsigned-128
+                    h, l_ = _ip128_bounds(v)
+                    return (hi_w > F.lit(h)) | (
+                        (hi_w == F.lit(h)) & (lo_w >= F.lit(l_))
+                    )
+
+                def _lt(v):
+                    h, l_ = _ip128_bounds(v)
+                    return (hi_w < F.lit(h)) | (
+                        (hi_w == F.lit(h)) & (lo_w < F.lit(l_))
+                    )
+
+                def _in_iprange(lo, hi):
+                    pred = hi_w.isNotNull()
+                    if lo is not None:
+                        pred = pred & _ge(lo)
+                    if hi is not None:
+                        pred = pred & _lt(hi)
+                    return pred
+
+                return _matches(
+                    (key, _in_iprange(lo, hi)) for key, lo, hi in _ranges
+                )
+
+            return _ip_matches
+
+        ip_matches = _bind1(
+            _ip128_struct(ip_s), _make_ip_matches(self.ranges)
+        )
+        return df.withColumn(self.label, F.explode(ip_matches))
+
 
 @dataclass(frozen=True)
-class GeoGridBucket:
+class GeoGridBucket(_Ranked):
     """ES ``geohash_grid`` / ``geotile_grid`` (round 16 — the last
     documented exclusion family): grid-cell buckets over a geo_point
     field, which this engine models as a ``struct<lat:double,
@@ -705,7 +3111,7 @@ class GeoGridBucket:
     label: str
     kind: str  # "geohash" | "geotile"
     bounds: tuple[float, float, float, float] | None = None  # t, l, b, r
-    # the terms ranking loop's protocol: grids order by doc_count desc
+    # the ranking stage's protocol (_Ranked): grids order by doc_count desc
     order: str = "desc"
     order_by: str = "_count"
 
@@ -713,9 +3119,81 @@ class GeoGridBucket:
     def order_metric(self) -> tuple[str, str]:
         return ("count", "")
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError(f"kibana: {t} needs a field")
+        kind = "geohash" if t == "geohash_grid" else "geotile"
+        prec = int(p.get("precision", 5 if kind == "geohash" else 7))
+        lo, hi = (1, 12) if kind == "geohash" else (0, 29)
+        if not lo <= prec <= hi:
+            raise ValueError(
+                f"kibana: {t} precision must be in "
+                f"[{lo}, {hi}] (ES's own bound)"
+            )
+        gbounds = None
+        if p.get("bounds") is not None:
+            bb = p["bounds"]
+            try:
+                tl, br = bb["top_left"], bb["bottom_right"]
+                gbounds = (
+                    float(tl["lat"]), float(tl["lon"]),
+                    float(br["lat"]), float(br["lon"]),
+                )
+            except (TypeError, KeyError) as exc:
+                raise ValueError(
+                    f"kibana: {t} bounds needs "
+                    "{top_left: {lat, lon}, bottom_right: "
+                    "{lat, lon}}"
+                ) from exc
+            t_, l_, b_, r_ = gbounds
+            if not (t_ >= b_):
+                raise ValueError(
+                    f"kibana: {t} bounds top_left.lat must "
+                    "be >= bottom_right.lat"
+                )
+            if not (l_ <= r_):
+                raise ValueError(
+                    f"kibana: {t} bounds crossing the "
+                    "antimeridian (left > right) is not modelled "
+                    "(documented; split the viewport into two "
+                    "requests)"
+                )
+        return GeoGridBucket(
+            field=p["field"],
+            precision=prec,
+            size=int(p.get("size", 10000)),
+            label=label,
+            kind=kind,
+            bounds=gbounds,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # grid key = pure Column math over the geo_point
+        # struct, unrolled at compile time; invalid/missing
+        # coordinates drop (ES rejects them at index) — the
+        # size/doc_count rank is the shared ranking stage
+        g_lat, g_lon = _geo_lat_lon(ev.resolve(self.field))
+        g_keep = _geo_valid(g_lat, g_lon)
+        if self.bounds is not None:
+            # viewport restriction BEFORE keying — scan-local,
+            # pushes into the source like any filter
+            t_, l_, b_2, r_ = self.bounds
+            g_keep = (
+                g_keep
+                & (g_lat <= F.lit(t_)) & (g_lat >= F.lit(b_2))
+                & (g_lon >= F.lit(l_)) & (g_lon <= F.lit(r_))
+            )
+        return df.filter(g_keep).withColumn(
+            self.label,
+            geohash_column(g_lat, g_lon, self.precision)
+            if self.kind == "geohash"
+            else geotile_column(g_lat, g_lon, self.precision),
+        )
+
 
 @dataclass(frozen=True)
-class GeoDistanceBucket:
+class GeoDistanceBucket(_Bucket):
     """ES ``geo_distance`` (round 16): half-open [from, to) rings
     around an origin point, keyed like range buckets (declared key,
     else ``from-to`` with ``*``); a doc lands in EVERY matching ring
@@ -730,9 +3208,84 @@ class GeoDistanceBucket:
     ranges: tuple[tuple[str, float | None, float | None], ...]
     label: str
 
+    explodes = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: geo_distance needs a field")
+        org = p.get("origin")
+        if isinstance(org, dict) and "lat" in org and "lon" in org:
+            origin = (float(org["lat"]), float(org["lon"]))
+        elif isinstance(org, str) and "," in org:
+            a_, b_ = org.split(",", 1)
+            origin = (float(a_), float(b_))
+        else:
+            raise ValueError(
+                "kibana: geo_distance needs an origin — "
+                "{'lat': .., 'lon': ..} or a 'lat,lon' string"
+            )
+        if not (-90 <= origin[0] <= 90 and -180 <= origin[1] <= 180):
+            raise ValueError(
+                f"kibana: geo_distance origin {origin} out of range"
+            )
+        unit = str(p.get("unit", "m"))
+        if unit not in ("m", "km"):
+            raise ValueError(
+                "kibana: geo_distance unit must be 'm' or 'km' "
+                "(other ES suffixes are not modelled)"
+            )
+        scale = 1000.0 if unit == "km" else 1.0
+        granges: list[tuple[str, float | None, float | None]] = []
+        for r in p.get("ranges", []):
+            lo_ = float(r["from"]) * scale if r.get("from") is not None else None
+            hi_ = float(r["to"]) * scale if r.get("to") is not None else None
+            key = str(
+                r.get("key")
+                or f"{r.get('from') if r.get('from') is not None else '*'}"
+                   f"-{r.get('to') if r.get('to') is not None else '*'}"
+            )
+            granges.append((key, lo_, hi_))
+        if not granges:
+            raise ValueError("kibana: geo_distance needs at least one range")
+        return GeoDistanceBucket(
+            field=p["field"], origin=origin,
+            ranges=tuple(granges), label=label,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # haversine meters to the origin evaluated ONCE per
+        # doc, then the RangeBucket overlap-explode
+        g_lat, g_lon = _geo_lat_lon(ev.resolve(self.field))
+        dist = F.when(
+            _geo_valid(g_lat, g_lon),
+            haversine_meters(g_lat, g_lon, *self.origin),
+        )
+
+        def _make_geo_matches(_ranges):
+            def _geo_matches(dv):
+                def rng(lo, hi):
+                    pred = dv.isNotNull()
+                    if lo is not None:
+                        pred = pred & (dv >= F.lit(lo))
+                    if hi is not None:
+                        pred = pred & (dv < F.lit(hi))
+                    return pred
+
+                return _matches(
+                    (key, rng(lo, hi)) for key, lo, hi in _ranges
+                )
+
+            return _geo_matches
+
+        return df.withColumn(
+            self.label,
+            F.explode(_bind1(dist, _make_geo_matches(self.ranges))),
+        )
+
 
 @dataclass(frozen=True)
-class NestedBucket:
+class NestedBucket(_Bucket):
     """ES ``nested`` (round 16 — with the geo family, the exclusion
     list's other half): switches the aggregation context to the
     sub-documents of an ``array<struct>`` column.  Relationally that
@@ -753,9 +3306,38 @@ class NestedBucket:
     path: str
     label: str
 
+    keyed = False
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("path"):
+            raise ValueError("kibana: nested needs a path")
+        if "." in str(p["path"]):
+            raise ValueError(
+                "kibana: nested path must be a top-level "
+                "array<struct> column (this engine's flattened "
+                "doc model; deeper paths are further explodes — "
+                "not modelled)"
+            )
+        if cx.buckets:
+            raise ValueError(
+                "kibana: nested must be the first bucket agg (it "
+                "switches the aggregation context for everything "
+                "after it; ES's deeper nesting is not modelled)"
+            )
+        return NestedBucket(path=str(p["path"]), label=label)
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # context switch: ONE explode replaces the array
+        # column with a struct per element; later fields
+        # resolve as path.sub via the ordinary struct-path
+        # resolver, doc_count now means NESTED docs (ES's
+        # in-context semantics); empty/null arrays drop
+        return df.withColumn(self.path, F.explode(ev.resolve(self.path)))
+
 
 @dataclass(frozen=True)
-class ReverseNestedAgg:
+class ReverseNestedAgg(_Metric):
     """ES ``reverse_nested`` (round 16), the metric form: the PARENT
     doc_count inside a nested context — "how many root documents have
     at least one element in this bucket" — as an exact
@@ -772,9 +3354,26 @@ class ReverseNestedAgg:
     id_field: str
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("id_field"):
+            raise ValueError(
+                "kibana: reverse_nested needs an explicit "
+                "'id_field' naming the root-document key (ES "
+                "tracks root docs via Lucene doc ids; a "
+                "relational engine needs the key named)"
+            )
+        return ReverseNestedAgg(id_field=str(p["id_field"]), label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        # parent doc_count: exact distinct of the explicit root key
+        # (count_distinct honors approx_cardinality mode like every
+        # cardinality in this compiler)
+        return [ev.count_distinct(ev.resolve(self.id_field)).alias(self.label)]
+
 
 @dataclass(frozen=True)
-class GeoBoundsAgg:
+class GeoBoundsAgg(_Metric):
     """ES ``geo_bounds`` (round 16): the bucket's bounding box —
     top = max lat, bottom = min lat, left = min lon, right = max lon,
     riding the main hash aggregation.  DOCUMENTED DIVERGENCE: ES
@@ -791,9 +3390,35 @@ class GeoBoundsAgg:
     def column_names(self) -> list[str]:
         return [f"{self.label}_{k}" for k in ("top", "left", "bottom", "right")]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: geo_bounds needs a field")
+        if p.get("wrap_longitude", True):
+            raise ValueError(
+                "kibana: geo_bounds wrap_longitude=true (ES's "
+                "default antimeridian-crossing box) is not "
+                "modelled — pass wrap_longitude: false explicitly "
+                "for the non-wrapping box (identical unless the "
+                "data straddles ±180)"
+            )
+        return GeoBoundsAgg(field=p["field"], label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        lat, lon = _geo_lat_lon(ev.resolve(self.field))
+        ok = _geo_valid(lat, lon)
+        lat, lon = F.when(ok, lat), F.when(ok, lon)
+        names = self.column_names()
+        return [
+            F.max(lat).alias(names[0]),   # top
+            F.min(lon).alias(names[1]),   # left
+            F.min(lat).alias(names[2]),   # bottom
+            F.max(lon).alias(names[3]),   # right
+        ]
+
 
 @dataclass(frozen=True)
-class GeoCentroidAgg:
+class GeoCentroidAgg(_Metric):
     """ES ``geo_centroid`` (round 16): the arithmetic mean lat/lon of
     the bucket's valid points plus the contributing-point count —
     ES's own definition (DocValueFormat GEO centroid is the running
@@ -807,9 +3432,26 @@ class GeoCentroidAgg:
     def column_names(self) -> list[str]:
         return [f"{self.label}_{k}" for k in ("lat", "lon", "count")]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: geo_centroid needs a field")
+        return GeoCentroidAgg(field=p["field"], label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        lat, lon = _geo_lat_lon(ev.resolve(self.field))
+        ok = _geo_valid(lat, lon)
+        lat, lon = F.when(ok, lat), F.when(ok, lon)
+        names = self.column_names()
+        return [
+            F.avg(lat).alias(names[0]),
+            F.avg(lon).alias(names[1]),
+            F.count(lat).alias(names[2]),
+        ]
+
 
 @dataclass(frozen=True)
-class BoxplotAgg:
+class BoxplotAgg(_Metric):
     """ES ``boxplot`` (round 12): min / q1 / q2 / q3 / max in ONE hash
     aggregation pass (exact interpolated quartiles where ES t-digests
     — the documented exact-vs-approx stance)."""
@@ -820,9 +3462,36 @@ class BoxplotAgg:
     def column_names(self) -> list[str]:
         return [f"{self.label}_{k}" for k in ("min", "q1", "q2", "q3", "max")]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError("kibana: boxplot needs a field")
+        return BoxplotAgg(field=p["field"], label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        v = ev.resolve(self.field).cast("double")
+        names = self.column_names()
+        return [
+            F.min(v).alias(names[0]),
+            F.percentile(
+                v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
+            ).alias(f"__bp_{self.label}"),
+            F.max(v).alias(names[4]),
+        ]
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        names = self.column_names()
+        arr = F.col(f"__bp_{self.label}")
+        return (
+            out.withColumn(names[1], arr.getItem(0))
+            .withColumn(names[2], arr.getItem(1))
+            .withColumn(names[3], arr.getItem(2))
+            .drop(f"__bp_{self.label}")
+        )
+
 
 @dataclass(frozen=True)
-class MadAgg:
+class MadAgg(_Metric):
     """ES ``median_absolute_deviation`` (round 12): median(|v −
     median(v)|) per bucket.  ES computes both medians on a TDigest;
     this engine is exact interpolated percentiles — the same
@@ -835,9 +3504,44 @@ class MadAgg:
     field: str
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("field"):
+            raise ValueError(
+                "kibana: median_absolute_deviation needs a field"
+            )
+        return MadAgg(field=p["field"], label=label)
+
+    #: needs the per-bucket median FIRST: joins back after the main
+    #: aggregation
+    join_rank = 4
+
+    def join(self, out, df, keys, ev):
+        """Pass 1 computes each bucket's median, pass 2 the median of
+        absolute deviations — both grouped on the SAME keys (the second
+        groupBy reuses the first shuffle's partitioning; the median
+        join-back is bucket-table-sized) — then a bucket-keyed join onto
+        the main frame.  A bucketless panel folds to one row via global
+        aggs + one-row broadcasts."""
+        v = ev.resolve(self.field).cast("double")
+        if keys:
+            med = df.groupBy(*[F.col(k) for k in keys]).agg(
+                F.percentile(v, F.lit(0.5)).alias("__med")
+            )
+            dev = df.join(med, keys)
+        else:
+            med = df.agg(F.percentile(v, F.lit(0.5)).alias("__med"))
+            dev = df.crossJoin(F.broadcast(med))
+        madf = dev.groupBy(*[F.col(k) for k in keys]).agg(
+            F.percentile(
+                F.abs(v - F.col("__med")), F.lit(0.5)
+            ).alias(self.label)
+        )
+        return _join_back(out, madf, keys)
+
 
 @dataclass(frozen=True)
-class WeightedAvgAgg:
+class WeightedAvgAgg(_Metric):
     """ES ``weighted_avg`` (round 12): sum(value·weight) / sum(weight)
     over the docs carrying BOTH fields (ES skips a doc missing either
     one unless a ``missing`` default is configured — the defaults are
@@ -847,9 +3551,40 @@ class WeightedAvgAgg:
     weight_field: str
     label: str
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        try:
+            vf = p["value"]["field"]
+            wf = p["weight"]["field"]
+        except (KeyError, TypeError):
+            raise ValueError(
+                "kibana: weighted_avg needs value.field and "
+                "weight.field"
+            ) from None
+        if "missing" in p.get("value", {}) or "missing" in p.get(
+            "weight", {}
+        ):
+            raise ValueError(
+                "kibana: weighted_avg missing-defaults are not "
+                "modelled — docs lacking either field drop"
+            )
+        return WeightedAvgAgg(value_field=vf, weight_field=wf, label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        v = ev.resolve(self.value_field).cast("double")
+        w = ev.resolve(self.weight_field).cast("double")
+        both = v.isNotNull() & w.isNotNull()
+        wsum = F.sum(F.when(both, w))
+        # ANSI guard: an all-missing bucket has weight-sum null/0 — ES
+        # emits null there, never a div error
+        return [
+            F.when(wsum > 0, F.sum(F.when(both, v * w)) / wsum)
+            .alias(self.label)
+        ]
+
 
 @dataclass(frozen=True)
-class PercentilesAgg:
+class PercentilesAgg(_Metric):
     """ES ``percentiles`` metric: one output column per percent,
     ``<label>_p<percent>``.  Exact interpolated percentiles by default
     (ES computes a t-digest approximation; the exact form hash-matches
@@ -867,9 +3602,38 @@ class PercentilesAgg:
 
         return [fmt(p) for p in self.percents]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if t == "median":
+            # ES models median as percentiles([50]); one output column
+            return PercentilesAgg(
+                field=p["field"], percents=(50.0,), label=label
+            )
+        percents = tuple(
+            float(pc)
+            for pc in p.get("percents", [1, 5, 25, 50, 75, 95, 99])
+        )
+        return PercentilesAgg(field=p["field"], percents=percents, label=label)
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        # one exact interpolated percentile sketch per agg; the array
+        # is unpacked into per-percent columns by outputs()
+        return [
+            F.percentile(
+                ev.resolve(self.field).cast("double"),
+                F.array(*[F.lit(p / 100.0) for p in self.percents]),
+            ).alias(self.label)
+        ]
+
+    def outputs(self) -> list[Column]:
+        return [
+            F.col(self.label).getItem(i).alias(name)
+            for i, name in enumerate(self.column_names())
+        ]
+
 
 @dataclass(frozen=True)
-class PercentileRanksAgg:
+class PercentileRanksAgg(_Metric):
     """ES ``percentile_ranks`` metric: for each probe value, the
     percentage of observations ≤ that value — one output column per
     probe, ``<label>_r<value>``.  Computed as the EXACT empirical CDF
@@ -889,9 +3653,41 @@ class PercentileRanksAgg:
 
         return [fmt(v) for v in self.values]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        if not p.get("values"):
+            raise ValueError("kibana: percentile_ranks needs 'values'")
+        return PercentileRanksAgg(
+            field=p["field"],
+            # order-preserving dedupe: ES accepts duplicate
+            # probe values and dedupes the response keys; a
+            # duplicate output alias would make the final
+            # select ambiguous (code-review r10)
+            values=tuple(dict.fromkeys(float(v) for v in p["values"])),
+            label=label,
+        )
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        # exact empirical CDF per probe value; counts ignore
+        # missing-field docs like every ES metric.  The denominator
+        # guard matters under Spark 4 ANSI: a bucket whose docs all
+        # miss the field has count 0 and an unguarded division THROWS
+        # (code-review r10) — ES emits null there
+        v = ev.resolve(self.field).cast("double")
+        return [
+            F.when(
+                F.count(v) > 0,
+                F.count(F.when(v <= F.lit(val), F.lit(1)))
+                .cast("double")
+                / F.count(v)
+                * F.lit(100.0),
+            ).alias(n)
+            for val, n in zip(self.values, self.column_names())
+        ]
+
 
 @dataclass(frozen=True)
-class TopHitsAgg:
+class TopHitsAgg(_Metric):
     """Kibana's Top Hit metric: the top ``size`` documents by
     ``sort_field`` folded into one cell with ``aggregate``.  size 1
     (28 of the corpus's 33 top_hits aggs) rides the main hash
@@ -907,9 +3703,83 @@ class TopHitsAgg:
     label: str
     size: int = 1
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        th_size = int(p.get("size", 1))
+        if th_size < 1:
+            raise ValueError("kibana: top_hits size must be >= 1")
+        th_agg = p.get("aggregate", "average")
+        if th_agg not in ("average", "concat", "sum", "max", "min"):
+            raise ValueError(
+                f"kibana: top_hits aggregate {th_agg!r} not supported"
+            )
+        return TopHitsAgg(
+            field=p["field"],
+            aggregate=th_agg,
+            sort_field=p.get("sortField", "createdDateTime"),
+            sort_order=p.get("sortOrder", "desc"),
+            label=label,
+            size=th_size,
+        )
+
+    @property
+    def join_rank(self) -> int:
+        # size > 1 ranks and joins back after the main aggregation
+        return 1 if self.size > 1 else 0
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        if self.size > 1:
+            return []
+        order = F.struct(
+            ev.resolve(self.sort_field).alias("s"),
+            *([ev.resolve(ev.tiebreak).alias("t")] if ev.tiebreak else []),
+        )
+        pick = F.max_by if self.sort_order == "desc" else F.min_by
+        val = ev.resolve(self.field)
+        if self.aggregate in ("average", "sum", "max"):
+            val = val.cast("double")
+        return [pick(val, order).alias(self.label)]
+
+    def join(self, out, df, keys, ev):
+        """size > 1 (round 12): ES's top_hits returns the top-N
+        documents by sort order and Kibana's Top Hit metric folds them
+        with the chosen aggregate; the N survivors per bucket come from
+        :func:`_top_n_rows` and the fold joins back on the bucket keys
+        (broadcast-sized per bucket: <= size rows contribute)."""
+        ranked = _top_n_rows(
+            df, keys, ev.resolve(self.sort_field), self.sort_order,
+            self.size, ev,
+        )
+        val = ev.resolve(self.field)
+        if self.aggregate == "concat":
+            # sort-order-stable ", "-join, exactly Kibana's render
+            fold = F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                F.col("__rn").alias("r"),
+                                val.cast("string").alias("v"),
+                            )
+                        )
+                    ),
+                    lambda h: h["v"],
+                ),
+                ", ",
+            )
+        else:
+            fold = {
+                "average": F.avg, "sum": F.sum,
+                "max": F.max, "min": F.min,
+            }[self.aggregate](val.cast("double"))
+        per = ranked.groupBy(*[F.col(k) for k in keys]).agg(
+            fold.alias(self.label)
+        )
+        return _join_back(out, per, keys)
+
 
 @dataclass(frozen=True)
-class HistogramBucket:
+class HistogramBucket(_Histogram):
     """ES ``histogram`` bucket (round 8): numeric fixed-interval
     bucketing — key = floor(value / interval) · interval, ES's exact
     formula (negative values land in the bucket BELOW zero, which
@@ -921,9 +3791,65 @@ class HistogramBucket:
     min_doc_count: int = 1  # same contract as DateHistogramBucket
     extended_bounds: "tuple[float, float] | None" = None
 
+    drops_rows = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        interval = float(p.get("interval", 1))
+        if interval <= 0:
+            raise ValueError("kibana: histogram interval must be > 0")
+        mdc, eb = _parse_min_doc_count(p, float)
+        return HistogramBucket(
+            field=p["field"], interval=interval, label=label,
+            min_doc_count=mdc, extended_bounds=eb,
+        )
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # ES: key = floor(value / interval) * interval (floor, not
+        # truncation — negatives bucket downward); docs missing the
+        # field drop, like the range/date_range buckets (code-review
+        # r9: a NULL key used to survive into a bucket row ES never
+        # emits)
+        v = ev.resolve(self.field).cast("double")
+        return df.filter(v.isNotNull()).withColumn(
+            self.label,
+            F.floor(v / F.lit(self.interval)).cast("double")
+            * F.lit(self.interval),
+        )
+
+    def grid(self, gb, prefix: list[str], ev: _Eval) -> DataFrame:
+        iv = float(self.interval)
+        # reconstruct keys with the SAME double op as the
+        # bucketing formula (ordinal · interval), so the join
+        # hits populated keys bit-for-bit
+        m0_agg = F.round(F.min(self.label) / F.lit(iv)).cast("long")
+        m1_agg = F.round(F.max(self.label) / F.lit(iv)).cast("long")
+        if self.extended_bounds is not None:
+            m0_agg = F.least(
+                m0_agg,
+                F.lit(int(math.floor(self.extended_bounds[0] / iv))),
+            )
+            m1_agg = F.greatest(
+                m1_agg,
+                F.lit(int(math.floor(self.extended_bounds[1] / iv))),
+            )
+        bounds = gb.agg(
+            m0_agg.alias("__m0"), m1_agg.alias("__m1")
+        )
+        grid = bounds.select(
+            *prefix,
+            F.explode(
+                F.sequence(F.col("__m0"), F.col("__m1"))
+            ).alias("__m"),
+        ).select(
+            *prefix,
+            (F.col("__m").cast("double") * F.lit(iv)).alias(self.label),
+        )
+        return grid
+
 
 @dataclass(frozen=True)
-class RangeBucket:
+class RangeBucket(_Bucket):
     """ES ``range`` bucket (round 8): half-open [from, to) ranges; a
     document lands in EVERY range that contains it (ES allows
     overlaps), so compilation explodes the match array like
@@ -935,9 +3861,54 @@ class RangeBucket:
     ranges: tuple[tuple[str, float | None, float | None], ...]  # (key, lo, hi)
     label: str
 
+    explodes = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        def _end(r, k):
+            return float(r[k]) if r.get(k) is not None else None
+
+        def _key(r):
+            # range keys are bucket VALUES, not column names — no
+            # slugging, keep ES's literal `from-to` form
+            if r.get("key"):
+                return str(r["key"])
+            lo, hi = r.get("from"), r.get("to")
+            return (
+                f"{'*' if lo is None else f'{float(lo):g}'}-"
+                f"{'*' if hi is None else f'{float(hi):g}'}"
+            )
+
+        ranges = tuple(
+            (_key(r), _end(r, "from"), _end(r, "to"))
+            for r in p.get("ranges", [])
+        )
+        if not ranges:
+            raise ValueError("kibana: range agg needs at least one range")
+        return RangeBucket(field=p["field"], ranges=ranges, label=label)
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # half-open [from, to); a doc lands in EVERY matching
+        # range (ES allows overlaps) — same explode shape as
+        # FiltersBucket
+        v = ev.resolve(self.field).cast("double")
+
+        def _in_range(lo, hi):
+            pred = F.lit(True)
+            if lo is not None:
+                pred = pred & (v >= F.lit(lo))
+            if hi is not None:
+                pred = pred & (v < F.lit(hi))
+            return pred
+
+        matches = _matches(
+            (key, _in_range(lo, hi)) for key, lo, hi in self.ranges
+        )
+        return df.withColumn(self.label, F.explode(matches))
+
 
 @dataclass(frozen=True)
-class DateRangeBucket:
+class DateRangeBucket(_Bucket):
     """ES ``date_range`` bucket (round 8): half-open [from, to) ranges
     over a timestamp field; like :class:`RangeBucket`, a document lands
     in EVERY matching range.  Endpoints are ISO date/datetime strings
@@ -949,9 +3920,49 @@ class DateRangeBucket:
     ranges: tuple[tuple[str, str | None, str | None], ...]  # (key, lo, hi)
     label: str
 
+    explodes = True
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        def _dkey(r):
+            if r.get("key"):
+                return str(r["key"])
+            lo, hi = r.get("from"), r.get("to")
+            return f"{lo if lo is not None else '*'}-{hi if hi is not None else '*'}"
+
+        dranges = tuple(
+            (
+                _dkey(r),
+                str(r["from"]) if r.get("from") is not None else None,
+                str(r["to"]) if r.get("to") is not None else None,
+            )
+            for r in p.get("ranges", [])
+        )
+        if not dranges:
+            raise ValueError("kibana: date_range agg needs at least one range")
+        return DateRangeBucket(field=p["field"], ranges=dranges, label=label)
+
+    def add_key(self, df: DataFrame, ev: _Eval) -> DataFrame:
+        # half-open [from, to) over timestamps, overlap-explode
+        # like RangeBucket; endpoints parse once as literals
+        tv = ev.resolve(self.field).cast("timestamp")
+
+        def _in_drange(lo, hi):
+            pred = tv.isNotNull()
+            if lo is not None:
+                pred = pred & (tv >= F.lit(lo).cast("timestamp"))
+            if hi is not None:
+                pred = pred & (tv < F.lit(hi).cast("timestamp"))
+            return pred
+
+        dmatches = _matches(
+            (key, _in_drange(lo, hi)) for key, lo, hi in self.ranges
+        )
+        return df.withColumn(self.label, F.explode(dmatches))
+
 
 @dataclass(frozen=True)
-class StatsAgg:
+class StatsAgg(_Metric):
     """ES ``stats`` / ``extended_stats`` metric: one aggregation pass
     emitting count/min/max/avg/sum columns (extended adds
     sum_of_squares, variance and std_deviation — POPULATION statistics,
@@ -967,16 +3978,51 @@ class StatsAgg:
             names += ["sum_of_squares", "variance", "std_deviation"]
         return [f"{self.label}_{n}" for n in names]
 
+    @staticmethod
+    def parse(t, p, label, cx):
+        return StatsAgg(
+            field=p["field"], label=label, extended=(t == "extended_stats")
+        )
+
+    def aggs(self, df: DataFrame, ev: _Eval) -> list[Column]:
+        v = ev.resolve(self.field).cast("double")
+        exprs = [F.count(v), F.min(v), F.max(v), F.avg(v), F.sum(v)]
+        if self.extended:
+            exprs.append(F.sum(v * v))
+        return [e.alias(n) for e, n in zip(exprs, self.column_names())]
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        if not self.extended:
+            return out
+        # ES's DOCUMENTED definition: variance = sum_of_squares/count −
+        # mean² (population), std = √var — derived here from the exact
+        # partials instead of var_pop, so on integral inputs the
+        # doubles are bit-identical to any engine replaying the formula
+        # (Welford-style var_pop aggregates diverge by ulps)
+        cnt = F.col(f"{self.label}_count")
+        tot = F.col(f"{self.label}_sum")
+        ss = F.col(f"{self.label}_sum_of_squares")
+        var = ss / cnt - (tot / cnt) * (tot / cnt)
+        return out.withColumn(f"{self.label}_variance", var).withColumn(
+            f"{self.label}_std_deviation", F.sqrt(var)
+        )
+
+    def zero_names(self) -> list[str]:
+        cn = self.column_names()
+        return [cn[0], cn[4]] + ([cn[5]] if self.extended else [])
+
 
 @dataclass(frozen=True)
-class PipelineAgg:
+class PipelineAgg(_Agg):
     """ES parent pipeline aggs (round 8): ``derivative``,
     ``cumulative_sum``, ``moving_avg``/``moving_fn`` over the buckets
     of the INNERMOST histogram/date_histogram, per outer bucket.
     ``source_label`` names the sibling metric column the buckets_path
-    resolved to.  moving_avg's window follows ES moving_fn shift=0:
-    the ``window`` buckets BEFORE the current one, exclusive — the
-    first bucket emits NULL, like derivative."""
+    resolved to (the parse functions store the raw buckets_path;
+    parse_vis_state resolves it once every metric is known, as for the
+    other pipeline kinds).  moving_avg's window follows ES moving_fn
+    shift=0: the ``window`` buckets BEFORE the current one, exclusive —
+    the first bucket emits NULL, like derivative."""
 
     op: str  # derivative | cumulative_sum | moving_avg | serial_diff | *_bucket
     source_label: str
@@ -1004,6 +4050,127 @@ class PipelineAgg:
                 for p in self.percents
             ]
         return [self.label]
+
+    @staticmethod
+    def parse_parent(t, p, label, cx):
+        """derivative / cumulative_sum / moving_avg / moving_fn."""
+        op = t
+        if t == "moving_fn":
+            # honor the MovingFunctions script instead of silently
+            # averaging (code-review r9: a max() panel replayed as a
+            # mean with no error).  No script keeps ES's unweightedAvg
+            # default.
+            script = p.get("script") or ""
+            if isinstance(script, dict):
+                script = script.get("source", "")
+            m = re.search(r"MovingFunctions\.(\w+)\s*\(", script)
+            fn = m.group(1) if m else (
+                "unweightedAvg" if not script.strip() else None
+            )
+            mapped = {"unweightedAvg": "moving_avg", "max": "moving_max",
+                      "min": "moving_min", "sum": "moving_sum"}
+            if fn not in mapped:
+                raise ValueError(
+                    f"kibana: unsupported moving_fn script {script!r} "
+                    f"(supported: MovingFunctions.unweightedAvg/max/"
+                    f"min/sum)"
+                )
+            op = mapped[fn]
+        return PipelineAgg(
+            op=op, source_label=_buckets_path(p), label=label,
+            window=int(p.get("window", 5)), seq=cx.seq,
+        )
+
+    @staticmethod
+    def parse_serial_diff(t, p, label, cx):
+        lag = int(p.get("lag", 1))
+        if lag < 1:
+            raise ValueError("kibana: serial_diff lag must be >= 1")
+        return PipelineAgg(
+            op=t, source_label=_buckets_path(p), label=label, window=lag,
+            seq=cx.seq,
+        )
+
+    @staticmethod
+    def parse_cumulative_cardinality(t, p, label, cx):
+        # ES cumulative_cardinality (round 13): the running count of
+        # distinct field values across the histogram's buckets.
+        # buckets_path must name a cardinality agg (like ES, which
+        # merges its HLL sketches cumulatively; this engine is exact
+        # via first-seen buckets — the documented exact-vs-approx
+        # stance).
+        path = _buckets_path(p, "")
+        tgt = cx.by_id.get(path)
+        if tgt is None or tgt["type"] != "cardinality":
+            raise ValueError(
+                "kibana: cumulative_cardinality buckets_path must "
+                "reference a cardinality agg"
+            )
+        return PipelineAgg(
+            op=t, source_label=path, label=label, window=0, seq=cx.seq
+        )
+
+    @staticmethod
+    def parse_moving_percentiles(t, p, label, cx):
+        # ES moving_percentiles (round 14): slide a window across the
+        # histogram buckets and report the percentiles of the merged
+        # window.  buckets_path must name a percentiles agg (like ES);
+        # window is REQUIRED (like ES); shift follows moving_fn (0 =
+        # the `window` buckets BEFORE the current one, exclusive;
+        # window = shift includes the current).  The shift rides the op
+        # string, normalize:-style.
+        path = _buckets_path(p, "")
+        tgt = cx.by_id.get(path)
+        if tgt is None or tgt["type"] != "percentiles":
+            raise ValueError(
+                "kibana: moving_percentiles buckets_path must "
+                "reference a percentiles agg"
+            )
+        if p.get("window") is None:
+            raise ValueError(
+                "kibana: moving_percentiles needs an explicit "
+                "window (ES requires it)"
+            )
+        window = int(p["window"])
+        if window < 1:
+            raise ValueError("kibana: moving window must be >= 1")
+        return PipelineAgg(
+            op=f"moving_percentiles:{int(p.get('shift', 0))}",
+            source_label=path, label=label, window=window, seq=cx.seq,
+        )
+
+    @staticmethod
+    def parse_normalize(t, p, label, cx):
+        # ES normalize pipeline agg (round 13): rescale a sibling
+        # metric ACROSS the innermost bucket level, per outer bucket —
+        # the op string carries the method
+        method = str(p.get("method", ""))
+        if method not in _NORMALIZE_METHODS:
+            raise ValueError(
+                f"kibana: normalize method must be one of "
+                f"{sorted(_NORMALIZE_METHODS)}, got {method!r}"
+            )
+        return PipelineAgg(
+            op=f"normalize:{method}", source_label=_buckets_path(p),
+            label=label, window=0, seq=cx.seq,
+        )
+
+    @staticmethod
+    def parse_sibling(t, p, label, cx):
+        """SIBLING_OPS and MULTI_SIBLING_OPS."""
+        percents: tuple[float, ...] = ()
+        if t == "percentiles_bucket":
+            percents = tuple(
+                float(x) for x in p.get("percents", (1, 5, 25, 50, 75, 95, 99))
+            )
+            if not percents or not all(0 <= x <= 100 for x in percents):
+                raise ValueError(
+                    "kibana: percentiles_bucket percents must be in [0, 100]"
+                )
+        return PipelineAgg(
+            op=t, source_label=_buckets_path(p), label=label, window=0,
+            percents=percents, seq=cx.seq,
+        )
 
 
 #: sibling pipeline ops — aggregate a metric ACROSS the innermost
@@ -1035,7 +4202,7 @@ MULTI_SIBLING_OPS = {"stats_bucket", "percentiles_bucket",
 
 
 @dataclass(frozen=True)
-class BucketScriptAgg:
+class BucketScriptAgg(_Agg):
     """ES ``bucket_script`` / ``bucket_selector`` pipelines (round 9):
     evaluate a painless ARITHMETIC script over sibling metric values
     per bucket — script adds a computed column, selector FILTERS the
@@ -1052,6 +4219,25 @@ class BucketScriptAgg:
     script: str
     label: str
     seq: int = 0  # position in the request (same-level reduce order)
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        script = p.get("script")
+        if isinstance(script, dict):
+            script = script.get("source")
+        if not isinstance(script, str) or not script.strip():
+            raise ValueError(f"kibana: {t} needs a script")
+        paths = p.get("buckets_path")
+        if not isinstance(paths, dict) or not paths:
+            raise ValueError(f"kibana: {t} needs a buckets_path map")
+        return BucketScriptAgg(
+            op=t, paths=tuple(paths.items()), script=script, label=label,
+            seq=cx.seq,
+        )
+
+    def column_names(self) -> list[str]:
+        # a selector filters buckets and adds no column
+        return [self.label] if self.op == "bucket_script" else []
 
 
 _SCRIPT_TOKEN_RE = re.compile(
@@ -1182,27 +4368,26 @@ class BucketSortAgg:
     size: int
     from_: int = 0
 
-
-Bucket = (TermsBucket | DateHistogramBucket | FiltersBucket | HistogramBucket
-          | RangeBucket | DateRangeBucket | IpRangeBucket
-          | SignificantTermsBucket
-          | SignificantTextBucket
-          | CompositeBucket | MultiTermsBucket | RareTermsBucket
-          | FilterBucket | MissingBucket | AdjacencyMatrixBucket
-          | VariableWidthHistogramBucket
-          | GeoGridBucket | GeoDistanceBucket | NestedBucket)
-Metric = (MetricAgg | TopHitsAgg | PercentilesAgg | PercentileRanksAgg
-          | StatsAgg | WeightedAvgAgg | MadAgg | BoxplotAgg
-          | RateAgg | TopMetricsAgg | StringStatsAgg
-          | GeoBoundsAgg | GeoCentroidAgg | ReverseNestedAgg)
+    @staticmethod
+    def parse(t, p, label, cx):
+        size = int(p.get("size", 10))
+        from_ = int(p.get("from", 0))
+        if size < 1 or from_ < 0:
+            raise ValueError("kibana: bucket_sort needs size >= 1, from >= 0")
+        return BucketSortAgg(
+            sort_label=str(p.get("sortField") or p.get("buckets_path") or "_key"),
+            order=str(p.get("order", "desc")),
+            size=size,
+            from_=from_,
+        )
 
 
 @dataclass(frozen=True)
 class VisState:
     title: str
     vis_type: str
-    buckets: tuple[Bucket, ...]
-    metrics: tuple[Metric, ...]
+    buckets: tuple[_Bucket, ...]
+    metrics: tuple[_Metric, ...]
     pipelines: tuple[PipelineAgg, ...] = ()
     bucket_sort: BucketSortAgg | None = None
     scripts: tuple[BucketScriptAgg, ...] = ()
@@ -1613,12 +4798,12 @@ def es_auto_date_interval_us(
     )
 
 
-# The only metric ops the terms/multi_terms ranking loop (step 3 of
-# _evaluate) can order by — an ALLOWLIST, not a denylist: any other op
+# The only metric ops the terms/multi_terms ranking stage
+# (_Ranked.rank) can order by — an ALLOWLIST, not a denylist: any other op
 # (top_hits, median, percentiles, stats, and the round-12 additions
 # value_count / weighted_avg / median_absolute_deviation / boxplot)
 # must fail here at parse time with a clean error, not a KeyError deep
-# in the ranking loop (ADVICE r12).
+# in the ranking stage (ADVICE r12).
 _ORDERABLE_METRIC_OPS = ("count", "avg", "min", "max", "sum", "cardinality")
 
 
@@ -1639,6 +4824,175 @@ def _order_metric_checked(
     return (op, field)
 
 
+def _order_metric_of(
+    bucket_kind: str, order_by: str, p: dict, by_id: dict
+) -> tuple[str, str]:
+    """The ordering metric a terms/multi_terms ``orderBy`` names: the
+    ``orderAgg`` of a ``custom`` order, else the metric agg with that
+    id."""
+    if order_by == "custom":
+        oa = p.get("orderAgg", {})
+        return _order_metric_checked(
+            bucket_kind, order_by,
+            oa.get("type", "avg"), oa.get("params", {}).get("field"),
+        )
+    tgt = by_id.get(order_by)
+    if tgt is None:
+        raise ValueError(
+            f"kibana: {bucket_kind} orderBy={order_by!r} must reference a "
+            f"simple metric agg (count/avg/min/max/sum/cardinality)"
+        )
+    return _order_metric_checked(
+        bucket_kind, order_by, tgt["type"], tgt["params"].get("field")
+    )
+
+
+def _parse_min_doc_count(p: dict, bound) -> tuple[int, tuple | None]:
+    """(date_)histogram ``min_doc_count`` and ``extended_bounds``, the
+    bounds converted by ``bound`` (epoch micros or float)."""
+    mdc = int(p.get("min_doc_count", 1))
+    if mdc < 0:
+        raise ValueError("kibana: min_doc_count must be >= 0")
+    eb = p.get("extended_bounds")
+    # Kibana writes an EMPTY extended_bounds stub ({}) on every
+    # date_histogram (the corpus's six all do) — only a dict carrying
+    # BOTH endpoints means the user set bounds
+    if not eb or eb.get("min") is None or eb.get("max") is None:
+        return mdc, None
+    if mdc != 0:
+        raise ValueError(
+            "kibana: extended_bounds needs min_doc_count=0 "
+            "(without zero-fill it changes nothing — ES docs "
+            "make the same pairing explicit)"
+        )
+    eb = (bound(eb["min"]), bound(eb["max"]))
+    if eb[0] > eb[1]:
+        raise ValueError("kibana: extended_bounds min > max")
+    return mdc, eb
+
+
+def _buckets_path(p: dict, default: str = "_count") -> str:
+    """A pipeline agg's raw buckets_path (Kibana's ``metricAgg``)."""
+    return str(p.get("metricAgg") or p.get("buckets_path") or default)
+
+
+def _simple_metric_expr(m, value_col, count_expr: Column, count_distinct):
+    """The simple-metric subset (count/cardinality/avg/sum/min/max)
+    shared by the composite, significant_terms and categorize_text
+    evaluators — ONE place for the op→expression mapping and the
+    cast-to-double rule (ES numerics are doubles; a long sum also
+    hash-diverges from the SQL twins).  ``value_col`` is the (possibly
+    foreground-gated) input column; cardinality keeps the raw type — it
+    may legitimately count strings."""
+    if m.op == "count":
+        return count_expr.alias(m.label)
+    if m.op == "cardinality":
+        return count_distinct(value_col).alias(m.label)
+    if m.op in ("avg", "sum", "min", "max"):
+        fn = {"avg": F.avg, "sum": F.sum, "min": F.min, "max": F.max}[m.op]
+        return fn(value_col.cast("double")).alias(m.label)
+    raise ValueError(
+        f"kibana: this bucket agg supports simple metric aggs only "
+        f"(count/avg/sum/min/max/cardinality), not {m.op!r}"
+    )
+
+
+@dataclass
+class _ParseCtx:
+    """What a kind's parse function may read besides its own params."""
+
+    by_id: dict  # agg id -> raw agg (orderBy / buckets_path targets)
+    buckets: list = dc_field(default_factory=list)  # bucket aggs so far
+    seq: int = 0  # the agg's position in the request
+
+
+def _agg_label(a: dict) -> str:
+    """An agg's column label: its slugged customLabel, else type_id."""
+    return _slug(
+        a.get("params", {}).get("customLabel") or f'{a["type"]}_{a["id"]}'
+    )
+
+
+#: visState ``type`` -> (role, parse function).  The role decides where
+#: the parsed agg goes and whether its ``schema`` must be a bucket
+#: schema (``bucket``, ``sole``) or must not (every other role).  A
+#: ``sole`` kind must be the request's only bucket agg and carries no
+#: pipeline aggs; it evaluates through its own ``evaluate_alone``.  The
+#: pipeline roles (``pipeline``, ``stats_test``, ``script``,
+#: ``bucket_sort``) keep their raw buckets_path until every metric is
+#: known.  A parse function is ``(type, params, label, _ParseCtx) ->
+#: dataclass``.
+_KINDS: dict[str, tuple[str, object]] = {
+    "terms": ("bucket", TermsBucket.parse),
+    "multi_terms": ("bucket", MultiTermsBucket.parse),
+    "rare_terms": ("bucket", RareTermsBucket.parse),
+    "date_histogram": ("bucket", DateHistogramBucket.parse),
+    "auto_date_histogram": ("bucket", DateHistogramBucket.parse_auto),
+    "histogram": ("bucket", HistogramBucket.parse),
+    "variable_width_histogram": ("bucket", VariableWidthHistogramBucket.parse),
+    "range": ("bucket", RangeBucket.parse),
+    "date_range": ("bucket", DateRangeBucket.parse),
+    "ip_range": ("bucket", IpRangeBucket.parse),
+    "filters": ("bucket", FiltersBucket.parse),
+    "filter": ("bucket", FilterBucket.parse),
+    "missing": ("bucket", MissingBucket.parse),
+    "adjacency_matrix": ("bucket", AdjacencyMatrixBucket.parse),
+    "geohash_grid": ("bucket", GeoGridBucket.parse),
+    "geotile_grid": ("bucket", GeoGridBucket.parse),
+    "geo_distance": ("bucket", GeoDistanceBucket.parse),
+    "nested": ("bucket", NestedBucket.parse),
+    "random_sampler": ("bucket", RandomSamplerBucket.parse),
+    "sampler": ("bucket", SamplerBucket.parse),
+    "diversified_sampler": ("bucket", DiversifiedSamplerBucket.parse),
+    "composite": ("sole", CompositeBucket.parse),
+    "significant_terms": ("sole", SignificantTermsBucket.parse),
+    "significant_text": ("sole", SignificantTextBucket.parse),
+    "categorize_text": ("sole", CategorizeTextBucket.parse),
+    "frequent_item_sets": ("sole", FrequentItemSetsBucket.parse),
+    **{
+        op: ("metric", MetricAgg.parse)
+        for op in ("avg", "min", "max", "sum", "cardinality", "count",
+                   "value_count")
+    },
+    "percentiles": ("metric", PercentilesAgg.parse),
+    "median": ("metric", PercentilesAgg.parse),
+    "percentile_ranks": ("metric", PercentileRanksAgg.parse),
+    "stats": ("metric", StatsAgg.parse),
+    "extended_stats": ("metric", StatsAgg.parse),
+    "top_hits": ("metric", TopHitsAgg.parse),
+    "top_metrics": ("metric", TopMetricsAgg.parse),
+    "rate": ("metric", RateAgg.parse),
+    "weighted_avg": ("metric", WeightedAvgAgg.parse),
+    "median_absolute_deviation": ("metric", MadAgg.parse),
+    "boxplot": ("metric", BoxplotAgg.parse),
+    "string_stats": ("metric", StringStatsAgg.parse),
+    "matrix_stats": ("metric", MatrixStatsAgg.parse),
+    "t_test": ("metric", TTestAgg.parse),
+    "geo_bounds": ("metric", GeoBoundsAgg.parse),
+    "geo_centroid": ("metric", GeoCentroidAgg.parse),
+    "reverse_nested": ("metric", ReverseNestedAgg.parse),
+    **{
+        op: ("pipeline", PipelineAgg.parse_parent)
+        for op in ("derivative", "cumulative_sum", "moving_avg", "moving_fn")
+    },
+    "serial_diff": ("pipeline", PipelineAgg.parse_serial_diff),
+    "cumulative_cardinality": (
+        "pipeline", PipelineAgg.parse_cumulative_cardinality
+    ),
+    "moving_percentiles": ("pipeline", PipelineAgg.parse_moving_percentiles),
+    "normalize": ("pipeline", PipelineAgg.parse_normalize),
+    **{
+        op: ("pipeline", PipelineAgg.parse_sibling)
+        for op in sorted(SIBLING_OPS.keys() | MULTI_SIBLING_OPS)
+    },
+    "bucket_correlation": ("stats_test", BucketStatsTestAgg.parse_correlation),
+    "bucket_count_ks_test": ("stats_test", BucketStatsTestAgg.parse_ks_test),
+    "bucket_script": ("script", BucketScriptAgg.parse),
+    "bucket_selector": ("script", BucketScriptAgg.parse),
+    "bucket_sort": ("bucket_sort", BucketSortAgg.parse),
+}
+
+
 def parse_vis_state(vis_state: str | dict) -> VisState:
     """Parse a Kibana ``visState`` (JSON string or dict) into the agg
     AST.  Disabled aggs are skipped, bucket order is preserved (it
@@ -1646,1326 +5000,59 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
     order."""
     state = json.loads(vis_state) if isinstance(vis_state, str) else vis_state
     aggs = [a for a in state.get("aggs", []) if a.get("enabled", True)]
-    by_id = {a["id"]: a for a in aggs}
-    buckets: list[Bucket] = []
-    metrics: list[Metric] = []
-    pipelines_raw: list[tuple[str, str, str, int]] = []  # (op, path, label, window)
-    bucket_sort_raw: tuple[str, str, int, int] | None = None  # (path, order, size, from)
-    scripts_raw: list[tuple[str, dict, str, str]] = []  # (op, paths, script, label)
-    # (op, path, label, expectations, fractions, doc_count, alts, seq)
-    stats_tests_raw: list[tuple] = []
-    for _seq, a in enumerate(aggs):
-        p = a.get("params", {})
-        schema = a.get("schema", "metric")
-        label = _slug(p.get("customLabel") or f'{a["type"]}_{a["id"]}')
-        if a["type"] == "terms":
-            order_by = str(p.get("orderBy", "_term"))
-            order_metric = None
-            if order_by == "custom":
-                oa = p.get("orderAgg", {})
-                order_metric = _order_metric_checked(
-                    "terms", order_by,
-                    oa.get("type", "avg"), oa.get("params", {}).get("field"),
-                )
-            elif order_by != "_term":
-                tgt = by_id.get(order_by)
-                if tgt is None:
-                    raise ValueError(
-                        f"kibana: terms orderBy={order_by!r} must reference a "
-                        f"simple metric agg (count/avg/min/max/sum/cardinality)"
-                    )
-                order_metric = _order_metric_checked(
-                    "terms", order_by, tgt["type"], tgt["params"].get("field")
-                )
-            buckets.append(
-                TermsBucket(
-                    field=p["field"],
-                    size=int(p.get("size", 5)),
-                    order=p.get("order", "desc"),
-                    order_by=order_by,
-                    label=label,
-                    order_metric=order_metric,
-                    missing=(
-                        str(p["missing"]) if p.get("missing") is not None
-                        else None
-                    ),
-                )
-            )
-        elif a["type"] == "composite":
-            raw_sources = p.get("sources")
-            if not isinstance(raw_sources, list) or not raw_sources:
-                raise ValueError(
-                    "kibana: composite needs a non-empty 'sources' list"
-                )
-            srcs = []
-            for src in raw_sources:
-                # ES-proper source shape: {name: {kind: {...}}}
-                if not isinstance(src, dict) or len(src) != 1:
-                    raise ValueError(
-                        f"kibana: composite source must be a one-entry "
-                        f"{{name: {{kind: ...}}}} dict, got {src!r}"
-                    )
-                sname, body = next(iter(src.items()))
-                if not isinstance(body, dict) or len(body) != 1:
-                    raise ValueError(
-                        f"kibana: bad composite source body {body!r}"
-                    )
-                kind, spec = next(iter(body.items()))
-                if kind == "terms":
-                    srcs.append((sname, str(spec["field"]), "terms", 0))
-                elif kind == "date_histogram":
-                    iv, auto = _parse_interval_us(
-                        {"interval": spec.get("interval", "1h")}
-                    )
-                    if auto:
-                        raise ValueError(
-                            "kibana: composite date_histogram needs a "
-                            "fixed interval (no ambient time picker)"
-                        )
-                    srcs.append((sname, str(spec["field"]), "date_histogram", iv))
-                elif kind == "histogram":
-                    h_iv = float(spec.get("interval", 0))
-                    if h_iv <= 0:
-                        raise ValueError(
-                            "kibana: composite histogram needs a "
-                            "positive numeric interval"
-                        )
-                    srcs.append(
-                        (sname, str(spec["field"]), "histogram", h_iv)
-                    )
-                else:
-                    raise ValueError(
-                        f"kibana: unsupported composite source kind {kind!r}"
-                    )
-            after = p.get("after")
-            if after is not None:
-                if not isinstance(after, (list, tuple)) or len(after) != len(srcs):
-                    raise ValueError(
-                        "kibana: composite 'after' must list one value "
-                        "per source (the last key tuple of the previous "
-                        "page)"
-                    )
-                after = tuple(after)
-            buckets.append(
-                CompositeBucket(
-                    sources=tuple(srcs),
-                    size=int(p.get("size", 10)),
-                    label=label,
-                    after=after,
-                )
-            )
-        elif a["type"] == "significant_terms":
-            fg = p.get("foreground") or p.get("fg")
-            if not isinstance(fg, str) or not fg.strip():
-                raise ValueError(
-                    "kibana: significant_terms needs an explicit "
-                    "'foreground' query_string param (Kibana derives the "
-                    "foreground from the dashboard search bar; this "
-                    "engine has no ambient query)"
-                )
-            buckets.append(
-                SignificantTermsBucket(
-                    field=p["field"],
-                    size=int(p.get("size", 5)),
-                    foreground=fg,
-                    label=label,
-                    min_doc_count=int(p.get("min_doc_count", 3)),
-                )
-            )
-        elif a["type"] == "variable_width_histogram":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: variable_width_histogram must be a bucket agg"
-                )
-            nb = int(p.get("buckets", 10))
-            if not 1 <= nb <= 100:
-                raise ValueError(
-                    "kibana: variable_width_histogram buckets must be "
-                    "in [1, 100]"
-                )
-            buckets.append(
-                VariableWidthHistogramBucket(
-                    field=p["field"], buckets=nb, label=label
-                )
-            )
-        elif a["type"] == "adjacency_matrix":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: adjacency_matrix must be a bucket agg"
-                )
-            raw_flt = p.get("filters") or {}
-            if isinstance(raw_flt, dict):
-                pairs = list(raw_flt.items())
-            else:
-                pairs = [
-                    (f.get("label") or f"filter_{i}",
-                     f["input"]["query"]["query_string"]["query"]
-                     if isinstance(f.get("input"), dict) else f["query"])
-                    for i, f in enumerate(raw_flt)
-                ]
-            if not pairs:
-                raise ValueError(
-                    "kibana: adjacency_matrix needs at least one filter"
-                )
-            if len(pairs) > 100:
-                # ES indices.query.bool.max_clause_count-backed default
-                raise ValueError(
-                    "kibana: adjacency_matrix supports at most 100 filters"
-                )
-            sep = str(p.get("separator", "&"))
-            names = [str(k) for k, _ in pairs]
-            if len(set(names)) != len(names):
-                raise ValueError(
-                    "kibana: adjacency_matrix filter names must be unique"
-                )
-            if any(sep in n for n in names):
-                raise ValueError(
-                    "kibana: adjacency_matrix filter names must not "
-                    "contain the separator"
-                )
-            buckets.append(
-                AdjacencyMatrixBucket(
-                    # ES's AdjacencyMatrixAggregationBuilder sorts the
-                    # keyed filters lexicographically before building
-                    # intersection keys ("internally we want to have a
-                    # fixed order of filters"), so 'big&hasB' — never
-                    # 'hasB&big' — regardless of declaration order
-                    # (ADVICE r13)
-                    filters=tuple(
-                        sorted(
-                            ((str(k), str(q)) for k, q in pairs),
-                            key=lambda kv: kv[0],
-                        )
-                    ),
-                    label=label,
-                    separator=sep,
-                )
-            )
-        elif a["type"] == "significant_text":
-            fg = p.get("foreground") or p.get("fg")
-            if not isinstance(fg, str) or not fg.strip():
-                raise ValueError(
-                    "kibana: significant_text needs an explicit "
-                    "'foreground' query_string param (same contract as "
-                    "significant_terms)"
-                )
-            if p.get("filter_duplicate_text"):
-                raise ValueError(
-                    "kibana: significant_text filter_duplicate_text is "
-                    "not modelled — run the corpus through "
-                    "llmdata/dedup first"
-                )
-            buckets.append(
-                SignificantTextBucket(
-                    field=p["field"],
-                    size=int(p.get("size", 5)),
-                    foreground=fg,
-                    label=label,
-                    min_doc_count=int(p.get("min_doc_count", 3)),
-                )
-            )
-        elif a["type"] == "categorize_text":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: categorize_text must be a bucket agg"
-                )
-            if not p.get("field"):
-                raise ValueError("kibana: categorize_text needs a field")
-            sim = int(p.get("similarity_threshold", 100))
-            if not 1 <= sim <= 100:
-                raise ValueError(
-                    "kibana: categorize_text similarity_threshold "
-                    "must be in [1, 100]"
-                )
-            buckets.append(
-                CategorizeTextBucket(
-                    field=p["field"],
-                    size=int(p.get("size", 10)),
-                    label=label,
-                    similarity_threshold=sim,
-                )
-            )
-        elif a["type"] == "random_sampler":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: random_sampler must be a bucket agg"
-                )
-            if buckets:
-                raise ValueError(
-                    "kibana: random_sampler must be the first (top-"
-                    "level) bucket agg, like ES"
-                )
-            prob = float(p.get("probability", 0))
-            # ES's own contract: (0, 0.5] or exactly 1
-            if not (0 < prob <= 0.5 or prob == 1.0):
-                raise ValueError(
-                    "kibana: random_sampler probability must be in "
-                    "(0, 0.5] or exactly 1"
-                )
-            if p.get("seed") is None:
-                # ES generates a seed when absent — non-reproducible;
-                # the deterministic stance requires one explicitly
-                raise ValueError(
-                    "kibana: random_sampler needs an explicit seed "
-                    "(deterministic, replayable sampling)"
-                )
-            if not p.get("id_field"):
-                raise ValueError(
-                    "kibana: random_sampler needs id_field — ES hashes "
-                    "shard-relative doc ids (not reproducible); the "
-                    "deterministic twin hashes an explicit doc identity"
-                )
-            buckets.append(
-                RandomSamplerBucket(
-                    probability=prob,
-                    seed=int(p["seed"]),
-                    id_field=str(p["id_field"]),
-                    label=label,
-                )
-            )
-        elif a["type"] == "sampler":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: sampler must be a bucket agg")
-            if buckets:
-                raise ValueError(
-                    "kibana: sampler must be the first (top-level) "
-                    "bucket agg, like ES"
-                )
-            shard_size = int(p.get("shard_size", 100))  # ES default
-            if shard_size < 1:
-                raise ValueError(
-                    "kibana: sampler shard_size must be >= 1"
-                )
-            if p.get("seed") is None or not p.get("id_field"):
-                # ES keeps per-shard top-SCORED docs — score- and
-                # layout-sensitive; the deterministic twin needs an
-                # explicit identity + seed (random_sampler stance)
-                raise ValueError(
-                    "kibana: sampler needs an explicit seed and "
-                    "id_field (deterministic residue top-k where ES "
-                    "keeps per-shard top-scored docs)"
-                )
-            buckets.append(
-                SamplerBucket(
-                    shard_size=shard_size,
-                    seed=int(p["seed"]),
-                    id_field=str(p["id_field"]),
-                    label=label,
-                )
-            )
-        elif a["type"] == "ip_range":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: ip_range must be a bucket agg")
-            if not p.get("field"):
-                raise ValueError("kibana: ip_range needs a field")
-            import ipaddress as _ip
-
-            def _ip_int(s, what):
-                # v4 and v6 share Lucene's 128-bit space: v4 maps to
-                # ::ffff:a.b.c.d (how ES's ip field compares both
-                # families), so cross-family ranges work like ES
-                try:
-                    addr = _ip.ip_address(str(s))
-                except ValueError as e:
-                    raise ValueError(
-                        f"kibana: ip_range {what} {s!r} is not a valid "
-                        f"IP address"
-                    ) from e
-                return int(addr) + (
-                    _V4_MAPPED_BASE if addr.version == 4 else 0
-                )
-
-            ipranges: list[tuple[str, int | None, int | None]] = []
-            for r in p.get("ranges", []):
-                if r.get("mask"):
-                    try:
-                        net = _ip.ip_network(str(r["mask"]), strict=False)
-                    except ValueError as e:
-                        raise ValueError(
-                            f"kibana: ip_range mask {r['mask']!r} is "
-                            f"not a valid CIDR"
-                        ) from e
-                    base = int(net.network_address) + (
-                        _V4_MAPPED_BASE if net.version == 4 else 0
-                    )
-                    end = base + net.num_addresses
-                    ipranges.append((
-                        str(r.get("key") or r["mask"]),
-                        base,
-                        # ::/0 ends at 2^128: unbounded above
-                        None if end >= (1 << 128) else end,
-                    ))
-                    continue
-                lo = (
-                    _ip_int(r["from"], "from")
-                    if r.get("from") is not None else None
-                )
-                hi = (
-                    _ip_int(r["to"], "to")
-                    if r.get("to") is not None else None
-                )
-                key = str(
-                    r.get("key")
-                    or f"{r.get('from') or '*'}-{r.get('to') or '*'}"
-                )
-                ipranges.append((key, lo, hi))
-            if not ipranges:
-                raise ValueError(
-                    "kibana: ip_range needs at least one range"
-                )
-            buckets.append(
-                IpRangeBucket(
-                    field=p["field"], ranges=tuple(ipranges), label=label
-                )
-            )
-        elif a["type"] in ("geohash_grid", "geotile_grid"):
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(f"kibana: {a['type']} must be a bucket agg")
-            if not p.get("field"):
-                raise ValueError(f"kibana: {a['type']} needs a field")
-            kind = "geohash" if a["type"] == "geohash_grid" else "geotile"
-            prec = int(p.get("precision", 5 if kind == "geohash" else 7))
-            lo, hi = (1, 12) if kind == "geohash" else (0, 29)
-            if not lo <= prec <= hi:
-                raise ValueError(
-                    f"kibana: {a['type']} precision must be in "
-                    f"[{lo}, {hi}] (ES's own bound)"
-                )
-            gbounds = None
-            if p.get("bounds") is not None:
-                bb = p["bounds"]
-                try:
-                    tl, br = bb["top_left"], bb["bottom_right"]
-                    gbounds = (
-                        float(tl["lat"]), float(tl["lon"]),
-                        float(br["lat"]), float(br["lon"]),
-                    )
-                except (TypeError, KeyError) as exc:
-                    raise ValueError(
-                        f"kibana: {a['type']} bounds needs "
-                        "{top_left: {lat, lon}, bottom_right: "
-                        "{lat, lon}}"
-                    ) from exc
-                t_, l_, b_, r_ = gbounds
-                if not (t_ >= b_):
-                    raise ValueError(
-                        f"kibana: {a['type']} bounds top_left.lat must "
-                        "be >= bottom_right.lat"
-                    )
-                if not (l_ <= r_):
-                    raise ValueError(
-                        f"kibana: {a['type']} bounds crossing the "
-                        "antimeridian (left > right) is not modelled "
-                        "(documented; split the viewport into two "
-                        "requests)"
-                    )
-            buckets.append(
-                GeoGridBucket(
-                    field=p["field"],
-                    precision=prec,
-                    size=int(p.get("size", 10000)),
-                    label=label,
-                    kind=kind,
-                    bounds=gbounds,
-                )
-            )
-        elif a["type"] == "geo_distance":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: geo_distance must be a bucket agg")
-            if not p.get("field"):
-                raise ValueError("kibana: geo_distance needs a field")
-            org = p.get("origin")
-            if isinstance(org, dict) and "lat" in org and "lon" in org:
-                origin = (float(org["lat"]), float(org["lon"]))
-            elif isinstance(org, str) and "," in org:
-                a_, b_ = org.split(",", 1)
-                origin = (float(a_), float(b_))
-            else:
-                raise ValueError(
-                    "kibana: geo_distance needs an origin — "
-                    "{'lat': .., 'lon': ..} or a 'lat,lon' string"
-                )
-            if not (-90 <= origin[0] <= 90 and -180 <= origin[1] <= 180):
-                raise ValueError(
-                    f"kibana: geo_distance origin {origin} out of range"
-                )
-            unit = str(p.get("unit", "m"))
-            if unit not in ("m", "km"):
-                raise ValueError(
-                    "kibana: geo_distance unit must be 'm' or 'km' "
-                    "(other ES suffixes are not modelled)"
-                )
-            scale = 1000.0 if unit == "km" else 1.0
-            granges: list[tuple[str, float | None, float | None]] = []
-            for r in p.get("ranges", []):
-                lo_ = float(r["from"]) * scale if r.get("from") is not None else None
-                hi_ = float(r["to"]) * scale if r.get("to") is not None else None
-                key = str(
-                    r.get("key")
-                    or f"{r.get('from') if r.get('from') is not None else '*'}"
-                       f"-{r.get('to') if r.get('to') is not None else '*'}"
-                )
-                granges.append((key, lo_, hi_))
-            if not granges:
-                raise ValueError("kibana: geo_distance needs at least one range")
-            buckets.append(
-                GeoDistanceBucket(
-                    field=p["field"], origin=origin,
-                    ranges=tuple(granges), label=label,
-                )
-            )
-        elif a["type"] == "nested":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: nested must be a bucket agg")
-            if not p.get("path"):
-                raise ValueError("kibana: nested needs a path")
-            if "." in str(p["path"]):
-                raise ValueError(
-                    "kibana: nested path must be a top-level "
-                    "array<struct> column (this engine's flattened "
-                    "doc model; deeper paths are further explodes — "
-                    "not modelled)"
-                )
-            if buckets:
-                raise ValueError(
-                    "kibana: nested must be the first bucket agg (it "
-                    "switches the aggregation context for everything "
-                    "after it; ES's deeper nesting is not modelled)"
-                )
-            buckets.append(NestedBucket(path=str(p["path"]), label=label))
-        elif a["type"] == "reverse_nested":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: reverse_nested is modelled as a metric — "
-                    "the parent doc_count (parent-level metric "
-                    "sub-aggs would double-count over the exploded "
-                    "relation and are not modelled)"
-                )
-            if not p.get("id_field"):
-                raise ValueError(
-                    "kibana: reverse_nested needs an explicit "
-                    "'id_field' naming the root-document key (ES "
-                    "tracks root docs via Lucene doc ids; a "
-                    "relational engine needs the key named)"
-                )
-            metrics.append(
-                ReverseNestedAgg(id_field=str(p["id_field"]), label=label)
-            )
-        elif a["type"] == "diversified_sampler":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: diversified_sampler must be a bucket agg"
-                )
-            if buckets:
-                raise ValueError(
-                    "kibana: diversified_sampler must be the first "
-                    "(top-level) bucket agg, like ES"
-                )
-            if not p.get("field"):
-                raise ValueError(
-                    "kibana: diversified_sampler needs the de-dup field"
-                )
-            mdpv = int(p.get("max_docs_per_value", 1))
-            if mdpv < 1:
-                raise ValueError(
-                    "kibana: diversified_sampler max_docs_per_value "
-                    "must be >= 1"
-                )
-            if p.get("seed") is None or not p.get("id_field"):
-                raise ValueError(
-                    "kibana: diversified_sampler needs an explicit seed "
-                    "and id_field (deterministic, replayable sampling — "
-                    "see random_sampler)"
-                )
-            buckets.append(
-                DiversifiedSamplerBucket(
-                    field=str(p["field"]),
-                    max_docs_per_value=mdpv,
-                    seed=int(p["seed"]),
-                    id_field=str(p["id_field"]),
-                    label=label,
-                )
-            )
-        elif a["type"] == "frequent_item_sets":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: frequent_item_sets must be a bucket agg"
-                )
-            raw_ff = p.get("fields") or []
-            fis_fields = tuple(
-                str(f["field"] if isinstance(f, dict) else f)
-                for f in raw_ff
-            )
-            if len(fis_fields) < 2:
-                raise ValueError(
-                    "kibana: frequent_item_sets needs at least two fields"
-                )
-            if len(set(fis_fields)) != len(fis_fields):
-                raise ValueError(
-                    "kibana: frequent_item_sets fields must be distinct"
-                )
-            fis_sup = float(p.get("minimum_support", 0.1))
-            if not 0 < fis_sup <= 1:
-                raise ValueError(
-                    "kibana: frequent_item_sets minimum_support must be "
-                    "in (0, 1]"
-                )
-            fis_mss = int(p.get("minimum_set_size", 1))
-            if not 1 <= fis_mss <= 3:
-                raise ValueError(
-                    "kibana: frequent_item_sets minimum_set_size must "
-                    "be in [1, 3] (set size is capped at 3)"
-                )
-            buckets.append(
-                FrequentItemSetsBucket(
-                    fields=fis_fields,
-                    min_support=fis_sup,
-                    min_set_size=fis_mss,
-                    size=int(p.get("size", 10)),
-                    label=label,
-                )
-            )
-        elif a["type"] == "date_histogram":
-            interval_us, auto = _parse_interval_us(p)
-            mdc = int(p.get("min_doc_count", 1))
-            if mdc < 0:
-                raise ValueError("kibana: min_doc_count must be >= 0")
-            eb = p.get("extended_bounds")
-            # Kibana writes an EMPTY extended_bounds stub ({}) on every
-            # date_histogram (the corpus's six all do) — only a dict
-            # carrying BOTH endpoints means the user set bounds
-            if not eb or eb.get("min") is None or eb.get("max") is None:
-                eb = None
-            if eb is not None:
-                if mdc != 0:
-                    raise ValueError(
-                        "kibana: extended_bounds needs min_doc_count=0 "
-                        "(without zero-fill it changes nothing — ES docs "
-                        "make the same pairing explicit)"
-                    )
-                eb = (_bound_us(eb["min"]), _bound_us(eb["max"]))
-                if eb[0] > eb[1]:
-                    raise ValueError("kibana: extended_bounds min > max")
-            buckets.append(
-                DateHistogramBucket(
-                    field=p["field"],
-                    interval_us=interval_us,
-                    label=label,
-                    min_doc_count=mdc,
-                    extended_bounds=eb,
-                    auto=auto,
-                )
-            )
-        elif a["type"] == "multi_terms":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: multi_terms must be a bucket agg")
-            raw_terms = p.get("terms") or p.get("fields") or []
-            flds = tuple(
-                str(t["field"]) if isinstance(t, dict) else str(t)
-                for t in raw_terms
-            )
-            if len(flds) < 2:
-                raise ValueError(
-                    "kibana: multi_terms needs at least two fields"
-                )
-            order = str(p.get("order", "desc"))
-            if order not in ("asc", "desc"):
-                raise ValueError("kibana: multi_terms order must be asc|desc")
-            # ES orders multi_terms buckets exactly like terms: by doc
-            # count (default), by the key tuple (_key), or by a
-            # sub-aggregation metric / custom orderAgg — resolved here
-            # the same way as the terms branch so the shared ranking
-            # loop (step 3) handles both (round 12; metric ordering
-            # previously raised).
-            order_by = str(p.get("orderBy", "_count"))
-            order_metric: "tuple[str, str] | None" = ("count", "")
-            if order_by in ("_key", "_term"):
-                order_by = "_term"  # ranking loop: key path (joined)
-            elif order_by == "custom":
-                oa = p.get("orderAgg", {})
-                order_metric = _order_metric_checked(
-                    "multi_terms", order_by,
-                    oa.get("type", "avg"), oa.get("params", {}).get("field"),
-                )
-            elif order_by != "_count":
-                tgt = by_id.get(order_by)
-                if tgt is None:
-                    raise ValueError(
-                        f"kibana: multi_terms orderBy={order_by!r} must "
-                        f"reference a simple metric agg "
-                        f"(count/avg/min/max/sum/cardinality)"
-                    )
-                order_metric = _order_metric_checked(
-                    "multi_terms", order_by,
-                    tgt["type"], tgt["params"].get("field"),
-                )
-            buckets.append(
-                MultiTermsBucket(
-                    fields=flds, size=int(p.get("size", 10)),
-                    order=order, label=label,
-                    order_by=order_by, order_metric=order_metric,
-                )
-            )
-        elif a["type"] == "rare_terms":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: rare_terms must be a bucket agg")
-            mdc = int(p.get("max_doc_count", 1))
-            if not 1 <= mdc <= 100:
-                # ES rejects max_doc_count above 100 (precision bound)
-                raise ValueError(
-                    "kibana: rare_terms max_doc_count must be in [1, 100]"
-                )
-            buckets.append(
-                RareTermsBucket(
-                    field=p["field"], max_doc_count=mdc, label=label
-                )
-            )
-        elif a["type"] == "filters":
-            flt = tuple(
-                (
-                    _slug(f.get("label") or f"filter_{i}"),
-                    f["input"]["query"]["query_string"]["query"],
-                )
-                for i, f in enumerate(p.get("filters", []))
-            )
-            other_key = None
-            # ES: setting other_bucket_key implicitly enables
-            # other_bucket (second-review 11.5)
-            if p.get("other_bucket") or p.get("other_bucket_key") is not None:
-                other_key = _slug(str(p.get("other_bucket_key", "_other_")))
-                if other_key in {lbl for lbl, _ in flt}:
-                    # ES keeps '_other_' distinct from a filter LABELED
-                    # 'other'; this engine's slugged label space cannot,
-                    # so a collision would silently merge non-matching
-                    # docs into a real bucket — reject loudly
-                    raise ValueError(
-                        f"kibana: other_bucket key {other_key!r} collides "
-                        f"with a filter label after slugging — rename one"
-                    )
-            buckets.append(
-                FiltersBucket(filters=flt, label=label, other_key=other_key)
-            )
-        elif a["type"] == "filter":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: filter must be a bucket agg")
-            q = p.get("query")
-            if q is None and isinstance(p.get("filter"), dict):
-                # ES-request shape: {"filter": {"query_string": {...}}}
-                # / Kibana's {"filter": {"query": ..., "language": ..}}
-                q = p["filter"].get("query")
-            if not isinstance(q, str) or not q.strip():
-                raise ValueError("kibana: filter agg needs a query string")
-            buckets.append(FilterBucket(query=q, label=label))
-        elif a["type"] == "missing":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: missing must be a bucket agg")
-            if not p.get("field"):
-                raise ValueError("kibana: missing agg needs a field")
-            buckets.append(MissingBucket(field=p["field"], label=label))
-        elif a["type"] == "auto_date_histogram":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: auto_date_histogram must be a bucket agg"
-                )
-            nb = int(p.get("buckets", 10))
-            if nb < 1:
-                raise ValueError(
-                    "kibana: auto_date_histogram buckets must be >= 1"
-                )
-            buckets.append(
-                DateHistogramBucket(
-                    field=p["field"],
-                    interval_us=_INTERVAL_UNITS_US["h"],  # pre-resolve stub
-                    label=label,
-                    auto_buckets=nb,
-                )
-            )
-        elif a["type"] == "rate":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: rate cannot be a bucket agg")
-            unit = str(p.get("unit", "")) or None
-            if unit is not None and unit not in _RATE_UNIT_US:
-                raise ValueError(
-                    f"kibana: rate unit must be one of "
-                    f"{sorted(_RATE_UNIT_US)}, got {unit!r}"
-                )
-            mode = str(p.get("mode", "sum"))
-            if mode not in ("sum", "value_count"):
-                raise ValueError(
-                    "kibana: rate mode must be sum|value_count"
-                )
-            if mode == "value_count" and not p.get("field"):
-                raise ValueError(
-                    "kibana: rate mode=value_count needs a field"
-                )
-            metrics.append(
-                RateAgg(
-                    field=p.get("field", "") or "",
-                    # unit omitted: ES rates per the histogram's own
-                    # interval — factor 1, marked with unit_us=0
-                    unit_us=_RATE_UNIT_US[unit] if unit else 0,
-                    mode=mode,
-                    label=label,
-                )
-            )
-        elif a["type"] == "top_metrics":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: top_metrics cannot be a bucket agg")
-            raw_fields = p.get("fields") or (
-                [p["field"]] if p.get("field") else []
-            )
-            if isinstance(raw_fields, (str, dict)):
-                raw_fields = [raw_fields]
-            flds2 = tuple(
-                f["field"] if isinstance(f, dict) else str(f)
-                for f in raw_fields
-            )
-            if not flds2:
-                raise ValueError("kibana: top_metrics needs metric fields")
-            tm_size = int(p.get("size", 1))
-            if not 1 <= tm_size <= 100:
-                # ES caps top_metrics size at 10 by default (index
-                # setting raises it); keep a hard sanity bound
-                raise ValueError(
-                    "kibana: top_metrics size must be in [1, 100]"
-                )
-            sort_p = p.get("sort")
-            if isinstance(sort_p, dict):
-                (tm_sf, tm_so), = sort_p.items()
-            elif p.get("sortField"):
-                tm_sf = p["sortField"]
-                tm_so = p.get("sortOrder", "desc")
-            else:
-                # ES requires an explicit sort on top_metrics; a
-                # silent default would only surface later as an
-                # unresolved-column error deep in evaluate (ADVICE r13)
-                raise ValueError(
-                    "kibana: top_metrics needs an explicit sort "
-                    "('sort': {field: order} or sortField/sortOrder)"
-                )
-            if tm_so not in ("asc", "desc"):
-                raise ValueError("kibana: top_metrics sort must be asc|desc")
-            metrics.append(
-                TopMetricsAgg(
-                    fields=flds2, sort_field=tm_sf, sort_order=tm_so,
-                    label=label, size=tm_size,
-                )
-            )
-        elif a["type"] == "percentiles":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: percentiles cannot be a bucket agg")
-            percents = tuple(
-                float(pc)
-                for pc in p.get("percents", [1, 5, 25, 50, 75, 95, 99])
-            )
-            metrics.append(
-                PercentilesAgg(field=p["field"], percents=percents, label=label)
-            )
-        elif a["type"] == "percentile_ranks":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: percentile_ranks cannot be a bucket agg"
-                )
-            if not p.get("values"):
-                raise ValueError("kibana: percentile_ranks needs 'values'")
-            metrics.append(
-                PercentileRanksAgg(
-                    field=p["field"],
-                    # order-preserving dedupe: ES accepts duplicate
-                    # probe values and dedupes the response keys; a
-                    # duplicate output alias would make the final
-                    # select ambiguous (code-review r10)
-                    values=tuple(dict.fromkeys(float(v) for v in p["values"])),
-                    label=label,
-                )
-            )
-        elif a["type"] == "median":
-            # ES models median as percentiles([50]); one output column
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: median cannot be a bucket agg")
-            metrics.append(
-                PercentilesAgg(field=p["field"], percents=(50.0,), label=label)
-            )
-        elif a["type"] in (
-            "avg", "min", "max", "sum", "cardinality", "count", "value_count"
-        ):
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(f"kibana: {a['type']} cannot be a bucket agg")
-            if a["type"] == "value_count" and not p.get("field"):
-                raise ValueError("kibana: value_count needs a field")
-            metrics.append(
-                MetricAgg(op=a["type"], field=p.get("field", ""), label=label)
-            )
-        elif a["type"] == "string_stats":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: string_stats cannot be a bucket agg"
-                )
-            if not p.get("field"):
-                raise ValueError("kibana: string_stats needs a field")
-            if p.get("show_distribution"):
-                raise ValueError(
-                    "kibana: string_stats show_distribution is not "
-                    "modelled"
-                )
-            metrics.append(StringStatsAgg(field=p["field"], label=label))
-        elif a["type"] == "matrix_stats":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: matrix_stats cannot be a bucket agg"
-                )
-            raw_mx = p.get("fields") or []
-            if isinstance(raw_mx, str):
-                raw_mx = [raw_mx]
-            mx_fields = tuple(str(f) for f in raw_mx)
-            if len(mx_fields) < 2:
-                raise ValueError(
-                    "kibana: matrix_stats needs at least two fields"
-                )
-            if len(set(mx_fields)) != len(mx_fields):
-                raise ValueError(
-                    "kibana: matrix_stats fields must be distinct"
-                )
-            if p.get("missing"):
-                raise ValueError(
-                    "kibana: matrix_stats per-field missing defaults "
-                    "are not modelled — documents missing any field "
-                    "drop (ES's default)"
-                )
-            metrics.append(MatrixStatsAgg(fields=mx_fields, label=label))
-        elif a["type"] == "t_test":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: t_test cannot be a bucket agg")
-            side_a, side_b = p.get("a") or {}, p.get("b") or {}
-            if not side_a.get("field") or not side_b.get("field"):
-                raise ValueError(
-                    "kibana: t_test needs a.field and b.field"
-                )
-            tt_type = str(p.get("type", "heteroscedastic"))
-            if tt_type not in (
-                "paired", "homoscedastic", "heteroscedastic"
-            ):
-                raise ValueError(
-                    "kibana: t_test type must be paired|homoscedastic|"
-                    "heteroscedastic"
-                )
-            if tt_type == "paired" and (
-                side_a.get("filter") or side_b.get("filter")
-            ):
-                # ES rejects filters on a paired t_test — the pairs
-                # come from the same documents by definition
-                raise ValueError(
-                    "kibana: paired t_test must not have filters"
-                )
-            metrics.append(
-                TTestAgg(
-                    a_field=str(side_a["field"]),
-                    b_field=str(side_b["field"]),
-                    a_filter=str(side_a.get("filter") or ""),
-                    b_filter=str(side_b.get("filter") or ""),
-                    test_type=tt_type,
-                    label=label,
-                )
-            )
-        elif a["type"] == "boxplot":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: boxplot cannot be a bucket agg")
-            if not p.get("field"):
-                raise ValueError("kibana: boxplot needs a field")
-            metrics.append(BoxplotAgg(field=p["field"], label=label))
-        elif a["type"] == "geo_bounds":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: geo_bounds cannot be a bucket agg")
-            if not p.get("field"):
-                raise ValueError("kibana: geo_bounds needs a field")
-            if p.get("wrap_longitude", True):
-                raise ValueError(
-                    "kibana: geo_bounds wrap_longitude=true (ES's "
-                    "default antimeridian-crossing box) is not "
-                    "modelled — pass wrap_longitude: false explicitly "
-                    "for the non-wrapping box (identical unless the "
-                    "data straddles ±180)"
-                )
-            metrics.append(GeoBoundsAgg(field=p["field"], label=label))
-        elif a["type"] == "geo_centroid":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: geo_centroid cannot be a bucket agg"
-                )
-            if not p.get("field"):
-                raise ValueError("kibana: geo_centroid needs a field")
-            metrics.append(GeoCentroidAgg(field=p["field"], label=label))
-        elif a["type"] == "median_absolute_deviation":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(
-                    "kibana: median_absolute_deviation cannot be a "
-                    "bucket agg"
-                )
-            if not p.get("field"):
-                raise ValueError(
-                    "kibana: median_absolute_deviation needs a field"
-                )
-            metrics.append(MadAgg(field=p["field"], label=label))
-        elif a["type"] == "weighted_avg":
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: weighted_avg cannot be a bucket agg")
-            try:
-                vf = p["value"]["field"]
-                wf = p["weight"]["field"]
-            except (KeyError, TypeError):
-                raise ValueError(
-                    "kibana: weighted_avg needs value.field and "
-                    "weight.field"
-                ) from None
-            if "missing" in p.get("value", {}) or "missing" in p.get(
-                "weight", {}
-            ):
-                raise ValueError(
-                    "kibana: weighted_avg missing-defaults are not "
-                    "modelled — docs lacking either field drop"
-                )
-            metrics.append(
-                WeightedAvgAgg(value_field=vf, weight_field=wf, label=label)
-            )
-        elif a["type"] == "top_hits":
-            th_size = int(p.get("size", 1))
-            if th_size < 1:
-                raise ValueError("kibana: top_hits size must be >= 1")
-            th_agg = p.get("aggregate", "average")
-            if th_agg not in ("average", "concat", "sum", "max", "min"):
-                raise ValueError(
-                    f"kibana: top_hits aggregate {th_agg!r} not supported"
-                )
-            metrics.append(
-                TopHitsAgg(
-                    field=p["field"],
-                    aggregate=th_agg,
-                    sort_field=p.get("sortField", "createdDateTime"),
-                    sort_order=p.get("sortOrder", "desc"),
-                    label=label,
-                    size=th_size,
-                )
-            )
-        elif a["type"] == "histogram":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: histogram must be a bucket agg")
-            interval = float(p.get("interval", 1))
-            if interval <= 0:
-                raise ValueError("kibana: histogram interval must be > 0")
-            mdc = int(p.get("min_doc_count", 1))
-            if mdc < 0:
-                raise ValueError("kibana: min_doc_count must be >= 0")
-            eb = p.get("extended_bounds")
-            if not eb or eb.get("min") is None or eb.get("max") is None:
-                eb = None  # empty Kibana stub (see date_histogram above)
-            if eb is not None:
-                if mdc != 0:
-                    raise ValueError(
-                        "kibana: extended_bounds needs min_doc_count=0 "
-                        "(without zero-fill it changes nothing — ES docs "
-                        "make the same pairing explicit)"
-                    )
-                eb = (float(eb["min"]), float(eb["max"]))
-                if eb[0] > eb[1]:
-                    raise ValueError("kibana: extended_bounds min > max")
-            buckets.append(
-                HistogramBucket(
-                    field=p["field"], interval=interval, label=label,
-                    min_doc_count=mdc, extended_bounds=eb,
-                )
-            )
-        elif a["type"] == "range":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: range must be a bucket agg")
-
-            def _end(r, k):
-                return float(r[k]) if r.get(k) is not None else None
-
-            def _key(r):
-                # range keys are bucket VALUES, not column names — no
-                # slugging, keep ES's literal `from-to` form
-                if r.get("key"):
-                    return str(r["key"])
-                lo, hi = r.get("from"), r.get("to")
-                return (
-                    f"{'*' if lo is None else f'{float(lo):g}'}-"
-                    f"{'*' if hi is None else f'{float(hi):g}'}"
-                )
-
-            ranges = tuple(
-                (_key(r), _end(r, "from"), _end(r, "to"))
-                for r in p.get("ranges", [])
-            )
-            if not ranges:
-                raise ValueError("kibana: range agg needs at least one range")
-            buckets.append(RangeBucket(field=p["field"], ranges=ranges, label=label))
-        elif a["type"] == "date_range":
-            if schema not in _BUCKET_SCHEMAS:
-                raise ValueError("kibana: date_range must be a bucket agg")
-
-            def _dkey(r):
-                if r.get("key"):
-                    return str(r["key"])
-                lo, hi = r.get("from"), r.get("to")
-                return f"{lo if lo is not None else '*'}-{hi if hi is not None else '*'}"
-
-            dranges = tuple(
-                (
-                    _dkey(r),
-                    str(r["from"]) if r.get("from") is not None else None,
-                    str(r["to"]) if r.get("to") is not None else None,
-                )
-                for r in p.get("ranges", [])
-            )
-            if not dranges:
-                raise ValueError("kibana: date_range agg needs at least one range")
-            buckets.append(
-                DateRangeBucket(field=p["field"], ranges=dranges, label=label)
-            )
-        elif a["type"] in ("stats", "extended_stats"):
-            if schema in _BUCKET_SCHEMAS:
-                raise ValueError(f"kibana: {a['type']} cannot be a bucket agg")
-            metrics.append(
-                StatsAgg(
-                    field=p["field"],
-                    label=label,
-                    extended=(a["type"] == "extended_stats"),
-                )
-            )
-        elif a["type"] in ("derivative", "cumulative_sum", "moving_avg", "moving_fn"):
-            op = "moving_avg" if a["type"] == "moving_fn" else a["type"]
-            if a["type"] == "moving_fn":
-                # honor the MovingFunctions script instead of silently
-                # averaging (code-review r9: a max() panel replayed as
-                # a mean with no error).  No script keeps ES's
-                # unweightedAvg default.
-                script = p.get("script") or ""
-                if isinstance(script, dict):
-                    script = script.get("source", "")
-                m = re.search(r"MovingFunctions\.(\w+)\s*\(", script)
-                fn = m.group(1) if m else ("unweightedAvg" if not script.strip() else None)
-                mapped = {"unweightedAvg": "moving_avg", "max": "moving_max",
-                          "min": "moving_min", "sum": "moving_sum"}
-                if fn not in mapped:
-                    raise ValueError(
-                        f"kibana: unsupported moving_fn script {script!r} "
-                        f"(supported: MovingFunctions.unweightedAvg/max/"
-                        f"min/sum)"
-                    )
-                op = mapped[fn]
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            pipelines_raw.append(
-                (op, path, label, int(p.get("window", 5)), (), _seq)
-            )
-        elif a["type"] == "serial_diff":
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            lag = int(p.get("lag", 1))
-            if lag < 1:
-                raise ValueError("kibana: serial_diff lag must be >= 1")
-            pipelines_raw.append(("serial_diff", path, label, lag, (), _seq))
-        elif a["type"] == "cumulative_cardinality":
-            # ES cumulative_cardinality (round 13): the running count
-            # of distinct field values across the histogram's buckets.
-            # buckets_path must name a cardinality agg (like ES, which
-            # merges its HLL sketches cumulatively; this engine is
-            # exact via first-seen buckets — the documented
-            # exact-vs-approx stance).
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "")
-            tgt = by_id.get(path)
-            if tgt is None or tgt["type"] != "cardinality":
-                raise ValueError(
-                    "kibana: cumulative_cardinality buckets_path must "
-                    "reference a cardinality agg"
-                )
-            pipelines_raw.append(
-                ("cumulative_cardinality", path, label, 0, (), _seq)
-            )
-        elif a["type"] == "moving_percentiles":
-            # ES moving_percentiles (round 14): slide a window across
-            # the histogram buckets and report the percentiles of the
-            # merged window.  buckets_path must name a percentiles agg
-            # (like ES); window is REQUIRED (like ES); shift follows
-            # moving_fn (0 = the `window` buckets BEFORE the current
-            # one, exclusive; window = shift includes the current).
-            # The shift rides the op string, normalize:-style.
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "")
-            tgt = by_id.get(path)
-            if tgt is None or tgt["type"] != "percentiles":
-                raise ValueError(
-                    "kibana: moving_percentiles buckets_path must "
-                    "reference a percentiles agg"
-                )
-            if p.get("window") is None:
-                raise ValueError(
-                    "kibana: moving_percentiles needs an explicit "
-                    "window (ES requires it)"
-                )
-            mp_window = int(p["window"])
-            if mp_window < 1:
-                raise ValueError("kibana: moving window must be >= 1")
-            pipelines_raw.append(
-                (
-                    f"moving_percentiles:{int(p.get('shift', 0))}",
-                    path, label, mp_window, (), _seq,
-                )
-            )
-        elif a["type"] == "normalize":
-            # ES normalize pipeline agg (round 13): rescale a sibling
-            # metric ACROSS the innermost bucket level, per outer
-            # bucket — the op string carries the method
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            method = str(p.get("method", ""))
-            if method not in _NORMALIZE_METHODS:
-                raise ValueError(
-                    f"kibana: normalize method must be one of "
-                    f"{sorted(_NORMALIZE_METHODS)}, got {method!r}"
-                )
-            pipelines_raw.append(
-                (f"normalize:{method}", path, label, 0, (), _seq)
-            )
-        elif a["type"] == "bucket_correlation":
-            # ES x-pack bucket_correlation (round 15): the only
-            # function is count_correlation; its indicator carries the
-            # per-bucket metric expectations, optional population
-            # fractions, and the TOTAL doc_count the bucket counts
-            # were drawn from (all literals — validated here, folded
-            # into compile-time constants at evaluation)
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            fn = p.get("function") or {}
-            if set(fn) != {"count_correlation"}:
-                raise ValueError(
-                    "kibana: bucket_correlation supports exactly the "
-                    "count_correlation function (like ES)"
-                )
-            ind = (fn["count_correlation"] or {}).get("indicator") or {}
-            exps = tuple(float(x) for x in ind.get("expectations") or ())
-            if len(exps) < 2:
-                raise ValueError(
-                    "kibana: bucket_correlation indicator needs at "
-                    "least two expectations"
-                )
-            fracs = tuple(float(x) for x in ind.get("fractions") or ())
-            if fracs and len(fracs) != len(exps):
-                raise ValueError(
-                    "kibana: bucket_correlation fractions must match "
-                    "expectations in length"
-                )
-            if fracs and (any(f < 0 for f in fracs) or sum(fracs) <= 0):
-                raise ValueError(
-                    "kibana: bucket_correlation fractions must be "
-                    "non-negative with a positive sum"
-                )
-            bc_n = int(ind.get("doc_count") or 0)
-            if bc_n <= 0:
-                raise ValueError(
-                    "kibana: bucket_correlation indicator needs "
-                    "doc_count > 0 (the population the bucket counts "
-                    "are drawn from)"
-                )
-            stats_tests_raw.append(
-                ("bucket_correlation", path, label, exps, fracs, bc_n,
-                 (), _seq)
-            )
-        elif a["type"] == "bucket_count_ks_test":
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            alts = tuple(
-                str(x) for x in p.get("alternative")
-                or ("less", "greater", "two_sided")
-            )
-            bad = [x for x in alts if x not in ("less", "greater",
-                                                "two_sided")]
-            if bad or len(set(alts)) != len(alts):
-                raise ValueError(
-                    "kibana: bucket_count_ks_test alternative must be "
-                    "distinct values from less|greater|two_sided"
-                )
-            if str(p.get("sampling_method") or "") != "uniform":
-                # ES defaults to upper_tail — an x-pack reweighting of
-                # significant-terms sampling this engine does not
-                # model; require the explicit uniform stance
-                raise ValueError(
-                    "kibana: bucket_count_ks_test supports only "
-                    "sampling_method 'uniform' (explicit; ES's default "
-                    "upper_tail reweighting is not modelled)"
-                )
-            ks_fracs = tuple(float(x) for x in p.get("fractions") or ())
-            if ks_fracs and (
-                any(f < 0 for f in ks_fracs) or sum(ks_fracs) <= 0
-            ):
-                raise ValueError(
-                    "kibana: bucket_count_ks_test fractions must be "
-                    "non-negative with a positive sum"
-                )
-            stats_tests_raw.append(
-                ("bucket_count_ks_test", path, label, (), ks_fracs, 0,
-                 alts, _seq)
-            )
-        elif a["type"] in SIBLING_OPS:
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            pipelines_raw.append((a["type"], path, label, 0, (), _seq))
-        elif a["type"] in MULTI_SIBLING_OPS:
-            path = str(p.get("metricAgg") or p.get("buckets_path") or "_count")
-            percents: tuple[float, ...] = ()
-            if a["type"] == "percentiles_bucket":
-                percents = tuple(
-                    float(x) for x in p.get("percents", (1, 5, 25, 50, 75, 95, 99))
-                )
-                if not percents or not all(0 <= x <= 100 for x in percents):
-                    raise ValueError(
-                        "kibana: percentiles_bucket percents must be in [0, 100]"
-                    )
-            pipelines_raw.append((a["type"], path, label, 0, percents, _seq))
-        elif a["type"] in ("bucket_script", "bucket_selector"):
-            script = p.get("script")
-            if isinstance(script, dict):
-                script = script.get("source")
-            if not isinstance(script, str) or not script.strip():
-                raise ValueError(f"kibana: {a['type']} needs a script")
-            paths = p.get("buckets_path")
-            if not isinstance(paths, dict) or not paths:
-                raise ValueError(
-                    f"kibana: {a['type']} needs a buckets_path map"
-                )
-            scripts_raw.append((a["type"], dict(paths), script, label, _seq))
-        elif a["type"] == "bucket_sort":
-            if bucket_sort_raw is not None:
-                raise ValueError("kibana: at most one bucket_sort per vis")
-            size = int(p.get("size", 10))
-            from_ = int(p.get("from", 0))
-            if size < 1 or from_ < 0:
-                raise ValueError("kibana: bucket_sort needs size >= 1, from >= 0")
-            bucket_sort_raw = (
-                str(p.get("sortField") or p.get("buckets_path") or "_key"),
-                str(p.get("order", "desc")),
-                size,
-                from_,
-            )
-        else:
-            raise ValueError(f"kibana: unsupported agg type {a['type']!r}")
+    cx = _ParseCtx(by_id={a["id"]: a for a in aggs})
+    buckets = cx.buckets
+    metrics: list = []
     pipelines: list[PipelineAgg] = []
-    bucket_sort: BucketSortAgg | None = None
-    scripts: list[BucketScriptAgg] = []
     stats_pipelines: list[BucketStatsTestAgg] = []
-    if pipelines_raw or bucket_sort_raw or scripts_raw or stats_tests_raw:
-        label_of = {}
-        for m in metrics:
-            label_of[m.label] = m.label
+    scripts: list[BucketScriptAgg] = []
+    sorts: list[BucketSortAgg] = []
+    into = {
+        "bucket": buckets, "sole": buckets, "metric": metrics,
+        "pipeline": pipelines, "stats_test": stats_pipelines,
+        "script": scripts, "bucket_sort": sorts,
+    }
+    roles: dict[str, str] = {}
+    for seq, a in enumerate(aggs):
+        t = a["type"]
+        if t not in _KINDS:
+            raise ValueError(f"kibana: unsupported agg type {t!r}")
+        role, parse = _KINDS[t]
+        is_bucket = role in ("bucket", "sole")
+        if (a.get("schema", "metric") in _BUCKET_SCHEMAS) != is_bucket:
+            raise ValueError(
+                f"kibana: {t} must be a bucket agg" if is_bucket
+                else f"kibana: {t} cannot be a bucket agg (it is a "
+                f"{'metric' if role == 'metric' else 'pipeline'} agg)"
+            )
+        cx.seq = seq
+        into[role].append(parse(t, a.get("params", {}), _agg_label(a), cx))
+        roles[t] = role
+    for t, role in roles.items():
+        if role != "sole":
+            continue
+        if len(buckets) != 1:
+            raise ValueError(f"kibana: {t} must be the only bucket agg")
+        if pipelines or stats_pipelines or scripts or sorts:
+            raise ValueError(
+                f"kibana: {t} does not compose with pipeline aggs "
+                f"(simple metric sub-aggs at most; no pipeline, script "
+                f"or bucket_sort aggs)"
+            )
+    if len(sorts) > 1:
+        raise ValueError("kibana: at most one bucket_sort per vis")
+    bucket_sort: BucketSortAgg | None = None
+    if pipelines or stats_pipelines or scripts or sorts:
+        label_of = {m.label: m.label for m in metrics}
         for a in aggs:
-            lbl = _slug(
-                a.get("params", {}).get("customLabel") or f'{a["type"]}_{a["id"]}'
-            )
-            label_of.setdefault(a["id"], lbl)
-        needs_count = (
-            any(path == "_count" for _, path, _, _, _, _ in pipelines_raw)
-            or (bucket_sort_raw is not None and bucket_sort_raw[0] == "_count")
-            or any(
-                p == "_count"
-                for _, paths, _, _, _ in scripts_raw
-                for p in paths.values()
-            )
-            or any(st[1] == "_count" for st in stats_tests_raw)
-        )
-        if needs_count:
+            label_of.setdefault(a["id"], _agg_label(a))
+        paths = [
+            *(pl.source_label for pl in pipelines),
+            *(st.source_label for st in stats_pipelines),
+            *(path for sc in scripts for _, path in sc.paths),
+            *(bs.sort_label for bs in sorts),
+        ]
+        if "_count" in paths:
             # the implicit doc-count metric, materialized only when a
             # buckets_path actually references it
             if not any(
@@ -3008,13 +5095,13 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
                 )
             return src
 
-        for op, path, label, window, percents, seq_ in pipelines_raw:
-            if op.startswith("moving_percentiles:"):
+        for i, pl in enumerate(pipelines):
+            if pl.op.startswith("moving_percentiles:"):
                 # references a MULTI-column percentiles agg (ES's own
                 # contract) — bypass the single-column _resolve_path
                 # and carry the source's percents so the output
                 # columns mirror the referenced agg's keys
-                mp_lbl = label_of.get(str(path))
+                mp_lbl = label_of.get(pl.source_label)
                 mp_src = next(
                     (m for m in metrics
                      if isinstance(m, PercentilesAgg) and m.label == mp_lbl),
@@ -3025,66 +5112,42 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
                         "kibana: moving_percentiles buckets_path must "
                         "reference a percentiles agg"
                     )
-                pipelines.append(
-                    PipelineAgg(
-                        op=op, source_label=mp_lbl, label=label,
-                        window=window, percents=mp_src.percents, seq=seq_,
-                    )
+                pipelines[i] = replace(
+                    pl, source_label=mp_lbl, percents=mp_src.percents
                 )
                 continue
-            src = _resolve_path(op, path)
-            if op.startswith("moving_") and window < 1:
+            src = _resolve_path(pl.op, pl.source_label)
+            if pl.op.startswith("moving_") and pl.window < 1:
                 raise ValueError("kibana: moving window must be >= 1")
-            pipelines.append(
-                PipelineAgg(
-                    op=op, source_label=src, label=label, window=window,
-                    percents=percents, seq=seq_,
-                )
+            pipelines[i] = replace(pl, source_label=src)
+        stats_pipelines = [
+            replace(st, source_label=_resolve_path(st.op, st.source_label))
+            for st in stats_pipelines
+        ]
+        for i, sc in enumerate(scripts):
+            resolved = tuple(
+                (param, _resolve_path(sc.op, path)) for param, path in sc.paths
             )
-        for (op, path, label, exps, fracs, bc_n, alts,
-             seq_) in stats_tests_raw:
-            stats_pipelines.append(
-                BucketStatsTestAgg(
-                    op=op, source_label=_resolve_path(op, path),
-                    label=label, expectations=exps, fractions=fracs,
-                    doc_count=bc_n, alternatives=alts, seq=seq_,
-                )
-            )
-        for op, paths, script, label, seq_ in scripts_raw:
-            resolved = [
-                (param, _resolve_path(op, path))
-                for param, path in paths.items()
-            ]
             # compile eagerly so a bad script fails at parse time, not
-            # mid-evaluation (the Column is rebuilt per-evaluate below)
-            compile_bucket_script(script, dict(resolved))
-            scripts.append(
-                BucketScriptAgg(
-                    op=op, paths=tuple(resolved), script=script, label=label,
-                    seq=seq_,
-                )
-            )
-        if bucket_sort_raw is not None:
-            path, order, size, from_ = bucket_sort_raw
-            if path == "_key":
-                sort_label = "_key"
-            else:
-                sort_label = label_of.get(path)
+            # mid-evaluation (the Column is rebuilt per-evaluate)
+            compile_bucket_script(sc.script, dict(resolved))
+            scripts[i] = replace(sc, paths=resolved)
+        if sorts:
+            bs = sorts[0]
+            sort_label = bs.sort_label
+            if sort_label != "_key":
+                sort_label = label_of.get(bs.sort_label)
                 if sort_label is None or not any(
                     m.label == sort_label for m in metrics
                 ):
                     raise ValueError(
-                        f"kibana: bucket_sort sortField {path!r} does not "
-                        f"resolve to a sibling metric agg"
+                        f"kibana: bucket_sort sortField {bs.sort_label!r} "
+                        f"does not resolve to a sibling metric agg"
                     )
-            if order not in ("asc", "desc"):
+            if bs.order not in ("asc", "desc"):
                 raise ValueError("kibana: bucket_sort order must be asc|desc")
-            bucket_sort = BucketSortAgg(
-                sort_label=sort_label, order=order, size=size, from_=from_
-            )
-    if any(isinstance(m, ReverseNestedAgg) for m in metrics) and not any(
-        isinstance(b, NestedBucket) for b in buckets
-    ):
+            bucket_sort = replace(bs, sort_label=sort_label)
+    if "reverse_nested" in roles and "nested" not in roles:
         raise ValueError(
             "kibana: reverse_nested is only meaningful inside a nested "
             "context — add the nested bucket agg first, like ES "
@@ -3111,392 +5174,6 @@ class KibanaPlan:
     def __init__(self, state: VisState):
         self.state = state
 
-    @staticmethod
-    def _merge_categories(
-        cats: DataFrame,
-        label: str,
-        threshold: int,
-        size: int,
-        partials: tuple = (),
-    ) -> DataFrame:
-        """categorize_text similarity merging (round 15) over the
-        ALREADY-AGGREGATED pattern table — the deterministic semantic
-        documented on :class:`CategorizeTextBucket`: same-length
-        positional similarity, frequency-seeded attachment, 6
-        pointer-jump rounds, unanimity-wildcard keys.  Every operation
-        is category-scale (patterns × patterns per length, patterns ×
-        tokens), never doc-scale.
-
-        Execution shape: fully LAZY, one plan, nothing persisted —
-        the pointer-jump self-joins double the LOGICAL lineage per
-        round, but every doubled subtree is the identical exchange and
-        Spark's ReuseExchange/ReuseSubquery executes the doc-scale
-        exact aggregation once (measured: an eager
-        persist-per-round variant paid a fresh AQE compile of the
-        doubled plan each round and ran 4x slower).  ``size`` is
-        accepted for signature stability with the caller's
-        TakeOrdered cut.
-
-        ``partials`` (round 16, metric sub-aggs): ``(column_name,
-        combiner)`` pairs — per-exact-pattern metric partials already
-        aggregated in ``cats`` that must ride the merge.  Each
-        combiner (F.sum / F.min / F.max — associative, so re-combining
-        when two merged groups collapse to the same wildcard key is
-        sound) is applied at both category-scale groupBys; the caller
-        finalizes (e.g. avg = sum/count) AFTER the merge."""
-        del size  # the caller applies the orderBy().limit() cut
-        t = threshold / 100.0
-        # Truncate the doc-scale lineage ONCE before the pointer-jump
-        # rounds (optimization r16, guide §3.3: very large plans make
-        # planning itself the bottleneck — materialize intermediates).
-        # `cats` is the already-aggregated pattern table
-        # (category-scale, tens-to-thousands of rows), so the eager
-        # localCheckpoint is one tiny job; without it each of the 6
-        # self-join rounds DOUBLES a lineage that bottoms out in the
-        # doc-scale tokenize+aggregate (2^7 copies for Catalyst/AQE to
-        # analyze — ReuseExchange deduped the execution but not the
-        # compile).  The r15 "persist variant 4× slower" measurement
-        # persisted per round against the full doc-scale plan; with the
-        # lineage cut the remaining rounds are category-scale joins.
-        cats = cats.localCheckpoint(eager=True)
-        pats = cats.select(
-            F.col(label).alias("__ct_p"),
-            F.split(F.col(label), " ").alias("__ct_toks"),
-            F.size(F.split(F.col(label), " ")).alias("__ct_len"),
-            F.col("doc_count").alias("__ct_n"),
-            *[F.col(pn) for pn, _ in partials],
-        )
-        left = pats.select(
-            F.col("__ct_p").alias("p"), F.col("__ct_toks").alias("ptoks"),
-            F.col("__ct_len").alias("__ct_len"),
-        )
-        right = pats.select(
-            F.col("__ct_p").alias("q"), F.col("__ct_toks").alias("qtoks"),
-            F.col("__ct_len").alias("__ct_len"),
-            F.col("__ct_n").alias("qc"),
-        )
-        match = F.aggregate(
-            F.zip_with(
-                F.col("ptoks"), F.col("qtoks"),
-                lambda a, b_: F.when(a == b_, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        pairs = (
-            left.join(right, "__ct_len")
-            .withColumn("__ct_m", match)
-            .filter(
-                F.col("__ct_m").cast("double")
-                / F.col("__ct_len").cast("double")
-                >= F.lit(t)
-            )
-        )
-        # rep(p): best-ranked similar pattern (doc_count desc, key
-        # asc) — min_by over (-count, key); p matches itself, so rep
-        # always exists and rank(rep(p)) <= rank(p): the pointer map
-        # is acyclic and rank-decreasing
-        rep = pairs.groupBy("p").agg(
-            F.min_by(
-                F.col("q"),
-                F.struct(
-                    (-F.col("qc")).alias("nc"), F.col("q").alias("q")
-                ),
-            ).alias("rep")
-        )
-        # same lineage cut for the pointer map: rep is category-sized
-        # (one row per pattern) and the 6 jump rounds double ITS
-        # lineage too — one more tiny eager job keeps the final plan at
-        # 2^6 checkpoint-leaf scans instead of 2^6 copies of the
-        # pairs-join subtree
-        rep = rep.localCheckpoint(eager=True)
-        for _ in range(6):  # closure for chains up to 2^6 = 64
-            hop = rep.select(
-                F.col("p").alias("__ct_hp"), F.col("rep").alias("__ct_hr")
-            )
-            rep = (
-                rep.join(hop, rep["rep"] == hop["__ct_hp"], "left")
-                .select(
-                    "p",
-                    F.coalesce(F.col("__ct_hr"), F.col("rep")).alias("rep"),
-                )
-            )
-        memb = rep.join(
-            pats,
-            rep["p"] == pats["__ct_p"],
-        ).select(
-            "rep", "__ct_toks", "__ct_len", "__ct_n",
-            *[pn for pn, _ in partials],
-        )
-        grouped = memb.groupBy("rep").agg(
-            F.collect_list("__ct_toks").alias("tls"),
-            F.max("__ct_len").alias("l"),
-            F.sum("__ct_n").alias("doc_count"),
-            *[fn(pn).alias(pn) for pn, fn in partials],
-        )
-        # unanimity-wildcard key: per position, the member token when
-        # every member agrees, else '*' (collect_list order is
-        # irrelevant — tls[0] is read only under unanimity)
-        merged_key = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.col("l") - 1),
-                lambda i: F.when(
-                    F.size(
-                        F.array_distinct(
-                            F.transform(
-                                F.col("tls"), lambda tk: F.get(tk, i)
-                            )
-                        )
-                    )
-                    == 1,
-                    F.get(F.element_at(F.col("tls"), 1), i),
-                ).otherwise(F.lit("*")),
-            ),
-            " ",
-        )
-        return (
-            grouped.withColumn(label, merged_key)
-            .groupBy(label)
-            .agg(
-                F.sum("doc_count").alias("doc_count"),
-                *[fn(pn).alias(pn) for pn, fn in partials],
-            )
-        )
-
-    @staticmethod
-    def _simple_metric_expr(m, value_col, count_expr: Column, count_distinct):
-        """The simple-metric subset (count/cardinality/avg/sum/min/max)
-        shared by the composite and significant_terms paths — ONE place
-        for the op→expression mapping and the cast-to-double rule (ES
-        numerics are doubles; a long sum also hash-diverges from the
-        SQL twins).  ``value_col`` is the (possibly foreground-gated)
-        input column; cardinality keeps the raw type — it may
-        legitimately count strings."""
-        if m.op == "count":
-            return count_expr.alias(m.label)
-        if m.op == "cardinality":
-            return count_distinct(value_col).alias(m.label)
-        if m.op in ("avg", "sum", "min", "max"):
-            fn = {"avg": F.avg, "sum": F.sum, "min": F.min, "max": F.max}[m.op]
-            return fn(value_col.cast("double")).alias(m.label)
-        raise ValueError(
-            f"kibana: this bucket agg supports simple metric aggs only "
-            f"(count/avg/sum/min/max/cardinality), not {m.op!r}"
-        )
-
-    def _evaluate_composite(
-        self,
-        df: DataFrame,
-        b: CompositeBucket,
-        resolve,
-        count_distinct,
-    ) -> DataFrame:
-        """composite: group by the full source-key tuple, page in
-        lexicographic key order from the ``after`` tuple.  The
-        after-predicate pushes BELOW the aggregation (it's a pure
-        function of the grouping keys), so each page scans only the
-        keys past the cursor, and the page cut itself is a TakeOrdered
-        — pagination over a 100 TB relation never materializes more
-        than ``size`` buckets per request.  Docs with a null source
-        key drop (ES ``missing_bucket: false``, the default)."""
-        s = self.state
-        key_cols: list[tuple[str, Column]] = []
-        for name, field, kind, interval in b.sources:
-            col = resolve(field)
-            if kind == "terms":
-                key_cols.append((name, col.cast("string")))
-            elif kind == "histogram":
-                # ES's exact histogram key: floor(v / interval) *
-                # interval (negatives bucket DOWNWARD, like
-                # HistogramBucket)
-                v = col.cast("double")
-                key_cols.append(
-                    (
-                        name,
-                        F.floor(v / F.lit(interval)).cast("double")
-                        * F.lit(interval),
-                    )
-                )
-            else:
-                us = F.unix_micros(col.cast("timestamp"))
-                key_cols.append(
-                    (name, F.timestamp_micros(us - F.pmod(us, int(interval))))
-                )
-        for name, col in key_cols:
-            df = df.withColumn(name, col)
-        for name, _ in key_cols:
-            df = df.filter(F.col(name).isNotNull())
-        if b.after is not None:
-            # after values normalize per source kind: ES returns
-            # date_histogram keys as EPOCH-MILLIS numbers in the
-            # after_key, and a bare number vs a timestamp column is an
-            # AnalysisException (code-review r9); ISO strings cast.
-            def _after_lit(i: int) -> Column:
-                val = b.after[i]
-                if b.sources[i][2] == "date_histogram":
-                    if isinstance(val, (int, float)):
-                        return F.timestamp_millis(F.lit(int(val)))
-                    return F.lit(val).cast("timestamp")
-                if b.sources[i][2] == "histogram":
-                    return F.lit(float(val))
-                return F.lit(val)
-
-            # strictly-after, lexicographic over the source order:
-            # (k1 > a1) OR (k1 = a1 AND k2 > a2) OR ...
-            pred = None
-            for i, (name, _) in enumerate(key_cols):
-                clause = F.col(name) > _after_lit(i)
-                for j in range(i):
-                    pname = key_cols[j][0]
-                    clause = (F.col(pname) == _after_lit(j)) & clause
-                pred = clause if pred is None else pred | clause
-            df = df.filter(pred)
-        names = [n for n, _ in key_cols]
-        aggs_, metric_labels = [], []
-        metrics = list(s.metrics) or [MetricAgg(op="count", field="", label="count")]
-        for m in metrics:
-            if not isinstance(m, MetricAgg):
-                raise ValueError(
-                    "kibana: composite supports simple metric aggs only"
-                )
-            aggs_.append(
-                self._simple_metric_expr(
-                    m,
-                    resolve(m.field) if m.field else F.lit(None),
-                    F.count(F.lit(1)),
-                    count_distinct,
-                )
-            )
-            metric_labels.append(m.label)
-        out = df.groupBy(*[F.col(n) for n in names]).agg(*aggs_)
-        out = out.orderBy(*[F.col(n).asc() for n in names]).limit(b.size)
-        return out.select(*names, *metric_labels)
-
-    def _evaluate_significant(
-        self,
-        df: DataFrame,
-        b: SignificantTermsBucket,
-        resolve,
-        count_distinct,
-        default_search_field,
-    ) -> DataFrame:
-        """significant_terms: ONE scan computes both frequencies (each
-        row carries a foreground flag, so fg doc_count = sum(flag) and
-        bg_count = count(*) come out of the same term-keyed hash agg);
-        set sizes are a 1-row broadcast, scoring is row-local
-        arithmetic over exact integers, and the top-``size`` cut is a
-        TakeOrdered — no second pass over the documents, no
-        term-keyed re-shuffle.  Metric aggs evaluate over the
-        FOREGROUND rows per term (ES nests them under each bucket) via
-        conditional aggregation in the same pass."""
-        s = self.state
-        fg = _query_string_pred(
-            b.foreground, resolve, df, default_search_field
-        )
-        base = df.withColumn(b.label, resolve(b.field).cast("string")).withColumn(
-            "__fg", fg
-        )
-        metric_aggs = []
-        for m in s.metrics:
-            if not isinstance(m, MetricAgg):
-                raise ValueError(
-                    "kibana: significant_terms supports simple metric "
-                    "aggs only (count/avg/sum/min/max/cardinality)"
-                )
-            col = (
-                F.when(F.col("__fg"), resolve(m.field))
-                if m.field
-                else F.lit(None)
-            )
-            metric_aggs.append(
-                self._simple_metric_expr(
-                    m, col, F.sum(F.col("__fg").cast("long")), count_distinct
-                )
-            )
-        per_term = base.groupBy(b.label).agg(
-            F.sum(F.col("__fg").cast("long")).alias("doc_count"),
-            F.count(F.lit(1)).alias("bg_count"),
-            *metric_aggs,
-        )
-        # set sizes roll up from the catalog-sized per-term table (the
-        # term partition is exhaustive), not from a second corpus scan
-        # (code-review r9: an independent base.agg() re-scanned the
-        # documents and re-evaluated the foreground predicate)
-        totals = per_term.agg(
-            F.sum("doc_count").alias("__subset"),
-            F.sum("bg_count").alias("__superset"),
-        )
-        # ES drops docs missing the field from term buckets but still
-        # counts them in the subset/superset set sizes (ADVICE r9) —
-        # totals above roll up ALL per_term rows including the
-        # NULL-key group; only the bucket OUTPUT excludes it.
-        kept = per_term.filter(
-            F.col(b.label).isNotNull()
-            & (F.col("doc_count") >= max(int(b.min_doc_count), 1))
-        ).crossJoin(F.broadcast(totals))
-        fgp = F.col("doc_count").cast("double") / F.col("__subset").cast("double")
-        bgp = F.col("bg_count").cast("double") / F.col("__superset").cast("double")
-        scored = kept.withColumn("score", (fgp - bgp) * (fgp / bgp)).filter(
-            F.col("score") > 0  # ES keeps only positively-significant terms
-        )
-        out = scored.orderBy(
-            F.col("score").desc(), F.col(b.label).asc()
-        ).limit(b.size)
-        return out.select(
-            b.label, "doc_count", "bg_count", "score",
-            *[m.label for m in s.metrics],
-        )
-
-    def _evaluate_significant_text(
-        self, df: DataFrame, b: SignificantTextBucket, resolve,
-        default_search_field,
-    ) -> DataFrame:
-        """significant_text: standard-analyzer tokens (lowercase,
-        non-letter/digit splits), DISTINCT per document — ES's
-        doc-frequency semantics — then the significant_terms JLH over
-        one token-keyed hash aggregation.  Set sizes are DOC counts
-        from a 1-row aggregate over the doc frame (token totals would
-        overcount multi-token docs); the token explode is the same
-        scan-local array algebra as llmdata's shingle passes — the
-        shuffle carries (token, flag) pairs only."""
-        fg = _query_string_pred(
-            b.foreground, resolve, df, default_search_field
-        )
-        base = df.withColumn("__fg", fg)
-        totals = base.agg(
-            F.sum(F.col("__fg").cast("long")).alias("__subset"),
-            F.count(F.lit(1)).alias("__superset"),
-        )
-        tokens = F.array_distinct(
-            F.split(F.lower(resolve(b.field).cast("string")),
-                    r"[^\p{L}\p{N}]+")
-        )
-        per_term = (
-            base.select("__fg", F.explode(tokens).alias(b.label))
-            .filter(F.col(b.label) != "")
-            .groupBy(b.label)
-            .agg(
-                F.sum(F.col("__fg").cast("long")).alias("doc_count"),
-                F.count(F.lit(1)).alias("bg_count"),
-            )
-        )
-        kept = per_term.filter(
-            F.col("doc_count") >= max(int(b.min_doc_count), 1)
-        ).crossJoin(F.broadcast(totals))
-        fgp = (
-            F.col("doc_count").cast("double") / F.col("__subset").cast("double")
-        )
-        bgp = (
-            F.col("bg_count").cast("double") / F.col("__superset").cast("double")
-        )
-        scored = kept.withColumn("score", (fgp - bgp) * (fgp / bgp)).filter(
-            F.col("score") > 0
-        )
-        out = scored.orderBy(
-            F.col("score").desc(), F.col(b.label).asc()
-        ).limit(b.size)
-        return out.select(b.label, "doc_count", "bg_count", "score")
-
     def evaluate(
         self,
         df: DataFrame,
@@ -3509,1624 +5186,118 @@ class KibanaPlan:
         auto_range: "tuple | None" = None,
         vwh_approx_seed: bool = False,
     ) -> DataFrame:
-        resolve = resolve or _default_resolver(df)
         s = self.state
-        # ES's cardinality agg IS a HyperLogLog sketch; the exact form
-        # is the default here so results hash-match the DuckDB oracle,
-        # the approx form is the scale path (one pass, fixed memory,
-        # mergeable partials — tolerance-pinned like a5_approx)
-        if approx_cardinality:
-            count_distinct = lambda c: F.approx_count_distinct(c, rsd=cardinality_rsd)  # noqa: E731
-        else:
-            count_distinct = F.countDistinct
+        ev = _Eval(
+            state=s,
+            resolve=resolve or _default_resolver(df),
+            # ES's cardinality agg IS a HyperLogLog sketch; the exact
+            # form is the default here so results hash-match the DuckDB
+            # oracle, the approx form is the scale path (one pass, fixed
+            # memory, mergeable partials — tolerance-pinned like
+            # a5_approx)
+            count_distinct=(
+                (lambda c: F.approx_count_distinct(c, rsd=cardinality_rsd))
+                if approx_cardinality
+                else F.countDistinct
+            ),
+            tiebreak=tiebreak,
+            default_search_field=default_search_field,
+            auto_interval_buckets=auto_interval_buckets,
+            auto_range=auto_range,
+            vwh_approx_seed=vwh_approx_seed,
+        )
+        resolve = ev.resolve
+        # 1) a sole-bucket kind is the whole evaluation
+        if s.buckets and s.buckets[0].evaluate_alone is not None:
+            return s.buckets[0].evaluate_alone(df, ev)
 
-        comp = [b for b in s.buckets if isinstance(b, CompositeBucket)]
-        if comp:
-            if len(s.buckets) != 1:
-                raise ValueError(
-                    "kibana: composite must be the only bucket agg (ES "
-                    "forbids nesting it)"
-                )
-            if s.pipelines or s.scripts or s.bucket_sort is not None:
-                raise ValueError(
-                    "kibana: composite does not compose with pipeline aggs"
-                )
-            return self._evaluate_composite(df, comp[0], resolve, count_distinct)
-
-        sig = [b for b in s.buckets if isinstance(b, SignificantTermsBucket)]
-        if sig:
-            if len(s.buckets) != 1:
-                raise ValueError(
-                    "kibana: significant_terms must be the only bucket agg"
-                )
-            if s.pipelines or s.scripts or s.bucket_sort is not None:
-                raise ValueError(
-                    "kibana: significant_terms does not compose with "
-                    "pipeline aggs"
-                )
-            return self._evaluate_significant(
-                df, sig[0], resolve, count_distinct, default_search_field
-            )
-
-        sigt = [b for b in s.buckets if isinstance(b, SignificantTextBucket)]
-        if sigt:
-            if len(s.buckets) != 1:
-                raise ValueError(
-                    "kibana: significant_text must be the only bucket agg"
-                )
-            if s.metrics or s.pipelines or s.scripts or s.bucket_sort:
-                raise ValueError(
-                    "kibana: significant_text supports no sub-aggregations "
-                    "(like ES)"
-                )
-            return self._evaluate_significant_text(
-                df, sigt[0], resolve, default_search_field
-            )
-
-        ct = [b for b in s.buckets if isinstance(b, CategorizeTextBucket)]
-        if ct:
-            if len(s.buckets) != 1:
-                raise ValueError(
-                    "kibana: categorize_text must be the only bucket agg"
-                )
-            if s.pipelines or s.scripts or s.bucket_sort:
-                raise ValueError(
-                    "kibana: categorize_text composes with simple "
-                    "metric sub-aggs only (no pipeline/script/"
-                    "bucket_sort aggs)"
-                )
-            b = ct[0]
-            # category key: lowercase standard-analyzer tokens with
-            # every digit-bearing token dropped (ES ML categorization:
-            # numbers never define a category) — scan-local column
-            # algebra, then ONE hash aggregation + TakeOrdered limit
-            toks = F.split(
-                F.lower(resolve(b.field).cast("string")),
-                r"[^\p{L}\p{N}]+",
-            )
-            key = F.array_join(
-                F.filter(
-                    toks,
-                    lambda t: (t != "") & ~t.rlike(r"\p{N}"),
-                ),
-                " ",
-            )
-            keyed = df.withColumn(b.label, key).filter(
-                F.col(b.label) != ""
-            )
-            # metric sub-aggs (round 16, VERDICT r15 item 4): ES nests
-            # avg/min/max/sum/cardinality/count under pattern buckets.
-            # Exact path: finalize in the one hash aggregation.
-            # Merged path: decomposable partials (sum/min/max, avg as
-            # sum+count) aggregate per exact pattern, then combine
-            # through the rep join and finalize after the unanimity
-            # key — still category-scale past the first agg.
-            # Cardinality is NOT decomposable through partial merge:
-            # reject it loudly under threshold < 100.
-            for m in s.metrics:
-                if not isinstance(m, MetricAgg) or m.op not in (
-                    "count", "avg", "sum", "min", "max", "cardinality",
-                ):
-                    raise ValueError(
-                        "kibana: categorize_text supports simple metric "
-                        "sub-aggs only (count/avg/sum/min/max/"
-                        "cardinality)"
-                    )
-            if b.similarity_threshold >= 100:
-                aggs_ = [F.count(F.lit(1)).alias("doc_count")]
-                for m in s.metrics:
-                    aggs_.append(
-                        self._simple_metric_expr(
-                            m,
-                            resolve(m.field) if m.field else F.lit(None),
-                            F.count(F.lit(1)),
-                            count_distinct,
-                        )
-                    )
-                cats = keyed.groupBy(b.label).agg(*aggs_)
-            else:
-                partial_aggs: list[Column] = [
-                    F.count(F.lit(1)).alias("doc_count")
-                ]
-                combiners: list[tuple[str, object]] = []
-                finals: list[Column] = []
-                for i, m in enumerate(s.metrics):
-                    if m.op == "cardinality":
-                        raise ValueError(
-                            "kibana: categorize_text cardinality does "
-                            "not merge under similarity_threshold < 100 "
-                            "(distinct counts are not decomposable "
-                            "partials); use similarity_threshold=100"
-                        )
-                    val = (
-                        resolve(m.field) if m.field else F.lit(None)
-                    ).cast("double")
-                    if m.op == "count":
-                        finals.append(F.col("doc_count").alias(m.label))
-                    elif m.op == "avg":
-                        sn, cn = f"__ctm{i}_s", f"__ctm{i}_c"
-                        partial_aggs += [
-                            F.sum(val).alias(sn),
-                            F.count(val).alias(cn),
-                        ]
-                        combiners += [(sn, F.sum), (cn, F.sum)]
-                        finals.append(
-                            F.when(
-                                F.col(cn) > 0, F.col(sn) / F.col(cn)
-                            ).alias(m.label)
-                        )
-                    else:  # sum / min / max
-                        fn = {"sum": F.sum, "min": F.min, "max": F.max}[
-                            m.op
-                        ]
-                        pn = f"__ctm{i}_{m.op}"
-                        partial_aggs.append(fn(val).alias(pn))
-                        combiners.append((pn, fn))
-                        finals.append(F.col(pn).alias(m.label))
-                cats = keyed.groupBy(b.label).agg(*partial_aggs)
-                cats = self._merge_categories(
-                    cats, b.label, b.similarity_threshold, b.size,
-                    partials=tuple(combiners),
-                )
-                cats = cats.select(b.label, "doc_count", *finals)
-            return cats.orderBy(
-                F.col("doc_count").desc(), F.col(b.label).asc()
-            ).limit(b.size)
-
-        fis = [
-            b for b in s.buckets if isinstance(b, FrequentItemSetsBucket)
-        ]
-        if fis:
-            if len(s.buckets) != 1:
-                raise ValueError(
-                    "kibana: frequent_item_sets must be the only bucket "
-                    "agg"
-                )
-            if s.metrics or s.pipelines or s.scripts or s.bucket_sort:
-                raise ValueError(
-                    "kibana: frequent_item_sets carries only its "
-                    "doc_count/support (sub-aggregations are not "
-                    "modelled)"
-                )
-            b = fis[0]
-            # EXACT apriori, ZERO joins on the doc axis: each document
-            # carries at most one item per scalar field, so ALL its
-            # k<=3 item combinations are generated scan-locally from
-            # the sorted per-doc item array (the adjacency_matrix
-            # slice/transform trick, C(#fields, k) elements — a
-            # constant), then ONE explode + ONE hash aggregation keyed
-            # by the item-set array counts every level at once.
-            # Support compares count/total >= min_support with the
-            # SAME division-then-compare in the SQL twin.  The total
-            # rides the plan as a one-row broadcast cross-join (the
-            # bnl_join_onerow shape) instead of a plan-build
-            # df.count() — one job, not two (VERDICT r14 nit); an
-            # empty relation now yields an empty result (no items →
-            # no sets), ES's own response shape.
-            tot = df.agg(
-                F.count(F.lit(1)).cast("double").alias("__fis_total")
-            )
-            # the field list is STATIC, so the per-doc combinations are
-            # enumerated at COMPILE time (itertools over field subsets,
-            # k <= 3) into shallow guarded expressions — the nested
-            # slice/transform formulation codegen'd multi-second
-            # first-run compiles; this one is C(#fields, <=3) flat
-            # whens.  array_sort keys each set lexicographically.
-            from itertools import combinations as _combs
-
-            if len(b.fields) > 8:
-                raise ValueError(
-                    "kibana: frequent_item_sets supports at most 8 "
-                    "fields (C(8,3) static combinations)"
-                )
-            item = {
-                f_: F.concat(
-                    F.lit(f_ + "="), resolve(f_).cast("string")
-                )
-                for f_ in b.fields
-            }
-            combos = []
-            for k_ in (1, 2, 3):
-                for sub in _combs(b.fields, k_):
-                    cond = resolve(sub[0]).isNotNull()
-                    for f_ in sub[1:]:
-                        cond = cond & resolve(f_).isNotNull()
-                    combos.append(
-                        F.when(
-                            cond,
-                            F.array_sort(
-                                F.array(*[item[f_] for f_ in sub])
-                            ),
-                        )
-                    )
-            ex = df.select(
-                F.explode(
-                    F.array_compact(F.array(*combos))
-                ).alias("__ks")
-            )
-            c = (
-                ex.groupBy("__ks")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .crossJoin(F.broadcast(tot))
-                .filter(
-                    F.col("__n").cast("double") / F.col("__fis_total")
-                    >= F.lit(b.min_support)
-                )
-                .withColumn("__sz", F.size("__ks"))
-            )
-            # the closedness pass references this table five times
-            # (three level slices + two subset explosions) — persist
-            # the AGGREGATED relation (<= sum_k C(#fields,k)/
-            # min_support rows, bounded by the support filter) so the
-            # doc-scale explode+aggregate runs once, not five times
-            c = c.persist()
-            c.count()
-            # closedness (like ES): drop a set when a superset has the
-            # SAME doc count — level k anti-joins the (k-subset, count)
-            # explosion of level k+1; both sides are the already-
-            # aggregated (frequent-set, count) table, never doc-sized
-            k0, k1, k2 = (F.col("__ks").getItem(i) for i in range(3))
-            sub2 = c.filter(F.col("__sz") == 2).select(
-                F.explode(
-                    F.array(F.array(k0), F.array(k1))
-                ).alias("__ks_s"),
-                F.col("__n").alias("__sn"),
-            )
-            sub3 = c.filter(F.col("__sz") == 3).select(
-                F.explode(
-                    F.array(
-                        F.array(k0, k1), F.array(k0, k2),
-                        F.array(k1, k2),
-                    )
-                ).alias("__ks_s"),
-                F.col("__n").alias("__sn"),
-            )
-            closed = None
-            for lvl, subs in ((1, sub2), (2, sub3), (3, None)):
-                cur = c.filter(F.col("__sz") == lvl)
-                if subs is not None:
-                    cur = cur.join(
-                        subs,
-                        (cur["__ks"] == subs["__ks_s"])
-                        & (cur["__n"] == subs["__sn"]),
-                        "left_anti",
-                    )
-                closed = cur if closed is None else closed.unionByName(cur)
-            out = closed.filter(
-                F.col("__sz") >= b.min_set_size
-            ).select(
-                F.array_join("__ks", ", ").alias(b.label),
-                F.col("__sz").alias("set_size"),
-                F.col("__n").alias("doc_count"),
-                (
-                    F.col("__n").cast("double") / F.col("__fis_total")
-                ).alias("support"),
-            )
-            out = out.orderBy(
-                F.col("doc_count").desc(), F.col(b.label).asc()
-            ).limit(b.size)
-            # the size-cut output is <= b.size rows by construction:
-            # materialize it eagerly so the persisted set table can be
-            # UNPERSISTED before returning — a long-lived session
-            # (streaming kibana_panels replays evaluate per
-            # micro-batch) no longer accumulates cached relations
-            # (ADVICE r14)
-            rows_local = out.collect()
-            c.unpersist(blocking=False)
-            return df.sparkSession.createDataFrame(
-                rows_local, schema=out.schema
-            )
-
-        # 1) bucket key columns (+ filters explode)
-        key_names: list[str] = []
-        # doc-frame snapshots taken AT each rare_terms bucket's level:
-        # inner buckets below it may EXPLODE rows (overlapping ranges,
-        # multi-match filters) or DROP them (null-key filters), which
-        # would corrupt the rare doc count if taken afterwards
-        # (code-review 11.5)
-        rare_src: dict[str, DataFrame] = {}
-        # (date_)histogram min_doc_count >= 2 counts the bucket's FULL
-        # own-level doc count in ES — including docs that later vanish
-        # from the flattened relation because an INNER terms/multi_terms
-        # size cut pruned their bucket tuple, an inner rare_terms
-        # long-tail filter removed it, or an inner null-key filter
-        # (terms / multi_terms / histogram) dropped the doc outright.
-        # The cheap path (window-sum of leaf counts at step 3c) is only
-        # exact when nothing below the histogram can drop rows; when
-        # something can, snapshot the doc frame AT the histogram's
-        # level — keys[:i+1] materialized, no inner filter applied yet —
-        # and step 3c counts that frame instead (ADVICE r12).
-        mdc_precut: set[str] = {
+        # 2) bucket key columns, outermost first.  (date_)histogram
+        # min_doc_count >= 2 counts the bucket's FULL own-level doc
+        # count in ES — including docs that later vanish from the
+        # flattened relation because an inner bucket dropped them (size
+        # cut, long-tail filter, null key).  The cheap path (window-sum
+        # of leaf counts at stage 4c) is only exact when nothing below
+        # the histogram can drop rows; when something can, snapshot the
+        # doc frame AT the histogram's level and count that frame
+        # instead (ADVICE r12).
+        mdc_precut = {
             b.label
             for i, b in enumerate(s.buckets)
-            if isinstance(b, (DateHistogramBucket, HistogramBucket))
+            if b.sequence
             and b.min_doc_count >= 2
-            and any(
-                isinstance(
-                    inner,
-                    (TermsBucket, MultiTermsBucket, RareTermsBucket,
-                     HistogramBucket, FilterBucket, MissingBucket),
-                )
-                for inner in s.buckets[i + 1:]
-            )
+            and any(inner.drops_rows for inner in s.buckets[i + 1:])
         }
-        mdc_src: dict[str, DataFrame] = {}
         # filter/missing buckets DROP docs from the flattened relation;
-        # a terms/multi_terms ABOVE them ordered by doc count or a
-        # metric would then rank on the narrowed set, while ES ranks on
-        # the terms bucket's own (pre-sub-agg) doc count — reject the
-        # combination loudly rather than rank differently (round 13;
-        # key-ordered terms are unaffected: the key is drop-invariant)
-        for bi, bb in enumerate(s.buckets):
-            if isinstance(bb, TermsBucket) and bb.order_by == "_term":
-                continue
-            if isinstance(bb, MultiTermsBucket) and bb.order_by == "_term":
-                continue
-            if isinstance(bb, (TermsBucket, MultiTermsBucket)) and any(
-                isinstance(inner, (FilterBucket, MissingBucket))
-                for inner in s.buckets[bi + 1:]
+        # a ranked bucket ABOVE them ordered by doc count or a metric
+        # would then rank on the narrowed set, while ES ranks on the
+        # bucket's own (pre-sub-agg) doc count — reject the combination
+        # loudly rather than rank differently (round 13; key-ordered
+        # terms are unaffected: the key is drop-invariant)
+        for i, b in enumerate(s.buckets):
+            if (
+                b.ranked
+                and b.order_by != "_term"
+                and any(inner.narrows for inner in s.buckets[i + 1:])
             ):
                 raise ValueError(
                     f"kibana: a filter/missing bucket below the "
-                    f"count/metric-ordered terms bucket {bb.label!r} "
+                    f"count/metric-ordered terms bucket {b.label!r} "
                     f"would distort its ranking doc counts — order by "
                     f"_key or move the filter above it"
                 )
-        # auto mode resolves a date_histogram's interval at evaluate
-        # time — the zero-fill grid (min_doc_count 0) must step by the
-        # RESOLVED interval, captured here per bucket label
-        resolved_interval_us: dict[str, int] = {}
+        key_names: list[str] = []
+        mdc_src: dict[str, DataFrame] = {}
         for b in s.buckets:
-            if isinstance(b, RandomSamplerBucket):
-                # transparent deterministic filter, no key column: keep
-                # a doc iff md5(id ':' seed) residue falls below the
-                # probability cut — scan-local, reproducible across
-                # cluster layouts / AQE re-plans / engines (the
-                # llmdata md5_residue machinery; exact SQL twin)
-                from kafka_metrics_exporter_spark.llmdata.similarity import (
-                    md5_residue,
-                )
+            df = b.add_key(df, ev)
+            if b.keyed:
+                key_names.append(b.label)
+                if b.label in mdc_precut:
+                    mdc_src[b.label] = df
 
-                keep_key = F.concat(
-                    resolve(b.id_field).cast("string"),
-                    F.lit(":"), F.lit(str(b.seed)),
-                )
-                df = df.filter(
-                    md5_residue(keep_key) % F.lit(1_000_000)
-                    < F.lit(int(round(b.probability * 1_000_000)))
-                )
-                continue
-            if isinstance(b, SamplerBucket):
-                # transparent deterministic top-k: the shard_size docs
-                # with the lowest md5(id ':' seed) residues (id
-                # tiebreak) — ONE TakeOrderedAndProject (bounded
-                # per-task heaps), never a full sort; ES keeps
-                # per-shard top-scored docs instead (dataclass
-                # docstring documents the divergence)
-                from kafka_metrics_exporter_spark.llmdata.similarity import (
-                    md5_residue,
-                )
-
-                sp_id = resolve(b.id_field).cast("string")
-                sp_res = md5_residue(
-                    F.concat(sp_id, F.lit(":"), F.lit(str(b.seed)))
-                )
-                df = df.orderBy(sp_res.asc(), sp_id.asc()).limit(
-                    b.shard_size
-                )
-                continue
-            if isinstance(b, DiversifiedSamplerBucket):
-                # per-dedup-key cap: keep the first max_docs_per_value
-                # docs by md5(id ':' seed) residue (id tiebreak) —
-                # deterministic where ES is shard-order/score
-                # sensitive.  One hash-partitioned rank window on the
-                # key; per-key state is a counter, never doc bodies.
-                from kafka_metrics_exporter_spark.llmdata.similarity import (
-                    md5_residue,
-                )
-
-                ds_id = resolve(b.id_field).cast("string")
-                ds_res = md5_residue(
-                    F.concat(ds_id, F.lit(":"), F.lit(str(b.seed)))
-                )
-                ds_w = Window.partitionBy(
-                    resolve(b.field).cast("string")
-                ).orderBy(ds_res.asc(), ds_id.asc())
-                df = (
-                    df.withColumn("__ds_rn", F.row_number().over(ds_w))
-                    .filter(F.col("__ds_rn") <= b.max_docs_per_value)
-                    .drop("__ds_rn")
-                )
-                continue
-            if isinstance(b, NestedBucket):
-                # context switch: ONE explode replaces the array
-                # column with a struct per element; later fields
-                # resolve as path.sub via the ordinary struct-path
-                # resolver, doc_count now means NESTED docs (ES's
-                # in-context semantics); empty/null arrays drop
-                df = df.withColumn(b.path, F.explode(resolve(b.path)))
-                continue
-            if isinstance(b, TermsBucket):
-                v = resolve(b.field).cast("string")
-                if b.missing is not None:
-                    # ES `missing`: docs without the field land in this
-                    # bucket value instead of dropping (round 12)
-                    v = F.coalesce(v, F.lit(b.missing))
-                # ES drops docs missing the field from terms buckets
-                # (it never emits a null-keyed bucket) — round 12;
-                # previously a NULL key survived into a bucket row
-                df = df.withColumn(b.label, v).filter(
-                    F.col(b.label).isNotNull()
-                )
-            elif isinstance(b, DateHistogramBucket):
-                # fixed-interval bucketing on epoch micros (date_trunc
-                # can't express "2h"); pmod keeps it exact integer math
-                us = F.unix_micros(resolve(b.field).cast("timestamp"))
-                interval_us = b.interval_us
-                if b.auto_buckets is not None:
-                    # ES auto_date_histogram: the interval comes from
-                    # the POPULATED span via ES's own rounding ladder
-                    # (one 1-row min/max aggregation, the same probe
-                    # shape as Kibana auto mode below)
-                    row = df.agg(
-                        F.min(us).alias("lo"), F.max(us).alias("hi")
-                    ).first()
-                    interval_us = es_auto_date_interval_us(
-                        row["lo"] or 0, row["hi"] or 0, b.auto_buckets
-                    )
-                elif b.auto and auto_interval_buckets is not None:
-                    # real ES auto-interval semantics (the DEFAULT
-                    # since round 7 — the corpus's six date_histograms
-                    # all say interval:"auto", which real Kibana
-                    # resolves from the time picker, never from the
-                    # unused customInterval field): derive the interval
-                    # from the request time range — or, if none was
-                    # passed, from the data span (one 1-row min/max
-                    # agg, what Kibana reads off its time picker).
-                    # auto_interval_buckets=None opts back into the
-                    # legacy customInterval pin.
-                    if auto_range is not None:
-                        lo, hi = (_to_us(x) for x in auto_range)
-                    else:
-                        row = df.agg(
-                            F.min(us).alias("lo"), F.max(us).alias("hi")
-                        ).first()
-                        lo, hi = row["lo"], row["hi"]
-                    span = max(0, (hi or 0) - (lo or 0))
-                    interval_us = auto_interval_us(span, auto_interval_buckets)
-                resolved_interval_us[b.label] = interval_us
-                df = df.withColumn(
-                    b.label,
-                    F.timestamp_micros(us - F.pmod(us, F.lit(interval_us))),
-                )
-            elif isinstance(b, MultiTermsBucket):
-                # key_as_string: the '|'-joined field tuple as ES
-                # renders multi_terms keys — with embedded separators
-                # ESCAPED (backslash doubles, '|' → '\|') so the join stays a
-                # BIJECTION of the tuple: ES keys on the value array,
-                # and a plain join would collapse ('a|b','c') with
-                # ('a','b|c') into one bucket (code-review 11.5).  For
-                # separator-free data the key renders exactly like ES.
-                # Docs missing ANY field drop first (concat_ws would
-                # silently skip the NULL and alias distinct tuples).
-                parts = [
-                    F.regexp_replace(
-                        resolve(f).cast("string"), r"([\\|])", r"\\$1"
-                    )
-                    for f in b.fields
-                ]
-                raw = [resolve(f).cast("string") for f in b.fields]
-                keep = raw[0].isNotNull()
-                for prt in raw[1:]:
-                    keep = keep & prt.isNotNull()
-                df = df.filter(keep).withColumn(
-                    b.label, F.concat_ws("|", *parts)
-                )
-            elif isinstance(b, FilterBucket):
-                df = df.filter(
-                    _query_string_pred(
-                        b.query, resolve, df, default_search_field
-                    )
-                ).withColumn(b.label, F.lit(b.label))
-            elif isinstance(b, MissingBucket):
-                df = df.filter(resolve(b.field).isNull()).withColumn(
-                    b.label, F.lit(b.label)
-                )
-            elif isinstance(b, RareTermsBucket):
-                v = resolve(b.field).cast("string")
-                df = df.filter(v.isNotNull()).withColumn(b.label, v)
-                rare_src[b.label] = df
-            elif isinstance(b, VariableWidthHistogramBucket):
-                if b is not s.buckets[0]:
-                    raise ValueError(
-                        "kibana: variable_width_histogram must be the "
-                        "outermost bucket (ES rejects it under other "
-                        "bucketing aggs)"
-                    )
-                v = resolve(b.field).cast("double")
-                df = df.filter(v.isNotNull())
-                k = b.buckets
-                probes = [(i + 0.5) / k for i in range(k)]
-                # exact quantile seeding is the oracle-parity
-                # default; vwh_approx_seed=True switches to
-                # percentile_approx — the 100 TB path (the later
-                # rounds are identical either way: scan-local
-                # assignment + k-row aggregates)
-                seed_fn = (
-                    (lambda c_, ps: F.percentile_approx(
-                        c_, ps, F.lit(10000)))
-                    if vwh_approx_seed
-                    else F.percentile
-                )
-                # the Lloyd rounds re-read ONLY this one column: train
-                # on a persisted 1-column projection so the doc scan
-                # (and any upstream filters/joins) runs once, not once
-                # per round + once for seeding (VERDICT r13 item 2)
-                proj = df.select(v.alias("__v")).persist()
-                row = proj.agg(
-                    seed_fn(
-                        F.col("__v"),
-                        F.array(*[F.lit(p_) for p_ in probes]),
-                    ).alias("c")
-                ).first()
-                if row["c"] is None:
-                    proj.unpersist(blocking=False)
-                    raise ValueError(
-                        "kibana: variable_width_histogram over an "
-                        "empty relation"
-                    )
-                # centroids round to 6 decimals after seeding and
-                # after every update: the sums are exact (scaled
-                # integral inputs aside, avg = exact-sum / count), so
-                # the rounding pins the one interpolated step and
-                # keeps every assignment bit-replayable in SQL
-                cents = [round(float(c), 6) for c in row["c"]]
-
-                def _assign(cs):
-                    dists = F.array(*[F.abs(v - F.lit(c)) for c in cs])
-                    # argmin, FIRST index on ties (list_position twin)
-                    return F.array_position(dists, F.array_min(dists))
-
-                # each Lloyd round is ONE executor-side partial-sum
-                # pass (the train_pq_codebooks pattern,
-                # llmdata/similarity.py): every partition emits <= k
-                # (cluster, sum, count) rows — no shuffle, no
-                # groupBy — and the driver merges the partials in
-                # SORTED order so the fold is bit-deterministic.
-                # numpy argmin(|v - c|) (first index on ties) is the
-                # exact IEEE twin of the SQL _assign above, so the
-                # trained centroids stay SQL-replayable.
-                import numpy as np
-                import pandas as pd
-
-                def _round_partials(cs_list):
-                    cs = np.asarray(cs_list, dtype="float64")
-
-                    def go(batches):
-                        for pdf in batches:
-                            if len(pdf) == 0:
-                                continue
-                            vv = pdf["__v"].to_numpy(dtype="float64")
-                            cl = np.abs(
-                                vv[:, None] - cs[None, :]
-                            ).argmin(axis=1)
-                            cls, sums, ns = [], [], []
-                            for c in np.unique(cl):
-                                m = cl == c
-                                cls.append(int(c))
-                                sums.append(float(vv[m].sum()))
-                                ns.append(int(m.sum()))
-                            yield pd.DataFrame(
-                                {"cl": cls, "s": sums, "n": ns}
-                            )
-
-                    return proj.mapInPandas(
-                        go, "cl int, s double, n long"
-                    ).collect()
-
-                for _ in range(3):
-                    acc: dict[int, tuple[float, int]] = {}
-                    for r in sorted(
-                        _round_partials(cents),
-                        key=lambda r: (r["cl"], r["n"], r["s"]),
-                    ):
-                        s0, n0 = acc.get(r["cl"], (0.0, 0))
-                        acc[r["cl"]] = (s0 + r["s"], n0 + r["n"])
-                    # an emptied cluster keeps its previous centroid
-                    cents = [
-                        round(acc[i][0] / acc[i][1], 6)
-                        if i in acc else c
-                        for i, c in enumerate(cents)
-                    ]
-                proj.unpersist(blocking=False)
-                df = df.withColumn(
-                    b.label,
-                    F.element_at(
-                        F.array(*[F.lit(c) for c in cents]),
-                        _assign(cents).cast("int"),
-                    ),
-                )
-            elif isinstance(b, AdjacencyMatrixBucket):
-                # singleton buckets for every matching filter + pair
-                # buckets 'a&b' for every matching pair — b.filters is
-                # pre-sorted lexicographically at parse time (ES's
-                # fixed filter order, ADVICE r13), so i < j here IS
-                # name order.  Scan-local array algebra, then one
-                # explode; a doc matching k filters contributes
-                # k + k(k-1)/2 rows, k <= 100 by the parse-time cap
-                matches = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(
-                                _query_string_pred(
-                                    q, resolve, df, default_search_field
-                                ),
-                                F.lit(name),
-                            )
-                            for name, q in b.filters
-                        ]
-                    )
-                )
-                pair_keys = F.flatten(
-                    F.transform(
-                        matches,
-                        lambda x, i: F.transform(
-                            F.slice(
-                                matches, i + F.lit(2),
-                                F.greatest(
-                                    F.size(matches) - i - 1, F.lit(0)
-                                ),
-                            ),
-                            lambda y: F.concat_ws(b.separator, x, y),
-                        ),
-                    )
-                )
-                df = df.withColumn(
-                    b.label, F.explode(F.concat(matches, pair_keys))
-                )
-            elif isinstance(b, FiltersBucket):
-                # a doc lands in EVERY filter bucket it matches; with
-                # other_bucket set, a doc matching NOTHING lands in the
-                # other bucket instead of dropping (ES other_bucket)
-                matches = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(
-                                _query_string_pred(q, resolve, df, default_search_field),
-                                F.lit(lbl),
-                            )
-                            for lbl, q in b.filters
-                        ]
-                    )
-                )
-                if b.other_key is not None:
-                    # bind the match array ONCE (optimization r16): the
-                    # when/otherwise referenced it twice, so every
-                    # filter predicate (fuzzy folds, proximity scans)
-                    # evaluated twice per row
-                    matches = _bind1(
-                        matches,
-                        lambda m: F.when(
-                            F.size(m) == 0, F.array(F.lit(b.other_key))
-                        ).otherwise(m),
-                    )
-                df = df.withColumn(b.label, F.explode(matches))
-            elif isinstance(b, HistogramBucket):
-                # ES: key = floor(value / interval) * interval (floor,
-                # not truncation — negatives bucket downward); docs
-                # missing the field drop, like the range/date_range
-                # buckets (code-review r9: a NULL key used to survive
-                # into a bucket row ES never emits)
-                v = resolve(b.field).cast("double")
-                df = df.filter(v.isNotNull()).withColumn(
-                    b.label,
-                    F.floor(v / F.lit(b.interval)).cast("double")
-                    * F.lit(b.interval),
-                )
-            elif isinstance(b, RangeBucket):
-                # half-open [from, to); a doc lands in EVERY matching
-                # range (ES allows overlaps) — same explode shape as
-                # FiltersBucket
-                v = resolve(b.field).cast("double")
-
-                def _in_range(lo, hi):
-                    pred = F.lit(True)
-                    if lo is not None:
-                        pred = pred & (v >= F.lit(lo))
-                    if hi is not None:
-                        pred = pred & (v < F.lit(hi))
-                    return pred
-
-                matches = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(_in_range(lo, hi), F.lit(key))
-                            for key, lo, hi in b.ranges
-                        ]
-                    )
-                )
-                df = df.withColumn(b.label, F.explode(matches))
-            elif isinstance(b, IpRangeBucket):
-                # IP string -> two biased 64-bit words ONCE per row
-                # (the whole parse bound as a lambda leaf — project
-                # collapsing would otherwise re-run it once per range
-                # predicate), then the RangeBucket overlap-explode
-                # comparing (hi, lo) lexicographically against the
-                # parse-time 128-bit endpoints; malformed addresses
-                # stay null and match no range
-                ip_s = resolve(b.field).cast("string")
-
-                # factory binds the captured ranges: pyspark derives a
-                # HOF lambda's arity from the Python signature, so
-                # default-arg closures would mis-arity the callback
-                def _make_ip_matches(_ranges):
-                    def _ip_matches(w):
-                        hi_w, lo_w = w["hi"], w["lo"]
-
-                        def _ge(v):  # (hi_w, lo_w) >= v, unsigned-128
-                            h, l_ = _ip128_bounds(v)
-                            return (hi_w > F.lit(h)) | (
-                                (hi_w == F.lit(h)) & (lo_w >= F.lit(l_))
-                            )
-
-                        def _lt(v):
-                            h, l_ = _ip128_bounds(v)
-                            return (hi_w < F.lit(h)) | (
-                                (hi_w == F.lit(h)) & (lo_w < F.lit(l_))
-                            )
-
-                        def _in_iprange(lo, hi):
-                            pred = hi_w.isNotNull()
-                            if lo is not None:
-                                pred = pred & _ge(lo)
-                            if hi is not None:
-                                pred = pred & _lt(hi)
-                            return pred
-
-                        return F.array_compact(
-                            F.array(
-                                *[
-                                    F.when(_in_iprange(lo, hi), F.lit(key))
-                                    for key, lo, hi in _ranges
-                                ]
-                            )
-                        )
-
-                    return _ip_matches
-
-                ip_matches = _bind1(
-                    _ip128_struct(ip_s), _make_ip_matches(b.ranges)
-                )
-                df = df.withColumn(b.label, F.explode(ip_matches))
-            elif isinstance(b, GeoGridBucket):
-                # grid key = pure Column math over the geo_point
-                # struct, unrolled at compile time; invalid/missing
-                # coordinates drop (ES rejects them at index) — the
-                # size/doc_count rank rides the terms loop below
-                g_lat, g_lon = _geo_lat_lon(resolve(b.field))
-                g_keep = _geo_valid(g_lat, g_lon)
-                if b.bounds is not None:
-                    # viewport restriction BEFORE keying — scan-local,
-                    # pushes into the source like any filter
-                    t_, l_, b_2, r_ = b.bounds
-                    g_keep = (
-                        g_keep
-                        & (g_lat <= F.lit(t_)) & (g_lat >= F.lit(b_2))
-                        & (g_lon >= F.lit(l_)) & (g_lon <= F.lit(r_))
-                    )
-                df = df.filter(g_keep).withColumn(
-                    b.label,
-                    geohash_column(g_lat, g_lon, b.precision)
-                    if b.kind == "geohash"
-                    else geotile_column(g_lat, g_lon, b.precision),
-                )
-            elif isinstance(b, GeoDistanceBucket):
-                # haversine meters to the origin evaluated ONCE per
-                # doc, then the RangeBucket overlap-explode
-                g_lat, g_lon = _geo_lat_lon(resolve(b.field))
-                dist = F.when(
-                    _geo_valid(g_lat, g_lon),
-                    haversine_meters(g_lat, g_lon, *b.origin),
-                )
-
-                def _make_geo_matches(_ranges):
-                    def _geo_matches(dv):
-                        def rng(lo, hi):
-                            pred = dv.isNotNull()
-                            if lo is not None:
-                                pred = pred & (dv >= F.lit(lo))
-                            if hi is not None:
-                                pred = pred & (dv < F.lit(hi))
-                            return pred
-
-                        return F.array_compact(
-                            F.array(
-                                *[
-                                    F.when(rng(lo, hi), F.lit(key))
-                                    for key, lo, hi in _ranges
-                                ]
-                            )
-                        )
-
-                    return _geo_matches
-
-                df = df.withColumn(
-                    b.label,
-                    F.explode(_bind1(dist, _make_geo_matches(b.ranges))),
-                )
-            elif isinstance(b, DateRangeBucket):
-                # half-open [from, to) over timestamps, overlap-explode
-                # like RangeBucket; endpoints parse once as literals
-                tv = resolve(b.field).cast("timestamp")
-
-                def _in_drange(lo, hi):
-                    pred = tv.isNotNull()
-                    if lo is not None:
-                        pred = pred & (tv >= F.lit(lo).cast("timestamp"))
-                    if hi is not None:
-                        pred = pred & (tv < F.lit(hi).cast("timestamp"))
-                    return pred
-
-                dmatches = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(_in_drange(lo, hi), F.lit(key))
-                            for key, lo, hi in b.ranges
-                        ]
-                    )
-                )
-                df = df.withColumn(b.label, F.explode(dmatches))
-            key_names.append(b.label)
-            if b.label in mdc_precut:
-                mdc_src[b.label] = df
-
-        # 2) one hash aggregation over the full bucket-key tuple.
-        # A visualization with bucket aggs only carries Kibana's
-        # implicit doc-count metric ("Count" in the UI).
+        # 3) one hash aggregation over the full bucket-key tuple.  A
+        # visualization with bucket aggs only carries Kibana's implicit
+        # doc-count metric ("Count" in the UI).
         metrics = s.metrics or (MetricAgg(op="count", field="", label="count"),)
-        agg_exprs = []
-        multi_hits: list[TopHitsAgg] = []
-        multi_tms: list[TopMetricsAgg] = []
-        mad_aggs: list[MadAgg] = []
-        ss_aggs: list[StringStatsAgg] = []
-        for m in metrics:
-            if isinstance(m, PercentilesAgg):
-                # one exact interpolated percentile sketch per agg; the
-                # array is unpacked into per-percent columns at the end
-                agg_exprs.append(
-                    F.percentile(
-                        resolve(m.field).cast("double"),
-                        F.array(*[F.lit(p / 100.0) for p in m.percents]),
-                    ).alias(m.label)
-                )
-                continue
-            if isinstance(m, PercentileRanksAgg):
-                # exact empirical CDF per probe value; counts ignore
-                # missing-field docs like every ES metric.  The
-                # denominator guard matters under Spark 4 ANSI: a
-                # bucket whose docs all miss the field has count 0 and
-                # an unguarded division THROWS (code-review r10) — ES
-                # emits null there
-                v = resolve(m.field).cast("double")
-                agg_exprs.extend(
-                    F.when(
-                        F.count(v) > 0,
-                        F.count(F.when(v <= F.lit(val), F.lit(1)))
-                        .cast("double")
-                        / F.count(v)
-                        * F.lit(100.0),
-                    ).alias(n)
-                    for val, n in zip(m.values, m.column_names())
-                )
-                continue
-            if isinstance(m, StatsAgg):
-                v = resolve(m.field).cast("double")
-                names = m.column_names()
-                exprs = [
-                    F.count(v),
-                    F.min(v),
-                    F.max(v),
-                    F.avg(v),
-                    F.sum(v),
-                ]
-                if m.extended:
-                    exprs.append(F.sum(v * v))
-                agg_exprs.extend(
-                    e.alias(n) for e, n in zip(exprs, names)
-                )
-                continue
-            if isinstance(m, BoxplotAgg):
-                v = resolve(m.field).cast("double")
-                names = m.column_names()
-                agg_exprs.append(F.min(v).alias(names[0]))
-                agg_exprs.append(
-                    F.percentile(
-                        v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-                    ).alias(f"__bp_{m.label}")
-                )
-                agg_exprs.append(F.max(v).alias(names[4]))
-                continue
-            if isinstance(m, ReverseNestedAgg):
-                # parent doc_count: exact distinct of the explicit
-                # root key (count_distinct honors approx_cardinality
-                # mode like every cardinality in this compiler)
-                agg_exprs.append(
-                    count_distinct(resolve(m.id_field)).alias(m.label)
-                )
-                continue
-            if isinstance(m, GeoBoundsAgg):
-                gb_lat, gb_lon = _geo_lat_lon(resolve(m.field))
-                gb_ok = _geo_valid(gb_lat, gb_lon)
-                gb_lat = F.when(gb_ok, gb_lat)
-                gb_lon = F.when(gb_ok, gb_lon)
-                names = m.column_names()
-                agg_exprs += [
-                    F.max(gb_lat).alias(names[0]),   # top
-                    F.min(gb_lon).alias(names[1]),   # left
-                    F.min(gb_lat).alias(names[2]),   # bottom
-                    F.max(gb_lon).alias(names[3]),   # right
-                ]
-                continue
-            if isinstance(m, GeoCentroidAgg):
-                gc_lat, gc_lon = _geo_lat_lon(resolve(m.field))
-                gc_ok = _geo_valid(gc_lat, gc_lon)
-                gc_lat = F.when(gc_ok, gc_lat)
-                gc_lon = F.when(gc_ok, gc_lon)
-                names = m.column_names()
-                agg_exprs += [
-                    F.avg(gc_lat).alias(names[0]),
-                    F.avg(gc_lon).alias(names[1]),
-                    F.count(gc_lat).alias(names[2]),
-                ]
-                continue
-            if isinstance(m, MadAgg):
-                # needs the per-bucket median FIRST — two grouped
-                # passes joined back after the main hash agg (below)
-                mad_aggs.append(m)
-                continue
-            if isinstance(m, WeightedAvgAgg):
-                v = resolve(m.value_field).cast("double")
-                w = resolve(m.weight_field).cast("double")
-                both = v.isNotNull() & w.isNotNull()
-                wsum = F.sum(F.when(both, w))
-                agg_exprs.append(
-                    # ANSI guard: an all-missing bucket has weight-sum
-                    # null/0 — ES emits null there, never a div error
-                    F.when(
-                        wsum > 0,
-                        F.sum(F.when(both, v * w)) / wsum,
-                    ).alias(m.label)
-                )
-                continue
-            if isinstance(m, StringStatsAgg):
-                v = resolve(m.field).cast("string")
-                ln = F.length(v)
-                names = m.column_names()
-                agg_exprs += [
-                    F.count(v).alias(names[0]),
-                    F.min(ln).alias(names[1]),
-                    F.max(ln).alias(names[2]),
-                    F.avg(ln.cast("double")).alias(names[3]),
-                ]
-                ss_aggs.append(m)  # entropy joined back below
-                continue
-            if isinstance(m, MatrixStatsAgg):
-                # power sums Σx..Σx⁴/Σxy ride the main hash agg in
-                # DECIMAL(38,6) (partition-order-independent totals —
-                # survives AQE/retry re-summation); a doc missing ANY
-                # field is excluded from the whole matrix (ES default)
-                mx_cols = [resolve(f_).cast("double") for f_ in m.fields]
-                mx_ok = mx_cols[0].isNotNull()
-                for c_ in mx_cols[1:]:
-                    mx_ok = mx_ok & c_.isNotNull()
-
-                def _dsum(e, _ok=mx_ok):
-                    return F.sum(F.when(_ok, e).cast("decimal(38,6)"))
-
-                agg_exprs.append(
-                    F.count(F.when(mx_ok, F.lit(1))).alias(
-                        f"{m.label}_doc_count"
-                    )
-                )
-                for f_, c_ in zip(m.fields, mx_cols):
-                    sl = _slug(f_)
-                    agg_exprs += [
-                        _dsum(c_).alias(f"__mx_{m.label}_{sl}_s1"),
-                        _dsum(c_ * c_).alias(f"__mx_{m.label}_{sl}_s2"),
-                        _dsum(c_ * c_ * c_).alias(f"__mx_{m.label}_{sl}_s3"),
-                        _dsum(c_ * c_ * c_ * c_).alias(
-                            f"__mx_{m.label}_{sl}_s4"
-                        ),
-                    ]
-                for i_ in range(len(m.fields)):
-                    for j_ in range(i_ + 1, len(m.fields)):
-                        si = _slug(m.fields[i_])
-                        sj = _slug(m.fields[j_])
-                        agg_exprs.append(
-                            _dsum(mx_cols[i_] * mx_cols[j_]).alias(
-                                f"__mx_{m.label}_{si}_{sj}_p"
-                            )
-                        )
-                continue
-            if isinstance(m, TTestAgg):
-                # per-side (or per-pair) DECIMAL(38,6) power sums ride
-                # the main hash agg (the matrix_stats determinism
-                # argument); population filters are scan-local
-                # query_string predicates
-                tva = resolve(m.a_field).cast("double")
-                tvb = resolve(m.b_field).cast("double")
-                if m.test_type == "paired":
-                    tok = tva.isNotNull() & tvb.isNotNull()
-                    td = tva - tvb
-                    agg_exprs += [
-                        F.count(F.when(tok, F.lit(1))).alias(
-                            f"__tt_{m.label}_n"),
-                        F.sum(F.when(tok, td).cast("decimal(38,6)"))
-                        .alias(f"__tt_{m.label}_s1"),
-                        F.sum(F.when(tok, td * td).cast("decimal(38,6)"))
-                        .alias(f"__tt_{m.label}_s2"),
-                    ]
-                else:
-                    pa = (
-                        _query_string_pred(
-                            m.a_filter, resolve, df, default_search_field
-                        ) if m.a_filter else F.lit(True)
-                    ) & tva.isNotNull()
-                    pb = (
-                        _query_string_pred(
-                            m.b_filter, resolve, df, default_search_field
-                        ) if m.b_filter else F.lit(True)
-                    ) & tvb.isNotNull()
-                    for side, pred, val in (
-                        ("a", pa, tva), ("b", pb, tvb),
-                    ):
-                        agg_exprs += [
-                            F.count(F.when(pred, F.lit(1))).alias(
-                                f"__tt_{m.label}_n{side}"),
-                            F.sum(F.when(pred, val).cast("decimal(38,6)"))
-                            .alias(f"__tt_{m.label}_s1{side}"),
-                            F.sum(
-                                F.when(pred, val * val)
-                                .cast("decimal(38,6)")
-                            ).alias(f"__tt_{m.label}_s2{side}"),
-                        ]
-                continue
-            if isinstance(m, RateAgg):
-                # rate = bucket value · unit / interval, against the
-                # INNERMOST (auto_)date_histogram's resolved interval
-                # (ES: rate must sit under a date_histogram)
-                dhs = [
-                    bb for bb in s.buckets
-                    if isinstance(bb, DateHistogramBucket)
-                ]
-                if not dhs:
-                    raise ValueError(
-                        "kibana: rate agg requires an enclosing "
-                        "(auto_)date_histogram bucket"
-                    )
-                iv_us = resolved_interval_us[dhs[-1].label]
-                factor = (m.unit_us / iv_us) if m.unit_us else 1.0
-                if not m.field:
-                    base = F.count(F.lit(1)).cast("double")
-                elif m.mode == "value_count":
-                    base = F.count(resolve(m.field)).cast("double")
-                else:
-                    # sum-family: an all-null bucket rates 0, like ES
-                    base = F.coalesce(
-                        F.sum(resolve(m.field).cast("double")), F.lit(0.0)
-                    )
-                agg_exprs.append((base * F.lit(factor)).alias(m.label))
-                continue
-            if isinstance(m, TopMetricsAgg):
-                if m.size > 1:
-                    # ranked + joined after the main hash agg (below,
-                    # sharing the top_hits window shape)
-                    multi_tms.append(m)
-                    continue
-                sort_col = resolve(m.sort_field)
-                # ES skips documents whose sort field is missing; an
-                # unguarded struct is non-null even with a null field,
-                # and Spark's nulls-first-on-asc would make min_by pick
-                # exactly those docs (ADVICE r13).  A NULL ordering
-                # value makes max_by/min_by skip the row.
-                order = F.when(
-                    sort_col.isNotNull(),
-                    F.struct(
-                        sort_col.alias("s"),
-                        *([resolve(tiebreak).alias("t")]
-                          if tiebreak else []),
-                    ),
-                )
-                pick = F.max_by if m.sort_order == "desc" else F.min_by
-                agg_exprs.extend(
-                    pick(resolve(f_), order).alias(n_)
-                    for f_, n_ in zip(m.fields, m.column_names())
-                )
-                continue
-            if isinstance(m, MetricAgg):
-                if m.op == "count":
-                    agg_exprs.append(F.count(F.lit(1)).alias(m.label))
-                    continue
-                if m.op == "value_count":
-                    # ES value_count: non-null field VALUES, not docs
-                    agg_exprs.append(
-                        F.count(resolve(m.field)).alias(m.label)
-                    )
-                    continue
-                val = resolve(m.field)
-                fn = {
-                    "avg": lambda c: F.avg(c.cast("double")),
-                    "min": lambda c: F.min(c.cast("double")),
-                    "max": lambda c: F.max(c.cast("double")),
-                    "sum": lambda c: F.sum(c.cast("double")),
-                    "cardinality": count_distinct,
-                }[m.op]
-                agg_exprs.append(fn(val).alias(m.label))
-            else:  # TopHitsAgg
-                if m.size > 1:
-                    # ranked + joined after the main hash agg (below)
-                    multi_hits.append(m)
-                    continue
-                sort_col = resolve(m.sort_field)
-                order = F.struct(
-                    sort_col.alias("s"),
-                    *( [resolve(tiebreak).alias("t")] if tiebreak else [] ),
-                )
-                pick = F.max_by if m.sort_order == "desc" else F.min_by
-                val = resolve(m.field)
-                if m.aggregate in ("average", "sum", "max"):
-                    val = val.cast("double")
-                agg_exprs.append(pick(val, order).alias(m.label))
-        # an INNERMOST rare_terms bucket's doc count rides the main
-        # aggregation as a hidden column — its groups ARE the rare
-        # level, so no second scan/shuffle/join is needed (step 3b
-        # filters and drops it; code-review 11.5)
-        if s.buckets and isinstance(s.buckets[-1], RareTermsBucket):
-            agg_exprs.append(
-                F.count(F.lit(1)).alias(f"__rt_{s.buckets[-1].label}")
-            )
-        # (date_)histogram min_doc_count != 1 (round 12): each needs
-        # its own-level doc count — a hidden leaf count rolled up by a
-        # keys[:i+1] window at step 3c.  Validated here, loudly:
-        # an explode-type bucket nested BELOW the histogram would
-        # inflate the level count (a doc lands in several range/filter
-        # buckets), and a zero-filled EMPTY bucket above other buckets
-        # has no child rows — the flattened relation cannot represent
-        # it, so min_doc_count=0 requires the histogram innermost.
-        mdc_buckets = [
-            (i, b)
-            for i, b in enumerate(s.buckets)
-            if isinstance(b, (DateHistogramBucket, HistogramBucket))
-            and b.min_doc_count != 1
+        agg_exprs = [e for m in metrics for e in m.aggs(df, ev)]
+        if s.buckets:
+            agg_exprs += s.buckets[-1].leaf_aggs()
+        agg_exprs += [
+            e for i, b in enumerate(s.buckets) for e in b.level_aggs(i, s.buckets)
         ]
-        for i, b in mdc_buckets:
-            exploding = [
-                inner.label
-                for inner in s.buckets[i + 1:]
-                if isinstance(
-                    inner,
-                    (FiltersBucket, RangeBucket, DateRangeBucket,
-                     IpRangeBucket, AdjacencyMatrixBucket),
-                )
-            ]
-            if exploding:
-                raise ValueError(
-                    f"kibana: min_doc_count on {b.label!r} cannot sit above "
-                    f"row-exploding buckets {exploding} — the level doc "
-                    f"count would be inflated"
-                )
-            if b.min_doc_count == 0 and i != len(s.buckets) - 1:
-                raise ValueError(
-                    f"kibana: min_doc_count=0 needs {b.label!r} to be the "
-                    f"innermost bucket — an empty bucket above other "
-                    f"buckets has no child rows in the flattened result"
-                )
-            agg_exprs.append(F.count(F.lit(1)).alias(f"__mdc_{b.label}"))
         if not agg_exprs:
-            # every metric deferred to the multi-hit join below — the
-            # bucket frame still needs one aggregate to exist
+            # every metric deferred to a join below — the bucket frame
+            # still needs one aggregate to exist
             agg_exprs.append(F.count(F.lit(1)).alias("__th_docs"))
         out = df.groupBy(*[F.col(k) for k in key_names]).agg(*agg_exprs)
-        # top_hits with size > 1 (round 12): ES's top_hits returns the
-        # top-N documents by sort order and Kibana's Top Hit metric
-        # folds them with the chosen aggregate.  The N survivors per
-        # bucket come from the deterministic-tiebreak rank
-        # (row_number() <= size) — nested under buckets the window
-        # partitions by the full bucket-key tuple, so the rank
-        # distributes; a bucketless panel takes orderBy().limit(size)
-        # (TakeOrderedAndProject) instead of an unpartitioned window —
-        # the same global-sort-free argument as the top-level terms
-        # cut.  The fold then joins back on the bucket keys (broadcast-
-        # sized per bucket: <= size rows contribute).
-        for m in multi_hits:
-            sort_col = resolve(m.sort_field)
-            # the tiebreak inherits the sort direction — exactly the
-            # size-1 path's max_by/min_by struct comparison, so the
-            # first of N hits is always the size-1 answer
-            d = (lambda c: c.desc()) if m.sort_order == "desc" else (
-                lambda c: c.asc()
-            )
-            order_cols = [
-                d(sort_col),
-                *([d(resolve(tiebreak))] if tiebreak else []),
-            ]
-            if key_names:
-                thw = Window.partitionBy(
-                    *[F.col(k) for k in key_names]
-                ).orderBy(*order_cols)
-                ranked = df.withColumn("__rn", F.row_number().over(thw))
-                ranked = ranked.filter(F.col("__rn") <= m.size)
-            else:
-                ranked = (
-                    df.orderBy(*order_cols)
-                    .limit(m.size)
-                    # <= size rows by construction, so the rank that
-                    # orders the concat fold is bounded (the
-                    # pipe_dsir_resample argument)
-                    .withColumn(
-                        "__rn", F.row_number().over(Window.orderBy(*order_cols))
-                    )
-                )
-            val = resolve(m.field)
-            if m.aggregate == "concat":
-                # sort-order-stable ", "-join, exactly Kibana's render
-                fold = F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("__rn").alias("r"),
-                                    val.cast("string").alias("v"),
-                                )
-                            )
-                        ),
-                        lambda h: h["v"],
-                    ),
-                    ", ",
-                )
-            else:
-                fold = {
-                    "average": F.avg, "sum": F.sum,
-                    "max": F.max, "min": F.min,
-                }[m.aggregate](val.cast("double"))
-            per = ranked.groupBy(*[F.col(k) for k in key_names]).agg(
-                fold.alias(m.label)
-            )
-            if key_names:
-                out = out.join(per, key_names, "left")
-            else:
-                out = out.crossJoin(F.broadcast(per))
-        # top_metrics with size > 1 (round 13): the same
-        # deterministic-tiebreak rank window as top_hits, but instead
-        # of folding, each metric field becomes a sort-ordered ARRAY
-        # of the top-N documents' values — exactly the `top` list ES
-        # returns.  Join-back is bucket-keyed; <= size rows contribute
-        # per bucket.
-        for m in multi_tms:
-            sort_col = resolve(m.sort_field)
-            # ES skips docs missing the sort field (ADVICE r13 — see
-            # the size-1 max_by/min_by guard above); filter before the
-            # rank window so nulls-first-on-asc can't rank them
-            tm_df = df.filter(sort_col.isNotNull())
-            d = (lambda c: c.desc()) if m.sort_order == "desc" else (
-                lambda c: c.asc()
-            )
-            order_cols = [
-                d(sort_col),
-                *([d(resolve(tiebreak))] if tiebreak else []),
-            ]
-            if key_names:
-                tmw = Window.partitionBy(
-                    *[F.col(k) for k in key_names]
-                ).orderBy(*order_cols)
-                ranked = tm_df.withColumn("__rn", F.row_number().over(tmw))
-                ranked = ranked.filter(F.col("__rn") <= m.size)
-            else:
-                ranked = (
-                    tm_df.orderBy(*order_cols)
-                    .limit(m.size)
-                    # <= size rows by construction: bounded window
-                    .withColumn(
-                        "__rn",
-                        F.row_number().over(Window.orderBy(*order_cols)),
-                    )
-                )
-            folds = [
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("__rn").alias("r"),
-                                resolve(f_).alias("v"),
-                            )
-                        )
-                    ),
-                    lambda h: h["v"],
-                ).alias(n_)
-                for f_, n_ in zip(m.fields, m.column_names())
-            ]
-            per = ranked.groupBy(*[F.col(k) for k in key_names]).agg(*folds)
-            if key_names:
-                out = out.join(per, key_names, "left")
-            else:
-                out = out.crossJoin(F.broadcast(per))
-        # string_stats entropy (round 13): one char-keyed aggregation
-        # over the doc frame per agg — H = log2(T) - (1/T)*sum(c*log2 c)
-        # in a single pass — joined back bucket-keyed (one row per
-        # bucket); a bucketless panel folds to one row broadcast.
-        for m in ss_aggs:
-            v = resolve(m.field).cast("string")
-            ent_name = m.column_names()[4]
-            chars = df.filter(v.isNotNull()).select(
-                *[F.col(k) for k in key_names],
-                F.explode(F.split(v, "(?!$)")).alias("__ch"),
-            ).filter(F.col("__ch") != "")
-            cc = chars.groupBy(
-                *[F.col(k) for k in key_names], F.col("__ch")
-            ).agg(F.count(F.lit(1)).alias("__c"))
-            t = F.sum("__c").cast("double")
-            ent_expr = (
-                F.log2(t) - F.sum(F.col("__c") * F.log2("__c")) / t
-            ).alias(ent_name)
-            if key_names:
-                ent = cc.groupBy(*[F.col(k) for k in key_names]).agg(ent_expr)
-                out = out.join(ent, key_names, "left")
-            else:
-                out = out.crossJoin(F.broadcast(cc.agg(ent_expr)))
-
-        # median_absolute_deviation (round 12): pass 1 computes each
-        # bucket's median, pass 2 the median of absolute deviations —
-        # both grouped on the SAME keys (the second groupBy reuses the
-        # first shuffle's partitioning; the median join-back is
-        # bucket-table-sized) — then a bucket-keyed join onto the main
-        # frame.  A bucketless panel folds to one row via global aggs
-        # + one-row broadcasts.
-        for m in mad_aggs:
-            v = resolve(m.field).cast("double")
-            if key_names:
-                med = df.groupBy(*[F.col(k) for k in key_names]).agg(
-                    F.percentile(v, F.lit(0.5)).alias("__med")
-                )
-                dev = df.join(med, key_names)
-                madf = dev.groupBy(*[F.col(k) for k in key_names]).agg(
-                    F.percentile(
-                        F.abs(v - F.col("__med")), F.lit(0.5)
-                    ).alias(m.label)
-                )
-                out = out.join(madf, key_names, "left")
-            else:
-                med = df.agg(F.percentile(v, F.lit(0.5)).alias("__med"))
-                dev = df.crossJoin(F.broadcast(med))
-                madf = dev.agg(
-                    F.percentile(
-                        F.abs(v - F.col("__med")), F.lit(0.5)
-                    ).alias(m.label)
-                )
-                out = out.crossJoin(F.broadcast(madf))
+        for m in sorted(
+            (m for m in metrics if m.join_rank), key=lambda m: m.join_rank
+        ):
+            out = m.join(out, df, key_names, ev)
         if "__th_docs" in out.columns:
             out = out.drop("__th_docs")
         for m in metrics:
-            if isinstance(m, BoxplotAgg):
-                names = m.column_names()
-                arr = F.col(f"__bp_{m.label}")
-                out = (
-                    out.withColumn(names[1], arr.getItem(0))
-                    .withColumn(names[2], arr.getItem(1))
-                    .withColumn(names[3], arr.getItem(2))
-                    .drop(f"__bp_{m.label}")
-                )
-            if isinstance(m, MatrixStatsAgg):
-                # ES MatrixStatsResults formulas from the exact
-                # fixed-point power sums: M2/M3/M4/C2 central moments
-                # derived in double; degenerate cases null (n<2 for
-                # the (n−1)-normalized stats, M2=0 for shape stats)
-                n = F.col(f"{m.label}_doc_count").cast("double")
-                mx_mean: dict[str, Column] = {}
-                mx_m2: dict[str, Column] = {}
-                for f_ in m.fields:
-                    sl = _slug(f_)
-                    s1 = F.col(f"__mx_{m.label}_{sl}_s1").cast("double")
-                    s2 = F.col(f"__mx_{m.label}_{sl}_s2").cast("double")
-                    s3 = F.col(f"__mx_{m.label}_{sl}_s3").cast("double")
-                    s4 = F.col(f"__mx_{m.label}_{sl}_s4").cast("double")
-                    mean = s1 / n
-                    m2 = s2 - n * mean * mean
-                    m3 = s3 - F.lit(3.0) * mean * s2 \
-                        + F.lit(2.0) * n * mean * mean * mean
-                    m4 = s4 - F.lit(4.0) * mean * s3 \
-                        + F.lit(6.0) * mean * mean * s2 \
-                        - F.lit(3.0) * n * mean * mean * mean * mean
-                    mx_mean[f_], mx_m2[f_] = mean, m2
-                    out = out.withColumn(
-                        f"{m.label}_{sl}_mean", F.when(n > 0, mean)
-                    ).withColumn(
-                        f"{m.label}_{sl}_variance",
-                        F.when(n >= 2, m2 / (n - F.lit(1.0))),
-                    ).withColumn(
-                        f"{m.label}_{sl}_skewness",
-                        F.when(m2 > 0, F.sqrt(n) * m3 / F.pow(m2, 1.5)),
-                    ).withColumn(
-                        f"{m.label}_{sl}_kurtosis",
-                        F.when(m2 > 0, n * m4 / (m2 * m2)),
-                    )
-                for i_ in range(len(m.fields)):
-                    for j_ in range(i_ + 1, len(m.fields)):
-                        fi, fj = m.fields[i_], m.fields[j_]
-                        si, sj = _slug(fi), _slug(fj)
-                        p = F.col(
-                            f"__mx_{m.label}_{si}_{sj}_p"
-                        ).cast("double")
-                        c2 = p - n * mx_mean[fi] * mx_mean[fj]
-                        out = out.withColumn(
-                            f"{m.label}_{si}_{sj}_covariance",
-                            F.when(n >= 2, c2 / (n - F.lit(1.0))),
-                        ).withColumn(
-                            f"{m.label}_{si}_{sj}_correlation",
-                            F.when(
-                                (mx_m2[fi] > 0) & (mx_m2[fj] > 0),
-                                c2 / F.sqrt(mx_m2[fi] * mx_m2[fj]),
-                            ),
-                        )
-                out = out.drop(
-                    *[c for c in out.columns
-                      if c.startswith(f"__mx_{m.label}_")]
-                )
-            if isinstance(m, TTestAgg):
-                # derive (t, df) from the exact fixed-point sums; ES's
-                # p-value is the Student-t CDF of exactly this pair
-                # (see the dataclass docstring for the divergence note)
-                if m.test_type == "paired":
-                    n = F.col(f"__tt_{m.label}_n").cast("double")
-                    s1 = F.col(f"__tt_{m.label}_s1").cast("double")
-                    s2 = F.col(f"__tt_{m.label}_s2").cast("double")
-                    mean = s1 / n
-                    var = (s2 - n * mean * mean) / (n - F.lit(1.0))
-                    ok = (n >= 2) & (var > 0)
-                    t_stat = mean / F.sqrt(var / n)
-                    df_val = n - F.lit(1.0)
-                else:
-                    na = F.col(f"__tt_{m.label}_na").cast("double")
-                    nb = F.col(f"__tt_{m.label}_nb").cast("double")
-                    ma = F.col(f"__tt_{m.label}_s1a").cast("double") / na
-                    mb = F.col(f"__tt_{m.label}_s1b").cast("double") / nb
-                    va_ = (
-                        F.col(f"__tt_{m.label}_s2a").cast("double")
-                        - na * ma * ma
-                    ) / (na - F.lit(1.0))
-                    vb_ = (
-                        F.col(f"__tt_{m.label}_s2b").cast("double")
-                        - nb * mb * mb
-                    ) / (nb - F.lit(1.0))
-                    if m.test_type == "homoscedastic":
-                        sp2 = (
-                            (na - F.lit(1.0)) * va_
-                            + (nb - F.lit(1.0)) * vb_
-                        ) / (na + nb - F.lit(2.0))
-                        ok = (na >= 2) & (nb >= 2) & (sp2 > 0)
-                        t_stat = (ma - mb) / F.sqrt(
-                            sp2 * (F.lit(1.0) / na + F.lit(1.0) / nb)
-                        )
-                        df_val = na + nb - F.lit(2.0)
-                    else:  # heteroscedastic (Welch, ES default)
-                        sea = va_ / na
-                        seb = vb_ / nb
-                        se2 = sea + seb
-                        ok = (na >= 2) & (nb >= 2) & (se2 > 0)
-                        t_stat = (ma - mb) / F.sqrt(se2)
-                        df_val = (se2 * se2) / (
-                            sea * sea / (na - F.lit(1.0))
-                            + seb * seb / (nb - F.lit(1.0))
-                        )
-                out = out.withColumn(
-                    f"{m.label}_t", F.when(ok, t_stat)
-                ).withColumn(f"{m.label}_df", F.when(ok, df_val))
-                # ES's returned value: the two-sided p — the Student-t
-                # CDF of the (t, df) columns just materialized (plain
-                # column refs keep the CF expression compact; null
-                # t/df propagate).  Pure Column math, inside
-                # whole-stage codegen — see functions/stats.py.
-                out = out.withColumn(
-                    f"{m.label}_p",
-                    t_two_sided_p_col(
-                        F.col(f"{m.label}_t"), F.col(f"{m.label}_df")
-                    ),
-                )
-                out = out.drop(
-                    *[c for c in out.columns
-                      if c.startswith(f"__tt_{m.label}_")]
-                )
-            if isinstance(m, StatsAgg) and m.extended:
-                # ES's DOCUMENTED definition: variance =
-                # sum_of_squares/count − mean² (population), std = √var
-                # — derived here from the exact partials instead of
-                # var_pop, so on integral inputs the doubles are
-                # bit-identical to any engine replaying the formula
-                # (Welford-style var_pop aggregates diverge by ulps)
-                cnt = F.col(f"{m.label}_count")
-                tot = F.col(f"{m.label}_sum")
-                ss = F.col(f"{m.label}_sum_of_squares")
-                var = ss / cnt - (tot / cnt) * (tot / cnt)
-                out = out.withColumn(f"{m.label}_variance", var).withColumn(
-                    f"{m.label}_std_deviation", F.sqrt(var)
-                )
+            out = m.finish(out)
 
-        # 3) per-level terms size/order enforcement, outermost first.
-        # A TOP-LEVEL terms bucket never uses a window: the windowed
-        # relation would be the term × inner-bucket TUPLE table and
-        # `Window.partitionBy(F.lit(1))` constant-folds to an EMPTY
-        # partition spec — Spark moves the whole relation to one task
-        # ("No Partition Defined for Window operation").  Instead the
-        # top-N TERMS are picked from the one-row-per-term relation with
-        # orderBy().limit() (TakeOrderedAndProject — ≤ size rows, no
-        # shuffle concentration) and semi-joined back (broadcast: the
-        # survivor side is ≤ size rows by construction).  Nested terms
-        # keep the window — its partition spec (the parent bucket keys)
-        # is real, so the rank distributes.
+        # 4) bucket-level cuts, each stage outermost first: (a)
+        # terms-like size/order ranking, (b) rare_terms long tails, (c)
+        # (date_)histogram min_doc_count filters and zero-fill — ES's
+        # filters applied before pipeline aggs see the frame
         for i, b in enumerate(s.buckets):
-            if not isinstance(
-                b, (TermsBucket, MultiTermsBucket, GeoGridBucket)
-            ):
-                continue
-            prefix = key_names[:i]
-            direction = (lambda c: c.desc()) if b.order == "desc" else (lambda c: c.asc())
-            if b.order_by == "_term":
-                order_cols = [direction(F.col(b.label))]
-                if not prefix:
-                    top_terms = (
-                        out.select(b.label).distinct().orderBy(*order_cols).limit(b.size)
-                    )
-                    out = out.join(F.broadcast(top_terms), [b.label], "left_semi")
-                    continue
-            else:
-                op, fld = b.order_metric
-                # the ordering metric is computed at THIS bucket's level
-                # (over the raw docs), not from leaf partials — matches
-                # ES, and stays exact for non-decomposable ops like
-                # cardinality
-                if op == "cardinality":
-                    ord_expr = count_distinct(resolve(fld))
-                elif op == "count":
-                    ord_expr = F.count(F.lit(1))
-                else:
-                    ord_expr = {
-                        "avg": F.avg, "min": F.min, "max": F.max, "sum": F.sum
-                    }[op](resolve(fld).cast("double"))
-                lvl = df.groupBy(*[F.col(c) for c in prefix + [b.label]]).agg(
-                    ord_expr.alias("__ord")
-                )
-                order_cols = [direction(F.col("__ord")), F.col(b.label).asc()]
-                if not prefix:
-                    top_terms = lvl.orderBy(*order_cols).limit(b.size).select(b.label)
-                    out = out.join(F.broadcast(top_terms), [b.label], "left_semi")
-                    continue
-                out = out.join(F.broadcast(lvl), prefix + [b.label], "left")
-            w = Window.partitionBy(*[F.col(c) for c in prefix]).orderBy(*order_cols)
-            # dense_rank, NOT row_number: the frame rows are bucket
-            # TUPLES (this term × every inner bucket), and ES's size
-            # keeps the top-N TERMS with all their children.  The order
-            # columns are constant within a term and distinct across
-            # terms (the term itself is the tiebreak), so dense_rank is
-            # exactly the term's rank repeated on each of its rows.
-            out = (
-                out.withColumn("__rn", F.dense_rank().over(w))
-                .filter(F.col("__rn") <= b.size)
-                .drop("__rn", "__ord")
-            )
+            out = b.rank(out, df, key_names[:i], ev)
+        for i, b in enumerate(s.buckets):
+            out = b.tail_cut(out, key_names[:i], ev)
+        for i, b in enumerate(s.buckets):
+            out = b.level_cut(out, i, key_names, mdc_src, metrics, ev)
 
-        # 4) parent pipeline aggs (round 8): sequence over the
-        # INNERMOST histogram/date_histogram buckets, one window per
-        # outer-bucket group.  When outer buckets exist the window
-        # partitions by them; a bare histogram's window relation is the
-        # already-aggregated bucket table (time-span / interval rows,
-        # not docs) — the same bounded-by-construction argument as
-        # promql_subquery's grid window.
+        # 5) pipeline aggs: one _apply_* pass per run of same-kind
+        # stages (below), then bucket_sort
         _sib_ops = SIBLING_OPS.keys() | MULTI_SIBLING_OPS
 
         def _apply_parents(out: DataFrame, run: list[PipelineAgg]) -> DataFrame:
             seq = [
                 b.label
                 for b in s.buckets
-                if isinstance(b, (DateHistogramBucket, HistogramBucket))
+                if b.sequence
             ]
             if not seq:
                 raise ValueError(
@@ -5406,9 +5577,7 @@ class KibanaPlan:
             # reads) + a bucket-table window — the window relation is
             # the aggregated bucket table, the _apply_parents
             # bounded-by-construction argument.
-            if not key_names or not isinstance(
-                s.buckets[-1], (DateHistogramBucket, HistogramBucket)
-            ):
+            if not key_names or not s.buckets[-1].sequence:
                 raise ValueError(
                     "kibana: cumulative_cardinality needs an innermost "
                     "histogram/date_histogram bucket"
@@ -5442,8 +5611,7 @@ class KibanaPlan:
             for pl in run:
                 m = next(
                     mm for mm in s.metrics
-                    if isinstance(mm, MetricAgg)
-                    and mm.label == pl.source_label
+                    if mm.label == pl.source_label
                 )
                 val = resolve(m.field)
                 first = df.filter(val.isNotNull()).join(
@@ -5482,9 +5650,7 @@ class KibanaPlan:
             # min_doc_count cut or earlier bucket_selector shortens
             # the sequence exactly as ES's pipeline (which runs on the
             # returned buckets) sees it.
-            if not key_names or not isinstance(
-                s.buckets[-1], (DateHistogramBucket, HistogramBucket)
-            ):
+            if not key_names or not s.buckets[-1].sequence:
                 raise ValueError(
                     "kibana: moving_percentiles needs an innermost "
                     "histogram/date_histogram bucket"
@@ -5504,8 +5670,7 @@ class KibanaPlan:
                 shift = int(pl.op.split(":", 1)[1])
                 m = next(
                     mm for mm in s.metrics
-                    if isinstance(mm, PercentilesAgg)
-                    and mm.label == pl.source_label
+                    if mm.label == pl.source_label
                 )
                 val = resolve(m.field).cast("double")
                 docs = df.filter(val.isNotNull()).withColumn(
@@ -5609,177 +5774,7 @@ class KibanaPlan:
                 out = out.withColumn(pl.label, expr)
             return out.drop(*drop)
 
-        # 3b) rare_terms: keep the keys whose TOTAL doc count within
-        # their parent bucket is ≤ max_doc_count.  An INNERMOST rare
-        # bucket needs no extra pass: the main aggregation's groups ARE
-        # the rare level, so its doc count rode along as a hidden
-        # column (see step 2).  A rare bucket with buckets nested
-        # BELOW it counts its own-level snapshot frame instead (inner
-        # explodes/filters must not distort the count) and joins back
-        # KEY-KEYED: the qualifying set is the LONG TAIL — potentially
-        # MOST keys — so unlike the top-N semi-join above (survivor
-        # side provably ≤ size rows) nothing here may broadcast; the
-        # optimizer picks the strategy (AQE-safe at any cardinality).
-        for i, b in enumerate(s.buckets):
-            if not isinstance(b, RareTermsBucket):
-                continue
-            rt_col = f"__rt_{b.label}"
-            if rt_col in out.columns:
-                out = out.filter(
-                    F.col(rt_col) <= b.max_doc_count
-                ).drop(rt_col)
-                continue
-            prefix = key_names[:i]
-            lvl = rare_src[b.label].groupBy(
-                *[F.col(c) for c in prefix + [b.label]]
-            ).agg(F.count(F.lit(1)).alias("__rt"))
-            out = (
-                out.join(lvl, prefix + [b.label], "left")
-                .filter(F.col("__rt") <= b.max_doc_count)
-                .drop("__rt")
-            )
-
-        # 3c) (date_)histogram min_doc_count (round 12).  >= 2: keep
-        # buckets whose OWN-LEVEL doc count reaches the threshold,
-        # ES's filter applied before pipeline aggs see the frame.  The
-        # count is the window-sum of leaf counts over the keys up to
-        # this bucket when nothing below can drop rows (exact: no
-        # exploding bucket sits below, validated at step 2), else a
-        # pre-cut level count joined from the mdc_src snapshot
-        # (ADVICE r12: inner size cuts / null drops must not shrink
-        # the histogram's own doc count).  == 0:
-        # ZERO-FILL the innermost histogram — per parent bucket,
-        # generate the full key grid between the first and last
-        # populated key (exactly ES's fill span without
-        # extended_bounds), left-join the real rows on, and give empty
-        # buckets doc_count/cardinality/sum 0 with every other metric
-        # null (ES's empty-bucket values).  The grid is bounded by
-        # span/interval per parent — bucket-table-sized, never
-        # doc-sized; pipelines below then run over the filled grid,
-        # deriving the same values ES derives across empty buckets.
-        for i, b in mdc_buckets:
-            cnt_col = f"__mdc_{b.label}"
-            if b.min_doc_count >= 2:
-                lvl_keys = key_names[: i + 1]
-                if b.label in mdc_src:
-                    # inner buckets can DROP rows (terms/multi_terms
-                    # size cut or null-key filter, rare_terms long
-                    # tail, histogram null drop) — the leaf window-sum
-                    # would undercount, so the level count comes from
-                    # the pre-cut snapshot taken at this bucket's
-                    # level (ADVICE r12).  Level-bucket-sized relation
-                    # joined on the level keys; like rare_terms, the
-                    # qualifying side is unbounded (a time axis), so
-                    # no forced broadcast — AQE picks the strategy.
-                    lvl = mdc_src[b.label].groupBy(
-                        *[F.col(k) for k in lvl_keys]
-                    ).agg(F.count(F.lit(1)).alias("__lvl"))
-                    out = (
-                        out.join(lvl, lvl_keys, "left")
-                        .filter(F.col("__lvl") >= b.min_doc_count)
-                        .drop("__lvl", cnt_col)
-                    )
-                    continue
-                lvl_cnt = (
-                    F.col(cnt_col)
-                    if lvl_keys == key_names
-                    else F.sum(cnt_col).over(
-                        Window.partitionBy(*[F.col(k) for k in lvl_keys])
-                    )
-                )
-                out = out.withColumn("__lvl", lvl_cnt).filter(
-                    F.col("__lvl") >= b.min_doc_count
-                ).drop("__lvl", cnt_col)
-                continue
-            # min_doc_count == 0: zero-fill (b is innermost)
-            out = out.drop(cnt_col)
-            prefix = key_names[:-1]
-            gb = (
-                out.groupBy(*[F.col(k) for k in prefix])
-                if prefix
-                else out.groupBy()
-            )
-            if isinstance(b, DateHistogramBucket):
-                step = resolved_interval_us[b.label]
-                lo_agg = F.unix_micros(F.min(b.label))
-                hi_agg = F.unix_micros(F.max(b.label))
-                if b.extended_bounds is not None:
-                    # ES: buckets cover the union of the populated span
-                    # and the (interval-floored) extended bounds
-                    eb_lo, eb_hi = (
-                        (x // step) * step for x in b.extended_bounds
-                    )
-                    lo_agg = F.least(lo_agg, F.lit(eb_lo))
-                    hi_agg = F.greatest(hi_agg, F.lit(eb_hi))
-                bounds = gb.agg(
-                    lo_agg.alias("__lo"), hi_agg.alias("__hi")
-                )
-                grid = bounds.select(
-                    *prefix,
-                    F.explode(
-                        F.sequence(F.col("__lo"), F.col("__hi"), F.lit(step))
-                    ).alias("__g"),
-                ).select(
-                    *prefix, F.timestamp_micros(F.col("__g")).alias(b.label)
-                )
-            else:
-                iv = float(b.interval)
-                # reconstruct keys with the SAME double op as the
-                # bucketing formula (ordinal · interval), so the join
-                # hits populated keys bit-for-bit
-                m0_agg = F.round(F.min(b.label) / F.lit(iv)).cast("long")
-                m1_agg = F.round(F.max(b.label) / F.lit(iv)).cast("long")
-                if b.extended_bounds is not None:
-                    import math as _math
-
-                    m0_agg = F.least(
-                        m0_agg,
-                        F.lit(int(_math.floor(b.extended_bounds[0] / iv))),
-                    )
-                    m1_agg = F.greatest(
-                        m1_agg,
-                        F.lit(int(_math.floor(b.extended_bounds[1] / iv))),
-                    )
-                bounds = gb.agg(
-                    m0_agg.alias("__m0"), m1_agg.alias("__m1")
-                )
-                grid = bounds.select(
-                    *prefix,
-                    F.explode(
-                        F.sequence(F.col("__m0"), F.col("__m1"))
-                    ).alias("__m"),
-                ).select(
-                    *prefix,
-                    (F.col("__m").cast("double") * F.lit(iv)).alias(b.label),
-                )
-            out_cols = out.columns
-            filled = grid.join(out, prefix + [b.label], "left")
-            dtypes = dict(filled.dtypes)
-            zero_names: list[str] = []
-            for m in metrics:
-                if isinstance(m, MetricAgg) and m.op in (
-                    # count-family aggs: ES returns 0 (not null) on an
-                    # empty bucket — value_count included (ADVICE r12)
-                    "count", "cardinality", "sum", "value_count"
-                ):
-                    zero_names.append(m.label)
-                elif isinstance(m, RateAgg):
-                    # count/sum-family: an empty bucket rates 0 (ES)
-                    zero_names.append(m.label)
-                elif isinstance(m, StringStatsAgg):
-                    zero_names.append(m.column_names()[0])
-                elif isinstance(m, StatsAgg):
-                    cn = m.column_names()
-                    zero_names += [cn[0], cn[4]] + (
-                        [cn[5]] if m.extended else []
-                    )
-            for n_ in zero_names:
-                filled = filled.withColumn(
-                    n_, F.coalesce(F.col(n_), F.lit(0).cast(dtypes[n_]))
-                )
-            out = filled.select(*[F.col(c) for c in out_cols])
-
-        # 4) same-level pipeline reduction in REQUEST order (round
+        # same-level pipeline reduction in REQUEST order (round
         # 11.5 — previously a fixed parents → siblings → scripts →
         # selectors phase order, a documented divergence since ADVICE
         # r9): ES reduces same-level pipeline aggs in the order the
@@ -5851,7 +5846,7 @@ class KibanaPlan:
                 out = out.filter(pred.cast("boolean"))
             i += 1
 
-        # 4c) bucket_sort: order the innermost buckets per outer bucket
+        # bucket_sort: order the innermost buckets per outer bucket
         # and keep [from_, from_+size).  Computed AFTER sibling aggs —
         # ES's truncation is response-shaping only.  Nested: row_number
         # over the outer partition (distributed, one rank per outer
@@ -5892,33 +5887,15 @@ class KibanaPlan:
                         .drop("__bs")
                     )
 
-        final_cols: list[Column] = [F.col(k) for k in key_names]
-        for m in metrics:
-            if isinstance(m, PercentilesAgg):
-                final_cols.extend(
-                    F.col(m.label).getItem(i).alias(name)
-                    for i, name in enumerate(m.column_names())
-                )
-            elif isinstance(
-                m, (StatsAgg, PercentileRanksAgg, BoxplotAgg, TopMetricsAgg,
-                    StringStatsAgg, MatrixStatsAgg, TTestAgg,
-                    GeoBoundsAgg, GeoCentroidAgg)
-            ):
-                final_cols.extend(F.col(n) for n in m.column_names())
-            else:
-                final_cols.append(F.col(m.label))
-        final_cols.extend(
-            F.col(n) for pl in s.pipelines for n in pl.column_names()
+        # 6) the projection: key columns, then every agg's outputs
+        return out.select(
+            *[F.col(k) for k in key_names],
+            *[
+                c
+                for a in (*metrics, *s.pipelines, *s.stats_pipelines, *s.scripts)
+                for c in a.outputs()
+            ],
         )
-        final_cols.extend(
-            F.col(n)
-            for st in s.stats_pipelines
-            for n in st.column_names()
-        )
-        final_cols.extend(
-            F.col(sc.label) for sc in s.scripts if sc.op == "bucket_script"
-        )
-        return out.select(*final_cols)
 
 
 def _to_us(x) -> int:

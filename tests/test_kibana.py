@@ -16,6 +16,7 @@ from kafka_metrics_exporter_spark.kibana import (
     parse_vis_state,
 )
 from kafka_metrics_exporter_spark.kibana.compiler import (
+    _KINDS,
     DateHistogramBucket,
     FiltersBucket,
     TermsBucket,
@@ -4537,3 +4538,59 @@ def test_composite_histogram_source(spark):
              "params": {"sources": [
                  {"vb": {"histogram": {"field": "v"}}}]}},
         ])["visState"])
+
+
+# ------------------------------------------------------- the kind table
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+def test_role_check_rejects_the_wrong_schema(kind):
+    """Every kind in the table takes its schema from its role: bucket
+    kinds (sole ones included) reject a metric schema — also the
+    default when ``schema`` is absent — and every other kind rejects a
+    bucket schema, before any parameter is read."""
+    role = _KINDS[kind][0]
+    if role in ("bucket", "sole"):
+        schema, msg = "metric", f"kibana: {kind} must be a bucket agg"
+    else:
+        schema, msg = "bucket", f"kibana: {kind} cannot be a bucket agg"
+    with pytest.raises(ValueError, match=msg):
+        parse_vis_state(_vis8([
+            {"id": "1", "type": kind, "schema": schema, "params": {}},
+        ])["visState"])
+
+
+# valid params for every sole kind in the table (a new sole kind
+# without an entry fails the tests below with a KeyError)
+_SOLE_PARAMS = {
+    "composite": {"sources": [{"e": {"terms": {"field": "e"}}}]},
+    "significant_terms": {"field": "c", "foreground": "s: FAILED"},
+    "significant_text": {"field": "msg", "foreground": "s: FAILED"},
+    "categorize_text": {"field": "msg"},
+    "frequent_item_sets": {"fields": ["a", "b"]},
+}
+_SOLE_KINDS = sorted(k for k, (role, _) in _KINDS.items() if role == "sole")
+
+
+@pytest.mark.parametrize("kind", _SOLE_KINDS)
+@pytest.mark.parametrize("outer", [True, False], ids=["first", "second"])
+def test_sole_bucket_kinds_reject_a_second_bucket(kind, outer):
+    """A sole bucket kind nested with a terms bucket, on either side,
+    fails at parse time."""
+    sole = {"id": "1", "type": kind, "schema": "bucket",
+            "params": _SOLE_PARAMS[kind]}
+    terms = {"id": "2", "type": "terms", "schema": "bucket",
+             "params": {"field": "k", "size": 3, "orderBy": "_term"}}
+    with pytest.raises(ValueError, match=f"{kind} must be the only bucket agg"):
+        compile_visualization(_vis8([sole, terms] if outer else [terms, sole]))
+
+
+@pytest.mark.parametrize("kind", _SOLE_KINDS)
+def test_sole_bucket_kinds_reject_pipeline_aggs(kind):
+    with pytest.raises(ValueError, match=f"{kind} does not compose with pipeline"):
+        compile_visualization(_vis8([
+            {"id": "1", "type": kind, "schema": "bucket",
+             "params": _SOLE_PARAMS[kind]},
+            {"id": "2", "type": "bucket_sort", "schema": "metric",
+             "params": {"size": 2}},
+        ]))

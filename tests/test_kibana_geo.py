@@ -448,3 +448,49 @@ def test_geohash_prefix_property(spark):
         for a, b in (("g1", "g2"), ("g2", "g4"), ("g4", "g8"),
                      ("g8", "g12")):
             assert r[b].startswith(r[a]), (r[a], r[b])
+
+
+def test_geo_buckets_under_a_min_doc_count_histogram(spark):
+    """A histogram's min_doc_count counts its own-level docs.  A geo
+    grid below it drops docs with invalid coordinates, so the level
+    count comes from the pre-cut snapshot: the [0, 10) bucket holds two
+    docs and survives min_doc_count=2 although only one reaches a
+    cell.  geo_distance rings may overlap, so a histogram with
+    min_doc_count above them rejects like one above range buckets."""
+    d = _points_df(spark, [
+        (10.0, 10.0, 1.0), (91.0, 0.0, 2.0),  # bucket 0: one invalid
+        (10.0, 10.0, 11.0),  # bucket 10: one doc
+    ])
+    hist = {"id": "1", "type": "histogram", "schema": "bucket",
+            "params": {"field": "v", "interval": 10, "min_doc_count": 2,
+                       "customLabel": "h"}}
+    out = compile_visualization(_vis([
+        hist,
+        {"id": "2", "type": "geohash_grid", "schema": "bucket",
+         "params": {"field": "loc", "precision": 3, "customLabel": "g"}},
+        {"id": "3", "type": "count", "schema": "metric",
+         "params": {"customLabel": "n"}},
+    ])).evaluate(d)
+    assert [(r["h"], r["g"], r["n"]) for r in out.collect()] == [
+        (0.0, ref_geohash(10.0, 10.0, 3), 1)
+    ]
+    with pytest.raises(ValueError, match="row-exploding"):
+        compile_visualization(_vis([
+            hist,
+            {"id": "2", "type": "geo_distance", "schema": "bucket",
+             "params": {"field": "loc", "origin": "0,0",
+                        "ranges": [{"to": 1e7}, {"to": 2e7}]}},
+        ])).evaluate(d)
+
+
+def test_count_ordered_geo_grid_above_a_filter_rejects(spark):
+    """Grid cells rank by doc count like a count-ordered terms bucket,
+    so a filter bucket below one would distort the ranking counts."""
+    d = _points_df(spark, [(10.0, 10.0, 1.0)])
+    with pytest.raises(ValueError, match="would distort"):
+        compile_visualization(_vis([
+            {"id": "1", "type": "geohash_grid", "schema": "bucket",
+             "params": {"field": "loc", "precision": 3, "size": 1}},
+            {"id": "2", "type": "filter", "schema": "bucket",
+             "params": {"query": "v: 1"}},
+        ])).evaluate(d)

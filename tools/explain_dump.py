@@ -7,15 +7,39 @@ Usage: python tools/explain_dump.py <suffix> [query ...]
 Plans are captured at sf0.1 with the SAME session conf bench.py uses,
 so Exchange counts / join strategies in the files match what the bench
 actually executes (AQE initial plan; the bench's measured plan).
+
+Expression ids (``#1234``) and ``plan_id=NNN`` are renumbered in order of
+first appearance before writing (see :func:`_normalize_ids`), so two dumps
+of the same plan are byte-identical and ``diff -r`` of a before directory
+against an after directory is empty when no plan changed.
+``KME_PLANS_ROUND`` names the output directory under ``plans/`` (an
+absolute path writes elsewhere).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+_ID_RES = (re.compile(r"(#)(\d+)"), re.compile(r"(plan_id=)(\d+)"))
+
+
+def _normalize_ids(txt: str) -> str:
+    """Renumber expression ids and plan ids from 0 in order of first
+    appearance; each kind keeps its own numbering, so every link between
+    attributes within the plan survives."""
+    for pat in _ID_RES:
+        seen: dict[str, int] = {}
+        txt = pat.sub(
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))),
+            txt,
+        )
+    return txt
 
 
 def main() -> None:
@@ -49,7 +73,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             txt = f"EXPLAIN FAILED: {e}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(txt)
+            f.write(_normalize_ids(txt))
         print(f"wrote {name}_{suffix}.txt")
         spark.catalog.clearCache()
 

@@ -156,7 +156,7 @@ class _Bucket:
         """rare_terms long-tail cut (stage 4b)."""
         return out
 
-    def level_cut(self, out, i, keys, mdc_src, metrics, ev) -> DataFrame:
+    def level_cut(self, out, prefix, keys, mdc_src, metrics, ev) -> DataFrame:
         """(date_)histogram min_doc_count cut or zero-fill (stage 4c)."""
         return out
 
@@ -267,7 +267,7 @@ class _Histogram(_Bucket):
             )
         return [F.count(F.lit(1)).alias(f"__mdc_{self.label}")]
 
-    def level_cut(self, out, i, keys, mdc_src, metrics, ev) -> DataFrame:
+    def level_cut(self, out, prefix, keys, mdc_src, metrics, ev) -> DataFrame:
         """>= 2: the level count is the window-sum of leaf counts over
         the keys up to this bucket when nothing below can drop rows
         (exact: no exploding bucket sits below, validated in
@@ -286,7 +286,7 @@ class _Histogram(_Bucket):
             return out
         cnt_col = f"__mdc_{self.label}"
         if self.min_doc_count >= 2:
-            lvl_keys = keys[: i + 1]
+            lvl_keys = prefix + [self.label]
             if self.label in mdc_src:
                 # inner buckets can DROP rows (terms/multi_terms size
                 # cut or null-key filter, rare_terms long tail,
@@ -317,7 +317,6 @@ class _Histogram(_Bucket):
             ).drop("__lvl", cnt_col)
         # min_doc_count == 0: zero-fill (this bucket is innermost)
         out = out.drop(cnt_col)
-        prefix = keys[:-1]
         gb = (
             out.groupBy(*[F.col(k) for k in prefix])
             if prefix
@@ -5246,8 +5245,13 @@ class KibanaPlan:
                     f"_key or move the filter above it"
                 )
         key_names: list[str] = []
+        # each bucket's parent keys: the KEYED buckets above it (a
+        # sampler or nested bucket adds no key column, so a bucket's
+        # position is not its key prefix)
+        prefixes: list[list[str]] = []
         mdc_src: dict[str, DataFrame] = {}
         for b in s.buckets:
+            prefixes.append(list(key_names))
             df = b.add_key(df, ev)
             if b.keyed:
                 key_names.append(b.label)
@@ -5282,12 +5286,12 @@ class KibanaPlan:
         # terms-like size/order ranking, (b) rare_terms long tails, (c)
         # (date_)histogram min_doc_count filters and zero-fill — ES's
         # filters applied before pipeline aggs see the frame
-        for i, b in enumerate(s.buckets):
-            out = b.rank(out, df, key_names[:i], ev)
-        for i, b in enumerate(s.buckets):
-            out = b.tail_cut(out, key_names[:i], ev)
-        for i, b in enumerate(s.buckets):
-            out = b.level_cut(out, i, key_names, mdc_src, metrics, ev)
+        for b, prefix in zip(s.buckets, prefixes):
+            out = b.rank(out, df, prefix, ev)
+        for b, prefix in zip(s.buckets, prefixes):
+            out = b.tail_cut(out, prefix, ev)
+        for b, prefix in zip(s.buckets, prefixes):
+            out = b.level_cut(out, prefix, key_names, mdc_src, metrics, ev)
 
         # 5) pipeline aggs: one _apply_* pass per run of same-kind
         # stages (below), then bucket_sort

@@ -106,10 +106,10 @@ def _parse_tree(p: str) -> list[tuple[int, str]]:
 def _count_onerow_bnl(p: str) -> int:
     """Count BroadcastNestedLoopJoins whose BROADCAST side is a global
     aggregate (``keys=[]`` — at most one row).  This is the structural
-    signature of the grid-bounds expansion (``promql/range_eval.py
-    _expand_instants``: fact rows × broadcast 1-row min/max-ts frame)
-    and of 1-row scalar broadcasts like tf-idf's corpus count N — a
-    deliberately-chosen O(rows) plan, not an accidental O(rows²) one.
+    signature of 1-row scalar broadcasts like tf-idf's corpus count N —
+    a deliberately-chosen O(rows) plan, not an accidental O(rows²) one.
+    (PromQL range-mode grid bounds are Columns, literals or scalar
+    subqueries, so they add no join.)
     ``tests/test_plan_inventory.py`` exempts these BNLJs structurally
     instead of per-query allowlisting (VERDICT r7 item 1)."""
     nodes = _parse_tree(p)

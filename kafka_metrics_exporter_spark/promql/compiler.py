@@ -152,7 +152,9 @@ class _Vec:
 
     def select_shape(self) -> DataFrame:
         cols = sorted(self.labels) + ["ts", "value"]
-        return self.df.select(*cols)
+        # most results already have this shape: a schema read is much
+        # cheaper than analyzing a no-op projection
+        return self.df if self.df.columns == cols else self.df.select(*cols)
 
 
 class PromQLPlan:
@@ -494,18 +496,14 @@ def _eval(
 
 def _instant_universe(metrics: DataFrame, leaf) -> DataFrame:
     """The engine's evaluation-instant set as a 1-column ``ts`` frame:
-    the aligned step grid in range mode, the distinct sample timestamps
-    in sample-instant mode.  The grid sequence is guarded exactly like
-    ``_expand_instants``: an empty aligned grid (data span or request
-    window shorter than one step → ``__g_lo > __g_hi``) yields zero
-    instants instead of Spark's 'Illegal sequence boundaries' error
-    (ADVICE r5)."""
+    the aligned step grid in range mode (exploded from the leaf's bound
+    Columns — an empty aligned grid, a data span or request window
+    shorter than one step, yields zero instants; ADVICE r5), the
+    distinct sample timestamps in sample-instant mode."""
     if leaf is not None and hasattr(leaf, "step_us"):
-        seq = F.when(
-            F.col("__g_lo") <= F.col("__g_hi"),
-            F.sequence(F.col("__g_lo"), F.col("__g_hi"), F.lit(leaf.step_us)),
-        ).otherwise(F.array().cast("array<long>"))
-        return leaf.bounds.select(F.explode(seq).alias("__t_us")).select(
+        from kafka_metrics_exporter_spark.promql.range_eval import _grid_frame
+
+        return _grid_frame(metrics.sparkSession, leaf.bounds, leaf.step_us).select(
             F.timestamp_micros(F.col("__t_us")).alias("ts")
         )
     return metrics.select("ts").distinct()
@@ -568,7 +566,11 @@ def _eval_selector(node: Selector, metrics: DataFrame, label_cols) -> _Vec:
                 .alias("ts")
             )
         elif c in labels:
-            cols.append(F.coalesce(F.col(c), F.lit("")).alias(c))
+            # one parsed SQL expression per label: a third of the py4j
+            # round trips of the col/lit/coalesce/alias Column chain,
+            # and the same analyzed plan
+            q = "`" + c.replace("`", "``") + "`"
+            cols.append(F.expr(f"coalesce({q}, '') AS {q}"))
         else:
             cols.append(F.col(c))
     for lbl in sorted(absent):
@@ -1398,12 +1400,14 @@ def _eval_histogram_quantile(
     df = vec.df.withColumn("__le", le)
     w_all = Window.partitionBy(*[F.col(c) for c in grp])
     w_ord = w_all.orderBy(F.col("__le").asc())
-    df = (
-        df.withColumn("__total", F.max("value").over(w_all))
-        .withColumn("__prev_le", F.coalesce(F.lag("__le").over(w_ord), F.lit(0.0)))
-        .withColumn("__prev_v", F.coalesce(F.lag("value").over(w_ord), F.lit(0.0)))
-        .withColumn("__max_fin", F.max(F.when(F.col("__le") != float("inf"), F.col("__le"))).over(w_all))
-    )
+    df = df.withColumns({
+        "__total": F.max("value").over(w_all),
+        "__prev_le": F.coalesce(F.lag("__le").over(w_ord), F.lit(0.0)),
+        "__prev_v": F.coalesce(F.lag("value").over(w_ord), F.lit(0.0)),
+        "__max_fin": F.max(
+            F.when(F.col("__le") != float("inf"), F.col("__le"))
+        ).over(w_all),
+    })
     rank = F.lit(node.phi) * F.col("__total")
     crossing = (F.col("value") >= rank) & (F.col("__prev_v") < rank)
     interp = F.col("__prev_le") + (F.col("__le") - F.col("__prev_le")) * (
@@ -1411,12 +1415,10 @@ def _eval_histogram_quantile(
     ) / (F.col("value") - F.col("__prev_v"))
     q = F.when(F.col("__le") == float("inf"), F.col("__max_fin")).otherwise(interp)
     picked = (
-        df.filter(F.col("__total") > 0)
-        .filter(crossing)
+        df.filter((F.col("__total") > 0) & crossing)
         .withColumn("__rn", F.row_number().over(w_ord))
         .filter(F.col("__rn") == 1)
-        .withColumn("value", q)
-        .select(*out_labels, "ts", "value")
+        .select(*out_labels, "ts", q.alias("value"))
     )
     return _Vec(picked, frozenset(out_labels))
 
@@ -1974,10 +1976,10 @@ def _eval_matched_bin(
     if node.match.group is None:
         lf = lf.select(*keys, "ts", F.col("value").alias("__lv"))
         rf = rf.select(*keys, "ts", F.col("value").alias("__rv"))
-        out = lf.join(rf, keys + ["ts"], "inner").withColumn(
-            "value", op(F.col("__lv"), F.col("__rv"))
+        out = lf.join(rf, keys + ["ts"], "inner").select(
+            *keys, "ts", op(F.col("__lv"), F.col("__rv")).alias("value")
         )
-        return _Vec(out.drop("__lv", "__rv"), frozenset(keys))
+        return _Vec(out, frozenset(keys))
     # many-to-one: `many` keeps its labels, `one` contributes value +
     # the include labels
     include = list(node.match.include)
@@ -2070,58 +2072,43 @@ def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     pin each series' value AS OF t (the newest point at or before t —
     bounded by the lookback window in range mode, unbounded in the
     sample-instant mode, consistent with each mode's selector
-    semantics), and broadcast that one point per series across the
-    whole evaluation-instant universe — Prometheus's fixed-evaluation-
-    time semantics.  The snapshot is one hash aggregation keyed by the
-    series labels; the instant expansion is a crossJoin against the
-    broadcast 1-column instants frame (|series| × |instants| rows, the
-    semantic result size)."""
+    semantics), and repeat that one point per series across the whole
+    evaluation-instant universe — Prometheus's fixed-evaluation-time
+    semantics (:func:`_at_every_instant`).  The snapshot is one hash
+    aggregation keyed by the series labels."""
     # Exact at-t anchoring in grid mode (round 11.5 — removes the
     # ADVICE-r6 documented divergence): a NUMERIC ``@ t`` evaluates
-    # the inner expression on a ONE-INSTANT grid pinned at exactly t,
-    # so range windows like rate(m[5m] @ t) end precisely at t even
-    # when t is not step-aligned.  The rebased leaf keeps the lookback
-    # but sets step_us=1: _expand_instants' alignment arithmetic then
-    # degenerates to the exact left-open window (t−w, t] ∩ {t} (with
-    # the query's step, a sample between the last aligned instant and
-    # t would never expand onto the off-grid t).  ``@ start()/end()``
-    # need no rebasing — the bounds ARE grid instants, so the
-    # newest-evaluated-instant pin below is already exact; they keep
-    # resolving against the QUERY bounds inside a rebased context via
-    # query_bounds.  In sample-instant mode the snapshot pins the
-    # newest sample instant ≤ t with unbounded look-back — that mode's
-    # selector semantics (no lookback delta) applied to @, not a
-    # divergence from grid Prometheus.
-    if (
-        leaf is not None
-        and hasattr(leaf, "step_us")
-        and not isinstance(node.at_seconds, str)
-    ):
+    # the inner expression on a ONE-INSTANT grid pinned at exactly t
+    # (both bounds the literal t), so range windows like rate(m[5m] @ t)
+    # end precisely at t even when t is not step-aligned.  The rebased
+    # leaf keeps the lookback but sets step_us=1: _expand_instants'
+    # alignment arithmetic then degenerates to the exact left-open
+    # window (t−w, t] ∩ {t} (with the query's step, a sample between
+    # the last aligned instant and t would never expand onto the
+    # off-grid t).  ``@ start()/end()`` need no rebasing — the bounds
+    # ARE grid instants, so the newest-evaluated-instant pin below is
+    # already exact; they keep resolving against the QUERY bounds
+    # inside a rebased context via query_bounds.  In sample-instant
+    # mode the snapshot pins the newest sample instant ≤ t with
+    # unbounded look-back — that mode's selector semantics (no
+    # lookback delta) applied to @, not a divergence from grid
+    # Prometheus.
+    grid = leaf is not None and hasattr(leaf, "step_us")
+    if grid and not isinstance(node.at_seconds, str):
         import dataclasses as _dc
 
-        at_us = int(round(node.at_seconds * 1_000_000))
-        one_bounds = metrics.sparkSession.range(1).select(
-            F.lit(at_us).cast("long").alias("__g_lo"),
-            F.lit(at_us).cast("long").alias("__g_hi"),
-        )
-        qb = getattr(leaf, "query_bounds", None)
+        at_us = F.lit(int(round(node.at_seconds * 1_000_000))).cast("long")
         one = _dc.replace(
             leaf,
             step_us=1,
-            bounds=one_bounds,
-            query_bounds=qb if qb is not None else leaf.bounds,
+            bounds=(at_us, at_us),
+            query_bounds=leaf.query_bounds or leaf.bounds,
         )
         pinned = _eval(node.expr, metrics, label_cols, one)
         if isinstance(pinned, float):
             raise ValueError("promql: @ needs a vector expression")
-        series = sorted(pinned.labels)
-        picked = pinned.df.select(*series, "value").filter(
-            F.col("value").isNotNull()
-        )
-        instants = _instant_universe(metrics, leaf)
-        out = picked.crossJoin(F.broadcast(instants)).select(
-            *series, "ts", "value"
-        )
+        picked = pinned.df.filter(F.col("value").isNotNull())
+        out = _at_every_instant(picked, sorted(pinned.labels), metrics, leaf)
         return _Vec(out, pinned.labels)
     vec = _eval(node.expr, metrics, label_cols, leaf)
     if isinstance(vec, float):
@@ -2129,38 +2116,22 @@ def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     series = sorted(vec.labels)
     if isinstance(node.at_seconds, str):
         # @ start() / @ end(): the evaluation range's first/last
-        # instant — the grid bounds in range mode (which carry any
-        # explicit request range), the data's min/max sample instant
-        # in sample-instant mode.  The bound is a 1-row broadcast
-        # (column comparison, not a literal).
-        if leaf is not None and hasattr(leaf, "bounds"):
-            src = "__g_lo" if node.at_seconds == "start" else "__g_hi"
-            qb = getattr(leaf, "query_bounds", None)
-            at_bound = (qb if qb is not None else leaf.bounds).select(
-                F.col(src).alias("__at_us")
-            )
+        # instant — the query's grid bound Column in range mode (which
+        # carries any explicit request range), the data's min/max
+        # sample instant (a scalar subquery) in sample-instant mode
+        if grid:
+            qb = leaf.query_bounds or leaf.bounds
+            at = qb[0] if node.at_seconds == "start" else qb[1]
         else:
             agg = F.min if node.at_seconds == "start" else F.max
-            at_bound = metrics.agg(
-                agg(F.unix_micros(F.col("ts"))).alias("__at_us")
-            )
-        snap = vec.df.crossJoin(F.broadcast(at_bound)).filter(
-            F.unix_micros(F.col("ts")) <= F.col("__at_us")
-        )
-        if leaf is not None and hasattr(leaf, "lookback_us"):
-            snap = snap.filter(
-                F.unix_micros(F.col("ts"))
-                > F.col("__at_us") - F.lit(leaf.lookback_us)
-            )
-        snap = snap.drop("__at_us")
+            at = metrics.select(agg(F.unix_micros(F.col("ts")))).scalar()
     else:
-        at_us = int(round(node.at_seconds * 1_000_000))
-        snap = vec.df.filter(F.unix_micros(F.col("ts")) <= F.lit(at_us))
-        if leaf is not None and hasattr(leaf, "lookback_us"):
-            snap = snap.filter(
-                F.unix_micros(F.col("ts")) > F.lit(at_us - leaf.lookback_us)
-            )
-    picked = snap.groupBy(*[F.col(c) for c in series]).agg(
+        at = F.lit(int(round(node.at_seconds * 1_000_000)))
+    s_us = F.unix_micros(F.col("ts"))
+    cond = s_us <= at
+    if leaf is not None and hasattr(leaf, "lookback_us"):
+        cond = cond & (s_us > at - F.lit(leaf.lookback_us))
+    picked = vec.df.filter(cond).groupBy(*[F.col(c) for c in series]).agg(
         F.max(
             F.struct(
                 F.unix_micros(F.col("ts")).alias("__o_us"),
@@ -2173,9 +2144,26 @@ def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     # a label-less inner vector aggregates globally: one all-NULL row
     # when no sample precedes t — drop it (no point, like PromQL)
     picked = picked.filter(F.col("value").isNotNull())
+    return _Vec(_at_every_instant(picked, series, metrics, leaf), vec.labels)
+
+
+def _at_every_instant(
+    picked: DataFrame, series: list[str], metrics: DataFrame, leaf
+) -> DataFrame:
+    """The pinned point of each series at every evaluation instant
+    (|series| × |instants| rows, the semantic result size): in range
+    mode each row explodes the grid from the leaf's bound Columns — no
+    join; in sample-instant mode a crossJoin against the broadcast
+    distinct sample instants."""
+    if leaf is not None and hasattr(leaf, "step_us"):
+        from kafka_metrics_exporter_spark.promql.range_eval import _finish, _grid_seq
+
+        seq = _grid_seq(*leaf.bounds, leaf.step_us)
+        return _finish(
+            picked.select(*series, "value", F.explode(seq).alias("__t_us")), series
+        )
     instants = _instant_universe(metrics, leaf)
-    out = picked.crossJoin(F.broadcast(instants)).select(*series, "ts", "value")
-    return _Vec(out, vec.labels)
+    return picked.crossJoin(F.broadcast(instants)).select(*series, "ts", "value")
 
 
 def _eval_setop(node: SetOp, metrics: DataFrame, label_cols, leaf=None) -> _Vec:

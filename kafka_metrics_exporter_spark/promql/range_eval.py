@@ -30,10 +30,13 @@ every sample with every instant.  Instead each sample COMPUTES the
 grid instants it covers (integer arithmetic on epoch micros) and
 explodes into (series, instant) pairs: linear in samples × (window /
 step) with no join at all, then one hash aggregation per (series,
-instant).  The only join is a crossJoin with the broadcast 1-row
-grid-bounds aggregate.  Replication factor window/step is the same
-work a Prometheus TSDB does per range query, and the aggregation keys
-on (series labels, instant) — high cardinality, no skew.
+instant).  The grid bounds are two Columns, not a frame: literals for
+an explicit request range, and for a grid derived from the data two
+scalar subqueries over the metrics frame that Catalyst merges into
+one aggregate — so the expansion is one projection, with no join and
+no broadcast.  Replication factor window/step is the same work a
+Prometheus TSDB does per range query, and the aggregation keys on
+(series labels, instant) — high cardinality, no skew.
 """
 
 from __future__ import annotations
@@ -53,55 +56,75 @@ def _us(seconds: float) -> int:
     return int(round(seconds * 1_000_000))
 
 
-def _grid_bounds(metrics: DataFrame, step_us: int) -> DataFrame:
-    """1-row DF (``__g_lo``, ``__g_hi``): first aligned instant ≥ min ts
-    and last instant ≤ max ts.  Derived from the data so the evaluation
-    is self-contained and oracle-mirrorable; a dashboard would pass its
-    own request range instead.
+#: A grid's (first, last) aligned instant in epoch micros, as Columns.
+Bounds = tuple[Column, Column]
+
+
+def _grid_bounds(metrics: DataFrame, step_us: int) -> Bounds:
+    """First aligned instant ≥ min ts and last instant ≤ max ts, as two
+    scalar subqueries over ``metrics`` (Catalyst merges them into one
+    aggregate, evaluated once per plan).  Derived from the data so the
+    evaluation is self-contained and oracle-mirrorable; a dashboard
+    passes its own request range instead (:func:`_literal_bounds`).
 
     Pure integer `div` arithmetic (epoch micros are positive, so
     truncation == floor): float division + floor() can flip a grid
     boundary by one step at exact multiples, and the DuckDB oracle's
     `//` would disagree."""
-    return metrics.agg(
-        F.min(F.unix_micros(F.col("ts"))).alias("__lo"),
-        F.max(F.unix_micros(F.col("ts"))).alias("__hi"),
-    ).select(
-        F.expr(f"((__lo + {step_us} - 1) div {step_us}) * {step_us}").alias("__g_lo"),
-        F.expr(f"(__hi div {step_us}) * {step_us}").alias("__g_hi"),
+    return (
+        metrics.select(F.expr(
+            f"((min(unix_micros(ts)) + {step_us} - 1) div {step_us}) * {step_us}"
+        )).scalar(),
+        metrics.select(F.expr(
+            f"(max(unix_micros(ts)) div {step_us}) * {step_us}"
+        )).scalar(),
+    )
+
+
+def _grid_seq(lo: Column, hi: Column, step_us: int) -> Column:
+    """The aligned instants ``lo, lo + step, …, hi`` as an array of
+    epoch micros — empty, not Spark's 'Illegal sequence boundaries'
+    error, when ``lo > hi`` (a data span or request range shorter than
+    one step, ADVICE r5)."""
+    return F.when(lo <= hi, F.sequence(lo, hi, F.lit(step_us))).otherwise(
+        F.array().cast("array<long>")
     )
 
 
 def _expand_instants(
-    df: DataFrame, window_us: int, step_us: int, bounds: DataFrame
+    df: DataFrame,
+    window_us: int,
+    step_us: int,
+    bounds: Bounds,
+    has_s_us: bool = False,
 ) -> DataFrame:
     """Explode each sample to the aligned instants whose left-open
     window ``(t - w, t]`` contains it: ``t ∈ [ceil(s/step)·step,
-    floor((s + w - 1)/step)·step]`` clipped to the grid bounds.  Adds
-    ``__t_us``; keeps ``__s_us`` (the sample's epoch micros)."""
-    df = df.withColumn("__s_us", F.unix_micros(F.col("ts"))).crossJoin(
-        F.broadcast(bounds)
-    )
+    floor((s + w - 1)/step)·step]`` clipped to the grid bounds.  One
+    projection adding ``__t_us`` and ``__s_us`` (the sample's epoch
+    micros) — or only ``__t_us`` when the frame ``has_s_us`` already
+    (the rate kernels order their windows by it)."""
+    s_us = "__s_us" if has_s_us else "unix_micros(ts)"
     t_lo = F.greatest(
-        F.expr(f"((__s_us + {step_us} - 1) div {step_us}) * {step_us}"),
-        F.col("__g_lo"),
+        F.expr(f"(({s_us} + {step_us} - 1) div {step_us}) * {step_us}"), bounds[0]
     )
     t_hi = F.least(
-        F.expr(f"((__s_us + {window_us} - 1) div {step_us}) * {step_us}"),
-        F.col("__g_hi"),
+        F.expr(f"(({s_us} + {window_us} - 1) div {step_us}) * {step_us}"), bounds[1]
     )
-    seq = F.when(t_lo <= t_hi, F.sequence(t_lo, t_hi, F.lit(step_us))).otherwise(
-        F.array().cast("array<long>")
-    )
-    return (
-        df.withColumn("__t_us", F.explode(seq))
-        .drop("__g_lo", "__g_hi")
-    )
+    t_us = F.explode(_grid_seq(t_lo, t_hi, step_us)).alias("__t_us")
+    if has_s_us:
+        return df.select("*", t_us)
+    return df.select("*", F.expr(s_us).alias("__s_us"), t_us)
 
 
-def _finish(df: DataFrame, series: list[str]) -> DataFrame:
+def _finish(df: DataFrame, series: list, value: Column | None = None) -> DataFrame:
+    """A kernel's output in one projection: the series labels (names,
+    or literal Columns), the grid instant as ``ts``, and ``value`` (the
+    frame's own column unless a ``value`` expression is given)."""
     return df.select(
-        *series, F.timestamp_micros(F.col("__t_us")).alias("ts"), "value"
+        *series,
+        F.timestamp_micros(F.col("__t_us")).alias("ts"),
+        "value" if value is None else value.alias("value"),
     )
 
 
@@ -123,12 +146,12 @@ class GridLeaf:
 
     step_us: int
     lookback_us: int
-    bounds: DataFrame
+    bounds: Bounds
     # The original query-range bounds when ``bounds`` has been rebased
     # (the one-instant grid an exact ``@ t`` evaluation pins — round
     # 11.5): ``@ start()`` / ``@ end()`` refer to the QUERY range in
     # Prometheus, never to the enclosing @ context.
-    query_bounds: DataFrame | None = None
+    query_bounds: Bounds | None = None
 
     # -- instant selector with lookback ----------------------------------
     def selector(self, node: Selector, metrics: DataFrame, label_cols):
@@ -143,6 +166,26 @@ class GridLeaf:
         out = x.groupBy(*series, "__t_us").agg(_latest_value().alias("value"))
         return _Vec(_finish(out, series), vec.labels)
 
+    def _with_prev(self, vec, series: list[str], reset_corrected: bool) -> DataFrame:
+        """The sample frame with ``__s_us``, its predecessor's
+        ``__prev_us``/``__prev_v`` and, for counters, the reset-corrected
+        ``__corrected`` value.  Both windows order by the ``__s_us``
+        column, so Spark sorts each series once for both."""
+        ord_w = Window.partitionBy(*series).orderBy("__s_us")
+        prev_v = F.lag("value").over(ord_w)
+        cols = {"__prev_us": F.lag("__s_us").over(ord_w), "__prev_v": prev_v}
+        if reset_corrected:
+            # reset-corrected monotone counter: add the pre-reset value
+            # at every reset, cumulatively — the delta of corrected
+            # values over any span equals Prometheus's (last - first +
+            # Σ resets inside)
+            reset = F.when(
+                prev_v.isNotNull() & (F.col("value") < prev_v), prev_v
+            ).otherwise(F.lit(0.0))
+            cum_w = ord_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            cols = {"__corrected": F.col("value") + F.sum(reset).over(cum_w), **cols}
+        return vec.df.withColumn("__s_us", F.unix_micros(F.col("ts"))).withColumns(cols)
+
     # -- rate / increase (extrapolated) and irate ------------------------
     def rate(self, node: Rate, metrics: DataFrame, label_cols):
         from kafka_metrics_exporter_spark.promql.compiler import _Vec, _eval_range_operand
@@ -150,31 +193,12 @@ class GridLeaf:
         vec = _eval_range_operand(node.selector, metrics, label_cols)
         series = sorted(vec.labels)
         w_us = _us(node.window_seconds)
-        ord_w = Window.partitionBy(*series).orderBy(F.unix_micros(F.col("ts")))
-        prev_v = F.lag("value").over(ord_w)
-        prev_us = F.lag(F.unix_micros(F.col("ts"))).over(ord_w)
-        # reset-corrected monotone counter: add the pre-reset value at
-        # every reset, cumulatively — the delta of corrected values over
-        # any span equals Prometheus's (last - first + Σ resets inside)
-        reset = F.when(
-            prev_v.isNotNull() & (F.col("value") < prev_v), prev_v
-        ).otherwise(F.lit(0.0))
-        cum_w = Window.partitionBy(*series).orderBy(
-            F.unix_micros(F.col("ts"))
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        # gauges (delta/idelta): the series IS the signal — no reset
-        # correction; counters: add the pre-reset value cumulatively
-        corrected = (
-            F.col("value")
-            if node.fn in ("delta", "idelta")
-            else F.col("value") + F.sum(reset).over(cum_w)
-        )
-        s = (
-            vec.df.withColumn("__corrected", corrected)
-            .withColumn("__prev_us", prev_us)
-            .withColumn("__prev_v", prev_v)
-        )
-        x = _expand_instants(s, w_us, self.step_us, self.bounds)
+        # rate/increase window the reset-corrected counter; the gauge fn
+        # delta windows the raw values (the series IS the signal), and
+        # irate/idelta read only the last sample and its predecessor
+        corrected = node.fn in ("rate", "increase")
+        s = self._with_prev(vec, series, corrected)
+        x = _expand_instants(s, w_us, self.step_us, self.bounds, has_s_us=True)
 
         if node.fn in ("irate", "idelta"):
             # last two samples inside the window: the last sample's
@@ -196,30 +220,25 @@ class GridLeaf:
                     1_000_000.0
                 )
                 val = delta / dt
-            out = (
-                g.filter(
-                    F.col("__last.__prev_us").isNotNull()
-                    & (F.col("__last.__prev_us") > F.col("__t_us") - F.lit(w_us))
-                )
-                .withColumn("value", val)
-                .drop("__last")
+            out = g.filter(
+                F.col("__last.__prev_us").isNotNull()
+                & (F.col("__last.__prev_us") > F.col("__t_us") - F.lit(w_us))
             )
-            return _Vec(_finish(out, series), vec.labels)
+            return _Vec(_finish(out, series, val), vec.labels)
 
+        c = "__corrected" if corrected else "value"
         g = x.groupBy(*series, "__t_us").agg(
             F.count(F.lit(1)).alias("__cnt"),
             F.min("__s_us").alias("__first_us"),
             F.max("__s_us").alias("__last_us"),
-            F.min_by("__corrected", "__s_us").alias("__first_c"),
-            F.max_by("__corrected", "__s_us").alias("__last_c"),
+            F.min_by(c, "__s_us").alias("__first_c"),
+            F.max_by(c, "__s_us").alias("__last_c"),
             F.min_by("value", "__s_us").alias("__first_raw"),
         )
         g = g.filter(F.col("__cnt") >= 2)
         # Prometheus extrapolatedRate, operation for operation (same
         # arithmetic order in the DuckDB oracle → bit-identical doubles).
-        # For the gauge fn `delta` the corrected values equal the raw
-        # values minus a shared cumulative-reset offset — WRONG for
-        # gauges, so delta re-derives the raw difference and skips the
+        # The gauge fn `delta` takes the raw difference and skips the
         # counter-zero cap (Prometheus extrapolatedRate isCounter=false).
         raw_delta = F.col("__last_c") - F.col("__first_c")
         sampled = (F.col("__last_us") - F.col("__first_us")) / F.lit(1_000_000.0)
@@ -246,8 +265,7 @@ class GridLeaf:
         val = raw_delta * (ext / sampled)
         if node.fn == "rate":
             val = val / F.lit(float(node.window_seconds))
-        out = g.withColumn("value", val).select(*series, "__t_us", "value")
-        return _Vec(_finish(out, series), vec.labels)
+        return _Vec(_finish(g, series, val), vec.labels)
 
     # -- resets / changes (grid) ------------------------------------------
     def resets_changes(self, node: Rate, metrics: DataFrame, label_cols):
@@ -260,11 +278,8 @@ class GridLeaf:
         vec = _eval_range_operand(node.selector, metrics, label_cols)
         series = sorted(vec.labels)
         w_us = _us(node.window_seconds)
-        ord_w = Window.partitionBy(*series).orderBy(F.unix_micros(F.col("ts")))
-        prev_v = F.lag("value").over(ord_w)
-        prev_us = F.lag(F.unix_micros(F.col("ts"))).over(ord_w)
-        s = vec.df.withColumn("__prev_v", prev_v).withColumn("__prev_us", prev_us)
-        x = _expand_instants(s, w_us, self.step_us, self.bounds)
+        s = self._with_prev(vec, series, False)
+        x = _expand_instants(s, w_us, self.step_us, self.bounds, has_s_us=True)
         hit_val = F.col("value") < F.col("__prev_v") if node.fn == "resets" else (
             F.col("value") != F.col("__prev_v")
         )
@@ -274,13 +289,11 @@ class GridLeaf:
             & hit_val,
             F.lit(1),
         ).otherwise(F.lit(0))
-        out = x.groupBy(*series, "__t_us").agg(
-            F.sum(hit).cast("double").alias("value"),
-            F.count(F.lit(1)).alias("__n"),
-        )
         # an instant with no samples in the window emits nothing (the
-        # groupBy already guarantees ≥1 sample)
-        out = out.drop("__n")
+        # groupBy guarantees ≥1 sample)
+        out = x.groupBy(*series, "__t_us").agg(
+            F.sum(hit).cast("double").alias("value")
+        )
         return _Vec(_finish(out, series), vec.labels)
 
     # -- deriv / predict_linear (grid) ------------------------------------
@@ -299,25 +312,21 @@ class GridLeaf:
         series = sorted(vec.labels)
         x = _expand_instants(
             vec.df, _us(node.window_seconds), self.step_us, self.bounds
-        ).withColumn(
-            "__x", (F.col("__s_us") - F.col("__t_us")) / F.lit(1_000_000.0)
         )
+        dx = (F.col("__s_us") - F.col("__t_us")) / F.lit(1_000_000.0)
         g = x.groupBy(*series, "__t_us").agg(
-            F.regr_slope(F.col("value"), F.col("__x")).alias("__slope"),
-            F.regr_avgx(F.col("value"), F.col("__x")).alias("__ax"),
-            F.regr_avgy(F.col("value"), F.col("__x")).alias("__ay"),
+            F.regr_slope(F.col("value"), dx).alias("__slope"),
+            F.regr_avgx(F.col("value"), dx).alias("__ax"),
+            F.regr_avgy(F.col("value"), dx).alias("__ay"),
         )
         if node.predict_seconds is None:
             val = F.col("__slope")
         else:
             intercept = F.col("__ay") - F.col("__slope") * F.col("__ax")
             val = intercept + F.col("__slope") * F.lit(float(node.predict_seconds))
-        out = (
-            g.withColumn("value", val.cast("double"))
-            .filter(F.col("value").isNotNull())  # <2 samples → no point
-            .drop("__slope", "__ax", "__ay")
-        )
-        return _Vec(_finish(out, series), vec.labels)
+        out = _finish(g, series, val.cast("double"))
+        # <2 samples → no point
+        return _Vec(out.filter(F.col("value").isNotNull()), vec.labels)
 
     # -- holt_winters (grid) ----------------------------------------------
     def holt_winters(self, node, metrics: DataFrame, label_cols):
@@ -345,12 +354,8 @@ class GridLeaf:
                 )
             ).alias("__arr")
         )
-        out = (
-            g.withColumn("value", holt_winters_fold(F.col("__arr"), node.sf, node.tf))
-            .filter(F.col("value").isNotNull())
-            .drop("__arr")
-        )
-        return _Vec(_finish(out, series), vec.labels)
+        out = _finish(g, series, holt_winters_fold(F.col("__arr"), node.sf, node.tf))
+        return _Vec(out.filter(F.col("value").isNotNull()), vec.labels)
 
     # -- <agg>_over_time --------------------------------------------------
     def over_time(self, node: OverTime, metrics: DataFrame, label_cols):
@@ -375,23 +380,16 @@ class GridLeaf:
                 _absent_labels,
             )
 
-            seq = F.when(
-                F.col("__g_lo") <= F.col("__g_hi"),
-                F.sequence(
-                    F.col("__g_lo"), F.col("__g_hi"), F.lit(self.step_us)
-                ),
-            ).otherwise(F.array().cast("array<long>"))
-            grid = self.bounds.select(F.explode(seq).alias("__t_us"))
+            grid = _grid_frame(x.sparkSession, self.bounds, self.step_us)
             covered = x.select("__t_us").distinct()
-            out = grid.join(covered, "__t_us", "left_anti").withColumn(
-                "value", F.lit(1.0)
-            )
+            out = grid.join(covered, "__t_us", "left_anti")
             labels = _absent_labels(node.selector)
-            if labels:  # one batched pass (guide §plan-build, r17)
-                out = out.withColumns(
-                    {lbl: F.lit(val) for lbl, val in labels.items()}
-                )
-            return _Vec(_finish(out, sorted(labels)), frozenset(labels))
+            out = _finish(
+                out,
+                [F.lit(val).alias(lbl) for lbl, val in sorted(labels.items())],
+                F.lit(1.0),
+            )
+            return _Vec(out, frozenset(labels))
         from kafka_metrics_exporter_spark.promql.compiler import (
             _over_time_special,
         )
@@ -399,10 +397,8 @@ class GridLeaf:
         special = _over_time_special(node.op)
         if special is not None:
             core, post = special
-            out = x.groupBy(*series, "__t_us").agg(core.alias("__c")).select(
-                *series, "__t_us", post(F.col("__c")).alias("value")
-            )
-            return _Vec(_finish(out, series), vec.labels)
+            out = x.groupBy(*series, "__t_us").agg(core.alias("__c"))
+            return _Vec(_finish(out, series, post(F.col("__c"))), vec.labels)
         if node.op == "last":
             # groupBy has no frame order — pick the newest sample by its
             # timestamp explicitly (F.last would be partition-order luck)
@@ -415,10 +411,15 @@ class GridLeaf:
         return _Vec(_finish(out, series), vec.labels)
 
 
-def _literal_bounds(
-    spark, start, end, step_us: int
-) -> DataFrame:
-    """1-row bounds frame from an explicit request range — the grid a
+def _grid_frame(spark, bounds: Bounds, step_us: int) -> DataFrame:
+    """The grid instants as a 1-column ``__t_us`` frame."""
+    return spark.range(1).select(
+        F.explode(_grid_seq(*bounds, step_us)).alias("__t_us")
+    )
+
+
+def _literal_bounds(start, end, step_us: int) -> Bounds:
+    """Literal bounds from an explicit request range — the grid a
     dashboard passes (`start`/`end` as datetimes or epoch seconds):
     first aligned instant ≥ start, last aligned instant ≤ end."""
     import datetime as _dt
@@ -435,9 +436,7 @@ def _literal_bounds(
         raise ValueError("promql range: end must be >= start")
     g_lo = ((lo + step_us - 1) // step_us) * step_us
     g_hi = (hi // step_us) * step_us
-    return spark.range(1).select(
-        F.lit(g_lo).alias("__g_lo"), F.lit(g_hi).alias("__g_hi")
-    )
+    return F.lit(g_lo).cast("long"), F.lit(g_hi).cast("long")
 
 
 def evaluate_range(
@@ -461,7 +460,7 @@ def evaluate_range(
     if (start is None) != (end is None):
         raise ValueError("promql range: pass both start and end, or neither")
     if start is not None:
-        bounds = _literal_bounds(metrics.sparkSession, start, end, step_us)
+        bounds = _literal_bounds(start, end, step_us)
     else:
         bounds = _grid_bounds(metrics, step_us)
     label_cols = [c for c in metrics.columns if c not in _META_COLS]

@@ -68,6 +68,13 @@ def get_spark(
         # long-running service executing many distinct plans hits the
         # same thrash.  Entries are compiled classes (~KB each).
         .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # No Python call-site capture per Column/DataFrame call: with it
+        # on, PySpark 4.1 walks the stack, tries `import IPython` and
+        # makes several py4j round trips (a conf read, the origin set
+        # and clear) on EVERY functions.* call.  Analysis errors still
+        # name the offending column; only the Python file:line in the
+        # error context is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -4403,6 +4403,21 @@ def test_sampler_deterministic_topk(spark):
         ])["visState"])
 
 
+def test_terms_below_a_sampler_keeps_its_size_cut(spark):
+    """A sampler adds no key column, so the terms bucket below it ranks
+    among the keyed buckets above it (none): its size cut applies to the
+    whole sample and 2 of the 5 tags survive."""
+    d = spark.range(0, 300).withColumn("tag", (F.col("id") % 5).cast("string"))
+    out = compile_visualization(_vis8([
+        {"id": "1", "type": "sampler", "schema": "bucket",
+         "params": {"shard_size": 300, "seed": 9, "id_field": "id"}},
+        {"id": "2", "type": "terms", "schema": "bucket",
+         "params": {"field": "tag", "size": 2, "order": "desc",
+                    "orderBy": "_term", "customLabel": "tag"}},
+    ])).evaluate(d)
+    assert sorted(r["tag"] for r in out.collect()) == ["3", "4"]
+
+
 def test_ip_range_bucket(spark):
     """ES ip_range (round 15): from/to and CIDR-mask ranges over an
     IPv4 string column — half-open endpoints, overlap-explode, ES key

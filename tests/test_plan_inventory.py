@@ -19,15 +19,17 @@ CROSS_JOIN_OK = {"j1_cross_join"}
 
 # BroadcastNestedLoopJoin with a KNOWN broadcast-tiny side that is NOT
 # a global aggregate (those are recognized structurally by the
-# ``bnl_join_onerow`` fingerprint counter — VERDICT r7 item 1: the
-# grid-bounds expansions in promql/range_eval.py _expand_instants, the
-# tf-idf corpus-count N, and promql_rules_group's per-rule bounds all
-# have a ``keys=[]`` aggregate under the BroadcastExchange, so they no
-# longer need per-query entries here):
-# - promql_at_offset: the @-modifier expansion broadcasts the step-grid
-#   instants frame (promql/compiler.py _eval_at) — a sequence-literal
-#   projection of the 1-row bounds, bounded by span/step, but not
-#   itself a keys=[] aggregate node.
+# ``bnl_join_onerow`` fingerprint counter — VERDICT r7 item 1, e.g. the
+# tf-idf corpus-count N).  PromQL range-mode grid bounds are Columns
+# (literals, or scalar subqueries for a grid derived from the data), so
+# range-mode kernels, promql_rules_group's per-rule grids and the
+# range-mode @ pins add no join at all:
+# - promql_at_offset: its SAMPLE-INSTANT branch (`click @ T`) spreads
+#   each pinned point over the instant universe, which in that mode is
+#   the distinct sample timestamps (promql/compiler.py
+#   _at_every_instant) — a broadcast keyed aggregate, bounded by the
+#   number of instants, not a keys=[] node.  Its range-mode branch
+#   explodes the grid from the bound Columns and has no join.
 BNLJ_OK = CROSS_JOIN_OK | {
     "promql_at_offset",
 }

@@ -320,3 +320,135 @@ def test_instant_extrapolated_native_hist_raises(spark):
         compile_promql("histogram_count(rate(req[5m]))").evaluate(
             m, extrapolated_rate=True
         )
+
+
+# ---------------------------------------------------------------------------
+# Grid bounds as Columns: an explicit request range is two literals and
+# a grid derived from the data two scalar subqueries, so no range-mode
+# kernel joins or broadcasts, and a rate sorts each series once.
+# ---------------------------------------------------------------------------
+PANEL = "sum by (instance) (rate(m[5m]))"
+PANEL_START_S = BASE_US // 1_000_000 + 60
+PANEL_END_S = BASE_US // 1_000_000 + 500
+
+
+@pytest.fixture(scope="module")
+def panel_metrics(spark):
+    """Three counters scraped every 15 s for ten minutes."""
+    rows = [
+        ("m", inst, float(i * (k + 1)), i * 15)
+        for k, inst in enumerate(["a", "b", "c"])
+        for i in range(40)
+    ]
+    return spark.createDataFrame(
+        rows, "name string, instance string, value double, sec long"
+    ).select(
+        "name",
+        "instance",
+        F.timestamp_micros(F.col("sec") * 1_000_000 + F.lit(BASE_US)).alias("ts"),
+        "value",
+    )
+
+
+def _build_panel(metrics):
+    return compile_promql(PANEL).evaluate_range(
+        metrics, 15.0, start=PANEL_START_S, end=PANEL_END_S
+    )
+
+
+def test_explicit_range_rate_plan_has_no_join_and_one_sort(panel_metrics):
+    out = _build_panel(panel_metrics)
+    assert len(out.collect()) == 3 * 30  # 3 series × instants 60..495 s
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "BroadcastNestedLoopJoin" not in final, final
+    assert "BroadcastExchange" not in final, final
+    # the lag window and the reset-correcting cumulative window share
+    # one sort key (__s_us), so the series are sorted once
+    assert final.count("Sort [") == 1, final
+
+
+def test_panel_build_budget(spark, panel_metrics):
+    """Building the panel is plan construction only: a bounded number
+    of DataFrames (each one a py4j round trip plus an analysis) and no
+    Spark job."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    made: dict[int, DataFrame] = {}  # keeps each frame alive: ids stay unique
+    init = DataFrame.__init__
+
+    def counting(self, *args, **kwargs):
+        made[id(self)] = self
+        init(self, *args, **kwargs)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("panel-build-budget", "build only")
+    DataFrame.__init__ = counting
+    try:
+        _build_panel(panel_metrics)
+    finally:
+        DataFrame.__init__ = init
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(made) <= 9, len(made)
+    assert sc.statusTracker().getJobIdsForGroup("panel-build-budget") == []
+
+
+def _rows(df):
+    return sorted(
+        tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "rate(reqs[30s])",
+        "irate(reqs[30s])",
+        "resets(reqs[30s])",
+        "changes(reqs[30s])",
+        "deriv(reqs[30s])",
+        "holt_winters(reqs[30s], 0.5, 0.5)",
+        'absent_over_time(reqs{job="b"}[10s])',
+        "reqs @ start()",
+        "rate(reqs[30s] @ end())",
+        f"reqs @ {BASE_US // 1_000_000 + 55}",
+        "max_over_time(rate(reqs[20s])[40s:10s])",
+    ],
+)
+def test_literal_grid_matches_the_data_grid(counters, expr):
+    """The same grid given as literals (start/end = the data's aligned
+    extent, 0..90 s) and derived from the data by scalar subqueries
+    returns the same rows."""
+    plan = compile_promql(expr)
+    base_s = BASE_US // 1_000_000
+    derived = _rows(plan.evaluate_range(counters, step_seconds=10))
+    literal = _rows(
+        plan.evaluate_range(counters, step_seconds=10, start=base_s, end=base_s + 90)
+    )
+    assert derived, expr
+    assert literal == derived
+
+
+def test_get_spark_turns_call_site_capture_off(spark, monkeypatch):
+    """Column calls skip PySpark's per-call stack walk and py4j origin
+    updates."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    captured = []
+    monkeypatch.setattr(
+        utils, "_capture_call_site", lambda depth: captured.append(depth) or ""
+    )
+    F.col("value") + F.lit(1)
+    assert captured == []
+
+
+def test_unknown_column_still_names_the_column(panel_metrics):
+    """Without call-site capture an analysis error keeps its message:
+    building a panel over a frame that lacks ``value`` raises an
+    AnalysisException naming it."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="`value`"):
+        _build_panel(panel_metrics.drop("value"))

@@ -25,6 +25,12 @@ the way Prometheus's rule manager does —
   Firing/pending alerts are ALSO fed back as the synthetic
   ``ALERTS{alertname=…, alertstate=…}`` series, so downstream rules
   can query them (Prometheus exposes the same series).
+- **One walk, two clocks**: :func:`walk_group` is the in-group walk
+  for batch mode (a step grid, alert runs as gaps-and-islands) and for
+  the streaming alert pipeline (streaming/pipeline.py ``alert_rules``:
+  one instant per micro-batch, ``active_since`` carried between
+  batches by :func:`carry_alert_states`); both decide pending/firing
+  with :func:`alertstate`.
 - **Annotations** render the two template forms dashboards actually
   use — ``{{ $value }}`` and ``{{ $labels.<name> }}`` — JVM-side as a
   ``concat`` of literals and columns (full Go templating is out of
@@ -44,12 +50,14 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_metrics_exporter_spark.promql.compiler import (
     _META_COLS,
+    PromQLPlan,
     compile_promql,
 )
 from kafka_metrics_exporter_spark.promql.parser import _duration_seconds
@@ -68,28 +76,28 @@ def _dur(value, what: str) -> float:
     text = str(value).strip()
     if not text:
         return 0.0
-    total, pos = 0.0, 0
-    for m in re.finditer(r"(\d+(?:\.\d+)?)(ms|[smhdwy])", text):
-        if m.start() != pos:
-            break
-        total += _duration_seconds(m.group(1) + ("s" if m.group(2) == "y" else m.group(2)))
-        if m.group(2) == "y":
-            total += float(m.group(1)) * (31536000.0 - 1.0)
-        pos = m.end()
-    if pos != len(text):
-        raise ValueError(f"promql rules: bad {what} duration {value!r}")
-    return total
+    try:
+        return _duration_seconds(text)
+    except SyntaxError:
+        raise ValueError(f"promql rules: bad {what} duration {value!r}") from None
+
+
+class _Rule:
+    @cached_property
+    def plan(self) -> PromQLPlan:
+        """The compiled ``expr``, built once per rule."""
+        return compile_promql(self.expr)
 
 
 @dataclass(frozen=True)
-class RecordingRule:
+class RecordingRule(_Rule):
     record: str
     expr: str
     labels: tuple[tuple[str, str], ...] = ()
 
 
 @dataclass(frozen=True)
-class AlertingRule:
+class AlertingRule(_Rule):
     alert: str
     expr: str
     for_seconds: float = 0.0
@@ -142,7 +150,6 @@ def parse_rule_groups(yaml_text: str) -> list[RuleGroup]:
             expr = r.get("expr")
             if not expr:
                 raise ValueError(f"promql rules: rule in group {name!r} has no expr")
-            compile_promql(str(expr))  # fail fast on bad PromQL
             if has_record:
                 rec = str(r["record"])
                 if not _METRIC_NAME_RE.match(rec):
@@ -152,25 +159,23 @@ def parse_rule_groups(yaml_text: str) -> list[RuleGroup]:
                         f"promql rules: record {rec!r} cannot carry "
                         f"for/annotations"
                     )
-                rules.append(
-                    RecordingRule(
-                        record=rec,
-                        expr=str(expr),
-                        labels=_labels_tuple(r.get("labels"), f"record {rec!r}"),
-                    )
+                rule = RecordingRule(
+                    record=rec,
+                    expr=str(expr),
+                    labels=_labels_tuple(r.get("labels"), f"record {rec!r}"),
                 )
             else:
-                rules.append(
-                    AlertingRule(
-                        alert=str(r["alert"]),
-                        expr=str(expr),
-                        for_seconds=_dur(r.get("for"), f"alert {r['alert']!r}"),
-                        labels=_labels_tuple(r.get("labels"), f"alert {r['alert']!r}"),
-                        annotations=_labels_tuple(
-                            r.get("annotations"), f"alert {r['alert']!r} annotations"
-                        ),
-                    )
+                rule = AlertingRule(
+                    alert=str(r["alert"]),
+                    expr=str(expr),
+                    for_seconds=_dur(r.get("for"), f"alert {r['alert']!r}"),
+                    labels=_labels_tuple(r.get("labels"), f"alert {r['alert']!r}"),
+                    annotations=_labels_tuple(
+                        r.get("annotations"), f"alert {r['alert']!r} annotations"
+                    ),
                 )
+            rule.plan  # noqa: B018 — compile now: bad PromQL fails at load
+            rules.append(rule)
         groups.append(
             RuleGroup(
                 name=str(name),
@@ -251,20 +256,55 @@ def _union_series(metrics: DataFrame, series: DataFrame) -> DataFrame:
     )
 
 
+def alertstate(now: Column, since: Column, for_seconds: float) -> Column:
+    """Prometheus's pending→firing rule (rules/alerting.go): an alert
+    active since ``since`` fires once ``now − since ≥ for``; both
+    instants are epoch microseconds."""
+    for_us = int(round(for_seconds * 1_000_000))
+    return F.when(now - since >= F.lit(for_us), F.lit("firing")).otherwise(
+        F.lit("pending")
+    )
+
+
+def _alert_labels(out: DataFrame, rule: AlertingRule) -> list[str]:
+    """The labels that key an alert's series: the result's labels minus
+    the columns the rule writes itself.  Those may ride in from an
+    earlier alert's ``ALERTS`` series; Prometheus overwrites them on the
+    alert's output, and a NULL feedback label in the key would split or
+    drop the series' state."""
+    written = {
+        "alertstate",
+        *(k for k, _ in rule.labels),
+        *(f"annotation_{k}" for k, _ in rule.annotations),
+    }
+    return [c for c in out.columns if c not in _META_COLS and c not in written]
+
+
+def _annotate(states: DataFrame, rule: AlertingRule, labels: list[str]) -> DataFrame:
+    """Render the rule's annotations; ``$labels`` are the expression's
+    labels, not the rule's static ones (rules/alerting.go expands the
+    templates from the sample's metric)."""
+    if not rule.annotations:
+        return states
+    return states.withColumns({
+        f"annotation_{k}": render_template(v, set(labels))
+        for k, v in rule.annotations
+    })
+
+
 def evaluate_alert_states(
-    out: DataFrame,
-    step_seconds: float,
-    for_seconds: float,
+    out: DataFrame, rule: AlertingRule, step_seconds: float
 ) -> DataFrame:
     """Pending→firing on the evaluation grid: gaps-and-islands per
     series.  ``run start`` is the newest instant whose predecessor is
     missing (gap > step); the element fires once ``ts − run_start ≥
     for``.  One window per full-label-set series — the same keying as
     Prometheus's active-alert map."""
-    label_cols = [c for c in out.columns if c not in _META_COLS]
+    labels = _alert_labels(out, rule)
+    if rule.labels:
+        out = out.withColumns({k: F.lit(v) for k, v in rule.labels})
     step_us = int(round(step_seconds * 1_000_000))
-    for_us = int(round(for_seconds * 1_000_000))
-    w = Window.partitionBy(*[F.col(c) for c in label_cols]).orderBy(
+    w = Window.partitionBy(*[F.col(c) for c in labels]).orderBy(
         F.unix_micros(F.col("ts"))
     )
     us = F.unix_micros(F.col("ts"))
@@ -276,15 +316,61 @@ def evaluate_alert_states(
     run_start = F.max(F.col("__run_mark")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        df.withColumn(
-            "alertstate",
-            F.when(us - run_start >= F.lit(for_us), F.lit("firing")).otherwise(
-                F.lit("pending")
-            ),
+    states = df.withColumn(
+        "alertstate", alertstate(us, run_start, rule.for_seconds)
+    ).drop("__run_mark")
+    return _annotate(states, rule, labels)
+
+
+def carry_alert_states(
+    out: DataFrame, rule: AlertingRule, prior: DataFrame | None, now_us: int
+) -> tuple[DataFrame, list[str]]:
+    """One evaluation cycle of an alert whose state is carried between
+    cycles: each series' newest sample is the cycle's element; a series
+    found in ``prior`` (labels…, active_since_us) keeps its
+    ``active_since``, a new one starts at ``now_us``, and a series
+    missing from the cycle simply drops out — Prometheus's
+    reset-on-missing-evaluation.  ``prior`` is None before the first
+    cycle.  Returns the alert frame (labels…, static labels, ts, value,
+    active_since_us, alertstate, annotation_*) and its key labels."""
+    labels = _alert_labels(out, rule)
+    snap = (
+        out.groupBy(*labels)
+        .agg(
+            F.max(
+                F.struct(
+                    F.unix_micros(F.col("ts")).alias("__us"),
+                    F.col("value").alias("__v"),
+                )
+            ).alias("__p")
         )
-        .drop("__run_mark")
+        # a label-less alert groups by nothing, and that yields one
+        # all-NULL row over an empty result: no sample, no element
+        .filter(F.col("__p").isNotNull())
     )
+    since = F.lit(None).cast("long")
+    if prior is not None:
+        # null-safe equality: a series may legitimately carry NULL label
+        # values, and a plain equi-join would never match them and
+        # silently reset active_since; a label-less alert has one
+        # element, so its join needs no condition
+        on = [F.col(f"__s.{c}").eqNullSafe(F.col(f"__pr.{c}")) for c in labels]
+        snap = snap.alias("__s").join(
+            prior.alias("__pr"), on=on or None, how="left"
+        ).select("__s.*", F.col("__pr.active_since_us"))
+        since = F.col("active_since_us")
+    states = snap.select(
+        *labels,
+        *[F.lit(v).alias(k) for k, v in rule.labels],
+        F.timestamp_micros(F.col("__p.__us")).alias("ts"),
+        F.col("__p.__v").alias("value"),
+        F.coalesce(since, F.lit(now_us)).alias("active_since_us"),
+    )
+    states = states.withColumn(
+        "alertstate",
+        alertstate(F.lit(now_us), F.col("active_since_us"), rule.for_seconds),
+    )
+    return _annotate(states, rule, labels), labels
 
 
 @dataclass(frozen=True)
@@ -292,6 +378,38 @@ class GroupResult:
     metrics: DataFrame  # input ∪ recorded series ∪ ALERTS
     recorded: dict  # record name -> series DataFrame
     alerts: dict  # alert name -> state DataFrame (labels…, ts, value, alertstate, annotation_*)
+
+
+def walk_group(
+    group: RuleGroup, metrics: DataFrame, evaluate, alert_states
+) -> GroupResult:
+    """The rule manager's in-group walk (rules/manager.go): rules run in
+    order, each over ``metrics`` plus the series recorded before it and
+    the ``ALERTS{alertname, alertstate}`` series of the alerts before
+    it.  ``evaluate(plan, frame)`` evaluates a compiled expr (labels…,
+    ts, value); ``alert_states(rule, out)`` turns an alerting rule's
+    result into its alert frame (labels…, ts, value, alertstate,
+    annotation_*).  Batch mode walks a step grid, the streaming alert
+    pipeline one instant per micro-batch."""
+    cur = metrics
+    recorded: dict[str, DataFrame] = {}
+    alerts: dict[str, DataFrame] = {}
+    for rule in group.rules:
+        out = evaluate(rule.plan, cur)
+        if isinstance(rule, RecordingRule):
+            series = _as_series(out, rule.record, rule.labels, list(cur.columns))
+            recorded[rule.record] = series
+        else:
+            states = alerts[rule.alert] = alert_states(rule, out)
+            series = _as_series(
+                states.drop(*[f"annotation_{k}" for k, _ in rule.annotations])
+                .withColumn("value", F.lit(1.0)),
+                "ALERTS",
+                (("alertname", rule.alert),),
+                list(cur.columns),
+            )
+        cur = _union_series(cur, series)
+    return GroupResult(metrics=cur, recorded=recorded, alerts=alerts)
 
 
 def evaluate_group(
@@ -306,39 +424,12 @@ def evaluate_group(
     default), sequentially so later rules see earlier outputs."""
     step = step_seconds or group.interval_seconds or 60.0
     kw = _grid_kwargs(start, end)
-    cur = metrics
-    recorded: dict[str, DataFrame] = {}
-    alerts: dict[str, DataFrame] = {}
-    for rule in group.rules:
-        plan = compile_promql(rule.expr)
-        out = plan.evaluate_range(cur, step, **kw)
-        if isinstance(rule, RecordingRule):
-            series = _as_series(out, rule.record, rule.labels, list(cur.columns))
-            recorded[rule.record] = series
-            cur = _union_series(cur, series)
-        else:
-            if rule.labels:
-                out = out.withColumns({k: F.lit(v) for k, v in rule.labels})
-            states = evaluate_alert_states(out, step, rule.for_seconds)
-            label_set = {c for c in states.columns if c not in _META_COLS} - {
-                "alertstate"
-            }
-            if rule.annotations:
-                states = states.withColumns({
-                    f"annotation_{k}": render_template(v, label_set)
-                    for k, v in rule.annotations
-                })
-            alerts[rule.alert] = states
-            alert_series = _as_series(
-                states.withColumn("alertname", F.lit(rule.alert))
-                .withColumn("value", F.lit(1.0))
-                .drop(*[c for c in states.columns if c.startswith("annotation_")]),
-                "ALERTS",
-                (),
-                list(cur.columns),
-            )
-            cur = _union_series(cur, alert_series)
-    return GroupResult(metrics=cur, recorded=recorded, alerts=alerts)
+    return walk_group(
+        group,
+        metrics,
+        lambda plan, cur: plan.evaluate_range(cur, step, **kw),
+        lambda rule, out: evaluate_alert_states(out, rule, step),
+    )
 
 
 def evaluate_rules(

@@ -15,6 +15,8 @@ cleanup on windowed aggregations, and it pins the late-data policy.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -184,6 +186,27 @@ def run_pipeline_once(
     q.awaitTermination()
 
 
+def _for_each_batch(stream: DataFrame, body, checkpoint: str, trigger: dict | None):
+    """Start ``stream`` with ``body(df, batch_id)`` run on each
+    micro-batch, persisted for the body's duration so every plan over it
+    shares one source scan; the batch is released even when the body
+    raises.  Returns the started StreamingQuery."""
+
+    def batch_fn(df: DataFrame, batch_id: int) -> None:
+        df = df.persist()
+        try:
+            body(df, batch_id)
+        finally:
+            df.unpersist()
+
+    return (
+        stream.writeStream.trigger(**(trigger or {"availableNow": True}))
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(batch_fn)
+        .start()
+    )
+
+
 def promql_panels(
     stream: DataFrame,
     exprs: dict[str, str],
@@ -247,31 +270,18 @@ def promql_panels(
             kw["end"] = hi
         return kw
 
-    def batch_fn(df: DataFrame, batch_id: int) -> None:
-        df = df.persist()
-        try:
-            if step_seconds is None:
-                for name, plan in plans.items():
-                    emit(name, plan.evaluate(df), batch_id)
-                return
-            kw = _range_kwargs(df)
-            if kw is None:
-                return
+    def panels(df: DataFrame, batch_id: int) -> None:
+        if step_seconds is None:
             for name, plan in plans.items():
-                emit(
-                    name,
-                    plan.evaluate_range(df, step_seconds, **kw),
-                    batch_id,
-                )
-        finally:
-            df.unpersist()
+                emit(name, plan.evaluate(df), batch_id)
+            return
+        kw = _range_kwargs(df)
+        if kw is None:
+            return
+        for name, plan in plans.items():
+            emit(name, plan.evaluate_range(df, step_seconds, **kw), batch_id)
 
-    return (
-        stream.writeStream.trigger(**(trigger or {"availableNow": True}))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(batch_fn)
-        .start()
-    )
+    return _for_each_batch(stream, panels, checkpoint, trigger)
 
 
 def kibana_panels(
@@ -301,20 +311,11 @@ def kibana_panels(
         for name, vis in visualizations.items()
     }
 
-    def batch_fn(df: DataFrame, batch_id: int) -> None:
-        df = df.persist()
-        try:
-            for name, plan in plans.items():
-                emit(name, plan.evaluate(df, **evaluate_kwargs), batch_id)
-        finally:
-            df.unpersist()
+    def panels(df: DataFrame, batch_id: int) -> None:
+        for name, plan in plans.items():
+            emit(name, plan.evaluate(df, **evaluate_kwargs), batch_id)
 
-    return (
-        stream.writeStream.trigger(**(trigger or {"availableNow": True}))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(batch_fn)
-        .start()
-    )
+    return _for_each_batch(stream, panels, checkpoint, trigger)
 
 
 def streaming_dedup(
@@ -397,6 +398,120 @@ def cascade_rollup(
     return fine_df, coarse_df
 
 
+# A sane alert's active-series set is broadcast-tiny, but it is
+# unbounded in principle: above this many rows (tens of MB of label
+# strings) the state join drops its broadcast hint and lets AQE pick the
+# strategy, and the state write keeps its parallel file fan-out.
+MAX_BROADCAST_STATE_ROWS = 1_000_000
+# A replayed batch re-reads the version before its own, so that one must
+# survive the batch's write: two versions is the least that keeps a
+# replay idempotent.
+KEEP_STATE_VERSIONS = 2
+
+_STATE_VERSION_RE = re.compile(r"v(\d+)-(\d+)")
+
+
+class _AlertStateStore:
+    """One alert's state — one row per ACTIVE series (labels…,
+    active_since_us) — as one parquet directory per micro-batch,
+    ``<base>/v<batch_id>-<rows>``.  Listing, reading and pruning go
+    through the Hadoop FileSystem API, so ``base`` may use any scheme the
+    cluster's Hadoop conf resolves (``hdfs://``, ``s3a://``, …).  The
+    row count in the name lets the next cycle pick broadcast or shuffle
+    for its state join without a counting job."""
+
+    def __init__(self, spark: SparkSession, base: str):
+        self.spark = spark
+        self.base = base
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self.fs = self._path(base).getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def _versions(self) -> list[tuple[int, int, str]]:
+        """``(batch_id, rows, path)`` per version, oldest first; entries
+        not named ``v<batch_id>-<rows>`` are ignored."""
+        base = self._path(self.base)
+        if not self.fs.exists(base):
+            return []
+        found = []
+        for st in self.fs.listStatus(base):
+            m = _STATE_VERSION_RE.fullmatch(st.getPath().getName())
+            if m:
+                found.append((int(m[1]), int(m[2]), st.getPath().toString()))
+        return sorted(found)
+
+    def _delete(self, path: str) -> None:
+        self.fs.delete(self._path(path), True)
+
+    def read(self, batch_id: int) -> DataFrame | None:
+        """The newest version STRICTLY BEFORE ``batch_id`` (broadcast
+        while small), or None.  The bound makes a replayed micro-batch
+        idempotent: a batch that crashed after writing its state but
+        before the checkpoint commit must not re-read its own output as
+        the prior state, which would double-advance the pending→firing
+        clocks."""
+        older = [v for v in self._versions() if v[0] < batch_id]
+        if not older:
+            return None
+        _, rows, path = older[-1]
+        df = self.spark.read.parquet(path)
+        return F.broadcast(df) if rows <= MAX_BROADCAST_STATE_ROWS else df
+
+    def write(self, df: DataFrame, batch_id: int, rows: int) -> None:
+        """Replace this batch's version, then keep the newest
+        ``KEEP_STATE_VERSIONS``.  A replayed batch's earlier attempt may
+        have had another row count, hence another directory name; left
+        in place, it would tie with this one in the version order."""
+        for bid, _, path in self._versions():
+            if bid == batch_id:
+                self._delete(path)
+        # the frame inherits the cycle's shuffle partitioning: a
+        # broadcast-sized state would scatter into as many near-empty
+        # files, re-listed and re-opened every cycle
+        if rows <= MAX_BROADCAST_STATE_ROWS:
+            df = df.coalesce(1)
+        df.write.mode("overwrite").parquet(f"{self.base}/v{batch_id}-{rows}")
+        for _, _, path in self._versions()[:-KEEP_STATE_VERSIONS]:
+            self._delete(path)
+
+
+def _alert_group(
+    group, df: DataFrame, batch_id: int, hw: int, state_dir: str, emit
+) -> None:
+    """One evaluation cycle of a rule group over the batch ``df`` whose
+    event-time high-water mark is ``hw`` (epoch µs)."""
+    from kafka_metrics_exporter_spark.promql.rules import (
+        carry_alert_states,
+        walk_group,
+    )
+
+    # each alert frame stays cached until the END of the group: the
+    # ALERTS series built from it feeds the group's later rules
+    persisted: list[DataFrame] = []
+
+    def alert_states(rule, out: DataFrame) -> DataFrame:
+        store = _AlertStateStore(
+            df.sparkSession,
+            f"{state_dir}/" + f"{group.name}/{rule.alert}".replace(" ", "_"),
+        )
+        states, labels = carry_alert_states(out, rule, store.read(batch_id), hw)
+        # ONE persisted frame and ONE count per alert: the emitted result
+        # and the new state are both projections of it
+        states = states.persist()
+        persisted.append(states)
+        store.write(
+            states.select(*labels, "active_since_us"), batch_id, states.count()
+        )
+        result = states.drop("active_since_us")
+        emit(group.name, rule.alert, result, batch_id)
+        return result
+
+    try:
+        walk_group(group, df, lambda plan, cur: plan.evaluate(cur), alert_states)
+    finally:
+        for p in persisted:
+            p.unpersist()
+
+
 def alert_rules(
     stream: DataFrame,
     rules_yaml: str,
@@ -404,8 +519,6 @@ def alert_rules(
     checkpoint: str,
     state_dir: str,
     trigger: dict | None = None,
-    keep_state_versions: int = 2,
-    max_broadcast_state_rows: int = 1_000_000,
 ):
     """Prometheus alerting on the live stream (round 7): each
     micro-batch is one rule-manager evaluation cycle — the trigger
@@ -414,315 +527,34 @@ def alert_rules(
     must CARRY ACROSS batches where the batch-mode evaluator
     (promql/rules.py) walks a grid.
 
-    Per batch, per group (sequential, like batch mode): recording rules
-    evaluate in instant mode and union into the cycle's frame; each
-    alerting rule then
+    Each group runs through ``promql.rules.walk_group``, the in-group
+    walk batch mode uses too (recorded series and ``ALERTS`` feed later
+    rules), with instant evaluation over the batch.  An alert's states
+    come from ``promql.rules.carry_alert_states``: a series keeps the
+    ``active_since`` of the previous cycle's state, a new series starts
+    at the batch's event-time high-water mark (its max sample ts, one
+    1-row agg per batch), and a series absent from the cycle drops out.
+    The state lives in ``_AlertStateStore``, one versioned parquet per
+    alert under ``state_dir/<group>/<alert>/``; ``state_dir`` may use
+    any Hadoop FileSystem scheme.
 
-    1. evaluates its expr and keeps each label set's NEWEST sample —
-       one element per series, the cycle's evaluation snapshot;
-    2. joins the (tiny) persisted state — one row per active series —
-       to recover ``active_since``: present-in-state series keep their
-       first-seen evaluation time, new series anchor at this batch's
-       event-time high-water mark (one 1-row agg per batch, the same
-       watermark proxy promql_panels uses);
-    3. fires once ``hw − active_since ≥ for`` — and a series ABSENT
-       from this cycle's snapshot simply drops out of the new state,
-       which is exactly Prometheus's reset-on-missing-evaluation;
-    4. rewrites the state under a batch-versioned directory
-       (``state_dir/<group>/<alert>/v<batch_id>``) so a replayed batch
-       is idempotent and a crash between write and commit re-reads the
-       previous version; only the newest ``keep_state_versions`` are
-       retained.
-
-    State is label-keyed and distributed (a parquet per alert — one row
-    per ACTIVE series, not per sample), every step is a DataFrame op,
-    and nothing but the 1-row high-water agg touches the driver.
     ``emit(group, alert, states_df, batch_id)`` receives the cycle's
     alert frame (labels…, ts, value, alertstate, annotation_*).
-
-    ``state_dir`` goes through the Hadoop FileSystem API (VERDICT r7
-    item 4), so it may be ``hdfs://``, ``s3a://``, or any scheme the
-    cluster's Hadoop conf resolves — version listing and pruning are
-    ``FileSystem.listStatus``/``delete``, never driver-local POSIX
-    calls.  Each version directory is named ``v<batch_id>-<rows>``; the
-    recorded row count lets the next cycle decide broadcast-vs-shuffle
-    for the state join WITHOUT an extra counting job: a sane alert's
-    active-series set is broadcast-tiny, but it is unbounded in
-    principle, so above ``max_broadcast_state_rows`` (default 1 M rows
-    — tens of MB of label strings) the join falls back to a plain
-    equi-join and lets AQE pick the strategy."""
-    from kafka_metrics_exporter_spark.promql import compile_promql
-    from kafka_metrics_exporter_spark.promql.rules import (
-        AlertingRule,
-        _as_series,
-        _union_series,
-        parse_rule_groups,
-        render_template,
-    )
+    Returns the started StreamingQuery."""
+    from kafka_metrics_exporter_spark.promql.rules import parse_rule_groups
 
     groups = parse_rule_groups(rules_yaml)
-    plans = {
-        (g.name, i): compile_promql(r.expr)
-        for g in groups
-        for i, r in enumerate(g.rules)
-    }
 
-    def _state_base(group: str, alert: str) -> str:
-        safe = f"{group}/{alert}".replace(" ", "_")
-        return f"{state_dir}/{safe}"
+    def cycle(df: DataFrame, batch_id: int) -> None:
+        # the batch is persisted already, so this 1-row agg is also the
+        # cache materialization every rule then reads
+        hw = df.agg(F.max(F.unix_micros(F.col("ts"))).alias("hw")).first()["hw"]
+        if hw is None:  # empty cycle: no evaluation, state untouched
+            return
+        for group in groups:
+            _alert_group(group, df, batch_id, hw, state_dir, emit)
 
-    def _list_versions(spark, base: str):
-        """``(fs, [(batch_id, rows, path_str), …])`` sorted by batch id
-        — via ``Path.getFileSystem`` on the session's Hadoop conf, so
-        any configured scheme works.  ``rows`` is parsed from the
-        ``v<batch>-<rows>`` directory name (None for a legacy
-        ``v<batch>`` layout)."""
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(base)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(path):
-            return fs, []
-        versions = []
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if not name.startswith("v"):
-                continue
-            bid, _, rows = name[1:].partition("-")
-            if not bid.isdigit():
-                continue
-            versions.append(
-                (int(bid), int(rows) if rows.isdigit() else None,
-                 st.getPath().toString())
-            )
-        versions.sort(key=lambda t: t[0])
-        return fs, versions
-
-    def _read_state(spark, group: str, alert: str, batch_id: int):
-        """Newest state version STRICTLY BEFORE ``batch_id`` →
-        ``(DataFrame, row_count)`` or ``(None, 0)``.  The bound makes a
-        replayed micro-batch idempotent: without it, a batch that
-        crashed after writing its state but before the checkpoint
-        commit would re-run READING ITS OWN pre-crash output as the
-        prior state, double-advancing the pending→firing clocks
-        (code-review r9).  A legacy unnamed-count version pays one tiny
-        counting job; the normal path is metadata-only."""
-        _, versions = _list_versions(spark, _state_base(group, alert))
-        versions = [v for v in versions if v[0] < batch_id]
-        if not versions:
-            return None, 0
-        _, rows, path = versions[-1]
-        df = spark.read.parquet(path)
-        return df, rows if rows is not None else df.count()
-
-    def _write_state(
-        df: DataFrame, group: str, alert: str, batch_id: int, rows: int
-    ):
-        spark = df.sparkSession
-        base = _state_base(group, alert)
-        fs, versions = _list_versions(spark, base)
-        jvm = spark._jvm
-        # a REPLAYED batch replaces its own version: a pre-crash
-        # attempt with a different row count lands in a different dir
-        # name (v<batch>-<rows>), and a same-bid sibling would tie in
-        # the version sort nondeterministically while consuming the
-        # prune budget (code-review r9)
-        for bid, _, path in versions:
-            if bid == batch_id:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-        # size-adaptive file fan-out (optimization r17, guide §6): the
-        # state frame inherits the cycle's shuffle partitioning (cpus-
-        # many), so a handful of active series scattered into a
-        # 32-task write job and as many near-empty files, re-listed
-        # and re-opened every cycle.  The row count is already known
-        # here; below the broadcast threshold (tens of MB of label
-        # strings at most) one file is strictly better — above it,
-        # keep the parallel write.
-        if rows <= max_broadcast_state_rows:
-            df = df.coalesce(1)
-        df.write.mode("overwrite").parquet(f"{base}/v{batch_id}-{rows}")
-        fs, versions = _list_versions(spark, base)
-        keep = {v[0] for v in versions[-keep_state_versions:]}
-        for bid, _, path in versions:
-            if bid not in keep:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-
-    def batch_fn(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        # persist FIRST so the 1-row high-water agg doubles as the cache
-        # materialization — every rule evaluation then reads the cached
-        # batch instead of paying a second source scan (optimization
-        # r16, guide §1.2/§5: one pass per cycle over the batch)
-        df = df.persist()
-        # the current group's persisted rule frames; the finally below
-        # releases them when a rule raises mid-group
-        group_persisted: list[DataFrame] = []
-        try:
-            hw = df.agg(
-                F.max(F.unix_micros(F.col("ts"))).alias("hw")
-            ).first()["hw"]
-            if hw is None:  # empty cycle: no evaluation, state untouched
-                return
-            for g in groups:
-                cur = df
-                # each rule's persisted cycle frame stays cached until
-                # the END of the group: the ALERTS feedback series built
-                # from it is consumed by LATER rules in the group, and
-                # unpersisting per-rule forced those consumers to
-                # recompute the full snap join against a state parquet
-                # _write_state may already have pruned (ADVICE r16)
-                for i, rule in enumerate(g.rules):
-                    out = plans[(g.name, i)].evaluate(cur)
-                    if not isinstance(rule, AlertingRule):
-                        series = _as_series(
-                            out, rule.record, rule.labels, list(cur.columns)
-                        )
-                        cur = _union_series(cur, series)
-                        continue
-                    # the rule's OWN output columns replace any
-                    # same-named labels riding in from an earlier
-                    # alert's ALERTS feedback union — Prometheus
-                    # overwrites alertstate and the rule labels on the
-                    # alert's output, and keeping them in label_cols
-                    # duplicated the result columns AND put NULL-valued
-                    # feedback labels into the state key, where a plain
-                    # equi-join dropped the state every cycle
-                    # (code-review r11: alert-after-alert groups)
-                    reserved = {
-                        "alertstate",
-                        *(k for k, _ in rule.labels),
-                        *(f"annotation_{k}" for k, _ in rule.annotations),
-                    }
-                    label_cols = [
-                        c
-                        for c in out.columns
-                        if c not in ("ts", "value") and c not in reserved
-                    ]
-                    # the cycle's snapshot: newest sample per series
-                    snap = out.groupBy(*label_cols).agg(
-                        F.max(
-                            F.struct(
-                                F.unix_micros(F.col("ts")).alias("__us"),
-                                F.col("value").alias("__v"),
-                            )
-                        ).alias("__p")
-                    )
-                    prior, prior_rows = _read_state(
-                        spark, g.name, rule.alert, batch_id
-                    )
-                    if prior is not None and label_cols:
-                        # cardinality guard: the active-series set is
-                        # broadcast-tiny for sane alerts but unbounded
-                        # in principle — above the threshold, skip the
-                        # broadcast hint and let AQE pick the strategy
-                        side = (
-                            F.broadcast(prior)
-                            if prior_rows <= max_broadcast_state_rows
-                            else prior
-                        )
-                        # null-safe equality: a series may legitimately
-                        # carry NULL label values (e.g. alertname on
-                        # non-ALERTS series when the group unions
-                        # feedback) — a plain equi-join would never
-                        # match them and silently reset active_since
-                        sn, pr = snap.alias("__s"), side.alias("__pr")
-                        cond = None
-                        for c in label_cols:
-                            leg = F.col(f"__s.{c}").eqNullSafe(
-                                F.col(f"__pr.{c}")
-                            )
-                            cond = leg if cond is None else (cond & leg)
-                        snap = sn.join(pr, on=cond, how="left").select(
-                            "__s.*", F.col("__pr.active_since_us")
-                        )
-                    elif prior is not None:
-                        # label-less alert: state is a single row
-                        snap = snap.crossJoin(F.broadcast(prior))
-                    else:
-                        snap = snap.withColumn(
-                            "active_since_us", F.lit(None).cast("long")
-                        )
-                    state = snap.select(
-                        *label_cols,
-                        F.col("__p.__us").alias("__us"),
-                        F.col("__p.__v").alias("value"),
-                        F.coalesce(
-                            F.col("active_since_us"), F.lit(hw)
-                        ).alias("active_since_us"),
-                    )
-                    for_us = int(round(rule.for_seconds * 1_000_000))
-                    states = state.withColumn(
-                        "alertstate",
-                        F.when(
-                            F.lit(hw) - F.col("active_since_us") >= for_us,
-                            F.lit("firing"),
-                        ).otherwise(F.lit("pending")),
-                    )
-                    # batched adds: two analysis passes, not
-                    # |labels| + |annotations| (guide §plan-build, r17)
-                    if rule.labels:
-                        states = states.withColumns(
-                            {k: F.lit(v) for k, v in rule.labels}
-                        )
-                    if rule.annotations:
-                        states = states.withColumns({
-                            f"annotation_{k}": render_template(
-                                v, set(label_cols)
-                            )
-                            for k, v in rule.annotations
-                        })
-                    # ONE persisted frame + ONE count materializes the
-                    # cycle BEFORE the state rewrite; the emitted result
-                    # and the new state are both narrow projections of
-                    # it (optimization r16: the previous shape persisted
-                    # and counted result and new_state separately — two
-                    # counting jobs and a recomputed snap join per rule
-                    # per cycle for the same rows)
-                    states = states.persist()
-                    group_persisted.append(states)
-                    n_state = states.count()
-                    result = states.select(
-                        *label_cols,
-                        *[k for k, _ in rule.labels],
-                        F.timestamp_micros(F.col("__us")).alias("ts"),
-                        "value",
-                        "alertstate",
-                        *[f"annotation_{k}" for k, _ in rule.annotations],
-                    )
-                    new_state = states.select(
-                        *label_cols, "active_since_us"
-                    )
-                    _write_state(
-                        new_state, g.name, rule.alert, batch_id, n_state
-                    )
-                    emit(g.name, rule.alert, result, batch_id)
-                    # feed ALERTS back for later rules in the group
-                    alert_series = _as_series(
-                        states.select(
-                            *label_cols,
-                            *[k for k, _ in rule.labels],
-                            F.timestamp_micros(F.col("__us")).alias("ts"),
-                            F.lit(1.0).alias("value"),
-                            "alertstate",
-                        ).withColumn("alertname", F.lit(rule.alert)),
-                        "ALERTS",
-                        (),
-                        list(cur.columns),
-                    )
-                    cur = _union_series(cur, alert_series)
-                for p in group_persisted:
-                    p.unpersist()
-                group_persisted.clear()
-        finally:
-            for p in group_persisted:
-                p.unpersist()
-            df.unpersist()
-
-    return (
-        stream.writeStream.trigger(**(trigger or {"availableNow": True}))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(batch_fn)
-        .start()
-    )
+    return _for_each_batch(stream, cycle, checkpoint, trigger)
 
 
 def replay_windowed_rollup(

@@ -471,6 +471,50 @@ def test_kibana_panels_on_live_stream(spark, tmp_path):
     }
 
 
+@pytest.mark.parametrize("runner", ["promql_panels", "kibana_panels"])
+def test_panel_emit_error_releases_batch(spark, tmp_path, runner):
+    """An ``emit`` that raises stops the query, and the micro-batch the
+    panels shared is released all the same."""
+    import json
+
+    from pyspark.errors import StreamingQueryException
+
+    from kafka_metrics_exporter_spark.streaming import pipeline
+
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [("m", "2024-01-01 00:00:00", 1.0, "broker")],
+        "name string, ts_s string, value double, component string",
+    ).write.parquet(str(src / "b0"))
+    stream = (
+        spark.readStream.schema(
+            "name string, ts_s string, value double, component string"
+        )
+        .parquet(str(src / "b*"))
+        .selectExpr("*", "cast(ts_s as timestamp) as ts")
+    )
+    panels = (
+        {"p": "sum(m)"}
+        if runner == "promql_panels"
+        else {"p": {"visState": json.dumps({
+            "title": "t", "type": "table",
+            "aggs": [{"id": "1", "type": "count", "schema": "metric"}],
+        })}}
+    )
+
+    def emit(name, df, batch_id):
+        raise RuntimeError("emit failed")
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    q = getattr(pipeline, runner)(
+        stream, panels, emit, checkpoint=str(tmp_path / "ckpt")
+    )
+    with pytest.raises(StreamingQueryException, match="emit failed"):
+        q.awaitTermination(120)
+    assert persistent().size() == before
+
+
 def test_kibana_pipeline_aggs_on_live_stream(spark, tmp_path):
     """Round 8: the new pipeline aggs (cumulative_sum over a
     date_histogram, sibling sum_bucket) compose with kibana_panels —

@@ -131,7 +131,8 @@ def test_state_dir_keeps_bounded_versions(spark, tmp_path):
     import glob
 
     versions = glob.glob(str(tmp_path / "state" / "live" / "Hot" / "v*"))
-    assert 1 <= len(versions) <= 2  # keep_state_versions default
+    # the version batch 2 read, and batch 2's own
+    assert sorted(p.rsplit("/", 1)[1] for p in versions) == ["v1-1", "v2-1"]
 
 
 def test_rule_error_mid_group_releases_persisted_frames(spark, tmp_path):
@@ -230,12 +231,15 @@ def test_state_io_nonlocal_scheme(spark, tmp_path):
     assert names == ["v0-1", "v1-1"]
 
 
-def test_broadcast_guard_shuffle_fallback(spark, tmp_path):
+def test_broadcast_guard_shuffle_fallback(spark, tmp_path, monkeypatch):
     """The cardinality guard's fallback path (prior state above
-    ``max_broadcast_state_rows`` joins WITHOUT the broadcast hint) must
+    ``MAX_BROADCAST_STATE_ROWS`` joins WITHOUT the broadcast hint) must
     be result-identical to the broadcast path — forced here with a 0
     threshold so every cycle takes the shuffle join."""
-    got = _drive(spark, tmp_path, _TWO_CYCLES, max_broadcast_state_rows=0)
+    from kafka_metrics_exporter_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "MAX_BROADCAST_STATE_ROWS", 0)
+    got = _drive(spark, tmp_path, _TWO_CYCLES)
     assert _states(got) == {
         (0, "t1"): ("pending", 60.0),
         (1, "t1"): ("firing", 70.0),
@@ -249,7 +253,8 @@ def test_state_versions_replace_same_batch_siblings(spark, tmp_path):
     would tie nondeterministically in the version sort while consuming
     the prune budget.  Also pins the read bound: a batch reads only
     versions strictly BEFORE its own id, so replays never consume
-    their own pre-crash output."""
+    their own pre-crash output.  A directory in the old ``v<batch>``
+    layout is not a version: it is never read (nor deleted)."""
     import os
 
     t = "2024-01-01 00:{m:02d}:00"
@@ -265,21 +270,67 @@ def test_state_versions_replace_same_batch_siblings(spark, tmp_path):
     spark.createDataFrame(
         [("zzz", 1)], "topic string, active_since_us long"
     ).write.parquet(str(alert_base / "v1-999"))
+    # a legacy-layout v0 that, if read by batch 1, would restart a's
+    # run at batch 1's high-water mark and keep it pending
+    spark.createDataFrame(
+        [("a", 1704067320000000)], "topic string, active_since_us long"
+    ).write.parquet(str(alert_base / "v0"))
 
     got = _drive(spark, tmp_path, batches, state_dir=state_dir)
     versions = sorted(
         d for d in os.listdir(alert_base) if d.startswith("v")
     )
-    bids = [v[1:].partition("-")[0] for v in versions]
     # exactly one version per batch id — the planted v1-999 sibling
-    # was replaced by batch 1's own write
-    assert len(bids) == len(set(bids)), versions
-    assert "v1-999" not in versions
+    # was replaced by batch 1's own write — and the legacy v0 untouched
+    assert versions == ["v0", "v0-1", "v1-1"]
     # the planted ghost series never leaked into batch 1's output
     assert all(r["topic"] != "zzz" for *_, rows in got for r in rows)
     # the real state machine still advanced: batch 1 fired after `for:`
     st = _states(got)
     assert st[(1, "a")][0] == "firing"
+
+
+_LABELLESS = """
+groups:
+- name: live
+  rules:
+  - alert: TotalHot
+    expr: sum(m) > {threshold}
+    for: 1m
+"""
+
+
+def _labelless_cycles():
+    return [
+        [
+            ("m", f"2024-01-01 00:0{i}:30", 4.0, "t1"),
+            ("m", f"2024-01-01 00:0{i}:30", 6.0 if i else 0.0, "t2"),
+        ]
+        for i in range(3)
+    ]
+
+
+def test_labelless_alert_without_passing_sample_emits_nothing(spark, tmp_path):
+    """A key-less aggregation over an empty result is one all-NULL row;
+    it must not become a phantom pending/firing alert (batch mode and
+    Prometheus return nothing)."""
+    got = _drive(
+        spark, tmp_path, _labelless_cycles(), rules=_LABELLESS.format(threshold=500)
+    )
+    assert [(b, rows) for _, _, b, rows in got] == [(0, []), (1, []), (2, [])]
+
+
+def test_labelless_alert_carries_state(spark, tmp_path):
+    """sum(m) is 4, 10, 10: no alert in cycle 0 (its 0-row state must
+    not suppress later cycles), pending in cycle 1, firing in cycle 2
+    once held for 1m."""
+    got = _drive(
+        spark, tmp_path, _labelless_cycles(), rules=_LABELLESS.format(threshold=5)
+    )
+    states = [
+        (b, r["alertstate"], r["value"]) for _, _, b, rows in got for r in rows
+    ]
+    assert states == [(1, "pending", 10.0), (2, "firing", 10.0)]
 
 
 def test_replay_alert_rules_state_machine(spark):

@@ -8,10 +8,12 @@ Plans are captured at sf0.1 with the SAME session conf bench.py uses,
 so Exchange counts / join strategies in the files match what the bench
 actually executes (AQE initial plan; the bench's measured plan).
 
-Expression ids (``#1234``) and ``plan_id=NNN`` are renumbered in order of
-first appearance before writing (see :func:`_normalize_ids`), so two dumps
-of the same plan are byte-identical and ``diff -r`` of a before directory
-against an after directory is empty when no plan changed.
+Expression ids (``#1234``), subquery ids (``[id=#56]``), ``plan_id=NNN``
+and the random suffix of a replay's ``kme_replay_<suffix>`` temp directory
+are renumbered in order of first appearance before writing (see
+:func:`_normalize_ids`), so two dumps of the same plan are byte-identical
+and ``diff -r`` of a before directory against an after directory is empty
+when no plan changed.
 ``KME_PLANS_ROUND`` names the output directory under ``plans/`` (an
 absolute path writes elsewhere).
 """
@@ -26,13 +28,21 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-_ID_RES = (re.compile(r"(#)(\d+)"), re.compile(r"(plan_id=)(\d+)"))
+_ID_RES = (
+    # a subquery's ``[id=#N]`` is a plan id, counted apart from the
+    # expression ids it would otherwise collide with now and then
+    re.compile(r"(\[id=#)(\d+)"),
+    re.compile(r"(?<!\[id=)(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(kme_replay_)(\w+)"),
+)
 
 
 def _normalize_ids(txt: str) -> str:
-    """Renumber expression ids and plan ids from 0 in order of first
-    appearance; each kind keeps its own numbering, so every link between
-    attributes within the plan survives."""
+    """Renumber expression, subquery and plan ids and replay
+    temp-directory suffixes from 0 in order of first appearance; each
+    kind keeps its own numbering, so every link between attributes
+    within the plan survives."""
     for pat in _ID_RES:
         seen: dict[str, int] = {}
         txt = pat.sub(

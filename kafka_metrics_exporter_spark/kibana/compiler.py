@@ -11,15 +11,18 @@ Where a kind lives:
 
 - ``_KINDS`` maps each visState ``type`` to its role and its parse
   function.  The role decides where the parsed agg goes (bucket,
-  metric or one of the pipeline lists) and whether its ``schema`` must
-  be a bucket schema; a ``sole`` bucket kind must also be the request's
-  only bucket agg, with no pipeline aggs.
+  metric, the one request-ordered pipeline list, or bucket_sort) and
+  whether its ``schema`` must be a bucket schema; a ``sole`` bucket
+  kind must also be the request's only bucket agg, with no pipeline
+  aggs.
 - Everything else is the kind's dataclass: the ``parse`` staticmethod
   validating its params, and the methods :meth:`KibanaPlan.evaluate`
   calls — ``add_key`` for buckets (with the ``_Bucket`` flags the
   shared stages read), ``aggs``/``join``/``finish``/``zero_names`` for
-  metrics, ``evaluate_alone`` for sole buckets, and ``column_names``/
-  ``outputs`` for everything that adds columns.
+  metrics, ``evaluate_alone`` for sole buckets, ``apply`` for
+  pipelines (which ``parse_vis_state`` has bound with ``resolve`` and
+  validated with ``check``), and ``column_names``/``outputs`` for
+  everything that adds columns.
 
 ``evaluate`` runs fixed stages; each kind fills in only its own part:
 
@@ -33,7 +36,8 @@ Where a kind lives:
    multi-column metrics finish from their hidden partials;
 4. bucket-level cuts: terms-like size/order ranking, rare_terms long
    tails, (date_)histogram min_doc_count filters and zero-fill;
-5. pipeline aggs in request order, then bucket_sort;
+5. pipeline aggs in request order, one ``apply`` per run of
+   consecutive same-kind stages, then bucket_sort;
 6. the projection: key columns, then every agg's ``outputs()``.
 
 Aggregation is built-in Column expressions; the few eager passes
@@ -53,6 +57,7 @@ of the module (``_query_string_pred``).
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import re
@@ -118,6 +123,49 @@ class _Metric(_Agg):
     def zero_names(self) -> list[str]:
         """Columns a zero-filled empty bucket sets to 0, not null."""
         return []
+
+
+class _Pipeline(_Agg):
+    """Pipeline-kind hooks.  A parse function keeps the raw
+    buckets_path; :meth:`resolve` binds it once every metric is known
+    and :meth:`check` validates the request's bucket shape, both in
+    parse_vis_state.  evaluate calls :meth:`apply` once per run of
+    consecutive same-kind stages, in request order."""
+
+    #: the bucket level the kind reads: ``"histogram"`` an innermost
+    #: histogram/date_histogram (the window family), ``"level"`` any
+    #: keyed bucket, whose sibling buckets it aggregates across
+    needs = ""
+
+    @property
+    def name(self) -> str:
+        """The kind in error messages."""
+        return self.op
+
+    def resolve(self, paths: _Paths) -> _Pipeline:
+        """Bind ``source_label`` to the single-column metric it names."""
+        return replace(
+            self, source_label=paths.single(self.name, self.source_label).label
+        )
+
+    def check(self, buckets: list, earlier: list) -> None:
+        """Reject a request whose buckets cannot carry this stage;
+        ``earlier`` are the pipeline stages declared before it."""
+        if self.needs == "histogram" and not (buckets and buckets[-1].sequence):
+            raise ValueError(
+                f"kibana: {self.name} needs an innermost "
+                f"histogram/date_histogram bucket"
+            )
+        if self.needs == "level" and not any(b.keyed for b in buckets):
+            raise ValueError(
+                f"kibana: {self.name} aggregates across sibling buckets "
+                f"and needs a bucket agg"
+            )
+
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        """Add the columns of ``run``'s stages to the bucket frame."""
+        raise NotImplementedError
 
 
 class _Bucket:
@@ -353,12 +401,42 @@ class _Eval:
     rare_src: dict = dc_field(default_factory=dict)
 
 
+@dataclass(frozen=True)
+class _Level:
+    """What a pipeline run reads besides the bucket frame."""
+
+    keys: list  # bucket key columns, outermost first
+    docs: DataFrame  # the doc frame carrying every key column
+    resolve: object  # field name -> Column
+
+    @property
+    def outer(self) -> list[str]:
+        return self.keys[:-1]
+
+    @property
+    def inner(self) -> str:
+        return self.keys[-1]
+
+
 def _join_back(out: DataFrame, per: DataFrame, keys: list[str]) -> DataFrame:
     """Join a per-bucket frame onto the aggregated frame: on the bucket
     keys, or — bucketless, one row — as a broadcast cross join."""
     if keys:
         return out.join(per, keys, "left")
     return out.crossJoin(F.broadcast(per))
+
+
+def _level_join(out: DataFrame, outer: list[str], aggs: list) -> DataFrame:
+    """Aggregate ``aggs`` across the innermost bucket level, one row per
+    outer bucket, and broadcast-join the result back onto every inner
+    row (the level table is small by construction); with no outer
+    bucket, cross-join the one-row global aggregate.  Never a window:
+    with no outer bucket its partition spec would be empty and move the
+    whole relation into one task."""
+    if outer:
+        lvl = out.groupBy(*[F.col(c) for c in outer]).agg(*aggs)
+        return out.join(F.broadcast(lvl), outer, "left")
+    return out.crossJoin(F.broadcast(out.agg(*aggs)))
 
 
 def _matches(keyed_preds) -> Column:
@@ -2563,7 +2641,7 @@ class TTestAgg(_Metric):
 
 
 @dataclass(frozen=True)
-class BucketStatsTestAgg(_Agg):
+class BucketStatsTestAgg(_Pipeline):
     """ES x-pack sibling significance pipelines (round 15):
     ``bucket_correlation`` (function ``count_correlation``) and
     ``bucket_count_ks_test`` — the stats-plugin companions to t_test /
@@ -2612,7 +2690,8 @@ class BucketStatsTestAgg(_Agg):
     fractions: tuple[float, ...] = ()     # both aggs; () = uniform
     doc_count: int = 0                    # bucket_correlation indicator
     alternatives: tuple[str, ...] = ()    # ks_test output columns
-    seq: int = 0
+
+    needs = "level"
 
     def column_names(self) -> list[str]:
         if self.op == "bucket_correlation":
@@ -2660,7 +2739,7 @@ class BucketStatsTestAgg(_Agg):
             )
         return BucketStatsTestAgg(
             op=t, source_label=_buckets_path(p), label=label,
-            expectations=exps, fractions=fracs, doc_count=bc_n, seq=cx.seq,
+            expectations=exps, fractions=fracs, doc_count=bc_n,
         )
 
     @staticmethod
@@ -2695,8 +2774,136 @@ class BucketStatsTestAgg(_Agg):
             )
         return BucketStatsTestAgg(
             op=t, source_label=_buckets_path(p), label=label,
-            fractions=ks_fracs, alternatives=alts, seq=cx.seq,
+            fractions=ks_fracs, alternatives=alts,
         )
+
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        """ONE grouped collect of the innermost (key, value) pairs per
+        outer bucket — bucket-table-sized by construction (the
+        percentiles_bucket collect shape, never a window) —
+        broadcast-joined back; correlation / KS formulas are JVM-side
+        higher-order-array Column math over the collected sequence."""
+        out = _level_join(out, lv.outer, [
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col(lv.inner).alias("k"),
+                        F.col(st.source_label).cast("double").alias("v"),
+                    )
+                )
+            ).alias(f"__bst_{st.label}_arr")
+            for st in run
+        ])
+        drop: list[str] = []
+        for st in run:
+            arr = F.col(f"__bst_{st.label}_arr")
+            drop += [f"__bst_{st.label}_arr", f"__bst_{st.label}_n"]
+            vals = F.transform(arr, lambda s: s["v"])
+            # the total folds over the KEY-SORTED array — a fixed
+            # summation order, so non-integral metric paths stay
+            # bit-deterministic where F.sum would be partition-
+            # order-dependent
+            out = out.withColumn(
+                f"__bst_{st.label}_n",
+                F.aggregate(vals, F.lit(0.0), lambda a, v: a + v),
+            )
+            n = F.col(f"__bst_{st.label}_n")
+            test = (st.correlation if st.op == "bucket_correlation"
+                    else st.ks_test)
+            for name, col in test(arr, vals, n):
+                out = out.withColumn(name, col)
+        return out.drop(*drop)
+
+    def correlation(self, arr, vals, n) -> list[tuple[str, Column]]:
+        """Indicator moments (x̄, Σf·e²) fold to Python constants: the
+        indicator is a request literal."""
+        mlen = len(self.expectations)
+        fs = self.fractions or tuple(1.0 / mlen for _ in range(mlen))
+        fsum = sum(fs)
+        fs = tuple(f_ / fsum for f_ in fs)
+        xmean = sum(f_ * e for f_, e in zip(fs, self.expectations))
+        xvar = sum(
+            f_ * e * e for f_, e in zip(fs, self.expectations)
+        ) - xmean * xmean
+        nn = float(self.doc_count)
+        exp_arr = F.array(*[F.lit(float(e)) for e in self.expectations])
+        sxy = F.aggregate(
+            F.zip_with(vals, exp_arr, lambda v, e: v * e),
+            F.lit(0.0),
+            lambda acc, z: acc + z,
+        )
+        ymean = n / F.lit(nn)
+        cov = sxy / F.lit(nn) - F.lit(xmean) * ymean
+        yvar = ymean * (F.lit(1.0) - ymean)
+        ok = (
+            (F.size(arr) == F.lit(mlen))
+            & F.lit(xvar > 0)
+            & (n > 0) & (n < F.lit(nn))
+        )
+        return [(self.label, F.when(ok, cov / F.sqrt(F.lit(xvar) * yvar)))]
+
+    def ks_test(self, arr, vals, n) -> list[tuple[str, Column]]:
+        """Running ECDF-vs-reference max deviations in ONE array fold
+        (acc = 1-based index, running count, D+, D-); the cumulative
+        reference CDF folds to Python constants."""
+        if self.fractions:
+            tot = sum(self.fractions)
+            cum, tcdf = 0.0, []
+            for f_ in self.fractions:
+                cum += f_
+                tcdf.append(cum / tot)
+            tcdf_arr = F.array(*[F.lit(x) for x in tcdf])
+            size_ok = F.size(arr) == F.lit(len(self.fractions))
+
+            def ref_cdf(j):  # j: 1-based element index
+                return F.element_at(tcdf_arr, j)
+        else:
+            size_ok = F.size(arr) > 0
+
+            def ref_cdf(j):
+                return j.cast("double") / F.size(arr).cast("double")
+
+        zero = F.struct(
+            F.lit(1).alias("i"), F.lit(0.0).alias("c"),
+            F.lit(-1.0).alias("dp"), F.lit(-1.0).alias("dm"),
+        )
+
+        def step(acc, v):  # pyspark counts a HOF callback's parameters
+            ec = (acc["c"] + v) / n
+            tc = ref_cdf(acc["i"])
+            return F.struct(
+                (acc["i"] + 1).alias("i"),
+                (acc["c"] + v).alias("c"),
+                F.greatest(acc["dp"], ec - tc).alias("dp"),
+                F.greatest(acc["dm"], tc - ec).alias("dm"),
+            )
+
+        res = F.aggregate(vals, zero, step)
+        ok = size_ok & (n > 0)
+
+        def p_values(s):
+            dp, dm = s["dp"], s["dm"]
+            lam = F.sqrt(n) * F.greatest(dp, dm)
+            cols = []
+            for alt in self.alternatives:
+                if alt == "greater":
+                    p = F.exp(F.lit(-2.0) * n * dp * dp)
+                elif alt == "less":
+                    p = F.exp(F.lit(-2.0) * n * dm * dm)
+                else:
+                    p = ks_two_sided_p_col(lam)
+                cols.append(F.least(p, F.lit(1.0)).alias(alt))
+            return F.struct(*cols)
+
+        # the fold result binds as a lambda leaf: inlined, the two_sided
+        # Kolmogorov series would embed the whole fold in each of its
+        # ~40 terms (codegen-tree blowup — see _bind1)
+        ps = _bind1(res, p_values)
+        return [
+            (f"{self.label}_{alt}", F.when(ok, ps[alt]))
+            for alt in self.alternatives
+        ]
 
 
 @dataclass(frozen=True)
@@ -3582,6 +3789,11 @@ class WeightedAvgAgg(_Metric):
         ]
 
 
+def _percent_names(label: str, percents) -> list[str]:
+    """``<label>_p<percent>`` output columns, one per percent."""
+    return [f"{label}_p{f'{p:g}'.replace('.', '_')}" for p in percents]
+
+
 @dataclass(frozen=True)
 class PercentilesAgg(_Metric):
     """ES ``percentiles`` metric: one output column per percent,
@@ -3595,11 +3807,7 @@ class PercentilesAgg(_Metric):
     label: str
 
     def column_names(self) -> list[str]:
-        def fmt(p: float) -> str:
-            s = f"{p:g}".replace(".", "_")
-            return f"{self.label}_p{s}"
-
-        return [fmt(p) for p in self.percents]
+        return _percent_names(self.label, self.percents)
 
     @staticmethod
     def parse(t, p, label, cx):
@@ -4012,46 +4220,23 @@ class StatsAgg(_Metric):
 
 
 @dataclass(frozen=True)
-class PipelineAgg(_Agg):
-    """ES parent pipeline aggs (round 8): ``derivative``,
-    ``cumulative_sum``, ``moving_avg``/``moving_fn`` over the buckets
-    of the INNERMOST histogram/date_histogram, per outer bucket.
-    ``source_label`` names the sibling metric column the buckets_path
-    resolved to (the parse functions store the raw buckets_path;
-    parse_vis_state resolves it once every metric is known, as for the
-    other pipeline kinds).  moving_avg's window follows ES moving_fn
-    shift=0: the ``window`` buckets BEFORE the current one, exclusive —
-    the first bucket emits NULL, like derivative."""
+class WindowPipelineAgg(_Pipeline):
+    """ES parent pipeline aggs (rounds 8-9): ``derivative``,
+    ``serial_diff``, ``cumulative_sum`` and ``moving_avg``/``moving_fn``
+    over the buckets of the INNERMOST histogram/date_histogram, per
+    outer bucket.  moving_avg's window follows ES moving_fn shift=0:
+    the ``window`` buckets BEFORE the current one, exclusive — the
+    first bucket emits NULL, like derivative."""
 
-    op: str  # derivative | cumulative_sum | moving_avg | serial_diff | *_bucket
+    op: str  # derivative | serial_diff | cumulative_sum | moving_avg|max|min|sum
     source_label: str
     label: str
-    window: int = 5  # moving_avg window / serial_diff lag
-    percents: tuple[float, ...] = ()  # percentiles_bucket only
-    seq: int = 0  # position in the request (same-level reduce order)
+    window: int = 5  # moving window / serial_diff lag
 
-    def column_names(self) -> list[str]:
-        if self.op == "stats_bucket":
-            return [
-                f"{self.label}_{n}" for n in ("count", "min", "max", "avg", "sum")
-            ]
-        if self.op == "extended_stats_bucket":
-            return [
-                f"{self.label}_{n}"
-                for n in ("count", "min", "max", "avg", "sum",
-                          "sum_of_squares", "variance", "std_deviation")
-            ]
-        if self.op == "percentiles_bucket" or self.op.startswith(
-            "moving_percentiles:"
-        ):
-            return [
-                f"{self.label}_p{f'{p:g}'.replace('.', '_')}"
-                for p in self.percents
-            ]
-        return [self.label]
+    needs = "histogram"
 
     @staticmethod
-    def parse_parent(t, p, label, cx):
+    def parse(t, p, label, cx):
         """derivative / cumulative_sum / moving_avg / moving_fn."""
         op = t
         if t == "moving_fn":
@@ -4075,9 +4260,11 @@ class PipelineAgg(_Agg):
                     f"min/sum)"
                 )
             op = mapped[fn]
-        return PipelineAgg(
-            op=op, source_label=_buckets_path(p), label=label,
-            window=int(p.get("window", 5)), seq=cx.seq,
+        window = int(p.get("window", 5))
+        if t in ("moving_avg", "moving_fn") and window < 1:
+            raise ValueError("kibana: moving window must be >= 1")
+        return WindowPipelineAgg(
+            op=op, source_label=_buckets_path(p), label=label, window=window,
         )
 
     @staticmethod
@@ -4085,19 +4272,59 @@ class PipelineAgg(_Agg):
         lag = int(p.get("lag", 1))
         if lag < 1:
             raise ValueError("kibana: serial_diff lag must be >= 1")
-        return PipelineAgg(
+        return WindowPipelineAgg(
             op=t, source_label=_buckets_path(p), label=label, window=lag,
-            seq=cx.seq,
         )
 
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        """One window per outer-bucket group, ordered by the innermost
+        histogram key.  A bare histogram's window relation is the
+        already-aggregated bucket table (time-span / interval rows, not
+        docs) — the same bounded-by-construction argument as
+        promql_subquery's grid window."""
+        w = Window.partitionBy(*[F.col(c) for c in lv.outer]).orderBy(
+            F.col(lv.inner).asc()
+        )
+        for pl in run:
+            src = F.col(pl.source_label).cast("double")
+            if pl.op == "derivative":
+                expr = src - F.lag(src).over(w)
+            elif pl.op == "serial_diff":
+                # ES serial_diff: value minus the value `lag` buckets
+                # earlier (lag=1 ≡ derivative); the first `lag` buckets
+                # emit NULL
+                expr = src - F.lag(src, pl.window).over(w)
+            elif pl.op == "cumulative_sum":
+                expr = F.sum(src).over(
+                    w.rowsBetween(Window.unboundedPreceding, 0)
+                )
+            else:  # moving_* — ES moving_fn shift=0: the window
+                # buckets BEFORE the current one, exclusive
+                mfn = {"moving_avg": F.avg, "moving_max": F.max,
+                       "moving_min": F.min, "moving_sum": F.sum}[pl.op]
+                expr = mfn(src).over(w.rowsBetween(-pl.window, -1))
+            out = out.withColumn(pl.label, expr)
+        return out
+
+
+@dataclass(frozen=True)
+class CumulativeCardinalityAgg(_Pipeline):
+    """ES ``cumulative_cardinality`` (round 13): the running count of
+    distinct ``field`` values across the innermost histogram's buckets.
+    buckets_path must name a cardinality agg (like ES, which merges its
+    HLL sketches cumulatively; this engine is exact via first-seen
+    buckets — the documented exact-vs-approx stance)."""
+
+    source_label: str
+    label: str
+    field: str = ""  # the cardinality agg's field, bound by resolve
+
+    name = "cumulative_cardinality"
+    needs = "histogram"
+
     @staticmethod
-    def parse_cumulative_cardinality(t, p, label, cx):
-        # ES cumulative_cardinality (round 13): the running count of
-        # distinct field values across the histogram's buckets.
-        # buckets_path must name a cardinality agg (like ES, which
-        # merges its HLL sketches cumulatively; this engine is exact
-        # via first-seen buckets — the documented exact-vs-approx
-        # stance).
+    def parse(t, p, label, cx):
         path = _buckets_path(p, "")
         tgt = cx.by_id.get(path)
         if tgt is None or tgt["type"] != "cardinality":
@@ -4105,19 +4332,94 @@ class PipelineAgg(_Agg):
                 "kibana: cumulative_cardinality buckets_path must "
                 "reference a cardinality agg"
             )
-        return PipelineAgg(
-            op=t, source_label=path, label=label, window=0, seq=cx.seq
+        return CumulativeCardinalityAgg(source_label=path, label=label)
+
+    def resolve(self, paths: _Paths) -> _Pipeline:
+        m = paths.single(self.name, self.source_label)
+        return replace(self, source_label=m.label, field=m.field)
+
+    def check(self, buckets: list, earlier: list) -> None:
+        super().check(buckets, earlier)
+        if any(
+            isinstance(pl, BucketScriptAgg) and pl.op == "bucket_selector"
+            for pl in earlier
+        ):
+            raise ValueError(
+                "kibana: cumulative_cardinality after a "
+                "bucket_selector is not supported — the running "
+                "count would disagree with the surviving buckets"
+            )
+
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        """Exact: a value contributes +1 in its FIRST-seen innermost
+        bucket per outer group; the running distinct count is the
+        cumulative sum of those first-seen counts over the histogram
+        sequence.  Two value-keyed aggregations (the same doc-scale cost
+        class as the cardinality agg it reads) + a bucket-table window
+        — the window relation is the aggregated bucket table, the
+        WindowPipelineAgg bounded-by-construction argument."""
+        outer, seq_label = lv.outer, lv.inner
+        w = Window.partitionBy(*[F.col(c) for c in outer]).orderBy(
+            F.col(seq_label).asc()
+        ).rowsBetween(Window.unboundedPreceding, 0)
+        # first-seen buckets are computed against the SURVIVING bucket
+        # keys, not the raw doc frame: a min_doc_count>=2 histogram can
+        # drop the bucket where a value first appeared, and ES —
+        # merging the per-RETURNED-bucket HLL sketches cumulatively —
+        # counts that value in its first surviving bucket instead of
+        # never (ADVICE r13).  The surviving-key relation is
+        # bucket-table-sized: broadcast.
+        surviving = F.broadcast(
+            out.select(*[F.col(c) for c in outer + [seq_label]]).distinct()
         )
+        for pl in run:
+            val = lv.resolve(pl.field)
+            first = lv.docs.filter(val.isNotNull()).join(
+                surviving, outer + [seq_label], "semi"
+            ).groupBy(
+                *[F.col(c) for c in outer], val.alias("__cc_v")
+            ).agg(F.min(F.col(seq_label)).alias(seq_label))
+            news = first.groupBy(
+                *[F.col(c) for c in outer + [seq_label]]
+            ).agg(F.count(F.lit(1)).alias("__cc_new"))
+            out = out.join(news, outer + [seq_label], "left")
+            out = out.withColumn(
+                pl.label,
+                F.sum(F.coalesce(F.col("__cc_new"), F.lit(0))).over(w),
+            ).drop("__cc_new")
+        return out
+
+
+@dataclass(frozen=True)
+class MovingPercentilesAgg(_Pipeline):
+    """ES ``moving_percentiles`` (round 14): slide a window across the
+    innermost histogram's RETURNED bucket sequence and report the
+    percentiles of the merged window.  buckets_path must name a
+    percentiles agg (like ES) and the output columns mirror its
+    percents; window is REQUIRED (like ES); ``shift`` follows moving_fn
+    (0 = the ``window`` buckets BEFORE the current one, exclusive;
+    shift = window includes the current).  ES merges the per-bucket
+    t-digest sketches; this engine is EXACT, recomputing interpolated
+    percentiles over the raw doc values of the window's buckets — the
+    documented exact-vs-approx stance (percentiles /
+    cumulative_cardinality)."""
+
+    source_label: str
+    label: str
+    window: int
+    shift: int = 0
+    percents: tuple[float, ...] = ()  # the percentiles agg's, bound by resolve
+    field: str = ""  # the percentiles agg's field, bound by resolve
+
+    name = "moving_percentiles"
+    needs = "histogram"
+
+    def column_names(self) -> list[str]:
+        return _percent_names(self.label, self.percents)
 
     @staticmethod
-    def parse_moving_percentiles(t, p, label, cx):
-        # ES moving_percentiles (round 14): slide a window across the
-        # histogram buckets and report the percentiles of the merged
-        # window.  buckets_path must name a percentiles agg (like ES);
-        # window is REQUIRED (like ES); shift follows moving_fn (0 =
-        # the `window` buckets BEFORE the current one, exclusive;
-        # window = shift includes the current).  The shift rides the op
-        # string, normalize:-style.
+    def parse(t, p, label, cx):
         path = _buckets_path(p, "")
         tgt = cx.by_id.get(path)
         if tgt is None or tgt["type"] != "percentiles":
@@ -4133,51 +4435,73 @@ class PipelineAgg(_Agg):
         window = int(p["window"])
         if window < 1:
             raise ValueError("kibana: moving window must be >= 1")
-        return PipelineAgg(
-            op=f"moving_percentiles:{int(p.get('shift', 0))}",
-            source_label=path, label=label, window=window, seq=cx.seq,
+        return MovingPercentilesAgg(
+            source_label=path, label=label, window=window,
+            shift=int(p.get("shift", 0)),
         )
 
-    @staticmethod
-    def parse_normalize(t, p, label, cx):
-        # ES normalize pipeline agg (round 13): rescale a sibling
-        # metric ACROSS the innermost bucket level, per outer bucket —
-        # the op string carries the method
-        method = str(p.get("method", ""))
-        if method not in _NORMALIZE_METHODS:
+    def resolve(self, paths: _Paths) -> _Pipeline:
+        # a MULTI-column percentiles agg (ES's own contract), so not
+        # the single-column rule of the other kinds
+        m = paths.metric(self.source_label, PercentilesAgg)
+        if m is None:
             raise ValueError(
-                f"kibana: normalize method must be one of "
-                f"{sorted(_NORMALIZE_METHODS)}, got {method!r}"
+                "kibana: moving_percentiles buckets_path must "
+                "reference a percentiles agg"
             )
-        return PipelineAgg(
-            op=f"normalize:{method}", source_label=_buckets_path(p),
-            label=label, window=0, seq=cx.seq,
+        return replace(
+            self, source_label=m.label, percents=m.percents, field=m.field
         )
 
-    @staticmethod
-    def parse_sibling(t, p, label, cx):
-        """SIBLING_OPS and MULTI_SIBLING_OPS."""
-        percents: tuple[float, ...] = ()
-        if t == "percentiles_bucket":
-            percents = tuple(
-                float(x) for x in p.get("percents", (1, 5, 25, 50, 75, 95, 99))
-            )
-            if not percents or not all(0 <= x <= 100 for x in percents):
-                raise ValueError(
-                    "kibana: percentiles_bucket percents must be in [0, 100]"
-                )
-        return PipelineAgg(
-            op=t, source_label=_buckets_path(p), label=label, window=0,
-            percents=percents, seq=cx.seq,
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        """Scale shape: the bucket-index map is bucket-table-sized
+        (broadcast); each doc explodes into <= window target indices
+        (bounded fan-out — the window param is the documented
+        amplification factor), then ONE grouped percentile per (outer,
+        target) key.  Empty windows emit null.  Indexing over the
+        SURVIVING bucket table means a min_doc_count cut or earlier
+        bucket_selector shortens the sequence exactly as ES's pipeline
+        (which runs on the returned buckets) sees it."""
+        outer, seq_label = lv.outer, lv.inner
+        w_idx = Window.partitionBy(
+            *[F.col(c) for c in outer]
+        ).orderBy(F.col(seq_label).asc())
+        out = out.withColumn("__mp_i", F.row_number().over(w_idx))
+        idx = F.broadcast(
+            out.select(*[F.col(c) for c in outer + [seq_label, "__mp_i"]])
         )
+        for pl in run:
+            val = lv.resolve(pl.field).cast("double")
+            docs = lv.docs.filter(val.isNotNull()).withColumn(
+                "__mp_v", val
+            ).join(idx, outer + [seq_label])
+            # a doc in bucket index j serves result buckets
+            # i ∈ [j+1-shift, j+window-shift]
+            tgt = docs.withColumn(
+                "__mp_t",
+                F.explode(
+                    F.sequence(
+                        F.col("__mp_i") + F.lit(1 - pl.shift),
+                        F.col("__mp_i") + F.lit(pl.window - pl.shift),
+                    )
+                ),
+            )
+            per = tgt.groupBy(
+                *[F.col(c) for c in outer],
+                F.col("__mp_t").alias("__mp_i"),
+            ).agg(
+                F.percentile(
+                    F.col("__mp_v"),
+                    F.array(*[F.lit(p_ / 100.0) for p_ in pl.percents]),
+                ).alias("__mp_arr")
+            )
+            out = out.join(per, outer + ["__mp_i"], "left")
+            for k_, name in enumerate(pl.column_names()):
+                out = out.withColumn(name, F.col("__mp_arr").getItem(k_))
+            out = out.drop("__mp_arr")
+        return out.drop("__mp_i")
 
-
-#: sibling pipeline ops — aggregate a metric ACROSS the innermost
-#: bucket level, per outer bucket (ES avg_bucket & friends).  Unlike
-#: the parent sequence ops above they need no ordering, so they run as
-#: one grouped aggregation joined back, never a window.
-SIBLING_OPS = {"avg_bucket": F.avg, "sum_bucket": F.sum,
-               "min_bucket": F.min, "max_bucket": F.max}
 
 #: ES ``normalize`` pipeline-agg methods (round 13) — the exact
 #: formula table from the ES docs, applied per OUTER bucket across the
@@ -4189,19 +4513,203 @@ _NORMALIZE_METHODS = (
     "z-score", "softmax",
 )
 
-#: multi-column sibling ops (round 9): ``stats_bucket`` emits the five
-#: stats columns, ``percentiles_bucket`` one column per percent.  ES
-#: percentiles_bucket is exact but does NOT interpolate — it returns
-#: the sorted bucket value at index round(p/100·(n-1)) (nearest rank;
-#: unlike the t-digest `percentiles` metric, which approximates AND
-#: interpolates).  Same grouped-aggregation-joined-back shape as
-#: SIBLING_OPS, with the sorted value array selected post-join.
-MULTI_SIBLING_OPS = {"stats_bucket", "percentiles_bucket",
-                     "extended_stats_bucket"}
+
+@dataclass(frozen=True)
+class NormalizeAgg(_Pipeline):
+    """ES ``normalize`` (round 13): rescale each bucket's metric by
+    level statistics computed ACROSS the innermost bucket level per
+    outer bucket — one grouped aggregation over the bucket table joined
+    back (:func:`_level_join`), never an unpartitioned window.  Only
+    the statistics a run's methods need are aggregated."""
+
+    source_label: str
+    label: str
+    method: str  # one of _NORMALIZE_METHODS
+
+    name = "normalize"
+    needs = "level"
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        method = str(p.get("method", ""))
+        if method not in _NORMALIZE_METHODS:
+            raise ValueError(
+                f"kibana: normalize method must be one of "
+                f"{sorted(_NORMALIZE_METHODS)}, got {method!r}"
+            )
+        return NormalizeAgg(
+            source_label=_buckets_path(p), label=label, method=method
+        )
+
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        aggs_ = []
+        for pl in run:
+            src = F.col(pl.source_label).cast("double")
+            t = f"__nz_{pl.label}"
+            if pl.method in ("rescale_0_1", "rescale_0_100", "mean"):
+                aggs_ += [F.min(src).alias(f"{t}_min"),
+                          F.max(src).alias(f"{t}_max")]
+            if pl.method in ("mean", "z-score"):
+                aggs_.append(F.avg(src).alias(f"{t}_avg"))
+            if pl.method == "z-score":
+                aggs_.append(F.stddev_pop(src).alias(f"{t}_std"))
+            if pl.method == "percent_of_sum":
+                aggs_.append(F.sum(src).alias(f"{t}_sum"))
+            if pl.method == "softmax":
+                aggs_.append(F.sum(F.exp(src)).alias(f"{t}_esum"))
+        out = _level_join(out, lv.outer, aggs_)
+        drop: set[str] = set()
+        for pl in run:
+            src = F.col(pl.source_label).cast("double")
+            t = f"__nz_{pl.label}"
+            if pl.method in ("rescale_0_1", "rescale_0_100", "mean"):
+                rng = F.col(f"{t}_max") - F.col(f"{t}_min")
+                num = (
+                    src - F.col(f"{t}_avg")
+                    if pl.method == "mean"
+                    else src - F.col(f"{t}_min")
+                )
+                expr = F.when(rng != 0, num / rng)
+                if pl.method == "rescale_0_100":
+                    expr = expr * F.lit(100.0)
+                drop |= {f"{t}_min", f"{t}_max"}
+                if pl.method == "mean":
+                    drop.add(f"{t}_avg")
+            elif pl.method == "z-score":
+                expr = F.when(
+                    F.col(f"{t}_std") != 0,
+                    (src - F.col(f"{t}_avg")) / F.col(f"{t}_std"),
+                )
+                drop |= {f"{t}_avg", f"{t}_std"}
+            elif pl.method == "percent_of_sum":
+                expr = F.when(
+                    F.col(f"{t}_sum") != 0, src / F.col(f"{t}_sum")
+                )
+                drop.add(f"{t}_sum")
+            else:  # softmax
+                expr = F.when(
+                    F.col(f"{t}_esum") != 0, F.exp(src) / F.col(f"{t}_esum")
+                )
+                drop.add(f"{t}_esum")
+            out = out.withColumn(pl.label, expr)
+        return out.drop(*drop)
+
+
+#: single-value sibling ops — one aggregate of the metric across the
+#: innermost bucket level, per outer bucket (ES avg_bucket & friends)
+_SIBLING_FNS = {"avg_bucket": F.avg, "sum_bucket": F.sum,
+                "min_bucket": F.min, "max_bucket": F.max}
+_STATS_NAMES = ("count", "min", "max", "avg", "sum")
+_EXTENDED_STATS_NAMES = _STATS_NAMES + (
+    "sum_of_squares", "variance", "std_deviation"
+)
 
 
 @dataclass(frozen=True)
-class BucketScriptAgg(_Agg):
+class SiblingPipelineAgg(_Pipeline):
+    """ES sibling pipeline aggs (rounds 8-9, 13b): aggregate a metric
+    ACROSS the innermost bucket level, one value per outer bucket,
+    repeated on each inner row.  Unlike the window ops they need no
+    ordering, so they run as one grouped aggregation joined back
+    (:func:`_level_join`).  ``stats_bucket`` emits the five stats
+    columns, ``extended_stats_bucket`` three more, ``percentiles_bucket``
+    one column per percent.  ES percentiles_bucket is exact but does
+    NOT interpolate — it returns the sorted bucket value at index
+    round(p/100·(n-1)) (nearest rank; unlike the t-digest `percentiles`
+    metric, which approximates AND interpolates)."""
+
+    op: str  # *_bucket: avg|sum|min|max|stats|extended_stats|percentiles
+    source_label: str
+    label: str
+    percents: tuple[float, ...] = ()  # percentiles_bucket only
+
+    needs = "level"
+
+    def column_names(self) -> list[str]:
+        if self.op == "stats_bucket":
+            return [f"{self.label}_{n}" for n in _STATS_NAMES]
+        if self.op == "extended_stats_bucket":
+            return [f"{self.label}_{n}" for n in _EXTENDED_STATS_NAMES]
+        if self.op == "percentiles_bucket":
+            return _percent_names(self.label, self.percents)
+        return [self.label]
+
+    @staticmethod
+    def parse(t, p, label, cx):
+        percents: tuple[float, ...] = ()
+        if t == "percentiles_bucket":
+            percents = tuple(
+                float(x) for x in p.get("percents", (1, 5, 25, 50, 75, 95, 99))
+            )
+            if not percents or not all(0 <= x <= 100 for x in percents):
+                raise ValueError(
+                    "kibana: percentiles_bucket percents must be in [0, 100]"
+                )
+        return SiblingPipelineAgg(
+            op=t, source_label=_buckets_path(p), label=label,
+            percents=percents,
+        )
+
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        aggs_ = []
+        pb_extract: list[tuple[str, str, float]] = []
+        for pl in run:
+            src = F.col(pl.source_label).cast("double")
+            if pl.op in ("stats_bucket", "extended_stats_bucket"):
+                names = pl.column_names()
+                aggs_ += [
+                    F.count(src).alias(names[0]),
+                    F.min(src).alias(names[1]),
+                    F.max(src).alias(names[2]),
+                    F.avg(src).alias(names[3]),
+                    F.sum(src).alias(names[4]),
+                ]
+                if pl.op == "extended_stats_bucket":
+                    # POPULATION statistics from exact partials, the
+                    # same formulas as the extended_stats metric agg
+                    # (ES's definition)
+                    n_ = F.count(src).cast("double")
+                    ssq = F.sum(src * src)
+                    var = ssq / n_ - (F.sum(src) / n_) * (F.sum(src) / n_)
+                    aggs_ += [
+                        ssq.alias(names[5]),
+                        var.alias(names[6]),
+                        F.sqrt(var).alias(names[7]),
+                    ]
+            elif pl.op == "percentiles_bucket":
+                # the nearest input value, picked from the sorted
+                # bucket values at index round(p/100 * (n-1)) (ADVICE
+                # r9).  Collect the sorted value array per outer bucket
+                # (bounded by the inner bucket count — sibling inputs
+                # are already aggregated buckets, not raw rows) and
+                # select after the join-back.
+                arr_name = f"__pbarr_{pl.label}"
+                aggs_.append(
+                    F.array_sort(F.collect_list(src)).alias(arr_name)
+                )
+                pb_extract += [
+                    (arr_name, n, p)
+                    for p, n in zip(pl.percents, pl.column_names())
+                ]
+            else:
+                aggs_.append(_SIBLING_FNS[pl.op](src).alias(pl.label))
+        out = _level_join(out, lv.outer, aggs_)
+        for arr_name, col_name, p in pb_extract:
+            arr = F.col(arr_name)
+            # floor(x + 0.5) is Java's Math.round — the exact ES index
+            # formula, identical IEEE ops in the SQL twin
+            idx = F.floor(
+                F.lit(p / 100.0) * (F.size(arr) - 1).cast("double")
+                + F.lit(0.5)
+            ).cast("int")
+            out = out.withColumn(col_name, F.get(arr, idx))
+        return out.drop(*{a for a, _, _ in pb_extract})
+
+
+@dataclass(frozen=True)
+class BucketScriptAgg(_Pipeline):
     """ES ``bucket_script`` / ``bucket_selector`` pipelines (round 9):
     evaluate a painless ARITHMETIC script over sibling metric values
     per bucket — script adds a computed column, selector FILTERS the
@@ -4217,7 +4725,6 @@ class BucketScriptAgg(_Agg):
     paths: tuple[tuple[str, str], ...]  # (param name, resolved metric label)
     script: str
     label: str
-    seq: int = 0  # position in the request (same-level reduce order)
 
     @staticmethod
     def parse(t, p, label, cx):
@@ -4231,12 +4738,34 @@ class BucketScriptAgg(_Agg):
             raise ValueError(f"kibana: {t} needs a buckets_path map")
         return BucketScriptAgg(
             op=t, paths=tuple(paths.items()), script=script, label=label,
-            seq=cx.seq,
         )
 
     def column_names(self) -> list[str]:
         # a selector filters buckets and adds no column
         return [self.label] if self.op == "bucket_script" else []
+
+    def resolve(self, paths: _Paths) -> _Pipeline:
+        resolved = tuple(
+            (param, paths.single(self.op, path).label)
+            for param, path in self.paths
+        )
+        # compile eagerly so a bad script fails at parse time, not
+        # mid-evaluation (the Column is rebuilt per-evaluate)
+        compile_bucket_script(self.script, dict(resolved))
+        return replace(self, paths=resolved)
+
+    @classmethod
+    def apply(cls, out: DataFrame, run: list, lv: _Level) -> DataFrame:
+        """Pure Column expressions per bucket: scan-local, no shuffle,
+        no Python.  A selector follows gap_policy skip — null script
+        inputs drop the bucket."""
+        for sc in run:
+            expr = compile_bucket_script(sc.script, dict(sc.paths))
+            if sc.op == "bucket_script":
+                out = out.withColumn(sc.label, expr)
+            else:
+                out = out.filter(expr.cast("boolean"))
+        return out
 
 
 _SCRIPT_TOKEN_RE = re.compile(
@@ -4373,12 +4902,60 @@ class BucketSortAgg:
         from_ = int(p.get("from", 0))
         if size < 1 or from_ < 0:
             raise ValueError("kibana: bucket_sort needs size >= 1, from >= 0")
+        order = str(p.get("order", "desc"))
+        if order not in ("asc", "desc"):
+            raise ValueError("kibana: bucket_sort order must be asc|desc")
         return BucketSortAgg(
             sort_label=str(p.get("sortField") or p.get("buckets_path") or "_key"),
-            order=str(p.get("order", "desc")),
+            order=order,
             size=size,
             from_=from_,
         )
+
+    def resolve(self, paths: _Paths) -> BucketSortAgg:
+        if self.sort_label == "_key":
+            return self
+        m = paths.metric(self.sort_label, _Metric)
+        if m is None:
+            raise ValueError(
+                f"kibana: bucket_sort sortField {self.sort_label!r} "
+                f"does not resolve to a sibling metric agg"
+            )
+        return replace(self, sort_label=m.label)
+
+    def apply(self, out: DataFrame, lv: _Level) -> DataFrame:
+        """Nested: row_number over the outer partition (distributed, one
+        rank per outer group).  Top-level: TakeOrdered limit(from+size)
+        — never a global window over the full relation — then a rank
+        over the <= from+size survivors only when an offset must be
+        dropped."""
+        sort_col = (
+            F.col(lv.inner) if self.sort_label == "_key"
+            else F.col(self.sort_label)
+        )
+        direction = sort_col.desc() if self.order == "desc" else sort_col.asc()
+        order_cols = [direction, F.col(lv.inner).asc()]
+        if lv.outer:
+            w = Window.partitionBy(*[F.col(c) for c in lv.outer]).orderBy(
+                *order_cols
+            )
+            return (
+                out.withColumn("__bs", F.row_number().over(w))
+                .filter(
+                    (F.col("__bs") > self.from_)
+                    & (F.col("__bs") <= self.from_ + self.size)
+                )
+                .drop("__bs")
+            )
+        out = out.orderBy(*order_cols).limit(self.from_ + self.size)
+        if self.from_:
+            w = Window.orderBy(*order_cols)
+            out = (
+                out.withColumn("__bs", F.row_number().over(w))
+                .filter(F.col("__bs") > self.from_)
+                .drop("__bs")
+            )
+        return out
 
 
 @dataclass(frozen=True)
@@ -4387,10 +4964,8 @@ class VisState:
     vis_type: str
     buckets: tuple[_Bucket, ...]
     metrics: tuple[_Metric, ...]
-    pipelines: tuple[PipelineAgg, ...] = ()
+    pipelines: tuple[_Pipeline, ...] = ()  # request order
     bucket_sort: BucketSortAgg | None = None
-    scripts: tuple[BucketScriptAgg, ...] = ()
-    stats_pipelines: tuple[BucketStatsTestAgg, ...] = ()
 
 
 def _bind1(expr: Column, f) -> Column:
@@ -4902,7 +5477,67 @@ class _ParseCtx:
 
     by_id: dict  # agg id -> raw agg (orderBy / buckets_path targets)
     buckets: list = dc_field(default_factory=list)  # bucket aggs so far
-    seq: int = 0  # the agg's position in the request
+
+
+@dataclass
+class _Paths:
+    """buckets_path resolution, once every metric is parsed.  A path
+    names a metric by label or agg id, or ``_count``: Kibana's implicit
+    doc-count metric, appended to ``metrics`` on its first reference."""
+
+    label_of: dict  # metric label / agg id -> column label
+    metrics: list
+    buckets: list
+
+    def label(self, path) -> str | None:
+        """The column ``path`` names, if any."""
+        path = str(path)
+        if path != "_count":
+            return self.label_of.get(path)
+        count = next(
+            (m for m in self.metrics
+             if isinstance(m, MetricAgg) and m.op == "count"),
+            None,
+        )
+        if count is None:
+            # first unused name: a metric or bucket customLabel'd
+            # 'count' would otherwise produce two columns aliased
+            # 'count' and an AMBIGUOUS_REFERENCE at evaluate time
+            taken = {m.label for m in self.metrics} | {
+                b.label for b in self.buckets
+            }
+            cname = "count"
+            n = 2
+            while cname in taken:
+                cname = f"count_{n}"
+                n += 1
+            count = MetricAgg(op="count", field="", label=cname)
+            self.metrics.append(count)
+        return count.label
+
+    def metric(self, path, kind: type):
+        """The ``kind`` metric whose column ``path`` names, or None."""
+        src = self.label(path)
+        return next(
+            (m for m in self.metrics if isinstance(m, kind) and m.label == src),
+            None,
+        )
+
+    def single(self, name: str, path) -> MetricAgg:
+        """The SINGLE-column metric ``path`` names.  Multi-column
+        metrics (stats/extended_stats, percentiles, top_hits) reject at
+        parse time — without this the eager validation passes on the
+        agg's LABEL and the evaluation crashes later with
+        UNRESOLVED_COLUMN."""
+        m = self.metric(path, MetricAgg)
+        if m is None:
+            raise ValueError(
+                f"kibana: {name} buckets_path {path!r} does not "
+                f"resolve to a single-column sibling metric agg "
+                f"(stats/percentiles/top_hits sub-paths are not "
+                f"supported)"
+            )
+        return m
 
 
 def _agg_label(a: dict) -> str:
@@ -4916,11 +5551,12 @@ def _agg_label(a: dict) -> str:
 #: the parsed agg goes and whether its ``schema`` must be a bucket
 #: schema (``bucket``, ``sole``) or must not (every other role).  A
 #: ``sole`` kind must be the request's only bucket agg and carries no
-#: pipeline aggs; it evaluates through its own ``evaluate_alone``.  The
-#: pipeline roles (``pipeline``, ``stats_test``, ``script``,
-#: ``bucket_sort``) keep their raw buckets_path until every metric is
-#: known.  A parse function is ``(type, params, label, _ParseCtx) ->
-#: dataclass``.
+#: pipeline aggs; it evaluates through its own ``evaluate_alone``.  A
+#: ``pipeline`` kind is a ``_Pipeline`` subclass and joins the one
+#: request-ordered pipeline list; ``bucket_sort`` (at most one) runs
+#: after every pipeline.  Both keep their raw buckets_path until every
+#: metric is known.  A parse function is ``(type, params, label,
+#: _ParseCtx) -> dataclass``.
 _KINDS: dict[str, tuple[str, object]] = {
     "terms": ("bucket", TermsBucket.parse),
     "multi_terms": ("bucket", MultiTermsBucket.parse),
@@ -4971,23 +5607,22 @@ _KINDS: dict[str, tuple[str, object]] = {
     "geo_centroid": ("metric", GeoCentroidAgg.parse),
     "reverse_nested": ("metric", ReverseNestedAgg.parse),
     **{
-        op: ("pipeline", PipelineAgg.parse_parent)
+        op: ("pipeline", WindowPipelineAgg.parse)
         for op in ("derivative", "cumulative_sum", "moving_avg", "moving_fn")
     },
-    "serial_diff": ("pipeline", PipelineAgg.parse_serial_diff),
-    "cumulative_cardinality": (
-        "pipeline", PipelineAgg.parse_cumulative_cardinality
-    ),
-    "moving_percentiles": ("pipeline", PipelineAgg.parse_moving_percentiles),
-    "normalize": ("pipeline", PipelineAgg.parse_normalize),
+    "serial_diff": ("pipeline", WindowPipelineAgg.parse_serial_diff),
+    "cumulative_cardinality": ("pipeline", CumulativeCardinalityAgg.parse),
+    "moving_percentiles": ("pipeline", MovingPercentilesAgg.parse),
+    "normalize": ("pipeline", NormalizeAgg.parse),
     **{
-        op: ("pipeline", PipelineAgg.parse_sibling)
-        for op in sorted(SIBLING_OPS.keys() | MULTI_SIBLING_OPS)
+        op: ("pipeline", SiblingPipelineAgg.parse)
+        for op in sorted([*_SIBLING_FNS, "extended_stats_bucket",
+                          "percentiles_bucket", "stats_bucket"])
     },
-    "bucket_correlation": ("stats_test", BucketStatsTestAgg.parse_correlation),
-    "bucket_count_ks_test": ("stats_test", BucketStatsTestAgg.parse_ks_test),
-    "bucket_script": ("script", BucketScriptAgg.parse),
-    "bucket_selector": ("script", BucketScriptAgg.parse),
+    "bucket_correlation": ("pipeline", BucketStatsTestAgg.parse_correlation),
+    "bucket_count_ks_test": ("pipeline", BucketStatsTestAgg.parse_ks_test),
+    "bucket_script": ("pipeline", BucketScriptAgg.parse),
+    "bucket_selector": ("pipeline", BucketScriptAgg.parse),
     "bucket_sort": ("bucket_sort", BucketSortAgg.parse),
 }
 
@@ -4995,24 +5630,21 @@ _KINDS: dict[str, tuple[str, object]] = {
 def parse_vis_state(vis_state: str | dict) -> VisState:
     """Parse a Kibana ``visState`` (JSON string or dict) into the agg
     AST.  Disabled aggs are skipped, bucket order is preserved (it
-    defines the grouping nesting), metrics keep their declaration
-    order."""
+    defines the grouping nesting), metrics and pipelines keep their
+    declaration order."""
     state = json.loads(vis_state) if isinstance(vis_state, str) else vis_state
     aggs = [a for a in state.get("aggs", []) if a.get("enabled", True)]
     cx = _ParseCtx(by_id={a["id"]: a for a in aggs})
     buckets = cx.buckets
     metrics: list = []
-    pipelines: list[PipelineAgg] = []
-    stats_pipelines: list[BucketStatsTestAgg] = []
-    scripts: list[BucketScriptAgg] = []
+    pipelines: list[_Pipeline] = []
     sorts: list[BucketSortAgg] = []
     into = {
         "bucket": buckets, "sole": buckets, "metric": metrics,
-        "pipeline": pipelines, "stats_test": stats_pipelines,
-        "script": scripts, "bucket_sort": sorts,
+        "pipeline": pipelines, "bucket_sort": sorts,
     }
     roles: dict[str, str] = {}
-    for seq, a in enumerate(aggs):
+    for a in aggs:
         t = a["type"]
         if t not in _KINDS:
             raise ValueError(f"kibana: unsupported agg type {t!r}")
@@ -5024,7 +5656,6 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
                 else f"kibana: {t} cannot be a bucket agg (it is a "
                 f"{'metric' if role == 'metric' else 'pipeline'} agg)"
             )
-        cx.seq = seq
         into[role].append(parse(t, a.get("params", {}), _agg_label(a), cx))
         roles[t] = role
     for t, role in roles.items():
@@ -5032,7 +5663,7 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
             continue
         if len(buckets) != 1:
             raise ValueError(f"kibana: {t} must be the only bucket agg")
-        if pipelines or stats_pipelines or scripts or sorts:
+        if pipelines or sorts:
             raise ValueError(
                 f"kibana: {t} does not compose with pipeline aggs "
                 f"(simple metric sub-aggs at most; no pipeline, script "
@@ -5040,112 +5671,30 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
             )
     if len(sorts) > 1:
         raise ValueError("kibana: at most one bucket_sort per vis")
-    bucket_sort: BucketSortAgg | None = None
-    if pipelines or stats_pipelines or scripts or sorts:
-        label_of = {m.label: m.label for m in metrics}
-        for a in aggs:
-            label_of.setdefault(a["id"], _agg_label(a))
-        paths = [
-            *(pl.source_label for pl in pipelines),
-            *(st.source_label for st in stats_pipelines),
-            *(path for sc in scripts for _, path in sc.paths),
-            *(bs.sort_label for bs in sorts),
-        ]
-        if "_count" in paths:
-            # the implicit doc-count metric, materialized only when a
-            # buckets_path actually references it
-            if not any(
-                isinstance(m, MetricAgg) and m.op == "count" for m in metrics
-            ):
-                # first unused name: a metric or bucket customLabel'd
-                # 'count' would otherwise produce two columns aliased
-                # 'count' and an AMBIGUOUS_REFERENCE at evaluate time
-                # (code-review r9)
-                taken = {m.label for m in metrics} | {b.label for b in buckets}
-                cname = "count"
-                n = 2
-                while cname in taken:
-                    cname = f"count_{n}"
-                    n += 1
-                metrics.append(MetricAgg(op="count", field="", label=cname))
-            label_of["_count"] = next(
-                m.label
-                for m in metrics
-                if isinstance(m, MetricAgg) and m.op == "count"
-            )
-
-        def _resolve_path(op: str, path: str) -> str:
-            """buckets_path → the SINGLE materialized metric column it
-            names.  Multi-column metrics (stats/extended_stats,
-            percentiles, top_hits) reject at parse time — without this
-            the eager validation passes on the agg's LABEL and the
-            evaluation crashes later with UNRESOLVED_COLUMN
-            (code-review r9)."""
-            src = label_of.get(str(path))
-            single = src is not None and any(
-                isinstance(m, MetricAgg) and m.label == src for m in metrics
-            )
-            if not single:
+    paths = _Paths({m.label: m.label for m in metrics}, metrics, buckets)
+    for a in aggs:
+        paths.label_of.setdefault(a["id"], _agg_label(a))
+    pipelines = [pl.resolve(paths) for pl in pipelines]
+    sorts = [bs.resolve(paths) for bs in sorts]
+    for i, pl in enumerate(pipelines):
+        pl.check(buckets, pipelines[:i])
+    if sorts and not any(b.keyed for b in buckets):
+        raise ValueError("kibana: bucket_sort needs a bucket agg")
+    # a pipeline output may not reuse a column name: withColumn would
+    # silently overwrite the bucket key, metric or earlier pipeline
+    # column it collides with
+    taken = {b.label for b in buckets if b.keyed} | {
+        c for m in metrics for c in m.column_names()
+    }
+    for pl in pipelines:
+        for c in pl.column_names():
+            if c in taken:
                 raise ValueError(
-                    f"kibana: {op} buckets_path {path!r} does not "
-                    f"resolve to a single-column sibling metric agg "
-                    f"(stats/percentiles/top_hits sub-paths are not "
-                    f"supported)"
+                    f"kibana: pipeline output column {c!r} is already a "
+                    f"bucket key, metric or pipeline column — give the "
+                    f"{pl.name} agg another customLabel"
                 )
-            return src
-
-        for i, pl in enumerate(pipelines):
-            if pl.op.startswith("moving_percentiles:"):
-                # references a MULTI-column percentiles agg (ES's own
-                # contract) — bypass the single-column _resolve_path
-                # and carry the source's percents so the output
-                # columns mirror the referenced agg's keys
-                mp_lbl = label_of.get(pl.source_label)
-                mp_src = next(
-                    (m for m in metrics
-                     if isinstance(m, PercentilesAgg) and m.label == mp_lbl),
-                    None,
-                )
-                if mp_src is None:
-                    raise ValueError(
-                        "kibana: moving_percentiles buckets_path must "
-                        "reference a percentiles agg"
-                    )
-                pipelines[i] = replace(
-                    pl, source_label=mp_lbl, percents=mp_src.percents
-                )
-                continue
-            src = _resolve_path(pl.op, pl.source_label)
-            if pl.op.startswith("moving_") and pl.window < 1:
-                raise ValueError("kibana: moving window must be >= 1")
-            pipelines[i] = replace(pl, source_label=src)
-        stats_pipelines = [
-            replace(st, source_label=_resolve_path(st.op, st.source_label))
-            for st in stats_pipelines
-        ]
-        for i, sc in enumerate(scripts):
-            resolved = tuple(
-                (param, _resolve_path(sc.op, path)) for param, path in sc.paths
-            )
-            # compile eagerly so a bad script fails at parse time, not
-            # mid-evaluation (the Column is rebuilt per-evaluate)
-            compile_bucket_script(sc.script, dict(resolved))
-            scripts[i] = replace(sc, paths=resolved)
-        if sorts:
-            bs = sorts[0]
-            sort_label = bs.sort_label
-            if sort_label != "_key":
-                sort_label = label_of.get(bs.sort_label)
-                if sort_label is None or not any(
-                    m.label == sort_label for m in metrics
-                ):
-                    raise ValueError(
-                        f"kibana: bucket_sort sortField {bs.sort_label!r} "
-                        f"does not resolve to a sibling metric agg"
-                    )
-            if bs.order not in ("asc", "desc"):
-                raise ValueError("kibana: bucket_sort order must be asc|desc")
-            bucket_sort = replace(bs, sort_label=sort_label)
+            taken.add(c)
     if "reverse_nested" in roles and "nested" not in roles:
         raise ValueError(
             "kibana: reverse_nested is only meaningful inside a nested "
@@ -5158,9 +5707,7 @@ def parse_vis_state(vis_state: str | dict) -> VisState:
         buckets=tuple(buckets),
         metrics=tuple(metrics),
         pipelines=tuple(pipelines),
-        bucket_sort=bucket_sort,
-        scripts=tuple(scripts),
-        stats_pipelines=tuple(stats_pipelines),
+        bucket_sort=sorts[0] if sorts else None,
     )
 
 
@@ -5205,7 +5752,6 @@ class KibanaPlan:
             auto_range=auto_range,
             vwh_approx_seed=vwh_approx_seed,
         )
-        resolve = ev.resolve
         # 1) a sole-bucket kind is the whole evaluation
         if s.buckets and s.buckets[0].evaluate_alone is not None:
             return s.buckets[0].evaluate_alone(df, ev)
@@ -5293,612 +5839,23 @@ class KibanaPlan:
         for b, prefix in zip(s.buckets, prefixes):
             out = b.level_cut(out, prefix, key_names, mdc_src, metrics, ev)
 
-        # 5) pipeline aggs: one _apply_* pass per run of same-kind
-        # stages (below), then bucket_sort
-        _sib_ops = SIBLING_OPS.keys() | MULTI_SIBLING_OPS
-
-        def _apply_parents(out: DataFrame, run: list[PipelineAgg]) -> DataFrame:
-            seq = [
-                b.label
-                for b in s.buckets
-                if b.sequence
-            ]
-            if not seq:
-                raise ValueError(
-                    "kibana: pipeline aggs need a histogram or "
-                    "date_histogram bucket"
-                )
-            seq_label = seq[-1]
-            outer = [k for k in key_names if k != seq_label]
-            w = Window.partitionBy(*[F.col(c) for c in outer]).orderBy(
-                F.col(seq_label).asc()
-            )
-            for pl in run:
-                src = F.col(pl.source_label).cast("double")
-                if pl.op == "derivative":
-                    expr = src - F.lag(src).over(w)
-                elif pl.op == "serial_diff":
-                    # ES serial_diff: value minus the value `lag`
-                    # buckets earlier (lag=1 ≡ derivative); the first
-                    # `lag` buckets emit NULL
-                    expr = src - F.lag(src, pl.window).over(w)
-                elif pl.op == "cumulative_sum":
-                    expr = F.sum(src).over(
-                        w.rowsBetween(Window.unboundedPreceding, 0)
-                    )
-                else:  # moving_* — ES moving_fn shift=0: the window
-                    # buckets BEFORE the current one, exclusive
-                    mfn = {"moving_avg": F.avg, "moving_max": F.max,
-                           "moving_min": F.min, "moving_sum": F.sum}[pl.op]
-                    expr = mfn(src).over(w.rowsBetween(-pl.window, -1))
-                out = out.withColumn(pl.label, expr)
-            return out
-
-        def _apply_siblings(out: DataFrame, run: list[PipelineAgg]) -> DataFrame:
-            # sibling pipeline aggs: aggregate a metric ACROSS the
-            # innermost bucket level, one value per outer bucket,
-            # repeated on each inner row.  Grouped aggregation +
-            # broadcast join-back (the sibling side is one row per
-            # OUTER bucket — small by construction), never a window:
-            # with no outer bucket a window would constant-fold to an
-            # empty partition spec and move the whole relation into one
-            # task; the global-agg + one-row broadcast shape stays
-            # distributed (bnl_join_onerow).
-            if not key_names:
-                raise ValueError("kibana: sibling pipeline aggs need a bucket agg")
-            outer = key_names[:-1]
-            aggs_ = []
-            pb_extract: list[tuple[str, str, float]] = []
-            for pl in run:
-                src = F.col(pl.source_label).cast("double")
-                if pl.op in ("stats_bucket", "extended_stats_bucket"):
-                    names = pl.column_names()
-                    aggs_ += [
-                        F.count(src).alias(names[0]),
-                        F.min(src).alias(names[1]),
-                        F.max(src).alias(names[2]),
-                        F.avg(src).alias(names[3]),
-                        F.sum(src).alias(names[4]),
-                    ]
-                    if pl.op == "extended_stats_bucket":
-                        # POPULATION statistics from exact partials,
-                        # the same formulas as the extended_stats
-                        # metric agg (ES's definition)
-                        n_ = F.count(src).cast("double")
-                        ssq = F.sum(src * src)
-                        var = ssq / n_ - (F.sum(src) / n_) * (F.sum(src) / n_)
-                        aggs_ += [
-                            ssq.alias(names[5]),
-                            var.alias(names[6]),
-                            F.sqrt(var).alias(names[7]),
-                        ]
-                elif pl.op == "percentiles_bucket":
-                    # ES percentiles_bucket does NOT interpolate: it
-                    # returns the nearest input value, picked from the
-                    # sorted bucket values at index
-                    # round(p/100 * (n-1)) (ADVICE r9; the previous
-                    # F.percentile linear interpolation could emit
-                    # values ES never produces).  Collect the sorted
-                    # value array per outer bucket (bounded by the
-                    # inner bucket count — sibling inputs are already
-                    # aggregated buckets, not raw rows) and select
-                    # after the join-back.
-                    arr_name = f"__pbarr_{pl.label}"
-                    aggs_.append(
-                        F.array_sort(F.collect_list(src)).alias(arr_name)
-                    )
-                    pb_extract += [
-                        (arr_name, n, p)
-                        for p, n in zip(pl.percents, pl.column_names())
-                    ]
-                else:
-                    aggs_.append(SIBLING_OPS[pl.op](src).alias(pl.label))
-            if outer:
-                sib = out.groupBy(*[F.col(c) for c in outer]).agg(*aggs_)
-                out = out.join(F.broadcast(sib), outer, "left")
-            else:
-                out = out.crossJoin(F.broadcast(out.agg(*aggs_)))
-            for arr_name, col_name, p in pb_extract:
-                arr = F.col(arr_name)
-                # floor(x + 0.5) is Java's Math.round — the exact ES
-                # index formula, identical IEEE ops in the SQL twin
-                idx = F.floor(
-                    F.lit(p / 100.0) * (F.size(arr) - 1).cast("double")
-                    + F.lit(0.5)
-                ).cast("int")
-                out = out.withColumn(col_name, F.get(arr, idx))
-            return out.drop(*{a for a, _, _ in pb_extract})
-
-        def _apply_statstest(
-            out: DataFrame, run: list[BucketStatsTestAgg]
-        ) -> DataFrame:
-            # sibling significance pipelines (round 15): ONE grouped
-            # collect of the innermost (key, value) pairs per outer
-            # bucket — bucket-table-sized by construction (the
-            # percentiles_bucket collect shape, never a window) —
-            # broadcast-joined back; correlation / KS formulas are
-            # JVM-side higher-order-array Column math over the
-            # collected sequence.  Indicator moments (x̄, Σf·e²,
-            # cumulative reference CDF) fold to Python constants at
-            # compile time: the indicator is a request literal.
-            if not key_names:
-                raise ValueError(
-                    "kibana: bucket_correlation / bucket_count_ks_test "
-                    "need a bucket agg"
-                )
-            seq_label = key_names[-1]
-            outer = key_names[:-1]
-            aggs_ = []
-            for st in run:
-                src = F.col(st.source_label).cast("double")
-                aggs_.append(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col(seq_label).alias("k"),
-                                src.alias("v"),
-                            )
-                        )
-                    ).alias(f"__bst_{st.label}_arr")
-                )
-            if outer:
-                sib = out.groupBy(*[F.col(c) for c in outer]).agg(*aggs_)
-                out = out.join(F.broadcast(sib), outer, "left")
-            else:
-                out = out.crossJoin(F.broadcast(out.agg(*aggs_)))
-            drop: list[str] = []
-            for st in run:
-                arr = F.col(f"__bst_{st.label}_arr")
-                drop += [f"__bst_{st.label}_arr", f"__bst_{st.label}_n"]
-                vals = F.transform(arr, lambda s: s["v"])
-                # the total folds over the KEY-SORTED array — a fixed
-                # summation order, so non-integral metric paths stay
-                # bit-deterministic where F.sum would be partition-
-                # order-dependent
-                out = out.withColumn(
-                    f"__bst_{st.label}_n",
-                    F.aggregate(vals, F.lit(0.0), lambda a, v: a + v),
-                )
-                n = F.col(f"__bst_{st.label}_n")
-                if st.op == "bucket_correlation":
-                    mlen = len(st.expectations)
-                    fs = st.fractions or tuple(1.0 / mlen
-                                               for _ in range(mlen))
-                    fsum = sum(fs)
-                    fs = tuple(f_ / fsum for f_ in fs)
-                    xmean = sum(
-                        f_ * e for f_, e in zip(fs, st.expectations)
-                    )
-                    xvar = sum(
-                        f_ * e * e for f_, e in zip(fs, st.expectations)
-                    ) - xmean * xmean
-                    nn = float(st.doc_count)
-                    exp_arr = F.array(
-                        *[F.lit(float(e)) for e in st.expectations]
-                    )
-                    sxy = F.aggregate(
-                        F.zip_with(vals, exp_arr, lambda v, e: v * e),
-                        F.lit(0.0),
-                        lambda acc, z: acc + z,
-                    )
-                    ymean = n / F.lit(nn)
-                    cov = sxy / F.lit(nn) - F.lit(xmean) * ymean
-                    yvar = ymean * (F.lit(1.0) - ymean)
-                    ok = (
-                        (F.size(arr) == F.lit(mlen))
-                        & F.lit(xvar > 0)
-                        & (n > 0) & (n < F.lit(nn))
-                    )
-                    out = out.withColumn(
-                        st.label,
-                        F.when(ok, cov / F.sqrt(F.lit(xvar) * yvar)),
-                    )
-                    continue
-                # bucket_count_ks_test: running ECDF-vs-reference max
-                # deviations in ONE array fold (acc = index, running
-                # count, D+, D-)
-                if st.fractions:
-                    tot = sum(st.fractions)
-                    cum, tcdf = 0.0, []
-                    for f_ in st.fractions:
-                        cum += f_
-                        tcdf.append(cum / tot)
-                    tcdf_arr = F.array(*[F.lit(x) for x in tcdf])
-                    size_ok = F.size(arr) == F.lit(len(st.fractions))
-
-                    def _tc(j, _ta=tcdf_arr):  # j: 1-based element idx
-                        return F.element_at(_ta, j)
-                else:
-                    size_ok = F.size(arr) > 0
-
-                    def _tc(j, _a=arr):
-                        return j.cast("double") / F.size(_a).cast(
-                            "double"
-                        )
-
-                # acc["i"] = 1-based index of the element being folded
-                zero = F.struct(
-                    F.lit(1).alias("i"), F.lit(0.0).alias("c"),
-                    F.lit(-1.0).alias("dp"), F.lit(-1.0).alias("dm"),
-                )
-
-                def _make_step(_n, _tcf):
-                    # factory binds the total + reference-CDF lookup:
-                    # pyspark counts a lambda's parameters, so default-
-                    # arg closures would mis-arity the HOF callback
-                    def _step(acc, v):
-                        ec = (acc["c"] + v) / _n
-                        tc = _tcf(acc["i"])
-                        return F.struct(
-                            (acc["i"] + 1).alias("i"),
-                            (acc["c"] + v).alias("c"),
-                            F.greatest(acc["dp"], ec - tc).alias("dp"),
-                            F.greatest(acc["dm"], tc - ec).alias("dm"),
-                        )
-
-                    return _step
-
-                res = F.aggregate(vals, zero, _make_step(n, _tc))
-                ok = size_ok & (n > 0)
-
-                # the fold result binds as a lambda leaf: inlined, the
-                # two_sided Kolmogorov series would embed the whole
-                # fold in each of its ~40 terms (codegen-tree blowup —
-                # see _bind1)
-                def _make_ks_p(_n, _alts):
-                    def _ks_p(s):  # arity 1: pyspark HOF callback
-                        dp, dm = s["dp"], s["dm"]
-                        lam = F.sqrt(_n) * F.greatest(dp, dm)
-                        cols = []
-                        for alt in _alts:
-                            if alt == "greater":
-                                p = F.exp(F.lit(-2.0) * _n * dp * dp)
-                            elif alt == "less":
-                                p = F.exp(F.lit(-2.0) * _n * dm * dm)
-                            else:
-                                p = ks_two_sided_p_col(lam)
-                            cols.append(
-                                F.least(p, F.lit(1.0)).alias(alt)
-                            )
-                        return F.struct(*cols)
-
-                    return _ks_p
-
-                ps = _bind1(res, _make_ks_p(n, st.alternatives))
-                for alt in st.alternatives:
-                    out = out.withColumn(
-                        f"{st.label}_{alt}", F.when(ok, ps[alt])
-                    )
-            return out.drop(*drop)
-
-        def _apply_cumcard(out: DataFrame, run: list[PipelineAgg]) -> DataFrame:
-            # ES cumulative_cardinality (round 13), exact: a value
-            # contributes +1 in its FIRST-seen innermost bucket per
-            # outer group; the running distinct count is the
-            # cumulative sum of those first-seen counts over the
-            # histogram sequence.  Two value-keyed aggregations (the
-            # same doc-scale cost class as the cardinality agg it
-            # reads) + a bucket-table window — the window relation is
-            # the aggregated bucket table, the _apply_parents
-            # bounded-by-construction argument.
-            if not key_names or not s.buckets[-1].sequence:
-                raise ValueError(
-                    "kibana: cumulative_cardinality needs an innermost "
-                    "histogram/date_histogram bucket"
-                )
-            if any(
-                sc.op == "bucket_selector" and sc.seq < min(pl.seq for pl in run)
-                for sc in s.scripts
-            ):
-                raise ValueError(
-                    "kibana: cumulative_cardinality after a "
-                    "bucket_selector is not supported — the running "
-                    "count would disagree with the surviving buckets"
-                )
-            seq_label = key_names[-1]
-            outer = key_names[:-1]
-            w = Window.partitionBy(*[F.col(c) for c in outer]).orderBy(
-                F.col(seq_label).asc()
-            ).rowsBetween(Window.unboundedPreceding, 0)
-            # first-seen buckets are computed against the SURVIVING
-            # bucket keys, not the raw doc frame: a min_doc_count>=2
-            # histogram can drop the bucket where a value first
-            # appeared, and ES — merging the per-RETURNED-bucket HLL
-            # sketches cumulatively — counts that value in its first
-            # surviving bucket instead of never (ADVICE r13).  The
-            # surviving-key relation is bucket-table-sized: broadcast.
-            surviving = F.broadcast(
-                out.select(
-                    *[F.col(c) for c in outer + [seq_label]]
-                ).distinct()
-            )
-            for pl in run:
-                m = next(
-                    mm for mm in s.metrics
-                    if mm.label == pl.source_label
-                )
-                val = resolve(m.field)
-                first = df.filter(val.isNotNull()).join(
-                    surviving, outer + [seq_label], "semi"
-                ).groupBy(
-                    *[F.col(c) for c in outer], val.alias("__cc_v")
-                ).agg(F.min(F.col(seq_label)).alias(seq_label))
-                news = first.groupBy(
-                    *[F.col(c) for c in outer + [seq_label]]
-                ).agg(F.count(F.lit(1)).alias("__cc_new"))
-                out = out.join(news, outer + [seq_label], "left")
-                out = out.withColumn(
-                    pl.label,
-                    F.sum(F.coalesce(F.col("__cc_new"), F.lit(0))).over(w),
-                ).drop("__cc_new")
-            return out
-
-        def _apply_movperc(out: DataFrame, run: list[PipelineAgg]) -> DataFrame:
-            # ES moving_percentiles (round 14): slide a window across
-            # the innermost histogram's RETURNED bucket sequence and
-            # report the window's percentiles.  ES merges the
-            # per-bucket t-digest sketches; this engine is EXACT,
-            # recomputing interpolated percentiles over the raw doc
-            # values of the window's buckets — the documented
-            # exact-vs-approx stance (percentiles / cumulative_
-            # cardinality).  moving_fn shift semantics: shift=0 → the
-            # `window` buckets BEFORE the current one, exclusive;
-            # shift=window includes the current bucket.
-            #
-            # Scale shape: the bucket-index map is bucket-table-sized
-            # (broadcast); each doc explodes into <= window target
-            # indices (bounded fan-out — the window param is the
-            # documented amplification factor), then ONE grouped
-            # percentile per (outer, target) key.  Empty windows emit
-            # null.  Indexing over the SURVIVING bucket table means a
-            # min_doc_count cut or earlier bucket_selector shortens
-            # the sequence exactly as ES's pipeline (which runs on the
-            # returned buckets) sees it.
-            if not key_names or not s.buckets[-1].sequence:
-                raise ValueError(
-                    "kibana: moving_percentiles needs an innermost "
-                    "histogram/date_histogram bucket"
-                )
-            seq_label = key_names[-1]
-            outer = key_names[:-1]
-            w_idx = Window.partitionBy(
-                *[F.col(c) for c in outer]
-            ).orderBy(F.col(seq_label).asc())
-            out = out.withColumn("__mp_i", F.row_number().over(w_idx))
-            idx = F.broadcast(
-                out.select(
-                    *[F.col(c) for c in outer + [seq_label, "__mp_i"]]
-                )
-            )
-            for pl in run:
-                shift = int(pl.op.split(":", 1)[1])
-                m = next(
-                    mm for mm in s.metrics
-                    if mm.label == pl.source_label
-                )
-                val = resolve(m.field).cast("double")
-                docs = df.filter(val.isNotNull()).withColumn(
-                    "__mp_v", val
-                ).join(idx, outer + [seq_label])
-                # a doc in bucket index j serves result buckets
-                # i ∈ [j+1-shift, j+window-shift]
-                tgt = docs.withColumn(
-                    "__mp_t",
-                    F.explode(
-                        F.sequence(
-                            F.col("__mp_i") + F.lit(1 - shift),
-                            F.col("__mp_i") + F.lit(pl.window - shift),
-                        )
-                    ),
-                )
-                per = tgt.groupBy(
-                    *[F.col(c) for c in outer],
-                    F.col("__mp_t").alias("__mp_i"),
-                ).agg(
-                    F.percentile(
-                        F.col("__mp_v"),
-                        F.array(*[F.lit(p_ / 100.0) for p_ in m.percents]),
-                    ).alias("__mp_arr")
-                )
-                out = out.join(per, outer + ["__mp_i"], "left")
-                for k_, name in enumerate(pl.column_names()):
-                    out = out.withColumn(
-                        name, F.col("__mp_arr").getItem(k_)
-                    )
-                out = out.drop("__mp_arr")
-            return out.drop("__mp_i")
-
-        def _apply_normalize(out: DataFrame, run: list[PipelineAgg]) -> DataFrame:
-            # ES normalize (round 13): rescale each bucket's metric by
-            # level statistics computed ACROSS the innermost bucket
-            # level per outer bucket.  Same distributed shape as the
-            # sibling aggs — one grouped aggregation over the bucket
-            # table joined back (broadcast-safe: one row per OUTER
-            # bucket), never an unpartitioned window.  Only the
-            # statistics the batched methods need are aggregated;
-            # degenerate denominators emit null.
-            if not key_names:
-                raise ValueError("kibana: normalize needs a bucket agg")
-            outer = key_names[:-1]
-            aggs_ = []
-            for pl in run:
-                src = F.col(pl.source_label).cast("double")
-                method = pl.op.split(":", 1)[1]
-                t = f"__nz_{pl.label}"
-                if method in ("rescale_0_1", "rescale_0_100", "mean"):
-                    aggs_ += [F.min(src).alias(f"{t}_min"),
-                              F.max(src).alias(f"{t}_max")]
-                if method in ("mean", "z-score"):
-                    aggs_.append(F.avg(src).alias(f"{t}_avg"))
-                if method == "z-score":
-                    aggs_.append(F.stddev_pop(src).alias(f"{t}_std"))
-                if method == "percent_of_sum":
-                    aggs_.append(F.sum(src).alias(f"{t}_sum"))
-                if method == "softmax":
-                    aggs_.append(F.sum(F.exp(src)).alias(f"{t}_esum"))
-            if outer:
-                lvl = out.groupBy(*[F.col(c) for c in outer]).agg(*aggs_)
-                out = out.join(F.broadcast(lvl), outer, "left")
-            else:
-                out = out.crossJoin(F.broadcast(out.agg(*aggs_)))
-            drop: set[str] = set()
-            for pl in run:
-                src = F.col(pl.source_label).cast("double")
-                method = pl.op.split(":", 1)[1]
-                t = f"__nz_{pl.label}"
-                if method in ("rescale_0_1", "rescale_0_100", "mean"):
-                    rng = F.col(f"{t}_max") - F.col(f"{t}_min")
-                    num = (
-                        src - F.col(f"{t}_avg")
-                        if method == "mean"
-                        else src - F.col(f"{t}_min")
-                    )
-                    expr = F.when(rng != 0, num / rng)
-                    if method == "rescale_0_100":
-                        expr = expr * F.lit(100.0)
-                    drop |= {f"{t}_min", f"{t}_max"}
-                    if method == "mean":
-                        drop.add(f"{t}_avg")
-                elif method == "z-score":
-                    expr = F.when(
-                        F.col(f"{t}_std") != 0,
-                        (src - F.col(f"{t}_avg")) / F.col(f"{t}_std"),
-                    )
-                    drop |= {f"{t}_avg", f"{t}_std"}
-                elif method == "percent_of_sum":
-                    expr = F.when(
-                        F.col(f"{t}_sum") != 0, src / F.col(f"{t}_sum")
-                    )
-                    drop.add(f"{t}_sum")
-                else:  # softmax
-                    expr = F.when(
-                        F.col(f"{t}_esum") != 0, F.exp(src) / F.col(f"{t}_esum")
-                    )
-                    drop.add(f"{t}_esum")
-                out = out.withColumn(pl.label, expr)
-            return out.drop(*drop)
-
-        # same-level pipeline reduction in REQUEST order (round
-        # 11.5 — previously a fixed parents → siblings → scripts →
-        # selectors phase order, a documented divergence since ADVICE
-        # r9): ES reduces same-level pipeline aggs in the order the
-        # request declares them, so a bucket_selector declared before
-        # a sibling agg (stats_bucket/avg_bucket/...) filters that
-        # sibling's input, and a selector before a derivative leaves
-        # gaps its lag window then skips over.  Consecutive runs of
-        # the same kind batch into one window pass / one grouped
-        # aggregation, so a request in the classic order compiles to
-        # the identical plan (and values) the fixed phases produced.
-        #
-        # Parent windows: sequence over the INNERMOST histogram /
-        # date_histogram buckets, one window per outer-bucket group.
-        # When outer buckets exist the window partitions by them; a
-        # bare histogram's window relation is the already-aggregated
-        # bucket table (time-span / interval rows, not docs) — the
-        # same bounded-by-construction argument as promql_subquery's
-        # grid window.
-        stages: list[tuple[str, object]] = sorted(
-            [
-                (
-                    "sibling" if pl.op in _sib_ops
-                    else "normalize" if pl.op.startswith("normalize:")
-                    else "cumcard" if pl.op == "cumulative_cardinality"
-                    else "movperc"
-                    if pl.op.startswith("moving_percentiles:")
-                    else "parent",
-                    pl,
-                )
-                for pl in s.pipelines
-            ]
-            + [(sc.op, sc) for sc in s.scripts]
-            + [("statstest", st) for st in s.stats_pipelines],
-            key=lambda t: t[1].seq,
-        )
-        i = 0
-        while i < len(stages):
-            kind, stage = stages[i]
-            if kind in ("parent", "sibling", "normalize", "cumcard",
-                        "movperc", "statstest"):
-                run = [stage]
-                while i + 1 < len(stages) and stages[i + 1][0] == kind:
-                    i += 1
-                    run.append(stages[i][1])
-                out = (
-                    _apply_parents(out, run)
-                    if kind == "parent"
-                    else _apply_siblings(out, run)
-                    if kind == "sibling"
-                    else _apply_normalize(out, run)
-                    if kind == "normalize"
-                    else _apply_cumcard(out, run)
-                    if kind == "cumcard"
-                    else _apply_movperc(out, run)
-                    if kind == "movperc"
-                    else _apply_statstest(out, run)
-                )
-            elif kind == "bucket_script":
-                # per-bucket painless arithmetic over sibling metric
-                # values — pure Column expression: scan-local, no
-                # shuffle, no Python
-                out = out.withColumn(
-                    stage.label,
-                    compile_bucket_script(stage.script, dict(stage.paths)),
-                )
-            else:  # bucket_selector — gap_policy skip: null script
-                # inputs drop the bucket
-                pred = compile_bucket_script(stage.script, dict(stage.paths))
-                out = out.filter(pred.cast("boolean"))
-            i += 1
-
-        # bucket_sort: order the innermost buckets per outer bucket
-        # and keep [from_, from_+size).  Computed AFTER sibling aggs —
-        # ES's truncation is response-shaping only.  Nested: row_number
-        # over the outer partition (distributed, one rank per outer
-        # group).  Top-level: TakeOrdered limit(from+size) — never a
-        # global window over the full relation — then a rank over the
-        # ≤ from+size survivors only when an offset must be dropped.
+        # 5) pipeline aggs in request order, like ES's same-level
+        # reduction (a bucket_selector declared before a sibling agg
+        # filters that agg's input; one before a derivative leaves gaps
+        # its lag skips over): one apply per run of consecutive
+        # same-kind stages, so a run batches into one window pass or one
+        # grouped aggregation.  Then bucket_sort, which is
+        # response-shaping only: sibling aggs see the full bucket list.
+        lv = _Level(keys=key_names, docs=df, resolve=ev.resolve)
+        for kind, run in itertools.groupby(s.pipelines, key=type):
+            out = kind.apply(out, list(run), lv)
         if s.bucket_sort is not None:
-            bs = s.bucket_sort
-            if not key_names:
-                raise ValueError("kibana: bucket_sort needs a bucket agg")
-            inner_label = key_names[-1]
-            sort_col = (
-                F.col(inner_label) if bs.sort_label == "_key"
-                else F.col(bs.sort_label)
-            )
-            direction = sort_col.desc() if bs.order == "desc" else sort_col.asc()
-            order_cols = [direction, F.col(inner_label).asc()]
-            outer = key_names[:-1]
-            if outer:
-                w = Window.partitionBy(*[F.col(c) for c in outer]).orderBy(
-                    *order_cols
-                )
-                out = (
-                    out.withColumn("__bs", F.row_number().over(w))
-                    .filter(
-                        (F.col("__bs") > bs.from_)
-                        & (F.col("__bs") <= bs.from_ + bs.size)
-                    )
-                    .drop("__bs")
-                )
-            else:
-                out = out.orderBy(*order_cols).limit(bs.from_ + bs.size)
-                if bs.from_:
-                    w = Window.orderBy(*order_cols)
-                    out = (
-                        out.withColumn("__bs", F.row_number().over(w))
-                        .filter(F.col("__bs") > bs.from_)
-                        .drop("__bs")
-                    )
+            out = s.bucket_sort.apply(out, lv)
 
         # 6) the projection: key columns, then every agg's outputs
         return out.select(
             *[F.col(k) for k in key_names],
-            *[
-                c
-                for a in (*metrics, *s.pipelines, *s.stats_pipelines, *s.scripts)
-                for c in a.outputs()
-            ],
+            *[c for a in (*metrics, *s.pipelines) for c in a.outputs()],
         )
 
 

@@ -4609,3 +4609,139 @@ def test_sole_bucket_kinds_reject_pipeline_aggs(kind):
             {"id": "2", "type": "bucket_sort", "schema": "metric",
              "params": {"size": 2}},
         ]))
+
+
+# ------------------------------------------------------ pipeline kinds
+
+_TERMS_G = {"id": "g", "type": "terms", "schema": "bucket",
+            "params": {"field": "g", "size": 5, "orderBy": "_term",
+                       "customLabel": "g"}}
+_HIST_H = {"id": "h", "type": "date_histogram", "schema": "bucket",
+           "params": {"field": "ts", "interval": "1h", "customLabel": "h"}}
+_SUM_S = {"id": "s", "type": "sum", "schema": "metric",
+          "params": {"field": "v", "customLabel": "s"}}
+_CARD_U = {"id": "u", "type": "cardinality", "schema": "metric",
+           "params": {"field": "u", "customLabel": "u"}}
+
+
+def _pipe(agg_id, kind, **params):
+    return {"id": agg_id, "type": kind, "schema": "metric", "params": params}
+
+
+_CORRELATION = {"function": {"count_correlation": {"indicator": {
+    "expectations": [1.0, 2.0], "doc_count": 10}}}}
+
+
+@pytest.mark.parametrize("aggs, match", [
+    pytest.param(
+        [_HIST_H, _TERMS_G, _SUM_S,
+         _pipe("d", "derivative", metricAgg="s", customLabel="d")],
+        "derivative needs an innermost histogram", id="derivative-above-terms"),
+    pytest.param(
+        [_TERMS_G, _HIST_H, _SUM_S,
+         _pipe("d", "derivative", metricAgg="s", customLabel="s")],
+        "column 's' is already", id="label-reuses-metric"),
+    pytest.param(
+        [_TERMS_G, _HIST_H, _SUM_S,
+         _pipe("d1", "derivative", metricAgg="s", customLabel="d"),
+         _pipe("d2", "cumulative_sum", metricAgg="s", customLabel="d")],
+        "column 'd' is already", id="two-pipelines-one-label"),
+    pytest.param(
+        [_TERMS_G, _HIST_H, _SUM_S,
+         _pipe("x", "bucket_script", buckets_path={"t": "s"},
+               script="params.t * 2", customLabel="g")],
+        "column 'g' is already", id="label-reuses-bucket-key"),
+    pytest.param(
+        [_SUM_S, _pipe("a", "avg_bucket", metricAgg="s")],
+        "avg_bucket aggregates across sibling buckets and needs a bucket agg",
+        id="sibling-without-bucket"),
+    pytest.param(
+        [_SUM_S, _pipe("n", "normalize", metricAgg="s",
+                       method="percent_of_sum")],
+        "normalize aggregates across sibling buckets", id="normalize-without-bucket"),
+    pytest.param(
+        [_pipe("c", "bucket_correlation", buckets_path="_count",
+               **_CORRELATION)],
+        "bucket_correlation aggregates across sibling buckets",
+        id="correlation-without-bucket"),
+    pytest.param(
+        [_pipe("k", "bucket_count_ks_test", buckets_path="_count",
+               sampling_method="uniform")],
+        "bucket_count_ks_test aggregates across sibling buckets",
+        id="ks-test-without-bucket"),
+    pytest.param(
+        [_SUM_S, _pipe("o", "bucket_sort", sortField="s", size=1)],
+        "bucket_sort needs a bucket agg", id="bucket-sort-without-bucket"),
+    pytest.param(
+        [_HIST_H, _TERMS_G, _CARD_U,
+         _pipe("cc", "cumulative_cardinality", metricAgg="u")],
+        "cumulative_cardinality needs an innermost histogram",
+        id="cumulative-cardinality-above-terms"),
+    pytest.param(
+        [_TERMS_G, {"id": "p", "type": "percentiles", "schema": "metric",
+                    "params": {"field": "v", "percents": [50]}},
+         _pipe("mp", "moving_percentiles", metricAgg="p", window=2)],
+        "moving_percentiles needs an innermost histogram",
+        id="moving-percentiles-without-histogram"),
+    pytest.param(
+        [_HIST_H, _CARD_U,
+         _pipe("sel", "bucket_selector", buckets_path={"c": "u"},
+               script="params.c > 0"),
+         _pipe("cc", "cumulative_cardinality", metricAgg="u")],
+        "cumulative_cardinality after a bucket_selector",
+        id="cumulative-cardinality-after-selector"),
+])
+def test_pipeline_shape_errors_raise_at_parse(aggs, match, spark):
+    """Pipeline structural rules and output-name clashes fail in
+    parse_vis_state, before any frame exists: a window pipeline needs
+    the innermost bucket to be a histogram (ES: the derivative's parent
+    must be one), a level pipeline or bucket_sort needs a bucket agg,
+    cumulative_cardinality cannot follow a bucket_selector, and no
+    pipeline output may take a bucket key's, a metric's or an earlier
+    pipeline's column name (withColumn would overwrite it).  (``spark``:
+    parsing compiles bucket scripts to Columns.)"""
+    with pytest.raises(ValueError, match=match):
+        parse_vis_state(_vis8(aggs)["visState"])
+
+
+def test_consecutive_same_kind_pipelines_share_one_join(docs, monkeypatch):
+    """Consecutive stages of one kind run as one pass: two sibling aggs
+    plan ONE level join-back, while a bucket_selector between them
+    splits the run into two (the second sees only surviving buckets)."""
+    from kafka_metrics_exporter_spark.kibana import compiler
+    from kafka_metrics_exporter_spark.plans.fingerprint import plan_fingerprint
+
+    calls = []
+    level_join = compiler._level_join
+
+    def counting_join(out, outer, aggs):
+        calls.append(len(aggs))
+        return level_join(out, outer, aggs)
+
+    monkeypatch.setattr(compiler, "_level_join", counting_join)
+    terms = {"id": "1", "type": "terms", "schema": "bucket",
+             "params": {"field": "component.keyword", "size": 10,
+                        "order": "asc", "orderBy": "_term",
+                        "customLabel": "c"}}
+    avg = _pipe("3", "avg_bucket", metricAgg="2", customLabel="avg_sv")
+    mx = _pipe("4", "max_bucket", metricAgg="_count", customLabel="max_n")
+    sel = _pipe("5", "bucket_selector", buckets_path={"t": "2"},
+                script="params.t > 15")
+    joins = {}
+    for name, pipes in (("one run", [avg, mx]), ("split", [avg, sel, mx])):
+        calls.clear()
+        plan = compile_visualization(
+            _vis8([terms, _SUM_S | {"id": "2"}] + pipes)
+        )
+        out = plan.evaluate(docs)
+        joins[name] = list(calls)
+        # no outer bucket: every join-back is a broadcast cross join of
+        # a one-row global aggregate
+        fp = plan_fingerprint(out)
+        assert fp["bnl_join"] == fp["bnl_join_onerow"] > 0
+        got = {r.c: (r.avg_sv, r.max_n) for r in out.collect()}
+        # sums: broker 80, connect 20, zk 12; counts 3, 1, 2
+        assert all(a == pytest.approx(112 / 3) for a, _ in got.values())
+        assert {n for _, n in got.values()} == {3.0}
+    # one join of both aggregates vs one join per aggregate
+    assert joins == {"one run": [2], "split": [1, 1]}

@@ -118,9 +118,6 @@ def build_parser() -> argparse.ArgumentParser:
                       help="saved-objects JSON export (the reference's "
                            "ELK/jmx_dashboard.json shape) imported during "
                            "the --kibana-url bootstrap")
-    sink.add_argument("--es-bulk-chunks", type=int, default=32,
-                      help="hash chunks per daily index so one bulk POST "
-                           "stays in the 5-15 MB ES sweet spot")
     sink.add_argument("--es-bulk-url-timeout", type=float, default=30.0,
                       help="bulk POST timeout secs (reference "
                            "Code/main.py:170-171)")
@@ -675,8 +672,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 es_bulk_foreach_batch(
                     http_bulk_poster(
                         args.es_url, timeout=args.es_bulk_url_timeout
-                    ),
-                    n_chunks=args.es_bulk_chunks
+                    )
                 )
             ).option("checkpointLocation", f"{args.checkpoint}/es")
         )

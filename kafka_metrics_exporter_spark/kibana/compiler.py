@@ -4749,9 +4749,9 @@ class BucketScriptAgg(_Pipeline):
             (param, paths.single(self.op, path).label)
             for param, path in self.paths
         )
-        # compile eagerly so a bad script fails at parse time, not
-        # mid-evaluation (the Column is rebuilt per-evaluate)
-        compile_bucket_script(self.script, dict(resolved))
+        # parse eagerly so a bad script fails at parse time, not
+        # mid-evaluation (the Column is built per-evaluate)
+        parse_bucket_script(self.script, dict(resolved))
         return replace(self, paths=resolved)
 
     @classmethod
@@ -4771,14 +4771,21 @@ class BucketScriptAgg(_Pipeline):
 _SCRIPT_TOKEN_RE = re.compile(
     r"\s*(params\.\w+|\d+\.\d+|\d+|>=|<=|==|!=|&&|\|\||[()+\-*/%!><])"
 )
+# binary operators by rising precedence
+_SCRIPT_LEVELS = (
+    ("||",), ("&&",), ("==", "!="), (">", ">=", "<", "<="), ("+", "-"),
+    ("*", "/", "%"),
+)
 
 
-def compile_bucket_script(script: str, binding: dict[str, str]) -> Column:
-    """Compile the painless expression subset to ONE Column expression
-    (precedence: ``||`` < ``&&`` < ``== !=`` < ``> >= < <=`` <
-    ``+ -`` < ``* / %`` < unary ``- !``).  ``binding`` maps param
-    names to resolved metric column names; every reference casts to
-    double so integer metric columns divide like painless doubles."""
+def parse_bucket_script(script: str, binding: dict[str, str]) -> tuple:
+    """Parse the painless expression subset into a tree of tuples:
+    ``("col", column)``, ``("lit", float)``, ``("neg", e)``,
+    ``("!", e)`` and ``(op, left, right)``.  Precedence: ``||`` <
+    ``&&`` < ``== !=`` < ``> >= < <=`` < ``+ -`` < ``* / %`` < unary
+    ``- !``.  ``binding`` maps param names to resolved metric column
+    names.  Pure Python, so a bad script raises ``ValueError`` at parse
+    time without a Spark session."""
     toks: list[str] = []
     i = 0
     while i < len(script):
@@ -4803,23 +4810,20 @@ def compile_bucket_script(script: str, binding: dict[str, str]) -> Column:
         pos += 1
         return t
 
-    def primary() -> Column:
+    def primary() -> tuple:
         t = peek()
         if t is None:
             raise ValueError(f"kibana: truncated bucket script {script!r}")
         if t == "(":
             eat()
-            e = or_()
+            e = level(0)
             if peek() != ")":
                 raise ValueError(f"kibana: unbalanced parens in {script!r}")
             eat()
             return e
-        if t == "-":
+        if t in ("-", "!"):
             eat()
-            return -primary()
-        if t == "!":
-            eat()
-            return ~primary().cast("boolean")
+            return ("neg" if t == "-" else "!", primary())
         eat()
         if t.startswith("params."):
             name = t[len("params."):]
@@ -4828,19 +4832,32 @@ def compile_bucket_script(script: str, binding: dict[str, str]) -> Column:
                     f"kibana: script references params.{name} with no "
                     f"buckets_path entry"
                 )
-            return F.col(binding[name]).cast("double")
-        return F.lit(float(t))
+            return ("col", binding[name])
+        if not t[0].isdigit():
+            raise ValueError(f"kibana: unexpected {t!r} in {script!r}")
+        return ("lit", float(t))
 
-    def binop(sub, ops):
-        def go() -> Column:
-            left = sub()
-            while peek() in ops:
-                op = eat()
-                left = ops[op](left, sub())
-            return left
+    def level(k: int) -> tuple:
+        if k == len(_SCRIPT_LEVELS):
+            return primary()
+        left = level(k + 1)
+        while peek() in _SCRIPT_LEVELS[k]:
+            op = eat()
+            left = (op, left, level(k + 1))
+        return left
 
-        return go
+    out = level(0)
+    if pos != len(toks):
+        raise ValueError(
+            f"kibana: trailing script input {toks[pos:]!r} in {script!r}"
+        )
+    return out
 
+
+def compile_bucket_script(script: str, binding: dict[str, str]) -> Column:
+    """Compile a bucket script (``parse_bucket_script``) to ONE Column
+    expression; every reference casts to double so integer metric
+    columns divide like painless doubles."""
     # painless arithmetic is Java double arithmetic: x/0 → ±Inf, 0/0 →
     # NaN, x%0 → NaN — but Spark 4 ANSI mode THROWS on a zero divisor
     # even for doubles (found by the bucket-script property test), so
@@ -4861,26 +4878,30 @@ def compile_bucket_script(script: str, binding: dict[str, str]) -> Column:
 
         return go
 
-    mul = binop(primary, {
+    binops = {
         "*": lambda a, b: a * b,
         "/": _null_prop(_bin_div),
         "%": _null_prop(_bin_mod),
-    })
-    add = binop(mul, {"+": lambda a, b: a + b, "-": lambda a, b: a - b})
-    cmp_ = binop(add, {
+        "+": lambda a, b: a + b, "-": lambda a, b: a - b,
         ">": lambda a, b: a > b, ">=": lambda a, b: a >= b,
         "<": lambda a, b: a < b, "<=": lambda a, b: a <= b,
-    })
-    eq = binop(cmp_, {"==": lambda a, b: a == b, "!=": lambda a, b: a != b})
-    and_ = binop(eq, {"&&": lambda a, b: a & b})
-    or_ = binop(and_, {"||": lambda a, b: a | b})
+        "==": lambda a, b: a == b, "!=": lambda a, b: a != b,
+        "&&": lambda a, b: a & b, "||": lambda a, b: a | b,
+    }
 
-    out = or_()
-    if pos != len(toks):
-        raise ValueError(
-            f"kibana: trailing script input {toks[pos:]!r} in {script!r}"
-        )
-    return out
+    def build(node: tuple) -> Column:
+        kind = node[0]
+        if kind == "col":
+            return F.col(node[1]).cast("double")
+        if kind == "lit":
+            return F.lit(node[1])
+        if kind == "neg":
+            return -build(node[1])
+        if kind == "!":
+            return ~build(node[1]).cast("boolean")
+        return binops[kind](build(node[1]), build(node[2]))
+
+    return build(parse_bucket_script(script, binding))
 
 
 @dataclass(frozen=True)

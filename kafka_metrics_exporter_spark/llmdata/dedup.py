@@ -257,36 +257,6 @@ def _permutation_constants(num_hashes: int, seed: int = 0x9E3779B9) -> list[tupl
     return out
 
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = 128) -> DataFrame:
-    """H min-hash values per doc, minimized per permutation.
-
-    The shingle is hashed ONCE (xxhash64 → residue mod 2^31-1); the H
-    permutations are Carter-Wegman multiply-adds mod the same Mersenne
-    prime — products stay < 2^62, so no overflow under ANSI mode, and H
-    string hashes per shingle (~100× the work at 100 TB) are avoided."""
-    base = F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE_31)).cast("long")
-    consts = _permutation_constants(num_hashes)
-    hashes = F.array(
-        *[
-            F.pmod(F.lit(a).cast("long") * base + F.lit(b).cast("long"), F.lit(_MERSENNE_31))
-            for a, b in consts
-        ]
-    )
-    # hash-partition by doc_id: distributes the wide min-aggregate
-    # (AQE coalesces the upstream distinct to 1 partition otherwise) and
-    # pre-satisfies the groupBy distribution, so no further shuffle
-    par = sh.sparkSession.sparkContext.defaultParallelism
-    per_shingle = sh.repartition(par, "doc_id").select("doc_id", hashes.alias("h"))
-    mins = [
-        F.min(F.col("h").getItem(i)).alias(f"_m{i}") for i in range(num_hashes)
-    ]
-    sig = per_shingle.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id",
-        F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("signature"),
-    )
-
-
 def band_hash_array(bands: int, rows_per_band: int) -> F.Column:
     """One 64-bit bucket key per LSH band over the ``signature`` array
     column: multi-arg xxhash64 over getItem — a pure codegen'd

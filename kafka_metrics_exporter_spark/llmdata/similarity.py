@@ -524,22 +524,6 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float
     return planes
 
 
-def hyperplane_signature(
-    vec: Column, planes: list[list[float]], biases: list[float] | None = None
-) -> Column:
-    """Sign-bit signature; `biases` (= plane . corpus_mean) centers the
-    cuts so buckets stay balanced under a dominant corpus direction."""
-    sig = F.lit(0).cast("long")
-    bias = biases or [0.0] * len(planes)
-    for j, p in enumerate(planes):
-        pc = F.array(*[F.lit(float(x)) for x in p])
-        sig = sig + F.when(
-            dot(vec, pc) > F.lit(float(bias[j])),
-            F.shiftleft(F.lit(1).cast("long"), j),
-        ).otherwise(0)
-    return sig
-
-
 def embedding_near_dup_lsh(
     emb: DataFrame,
     threshold: float = 0.45,

@@ -5,13 +5,15 @@ The reference serializes each batch as ES bulk NDJSON
 daily index ``kafka-jmx-logs-YYYY-MM-DD`` with retry ≤10
 (reference Code/ElasticSearchAppender.py:85-112).
 
-Here the NDJSON assembly is a distributed Column expression (grouped by
-target index × hash chunk, so payload size per executor row is bounded
-at any scale), and the bulk POST runs executor-side via
-``foreachPartition`` through a pluggable I/O callback — tests exercise
-the full pipeline with a capturing poster, and the parquet stand-in
-writer partitions by ``date(created_ts)`` exactly like daily indexes
-partition the reference's data.
+Here each batch is one narrow stage: ``foreachPartition`` over
+``(daily index, flat JSON doc)`` rows builds the NDJSON on the
+executors and POSTs a payload whenever the next doc would push it past
+``MAX_BULK_BYTES``, then flushes each index at the end of the
+partition — so a payload's size is bounded by construction at any
+scale, with no shuffle.  The POST goes through a pluggable I/O
+callback — tests exercise the full pipeline with a capturing poster,
+and the parquet stand-in writer partitions by ``date(created_ts)``
+exactly like daily indexes partition the reference's data.
 """
 
 from __future__ import annotations
@@ -25,37 +27,31 @@ from kafka_metrics_exporter_spark.operators.normalize import flat_json_column
 
 INDEX_PREFIX = "kafka-jmx-logs-"  # reference Code/ElasticSearchAppender.py:109
 _ACTION_LINE = '{"index":{"_type":"doc"}}'  # reference :88-91
+# payload bound, in UTF-8 bytes: inside ES's 5-15 MB bulk sweet spot
+MAX_BULK_BYTES = 10 * 1024 * 1024
 
 
-def to_bulk_ndjson(metrics: DataFrame, n_chunks: int = 32) -> DataFrame:
-    """metrics rows → one row per (daily index, chunk, NDJSON payload).
-
-    The chunk column ``pmod(xxhash64(doc), n_chunks)`` splits each
-    day's payload across ``n_chunks`` hash buckets, so no single
-    executor row ever holds a whole day of NDJSON: per-payload bytes ≈
-    day_bytes / n_chunks (the per-doc hash balances within a few
-    percent).  Size n_chunks so that lands in the ES bulk sweet spot
-    (5-15 MB per request); the groupBy shuffles only
-    (index_name, chunk, doc) triples, all JVM-side.
-    """
-    docs = metrics.select(
-        F.concat(F.lit(INDEX_PREFIX), F.date_format("created_ts", "yyyy-MM-dd")).alias(
-            "index_name"
-        ),
-        flat_json_column().alias("doc"),
-    )
-    return docs.withColumn("chunk", F.pmod(F.xxhash64("doc"), F.lit(n_chunks))).groupBy(
-        "index_name", "chunk"
-    ).agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.collect_list("doc"),
-                lambda d: F.concat(F.lit(_ACTION_LINE + "\n"), d),
-            ),
-        ).alias("payload"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
+def _bulk_payloads(rows, max_bytes: int):
+    """(index_name, doc) pairs → (index_name, NDJSON payload) pairs in
+    the reference's ``action\ndoc`` line-pair format.  A payload is cut
+    before the doc that would take its POST body (the payload plus a
+    closing newline) past ``max_bytes`` UTF-8 bytes, so only a doc that
+    alone exceeds the bound makes a larger one.  Each index keeps one
+    open payload; all are flushed at the end."""
+    pending: dict[str, list[str]] = {}
+    used: dict[str, int] = {}
+    for index_name, doc in rows:
+        entry = f"{_ACTION_LINE}\n{doc}"
+        size = len(entry.encode("utf-8")) + 1  # with its closing newline
+        entries = pending.setdefault(index_name, [])
+        if entries and used[index_name] + size > max_bytes:
+            yield index_name, "\n".join(entries)
+            entries.clear()
+            used[index_name] = 0
+        entries.append(entry)
+        used[index_name] = used.get(index_name, 0) + size
+    for index_name, entries in pending.items():
+        yield index_name, "\n".join(entries)
 
 
 def http_bulk_poster(es_url: str, timeout: float = 30.0, max_retries: int = 10):
@@ -85,22 +81,27 @@ def http_bulk_poster(es_url: str, timeout: float = 30.0, max_retries: int = 10):
 
 def es_bulk_foreach_batch(
     poster: Callable[[str, str], bool],
-    n_chunks: int = 32,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch hook: assemble chunked bulk payloads distributed and
-    POST them from ``foreachPartition`` — the I/O happens executor-side,
-    next to the data, and no payload ever crosses to the driver.  The
-    poster callable is cloudpickled to the workers, so it must be
-    self-contained (``http_bulk_poster`` is)."""
+    """foreachBatch hook: build byte-bounded bulk payloads and POST them
+    from ``foreachPartition`` — one narrow stage, the I/O happens
+    executor-side next to the data, and no payload ever crosses to the
+    driver.  The poster callable is cloudpickled to the workers, so it
+    must be self-contained (``http_bulk_poster`` is)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        payloads = to_bulk_ndjson(batch_df, n_chunks=n_chunks)
+        max_bytes = MAX_BULK_BYTES  # read on the driver, shipped in the closure
+        docs = batch_df.select(
+            F.concat(
+                F.lit(INDEX_PREFIX), F.date_format("created_ts", "yyyy-MM-dd")
+            ).alias("index_name"),
+            flat_json_column().alias("doc"),
+        )
 
         def _post_partition(rows) -> None:
-            for row in rows:
-                poster(row["index_name"], row["payload"])
+            for index_name, payload in _bulk_payloads(rows, max_bytes):
+                poster(index_name, payload)
 
-        payloads.foreachPartition(_post_partition)
+        docs.foreachPartition(_post_partition)
 
     return write
 

@@ -22,12 +22,15 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_metrics_exporter_spark.sources.fetchers import resolve_fetcher
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 BEAN_NAME = "kafka.connect.api.rest"
 BEAN_TYPE = "rest-api-metrics"
@@ -85,6 +88,10 @@ def fetch_connector_status(
     opts = fetcher_opts or {}
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # imported here, not at module top: every Jolokia source task
+        # imports this module, and pandas costs ~0.5 s per new worker
+        import pandas as pd
+
         fetcher = resolve_fetcher(fetcher_ref)
         for pdf in batches:
             rows = []

@@ -164,28 +164,6 @@ def with_connect_rest(
     return metrics_batch.unionByName(rest, allowMissingColumns=True)
 
 
-def run_pipeline_once(
-    spark: SparkSession,
-    catalog: list[tuple[str, str]],
-    output_path: str,
-    checkpoint: str,
-    fetcher: str | None = None,
-) -> None:
-    """One availableNow micro-batch through the full pipeline into the
-    parquet stand-in sink — the compose-style integration smoke
-    (SURVEY §5)."""
-    from kafka_metrics_exporter_spark.sinks.es_bulk import write_daily_parquet
-
-    metrics = streaming_metrics(spark, catalog, fetcher=fetcher)
-    q = (
-        metrics.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda df, _id: write_daily_parquet(df, output_path))
-        .start()
-    )
-    q.awaitTermination()
-
-
 def _for_each_batch(stream: DataFrame, body, checkpoint: str, trigger: dict | None):
     """Start ``stream`` with ``body(df, batch_id)`` run on each
     micro-batch, persisted for the body's duration so every plan over it

@@ -65,3 +65,17 @@ def pytest_configure(config):
 def pytest_runtest_setup(item):
     if not HAVE_REFERENCE and item.get_closest_marker("reference"):
         pytest.skip(REFERENCE_ABSENT)
+
+
+def run_fresh_python(code: str) -> str:
+    """Run ``code`` in a new interpreter at the repository root, for
+    checks that need a process with no Spark session or a clean
+    ``sys.modules``; fail with its stderr, else return its stdout."""
+    import subprocess
+
+    done = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=REPO_ROOT, timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    return done.stdout.strip()

@@ -8,7 +8,7 @@ from __future__ import annotations
 import json
 
 import pytest
-from conftest import HAVE_REFERENCE, reference_cases, reference_path
+from conftest import HAVE_REFERENCE, reference_cases, reference_path, run_fresh_python
 from pyspark.sql import functions as F
 
 from kafka_metrics_exporter_spark.kibana import (
@@ -1252,6 +1252,44 @@ def test_bucket_script_errors():
         compile_visualization(_vis8(base + [
             {"id": "3", "type": "bucket_selector", "schema": "metric",
              "params": {"buckets_path": {"x": "1"}}}]))
+
+
+def test_bucket_script_parses_without_spark():
+    """bucket_script/bucket_selector visStates compile with no Spark
+    session, and a bad script still fails at parse time.  Runs in a
+    fresh interpreter: the suite's session would otherwise be active."""
+    import textwrap
+
+    code = textwrap.dedent("""
+        import json
+        from pyspark import SparkContext
+        from kafka_metrics_exporter_spark.kibana import compile_visualization
+
+        def vis(script):
+            return {"visState": json.dumps({"title": "t", "type": "table",
+                    "aggs": [
+                {"id": "1", "type": "count", "schema": "metric"},
+                {"id": "2", "type": "terms", "schema": "bucket",
+                 "params": {"field": "host", "size": 5}},
+                {"id": "3", "type": "bucket_script", "schema": "metric",
+                 "params": {"buckets_path": {"c": "_count"},
+                            "script": script, "customLabel": "s"}},
+                {"id": "4", "type": "bucket_selector", "schema": "metric",
+                 "params": {"buckets_path": {"c": "1"},
+                            "script": "!(params.c < 2) && params.c % 2 == 0"}},
+            ]})}
+
+        compile_visualization(vis("-(params.c + 2) * 10 / params.c"))
+        for bad in ("params.c +", "params.c )", "(params.c", "params.d"):
+            try:
+                compile_visualization(vis(bad))
+            except ValueError:
+                continue
+            raise SystemExit(f"accepted {bad!r}")
+        assert SparkContext._active_spark_context is None
+        print("ok")
+    """)
+    assert run_fresh_python(code) == "ok"
 
 
 def test_serial_diff_stats_and_percentiles_bucket(spark):

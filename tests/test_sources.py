@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from conftest import run_fresh_python
 
 from kafka_metrics_exporter_spark.operators import normalize_scrapes
 from kafka_metrics_exporter_spark.sources.connect_rest import (
@@ -175,6 +176,17 @@ def test_jolokia_source_fetches_a_slice_concurrently(spark):
 
 
 # --- Connect REST ----------------------------------------------------------
+def test_connect_rest_import_leaves_pandas_unloaded():
+    """Every Jolokia source task imports connect_rest, so importing it
+    must not pay for pandas (~0.5 s per new worker); only the
+    mapInPandas fetch needs it."""
+    assert run_fresh_python(
+        "import sys\n"
+        "import kafka_metrics_exporter_spark.sources.connect_rest\n"
+        "print('pandas' in sys.modules)\n"
+    ) == "False"
+
+
 def test_connect_rest_scan_two_phase(spark):
     scan = connect_rest_scan(
         spark,

@@ -1,6 +1,6 @@
 """Streaming smoke (SURVEY §5 item 4) + sink shaping tests:
 micro-batch through normalize → watermarked window agg → memory sink;
-ES bulk NDJSON assembly; Kafka record shaping; daily-parquet stand-in."""
+ES bulk payloads; Kafka record shaping; daily-parquet stand-in."""
 
 from __future__ import annotations
 
@@ -9,9 +9,9 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_metrics_exporter_spark.sinks import es_bulk
 from kafka_metrics_exporter_spark.sinks.es_bulk import (
     es_bulk_foreach_batch,
-    to_bulk_ndjson,
     write_daily_parquet,
 )
 from kafka_metrics_exporter_spark.sinks.kafka_sink import (
@@ -101,33 +101,6 @@ def test_windowed_rollup_batch_semantics(metrics_batch):
     assert sums == [100.0, 100.0, 200.0, 200.0]
 
 
-def test_to_bulk_ndjson_daily_index_and_action_lines(metrics_batch):
-    rows = to_bulk_ndjson(metrics_batch, n_chunks=1).collect()
-    assert {r["index_name"] for r in rows} == {"kafka-jmx-logs-2023-11-14"}
-    assert len(rows) == 1  # n_chunks=1 → whole day in one payload
-    payload = rows[0]["payload"]
-    lines = payload.split("\n")
-    assert len(lines) == 8  # 4 docs × (action + doc)
-    assert lines[0] == '{"index":{"_type":"doc"}}'
-    doc = json.loads(lines[1])
-    assert doc["mbeanName"].startswith("kafka.server:")
-    assert doc["injectedServerType"] == "KafkaBroker"
-
-
-def test_to_bulk_ndjson_chunks_bound_payload_size(spark, metrics_batch):
-    """A day never concentrates into one executor row: hash chunks split
-    the payload, docs are conserved, and every chunk carries well-formed
-    action/doc line pairs."""
-    rows = to_bulk_ndjson(metrics_batch, n_chunks=4).collect()
-    assert {r["index_name"] for r in rows} == {"kafka-jmx-logs-2023-11-14"}
-    assert len(rows) >= 2  # 4 docs spread over 4 hash buckets
-    assert sum(r["n_docs"] for r in rows) == 4
-    for r in rows:
-        lines = r["payload"].split("\n")
-        assert len(lines) == 2 * r["n_docs"]
-        assert all(line == '{"index":{"_type":"doc"}}' for line in lines[::2])
-
-
 def _dir_capture_poster(capture_dir):
     """File-based capturing poster: es_bulk_foreach_batch POSTs from
     executor worker processes, so a driver-side list can't observe the
@@ -145,20 +118,81 @@ def _dir_capture_poster(capture_dir):
     return post
 
 
-def test_es_bulk_foreach_batch_posts_executor_side(metrics_batch, tmp_path):
+def _posted(batch_df, tmp_path) -> dict[str, str]:
+    """Run the ES sink over ``batch_df``; {file name: payload} posted."""
     cap = tmp_path / "posted"
-    cap.mkdir()
-    write = es_bulk_foreach_batch(_dir_capture_poster(str(cap)), n_chunks=4)
-    write(metrics_batch, 0)
-    files = sorted(cap.glob("*.ndjson"))
-    assert len(files) >= 2  # ≥2 payload POSTs for one day: chunked, not one blob
-    assert all(f.name.startswith("kafka-jmx-logs-2023-11-14__") for f in files)
-    docs = []
-    for f in files:
-        lines = f.read_text(encoding="utf-8").split("\n")
-        docs.extend(json.loads(line) for line in lines[1::2])
-    assert len(docs) == 4  # every metric row delivered exactly once
+    cap.mkdir(parents=True)
+    es_bulk_foreach_batch(_dir_capture_poster(str(cap)))(batch_df, 0)
+    return {f.name: f.read_text(encoding="utf-8") for f in cap.glob("*.ndjson")}
+
+
+def _docs(payload: str) -> list[dict]:
+    """The docs of one payload, checking its action/doc line pairs."""
+    lines = payload.split("\n")
+    assert len(lines) % 2 == 0
+    assert all(line == '{"index":{"_type":"doc"}}' for line in lines[::2])
+    return [json.loads(line) for line in lines[1::2]]
+
+
+def test_to_bulk_ndjson_daily_index_and_action_lines(metrics_batch, tmp_path):
+    """One partition under the default bound: the whole day goes out as
+    one payload to the daily index, in action/doc line pairs."""
+    posted = _posted(metrics_batch.coalesce(1), tmp_path)
+    assert len(posted) == 1
+    ((name, payload),) = posted.items()
+    assert name.startswith("kafka-jmx-logs-2023-11-14__")
+    lines = payload.split("\n")
+    assert len(lines) == 8  # 4 docs × (action + doc)
+    assert lines[0] == '{"index":{"_type":"doc"}}'
+    doc = json.loads(lines[1])
+    assert doc["mbeanName"].startswith("kafka.server:")
+    assert doc["injectedServerType"] == "KafkaBroker"
+
+
+def test_es_bulk_foreach_batch_posts_executor_side(metrics_batch, tmp_path):
+    """Every doc arrives once, in action/doc line pairs, posted to the
+    daily index from the executors."""
+    posted = _posted(metrics_batch, tmp_path)
+    assert posted
+    assert all(n.startswith("kafka-jmx-logs-2023-11-14__") for n in posted)
+    docs = [d for payload in posted.values() for d in _docs(payload)]
+    # every metric row delivered exactly once
+    assert sorted((d["injectedHostName"], d["createdDateTime"]) for d in docs) == sorted(
+        (r["host_name"], str(r["created_ms"]))
+        for r in metrics_batch.select("host_name", "created_ms").collect()
+    )
     assert all(d["injectedServerType"] == "KafkaBroker" for d in docs)
+    assert all(d["mbeanName"].startswith("kafka.server:") for d in docs)
+
+
+def test_es_bulk_payloads_stay_within_the_byte_bound(
+    metrics_batch, tmp_path, monkeypatch
+):
+    """One partition: one payload under the default bound; under a bound
+    of two docs, several payloads, none past the bound, docs conserved."""
+    one = metrics_batch.coalesce(1)
+    (whole,) = _posted(one, tmp_path / "default").values()
+    assert len(_docs(whole)) == 4
+    lines = whole.split("\n")
+    bound = 2 * max(len(f"{lines[0]}\n{d}\n".encode()) for d in lines[1::2])
+    monkeypatch.setattr(es_bulk, "MAX_BULK_BYTES", bound)
+    posted = _posted(one, tmp_path / "bounded")
+    assert len(posted) >= 2
+    assert all(len(p.encode("utf-8")) + 1 <= bound for p in posted.values())
+    docs = sorted(json.dumps(d, sort_keys=True) for p in posted.values() for d in _docs(p))
+    assert docs == sorted(json.dumps(d, sort_keys=True) for d in _docs(whole))
+
+
+def test_bulk_payloads_count_utf8_bytes():
+    """The bound counts UTF-8 bytes of the POST body, not characters."""
+    doc = '{"v":"' + "é" * 10 + '"}'  # 18 characters, 28 bytes
+    entry = len(f'{{"index":{{"_type":"doc"}}}}\n{doc}\n'.encode())
+    out = list(es_bulk._bulk_payloads([("i", doc)] * 5, 2 * entry))
+    assert [len(_docs(p)) for _, p in out] == [2, 2, 1]
+    assert all(len(p.encode()) + 1 <= 2 * entry for _, p in out)
+    # a doc larger than the bound alone still goes out, on its own
+    out = list(es_bulk._bulk_payloads([("i", doc), ("j", doc), ("i", doc)], 10))
+    assert [(i, len(_docs(p))) for i, p in out] == [("i", 1), ("i", 1), ("j", 1)]
 
 
 def test_write_daily_parquet_partitions(metrics_batch, spark, tmp_path):
@@ -317,7 +351,7 @@ def test_full_lifecycle_reference_loop(spark, tmp_path):
     panel_dir = tmp_path / "panel"
     es_cap = tmp_path / "posted"
     es_cap.mkdir()
-    es_write = es_bulk_foreach_batch(_dir_capture_poster(str(es_cap)), n_chunks=2)
+    es_write = es_bulk_foreach_batch(_dir_capture_poster(str(es_cap)))
 
     def batch_fn(batch_df, epoch_id):
         batch_df.persist()

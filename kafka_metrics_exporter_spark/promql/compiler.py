@@ -43,6 +43,18 @@ window-extrapolated rate/increase with a true two-sample irate.
   exactly the successive pair, so ``irate`` ≡ ``rate`` here by
   construction (both are the pair's per-second delta).
 
+Dispatch is one table: :data:`KINDS` maps each AST node type to its
+evaluation and its PromQL rendering (``parser.to_promql``), and
+``_eval`` is one lookup in it.  The data-touching kinds (Selector,
+Rate, Deriv, OverTime, HoltWinters) evaluate through the ``leaf``
+strategy: :class:`_SampleLeaf`, :class:`_InstantExtrapolatedLeaf`, or
+range_eval.GridLeaf.  A new function of an existing kind is one row in
+``parser.FUNCTIONS`` (plus its Spark function where the kind evaluates
+by name: ``_MATH_FN``, the calendar and histogram maps); a new kind is
+its dataclass, parse routine and renderer in parser.py and one
+``KINDS`` row here.  tests/test_promql_kinds.py fails on a kind or a
+name without its rows.
+
 Everything compiles to built-in Column expressions — filters push into
 the scan, aggregations are partial+final hash aggs, `topk` is one rank
 window per evaluation instant, and binary vector arithmetic is an
@@ -53,11 +65,14 @@ plan scales exactly like the hand-written query suite.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_metrics_exporter_spark.promql import parser
 from kafka_metrics_exporter_spark.promql.parser import (
     Absent,
     At,
@@ -157,6 +172,15 @@ class _Vec:
         return self.df if self.df.columns == cols else self.df.select(*cols)
 
 
+class Kind(NamedTuple):
+    """One AST node kind: ``evaluate(node, metrics, label_cols, leaf)``
+    gives its ``_Vec`` (a float for scalar literals and arithmetic over
+    them), ``render(node)`` its PromQL text (promql/parser.py)."""
+
+    evaluate: Callable
+    render: Callable
+
+
 class PromQLPlan:
     """Compiled expression; call :meth:`evaluate` with the metrics DF."""
 
@@ -174,10 +198,10 @@ class PromQLPlan:
         documented batch-mode divergence on demand while the delta form
         stays the documented default (w2_rate / streaming parity)."""
         label_cols = [c for c in metrics.columns if c not in _META_COLS]
-        leaf = _InstantExtrapolatedLeaf() if extrapolated_rate else None
-        vec = _eval(self.ast, metrics, tuple(label_cols), leaf)
-        if isinstance(vec, float):
-            raise ValueError("promql: top-level scalar expressions are not vectors")
+        leaf = _InstantExtrapolatedLeaf() if extrapolated_rate else _SampleLeaf()
+        vec = _eval(
+            self.ast, metrics, tuple(label_cols), leaf, "a top-level expression"
+        )
         return vec.select_shape()
 
     def evaluate_range(
@@ -221,277 +245,256 @@ def _eval(
     node: Expr,
     metrics: DataFrame,
     label_cols: tuple[str, ...],
-    leaf=None,
+    leaf,
+    need: str | None = None,
 ) -> _Vec | float:
-    """Recursive evaluation.  ``leaf`` swaps the evaluation strategy for
-    the data-touching leaves (Selector / Rate / OverTime) — the step-grid
-    evaluator (range_eval.py) substitutes lookback / window-extrapolated
-    versions while every structural node (agg, topk, binop, math, cmp)
-    reuses this dispatch unchanged."""
-    if isinstance(node, Scalar):
-        return node.value
-    if isinstance(node, Selector):
-        fn = leaf.selector if leaf is not None else _eval_selector
-        return fn(node, metrics, label_cols)
-    if isinstance(node, Rate):
-        if node.fn in ("resets", "changes"):
-            fn = leaf.resets_changes if leaf is not None else _eval_resets_changes
-        else:
-            fn = leaf.rate if leaf is not None else _eval_rate
-        return fn(node, metrics, label_cols)
-    if isinstance(node, Deriv):
-        fn = leaf.deriv if leaf is not None else _eval_deriv
-        return fn(node, metrics, label_cols)
-    if isinstance(node, OverTime):
-        fn = leaf.over_time if leaf is not None else _eval_over_time
-        return fn(node, metrics, label_cols)
-    if isinstance(node, HoltWinters):
-        fn = leaf.holt_winters if leaf is not None else _eval_holt_winters
-        return fn(node, metrics, label_cols)
-    if isinstance(node, Agg):
-        return _eval_agg(node, metrics, label_cols, leaf)
-    if isinstance(node, TopK):
-        return _eval_topk(node, metrics, label_cols, leaf)
-    if isinstance(node, LimitK):
-        return _eval_limitk(node, metrics, label_cols, leaf)
-    if isinstance(node, Bin):
-        return _eval_bin(node, metrics, label_cols, leaf)
-    if isinstance(node, SetOp):
-        return _eval_setop(node, metrics, label_cols, leaf)
-    if isinstance(node, Absent):
-        return _eval_absent(node, metrics, label_cols, leaf)
-    if isinstance(node, At):
-        return _eval_at(node, metrics, label_cols, leaf)
-    if isinstance(node, Scalarize):
-        # scalar(v): the single-element vector's value per instant, NaN
-        # where the vector has 0 or >1 elements — over the FULL instant
-        # universe, like Prometheus's scalar()
-        vec = _eval(node.expr, metrics, label_cols, leaf)
-        if isinstance(vec, float):
-            raise ValueError("promql: scalar() needs a vector argument")
-        g = vec.df.groupBy("ts").agg(
-            F.count(F.lit(1)).alias("__n"), F.max("value").alias("__v")
-        )
-        inst = _instant_universe(metrics, leaf)
-        out = (
-            inst.join(g, "ts", "left")
-            .withColumn(
-                "value",
-                F.when(F.col("__n") == 1, F.col("__v")).otherwise(
-                    F.lit(float("nan"))
-                ),
-            )
-            .drop("__n", "__v")
-        )
-        return _Vec(out, frozenset(), scalar=True)
-    if isinstance(node, Vectorize):
-        # vector(s): a scalar as a label-less vector over the instant
-        # universe — the `or vector(0)` default idiom.  A scalar-TYPED
-        # expression (time(), scalar(v), arithmetic over them) is
-        # already a per-instant frame: vector() just strips the scalar
-        # typing.
-        val = _eval(node.expr, metrics, label_cols, leaf)
-        if isinstance(val, _Vec):
-            if not val.scalar:
-                raise ValueError("promql: vector() needs a scalar argument")
-            return _Vec(val.df, frozenset())
-        inst = _instant_universe(metrics, leaf)
-        return _Vec(inst.withColumn("value", F.lit(float(val))), frozenset())
-    if isinstance(node, DateFn):
-        if node.fn == "timestamp" and isinstance(node.expr, At):
-            # timestamp(m @ t) ≡ timestamp(m) @ t: the pinned sample's
-            # ORIGINAL timestamp, constant across the instant universe
-            # (code-review 11.5 — evaluating @ first loses the sample
-            # timestamp to the pin-and-broadcast, so each instant
-            # reported itself)
-            return _eval_at(
-                At(
-                    expr=DateFn(fn="timestamp", expr=node.expr.expr),
-                    at_seconds=node.expr.at_seconds,
-                ),
-                metrics,
-                label_cols,
-                leaf,
-            )
-        if node.fn == "timestamp":
-            # each element's own sample timestamp becomes its value.
-            # In grid mode a SELECTOR's elements are lookback-resolved
-            # samples, and GridLeaf.selector rewrites ts to the grid
-            # instant — so the selector case re-expands here keeping
-            # the SAMPLE's epoch as the value (Prometheus returns the
-            # underlying sample timestamp, not the evaluation instant).
-            # Derived vectors (aggregates, rates) are synthesized AT
-            # the instant, so their ts is the right answer.  An offset
-            # selector's frame carries the SHIFTED timestamps (that is
-            # what makes the sample surface at the right instant), so
-            # the constant offset is subtracted back out — Prometheus
-            # reports the underlying sample's original timestamp
-            # (round 11.5; previously a documented divergence).
-            _ts_off = (
-                float(node.expr.offset_seconds)
-                if isinstance(node.expr, Selector)
-                else 0.0
-            )
-            if (
-                leaf is not None
-                and hasattr(leaf, "step_us")
-                and isinstance(node.expr, Selector)
-            ):
-                from kafka_metrics_exporter_spark.promql.range_eval import (
-                    _expand_instants,
-                    _finish,
-                )
+    """Recursive evaluation: one lookup in :data:`KINDS`.  ``leaf`` is
+    the evaluation strategy of the data-touching kinds (Selector / Rate
+    / Deriv / OverTime / HoltWinters): :class:`_SampleLeaf` by default,
+    :class:`_InstantExtrapolatedLeaf`, or the step-grid evaluator's
+    lookback / window-extrapolated ``range_eval.GridLeaf``, while every
+    structural kind (agg, topk, binop, math, cmp) evaluates the same in
+    each mode.  ``need`` names the operator whose operand ``node`` is
+    when that operand must be a vector, not a scalar literal."""
+    out = KINDS[type(node)].evaluate(node, metrics, label_cols, leaf)
+    if need is not None and isinstance(out, float):
+        raise ValueError(f"promql: {need} needs a vector")
+    return out
 
-                svec = _eval_selector(node.expr, metrics, label_cols)
-                series = sorted(svec.labels)
-                x = _expand_instants(
-                    svec.df, leaf.lookback_us, leaf.step_us, leaf.bounds
-                )
-                out = x.groupBy(*series, "__t_us").agg(
-                    (
-                        F.max(
-                            F.struct(
-                                F.col("__s_us").alias("__o_us"),
-                                F.col("value").alias("__o_v"),
-                            )
-                        ).getField("__o_us")
-                        / F.lit(1_000_000.0)
-                        - F.lit(_ts_off)
-                    ).alias("value")
-                )
-                return _Vec(_finish(out, series), svec.labels)
-            vec = _eval(node.expr, metrics, label_cols, leaf)
-            if isinstance(vec, float):
-                raise ValueError("promql: timestamp() needs a vector")
-            out = vec.df.withColumn(
-                "value",
-                F.unix_micros(F.col("ts")) / F.lit(1_000_000.0)
-                - F.lit(_ts_off),
+
+def _eval_scalar(node: Scalar, metrics: DataFrame, label_cols, leaf) -> float:
+    return node.value
+
+
+def _eval_rate_kind(node: Rate, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    if node.fn in ("resets", "changes"):
+        return leaf.resets_changes(node, metrics, label_cols)
+    return leaf.rate(node, metrics, label_cols)
+
+
+def _by_leaf(name: str):
+    """Evaluation of a data-touching kind: the leaf strategy's ``name``
+    method."""
+    return lambda node, metrics, label_cols, leaf: getattr(leaf, name)(
+        node, metrics, label_cols
+    )
+
+
+def _eval_scalarize(node: Scalarize, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    """``scalar(v)``: the single-element vector's value per instant, NaN
+    where the vector has 0 or >1 elements — over the FULL instant
+    universe, like Prometheus's scalar()."""
+    vec = _eval(node.expr, metrics, label_cols, leaf, "scalar()")
+    g = vec.df.groupBy("ts").agg(
+        F.count(F.lit(1)).alias("__n"), F.max("value").alias("__v")
+    )
+    inst = _instant_universe(metrics, leaf)
+    out = (
+        inst.join(g, "ts", "left")
+        .withColumn(
+            "value",
+            F.when(F.col("__n") == 1, F.col("__v")).otherwise(F.lit(float("nan"))),
+        )
+        .drop("__n", "__v")
+    )
+    return _Vec(out, frozenset(), scalar=True)
+
+
+def _eval_vectorize(node: Vectorize, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    """``vector(s)``: a scalar as a label-less vector over the instant
+    universe — the `or vector(0)` default idiom.  A scalar-TYPED
+    expression (time(), scalar(v), arithmetic over them) is already a
+    per-instant frame: vector() just strips the scalar typing."""
+    val = _eval(node.expr, metrics, label_cols, leaf)
+    if isinstance(val, _Vec):
+        if not val.scalar:
+            raise ValueError("promql: vector() needs a scalar argument")
+        return _Vec(val.df, frozenset())
+    inst = _instant_universe(metrics, leaf)
+    return _Vec(inst.withColumn("value", F.lit(float(val))), frozenset())
+
+
+def _eval_time(node: Time, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    """``time()``: the evaluation timestamp, per instant — a label-less
+    SCALAR over the instant universe (sample timestamps / step grid)."""
+    inst = _instant_universe(metrics, leaf)
+    out = inst.withColumn(
+        "value", (F.unix_micros(F.col("ts")) / F.lit(1_000_000.0))
+    )
+    return _Vec(out, frozenset(), scalar=True)
+
+
+def _eval_subquery(node: Subquery, metrics: DataFrame, label_cols, leaf):
+    raise ValueError(
+        "promql: a subquery (expr[range:step]) is a range vector — "
+        "wrap it in a range function (rate, <agg>_over_time, ...)"
+    )
+
+
+def _eval_date_fn(node: DateFn, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    """``timestamp(v)`` and the calendar functions (hour, month, …)."""
+    if node.fn == "timestamp" and isinstance(node.expr, At):
+        # timestamp(m @ t) ≡ timestamp(m) @ t: the pinned sample's
+        # ORIGINAL timestamp, constant across the instant universe
+        # (code-review 11.5 — evaluating @ first loses the sample
+        # timestamp to the pin-and-broadcast, so each instant
+        # reported itself)
+        return _eval_at(
+            At(
+                expr=DateFn(fn="timestamp", expr=node.expr.expr),
+                at_seconds=node.expr.at_seconds,
+            ),
+            metrics,
+            label_cols,
+            leaf,
+        )
+    if node.fn == "timestamp":
+        # each element's own sample timestamp becomes its value.
+        # In grid mode a SELECTOR's elements are lookback-resolved
+        # samples, and GridLeaf.selector rewrites ts to the grid
+        # instant — so the selector case re-expands here keeping
+        # the SAMPLE's epoch as the value (Prometheus returns the
+        # underlying sample timestamp, not the evaluation instant).
+        # Derived vectors (aggregates, rates) are synthesized AT
+        # the instant, so their ts is the right answer.  An offset
+        # selector's frame carries the SHIFTED timestamps (that is
+        # what makes the sample surface at the right instant), so
+        # the constant offset is subtracted back out — Prometheus
+        # reports the underlying sample's original timestamp
+        # (round 11.5; previously a documented divergence).
+        _ts_off = (
+            float(node.expr.offset_seconds)
+            if isinstance(node.expr, Selector)
+            else 0.0
+        )
+        if hasattr(leaf, "step_us") and isinstance(node.expr, Selector):
+            from kafka_metrics_exporter_spark.promql.range_eval import (
+                _expand_instants,
+                _finish,
             )
-            return _Vec(out, vec.labels)
-        if node.expr is None:
-            # hour() ≡ hour(vector(time())): the instant itself
-            inst = _instant_universe(metrics, leaf)
-            vec = _Vec(
-                inst.withColumn(
-                    "value", F.unix_micros(F.col("ts")) / F.lit(1_000_000.0)
-                ),
-                frozenset(),
+
+            svec = _eval_selector(node.expr, metrics, label_cols)
+            series = sorted(svec.labels)
+            x = _expand_instants(
+                svec.df, leaf.lookback_us, leaf.step_us, leaf.bounds
             )
-        else:
-            vec = _eval(node.expr, metrics, label_cols, leaf)
-            if isinstance(vec, float):
-                raise ValueError(f"promql: {node.fn}() needs a vector")
-        # the VALUE is a UTC epoch; truncate to whole seconds like
-        # Prometheus (values are commonly time()-derived doubles)
-        t = F.timestamp_seconds(F.floor(F.col("value")).cast("long"))
-        cal = {
-            "minute": F.minute,
-            "hour": F.hour,
-            # Prometheus: 0 = Sunday; Spark dayofweek: 1 = Sunday
-            "day_of_week": lambda c: F.dayofweek(c) - F.lit(1),
-            "day_of_month": F.dayofmonth,
-            "day_of_year": F.dayofyear,
-            "days_in_month": lambda c: F.dayofmonth(F.last_day(c)),
-            "month": F.month,
-            "year": F.year,
-        }[node.fn]
-        out = vec.df.withColumn("value", cal(t).cast("double"))
+            out = x.groupBy(*series, "__t_us").agg(
+                (
+                    F.max(
+                        F.struct(
+                            F.col("__s_us").alias("__o_us"),
+                            F.col("value").alias("__o_v"),
+                        )
+                    ).getField("__o_us")
+                    / F.lit(1_000_000.0)
+                    - F.lit(_ts_off)
+                ).alias("value")
+            )
+            return _Vec(_finish(out, series), svec.labels)
+        vec = _eval(node.expr, metrics, label_cols, leaf, "timestamp()")
+        out = vec.df.withColumn(
+            "value",
+            F.unix_micros(F.col("ts")) / F.lit(1_000_000.0) - F.lit(_ts_off),
+        )
         return _Vec(out, vec.labels)
-    if isinstance(node, Sort):
-        vec = _eval(node.expr, metrics, label_cols, leaf)
-        if isinstance(vec, float):
-            raise ValueError("promql: sort needs a vector")
-        # per-instant ordering — a presentation op on the FINAL (small)
-        # frame, so the global sort is one TakeOrdered-sized pass, not
-        # a data-path shuffle
-        if node.by_labels is not None:
-            # sort_by_label(_desc): order by the given label STRINGS
-            # (a missing label sorts as "", the engine's convention),
-            # remaining labels as the deterministic tiebreak
-            keys = [
-                F.col(l) if l in vec.labels else F.lit("")
-                for l in node.by_labels
-            ]
-            order = [F.col("ts").asc()] + [
-                k.desc() if node.desc else k.asc() for k in keys
-            ] + [
-                F.col(c).asc()
-                for c in sorted(vec.labels - set(node.by_labels))
-            ]
-        else:
-            val = F.col("value").desc() if node.desc else F.col("value").asc()
-            order = [F.col("ts").asc(), val] + [
-                F.col(c).asc() for c in sorted(vec.labels)
-            ]
-        return _Vec(vec.df.orderBy(*order), vec.labels, scalar=vec.scalar)
-    if isinstance(node, Subquery):
-        raise ValueError(
-            "promql: a subquery (expr[range:step]) is a range vector — "
-            "wrap it in a range function (rate, <agg>_over_time, ...)"
-        )
-    if isinstance(node, (LabelReplace, LabelJoin)):
-        return _eval_label_fn(node, metrics, label_cols, leaf)
-    if isinstance(node, Info):
-        return _eval_info(node, metrics, label_cols, leaf)
-    if isinstance(node, HistogramQuantile):
-        return _eval_histogram_quantile(node, metrics, label_cols, leaf)
-    if isinstance(node, (HistogramFn, HistogramFraction)):
-        return _eval_histogram_fn(node, metrics, label_cols, leaf)
-    if isinstance(node, MathFn):
-        vec = _eval(node.expr, metrics, label_cols, leaf)
-        if isinstance(vec, float):
-            raise ValueError("promql: math functions need a vector")
-        v = F.col("value")
-        fns = {
-            "abs": F.abs, "ceil": F.ceil, "floor": F.floor, "exp": F.exp,
-            "ln": F.log, "log2": F.log2, "log10": F.log10, "sqrt": F.sqrt,
-            "sgn": F.signum,
-            # trigonometric family (funcAcos..funcTanh, funcDeg/funcRad)
-            "acos": F.acos, "acosh": F.acosh, "asin": F.asin,
-            "asinh": F.asinh, "atan": F.atan, "atanh": F.atanh,
-            "cos": F.cos, "cosh": F.cosh, "sin": F.sin, "sinh": F.sinh,
-            "tan": F.tan, "tanh": F.tanh,
-            "deg": F.degrees, "rad": F.radians,
-        }
-        if node.fn == "clamp_min":
-            col = F.greatest(v, F.lit(node.arg))
-        elif node.fn == "clamp_max":
-            col = F.least(v, F.lit(node.arg))
-        elif node.fn == "clamp":
-            # Prometheus: clamp(v, min, max) with min > max returns an
-            # EMPTY vector ("Returns an empty vector if min > max" —
-            # promql/functions.go funcClamp), not NaN elements.
-            if node.arg > node.arg2:
-                return _Vec(
-                    vec.df.filter(F.lit(False)), vec.labels, scalar=vec.scalar
-                )
-            col = F.least(F.greatest(v, F.lit(node.arg)), F.lit(node.arg2))
-        elif node.fn == "round":
-            # nearest multiple of to_nearest, halves UP.  funcRound uses
-            # the RECIPROCAL form floor(v*(1/n) + 0.5) / (1/n) to reduce
-            # float error for to_nearest values like 0.1 — mirror it
-            # bit-for-bit.
-            inv = 1.0 / float(node.arg)
-            col = F.floor(v * F.lit(inv) + F.lit(0.5)) / F.lit(inv)
-        else:
-            col = fns[node.fn](v)
-        return _Vec(
-            vec.df.withColumn("value", col.cast("double")),
-            vec.labels,
-            scalar=vec.scalar,
-        )
-    if isinstance(node, Cmp):
-        return _eval_cmp(node, metrics, label_cols, leaf)
-    if isinstance(node, Time):
-        # the evaluation timestamp, per instant: a label-less SCALAR
-        # over the instant universe (sample timestamps / step grid)
+    if node.expr is None:
+        # hour() ≡ hour(vector(time())): the instant itself
         inst = _instant_universe(metrics, leaf)
-        out = inst.withColumn(
-            "value", (F.unix_micros(F.col("ts")) / F.lit(1_000_000.0))
+        vec = _Vec(
+            inst.withColumn(
+                "value", F.unix_micros(F.col("ts")) / F.lit(1_000_000.0)
+            ),
+            frozenset(),
         )
-        return _Vec(out, frozenset(), scalar=True)
-    raise TypeError(f"promql: unknown node {node!r}")
+    else:
+        vec = _eval(node.expr, metrics, label_cols, leaf, f"{node.fn}()")
+    # the VALUE is a UTC epoch; truncate to whole seconds like
+    # Prometheus (values are commonly time()-derived doubles)
+    t = F.timestamp_seconds(F.floor(F.col("value")).cast("long"))
+    cal = {
+        "minute": F.minute,
+        "hour": F.hour,
+        # Prometheus: 0 = Sunday; Spark dayofweek: 1 = Sunday
+        "day_of_week": lambda c: F.dayofweek(c) - F.lit(1),
+        "day_of_month": F.dayofmonth,
+        "day_of_year": F.dayofyear,
+        "days_in_month": lambda c: F.dayofmonth(F.last_day(c)),
+        "month": F.month,
+        "year": F.year,
+    }[node.fn]
+    out = vec.df.withColumn("value", cal(t).cast("double"))
+    return _Vec(out, vec.labels)
+
+
+def _eval_sort(node: Sort, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    """``sort``/``sort_desc``/``sort_by_label(_desc)``: per-instant
+    ordering — a presentation op on the FINAL (small) frame, so the
+    global sort is one TakeOrdered-sized pass, not a data-path
+    shuffle."""
+    vec = _eval(node.expr, metrics, label_cols, leaf, "sort")
+    if node.by_labels is not None:
+        # sort_by_label(_desc): order by the given label STRINGS
+        # (a missing label sorts as "", the engine's convention),
+        # remaining labels as the deterministic tiebreak
+        keys = [
+            F.col(l) if l in vec.labels else F.lit("")
+            for l in node.by_labels
+        ]
+        order = [F.col("ts").asc()] + [
+            k.desc() if node.desc else k.asc() for k in keys
+        ] + [
+            F.col(c).asc()
+            for c in sorted(vec.labels - set(node.by_labels))
+        ]
+    else:
+        val = F.col("value").desc() if node.desc else F.col("value").asc()
+        order = [F.col("ts").asc(), val] + [
+            F.col(c).asc() for c in sorted(vec.labels)
+        ]
+    return _Vec(vec.df.orderBy(*order), vec.labels, scalar=vec.scalar)
+
+
+_MATH_FN = {
+    "abs": F.abs, "ceil": F.ceil, "floor": F.floor, "exp": F.exp,
+    "ln": F.log, "log2": F.log2, "log10": F.log10, "sqrt": F.sqrt,
+    "sgn": F.signum,
+    # trigonometric family (funcAcos..funcTanh, funcDeg/funcRad)
+    "acos": F.acos, "acosh": F.acosh, "asin": F.asin,
+    "asinh": F.asinh, "atan": F.atan, "atanh": F.atanh,
+    "cos": F.cos, "cosh": F.cosh, "sin": F.sin, "sinh": F.sinh,
+    "tan": F.tan, "tanh": F.tanh,
+    "deg": F.degrees, "rad": F.radians,
+}
+
+
+def _eval_math_fn(node: MathFn, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    vec = _eval(node.expr, metrics, label_cols, leaf, "a math function")
+    v = F.col("value")
+    if node.fn == "clamp_min":
+        col = F.greatest(v, F.lit(node.arg))
+    elif node.fn == "clamp_max":
+        col = F.least(v, F.lit(node.arg))
+    elif node.fn == "clamp":
+        # Prometheus: clamp(v, min, max) with min > max returns an
+        # EMPTY vector ("Returns an empty vector if min > max" —
+        # promql/functions.go funcClamp), not NaN elements.
+        if node.arg > node.arg2:
+            return _Vec(vec.df.filter(F.lit(False)), vec.labels, scalar=vec.scalar)
+        col = F.least(F.greatest(v, F.lit(node.arg)), F.lit(node.arg2))
+    elif node.fn == "round":
+        # nearest multiple of to_nearest, halves UP.  funcRound uses
+        # the RECIPROCAL form floor(v*(1/n) + 0.5) / (1/n) to reduce
+        # float error for to_nearest values like 0.1 — mirror it
+        # bit-for-bit.
+        inv = 1.0 / float(node.arg)
+        col = F.floor(v * F.lit(inv) + F.lit(0.5)) / F.lit(inv)
+    else:
+        col = _MATH_FN[node.fn](v)
+    return _Vec(
+        vec.df.withColumn("value", col.cast("double")),
+        vec.labels,
+        scalar=vec.scalar,
+    )
 
 
 def _instant_universe(metrics: DataFrame, leaf) -> DataFrame:
@@ -500,7 +503,7 @@ def _instant_universe(metrics: DataFrame, leaf) -> DataFrame:
     Columns — an empty aligned grid, a data span or request window
     shorter than one step, yields zero instants; ADVICE r5), the
     distinct sample timestamps in sample-instant mode."""
-    if leaf is not None and hasattr(leaf, "step_us"):
+    if hasattr(leaf, "step_us"):
         from kafka_metrics_exporter_spark.promql.range_eval import _grid_frame
 
         return _grid_frame(metrics.sparkSession, leaf.bounds, leaf.step_us).select(
@@ -606,10 +609,7 @@ def _eval_range_operand(
             lookback_us=_us(DEFAULT_LOOKBACK_SECONDS),
             bounds=_grid_bounds(metrics, step_us),
         )
-        vec = _eval(sel.expr, metrics, label_cols, inner_leaf)
-        if isinstance(vec, float):
-            raise ValueError("promql: subquery needs a vector expression")
-        return vec
+        return _eval(sel.expr, metrics, label_cols, inner_leaf, "a subquery")
     return _eval_selector(sel, metrics, label_cols)
 
 
@@ -723,46 +723,6 @@ def _eval_hist_rate(node: Rate, vec: _Vec) -> _Vec:
         .withColumn("value", F.col(_HIST_COL)["count"])
     )
     return _Vec(rated, vec.labels)
-
-
-class _InstantExtrapolatedLeaf:
-    """Sample-instant evaluation with Prometheus's extrapolatedRate
-    kernel (promql/functions.go) for rate/increase/delta — the opt-in
-    ``PromQLPlan.evaluate(..., extrapolated_rate=True)`` mode closing
-    the last documented batch-mode divergence (successive-delta rate,
-    pinned since r3; grid mode closed it in r10).  Every other leaf
-    (selector, over-time, deriv, holt_winters, resets/changes) is the
-    default sample-instant evaluator, and the class carries NO
-    ``step_us``/``bounds``/``lookback_us`` attributes, so the
-    hasattr-guarded grid-only paths (@-anchoring grids, grid bounds,
-    lookback trims) keep their sample-instant behavior unchanged.
-    irate/idelta keep the two-sample form — at a sample instant the
-    last two window samples ARE the successive pair, so that form IS
-    Prometheus's irate."""
-
-    @staticmethod
-    def selector(node, metrics, label_cols):
-        return _eval_selector(node, metrics, label_cols)
-
-    @staticmethod
-    def resets_changes(node, metrics, label_cols):
-        return _eval_resets_changes(node, metrics, label_cols)
-
-    @staticmethod
-    def deriv(node, metrics, label_cols):
-        return _eval_deriv(node, metrics, label_cols)
-
-    @staticmethod
-    def over_time(node, metrics, label_cols):
-        return _eval_over_time(node, metrics, label_cols)
-
-    @staticmethod
-    def holt_winters(node, metrics, label_cols):
-        return _eval_holt_winters(node, metrics, label_cols)
-
-    @staticmethod
-    def rate(node, metrics, label_cols):
-        return _eval_rate_extrapolated_instant(node, metrics, label_cols)
 
 
 def _eval_rate_extrapolated_instant(
@@ -1123,6 +1083,35 @@ def _eval_holt_winters(node: HoltWinters, metrics: DataFrame, label_cols) -> _Ve
     return _Vec(out, vec.labels)
 
 
+class _SampleLeaf:
+    """The default leaf strategy: sample-instant evaluation of the
+    data-touching kinds.  It carries NO ``step_us``/``bounds``/
+    ``lookback_us`` attributes, so the hasattr-guarded grid-only paths
+    (@-anchoring grids, grid bounds, lookback trims) keep their
+    sample-instant behavior."""
+
+    selector = staticmethod(_eval_selector)
+    rate = staticmethod(_eval_rate)
+    resets_changes = staticmethod(_eval_resets_changes)
+    deriv = staticmethod(_eval_deriv)
+    over_time = staticmethod(_eval_over_time)
+    holt_winters = staticmethod(_eval_holt_winters)
+
+
+class _InstantExtrapolatedLeaf(_SampleLeaf):
+    """Sample-instant evaluation with Prometheus's extrapolatedRate
+    kernel (promql/functions.go) for rate/increase/delta — the opt-in
+    ``PromQLPlan.evaluate(..., extrapolated_rate=True)`` mode closing
+    the last documented batch-mode divergence (successive-delta rate,
+    pinned since r3; grid mode closed it in r10).  Every other leaf
+    (selector, over-time, deriv, holt_winters, resets/changes) is the
+    default sample-instant evaluator.  irate/idelta keep the two-sample
+    form — at a sample instant the last two window samples ARE the
+    successive pair, so that form IS Prometheus's irate."""
+
+    rate = staticmethod(_eval_rate_extrapolated_instant)
+
+
 _AGG_FN = {
     "sum": F.sum,
     "avg": F.avg,
@@ -1142,10 +1131,8 @@ _AGG_FN = {
 }
 
 
-def _eval_agg(node: Agg, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: cannot aggregate a scalar")
+def _eval_agg(node: Agg, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    vec = _eval(node.expr, metrics, label_cols, leaf, "an aggregation")
     if node.by is not None:
         out_labels = list(node.by)
     elif node.without is not None:
@@ -1198,10 +1185,8 @@ def _eval_agg(node: Agg, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     return _Vec(grouped, frozenset(out_labels))
 
 
-def _eval_topk(node: TopK, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: topk needs a vector")
+def _eval_topk(node: TopK, metrics: DataFrame, label_cols, leaf) -> _Vec:
+    vec = _eval(node.expr, metrics, label_cols, leaf, "topk")
     # Prometheus's topk heap replaces a NaN with any real sample
     # (engine.go: `heap[0].F < s.F || (isNaN(heap[0].F) &&
     # !isNaN(s.F))`), so the descending rank keys on (is-real, value)
@@ -1223,7 +1208,7 @@ def _eval_topk(node: TopK, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     return _Vec(df, vec.labels)
 
 
-def _eval_limitk(node: LimitK, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
+def _eval_limitk(node: LimitK, metrics: DataFrame, label_cols, leaf) -> _Vec:
     """``limitk`` / ``limit_ratio`` (Prometheus 3.x experimental
     sampling aggregations).  limitk keeps the k FIRST series per
     instant in label order (deterministic; Prometheus's pick is
@@ -1235,9 +1220,7 @@ def _eval_limitk(node: LimitK, metrics: DataFrame, label_cols, leaf=None) -> _Ve
     exactly.  Both are one filter over the input's existing shuffle
     shape — limitk's rank window partitions by ts, limit_ratio is a
     scan-local predicate with no shuffle at all."""
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: limitk/limit_ratio need a vector")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "limitk/limit_ratio")
     series = sorted(vec.labels)
     if not node.ratio:
         order = [F.col(c).asc() for c in series] or [F.lit(1).asc()]
@@ -1352,7 +1335,7 @@ def _over_time_special(op: str):
 
 
 def _eval_histogram_quantile(
-    node: HistogramQuantile, metrics: DataFrame, label_cols, leaf=None
+    node: HistogramQuantile, metrics: DataFrame, label_cols, leaf
 ) -> _Vec:
     """histogram_quantile(φ, buckets): per (labels − le, ts) group,
     linear interpolation inside the cumulative `le` buckets — exactly
@@ -1364,9 +1347,7 @@ def _eval_histogram_quantile(
     each bucket's predecessor, then the single bucket whose cumulative
     count crosses φ·total is selected by filter — the group's quantile
     is a plain projection of that row."""
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: histogram_quantile needs a vector")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "histogram_quantile")
     if "le" not in vec.labels:
         # Prometheus 3.x dual dispatch: the same function name serves
         # classic `le`-bucket series AND native-histogram samples —
@@ -1427,7 +1408,7 @@ _HIST_COL = "hist"
 
 
 def _eval_histogram_fn(
-    node: "HistogramFn | HistogramFraction", metrics: DataFrame, label_cols, leaf=None
+    node: "HistogramFn | HistogramFraction", metrics: DataFrame, label_cols, leaf
 ) -> _Vec:
     """histogram_count / histogram_sum / histogram_avg /
     histogram_fraction over native-histogram samples (Prometheus 3.x;
@@ -1441,9 +1422,7 @@ def _eval_histogram_fn(
     feed them."""
     from kafka_metrics_exporter_spark.promql import native_hist as nh
 
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: histogram_* functions need a vector")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "a histogram_* function")
     if _HIST_COL not in vec.df.columns:
         raise ValueError(
             "promql: histogram_* functions need native-histogram samples "
@@ -1472,7 +1451,7 @@ def _eval_histogram_fn(
     return _Vec(df, frozenset(out_labels))
 
 
-def _eval_info(node: Info, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
+def _eval_info(node: Info, metrics: DataFrame, label_cols, leaf) -> _Vec:
     """``info(v[, {sel}])`` — Prometheus 3.x experimental info-metric
     join (promql/functions.go funcInfo, flag
     --enable-feature=promql-experimental-functions): for each sample of
@@ -1504,9 +1483,7 @@ def _eval_info(node: Info, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     Scale shape: the info side is one row per scrape TARGET per
     instant — catalog-sized by construction, broadcast — so the join
     adds no shuffle of the sample side."""
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: info() needs a vector")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "info()")
     info = _eval(Selector("target_info"), metrics, label_cols, leaf)
     identifying = [l for l in ("instance", "job") if l in info.labels]
     if not identifying:
@@ -1583,11 +1560,9 @@ def _eval_info(node: Info, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
 
 
 def _eval_label_fn(
-    node: LabelReplace | LabelJoin, metrics: DataFrame, label_cols, leaf=None
+    node: LabelReplace | LabelJoin, metrics: DataFrame, label_cols, leaf
 ) -> _Vec:
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: label functions need a vector")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "a label function")
     labels = set(vec.labels)
     df = vec.df
     if isinstance(node, LabelReplace):
@@ -1745,7 +1720,7 @@ def _cmp_elementwise(vec: _Vec, pred: Column, bool_mode: bool) -> _Vec:
     return _Vec(vec.df.filter(pred), vec.labels, scalar=vec.scalar)
 
 
-def _eval_cmp(node: Cmp, metrics: DataFrame, label_cols, leaf=None) -> _Vec | float:
+def _eval_cmp(node: Cmp, metrics: DataFrame, label_cols, leaf) -> _Vec | float:
     """Comparison operators — Prometheus's filter semantics
     (engine.go VectorscalarBinop / the comparison branch of
     VectorVectorBinop):
@@ -1858,7 +1833,7 @@ def _eval_cmp(node: Cmp, metrics: DataFrame, label_cols, leaf=None) -> _Vec | fl
     return _Vec(out, frozenset(left.labels | set(keys)))
 
 
-def _eval_bin(node: Bin, metrics: DataFrame, label_cols, leaf=None) -> _Vec | float:
+def _eval_bin(node: Bin, metrics: DataFrame, label_cols, leaf) -> _Vec | float:
     left = _eval(node.left, metrics, label_cols, leaf)
     right = _eval(node.right, metrics, label_cols, leaf)
     py_ops = {
@@ -2047,7 +2022,7 @@ def _absent_labels(expr) -> dict[str, str]:
     return out
 
 
-def _eval_absent(node: Absent, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
+def _eval_absent(node: Absent, metrics: DataFrame, label_cols, leaf) -> _Vec:
     """``absent(v)``: 1 at every evaluation instant where ``v`` has no
     samples, nothing elsewhere — carrying the labels Prometheus
     reconstructs from the selector's equality matchers (round 11.5;
@@ -2055,9 +2030,7 @@ def _eval_absent(node: Absent, metrics: DataFrame, label_cols, leaf=None) -> _Ve
     universe is the engine's evaluation-instant set: the base frame's
     distinct sample timestamps in instant mode, the aligned step grid
     in range mode — a label-less anti-join, no new shapes."""
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: absent needs a vector")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "absent")
     instants = _instant_universe(metrics, leaf)
     out = instants.join(
         vec.df.select("ts").distinct(), "ts", "left_anti"
@@ -2067,7 +2040,7 @@ def _eval_absent(node: Absent, metrics: DataFrame, label_cols, leaf=None) -> _Ve
     return _Vec(out, frozenset(labels))
 
 
-def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
+def _eval_at(node: At, metrics: DataFrame, label_cols, leaf) -> _Vec:
     """``expr @ t``: evaluate the inner expression on its own instants,
     pin each series' value AS OF t (the newest point at or before t —
     bounded by the lookback window in range mode, unbounded in the
@@ -2093,7 +2066,7 @@ def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     # unbounded look-back — that mode's selector semantics (no
     # lookback delta) applied to @, not a divergence from grid
     # Prometheus.
-    grid = leaf is not None and hasattr(leaf, "step_us")
+    grid = hasattr(leaf, "step_us")
     if grid and not isinstance(node.at_seconds, str):
         import dataclasses as _dc
 
@@ -2104,15 +2077,11 @@ def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
             bounds=(at_us, at_us),
             query_bounds=leaf.query_bounds or leaf.bounds,
         )
-        pinned = _eval(node.expr, metrics, label_cols, one)
-        if isinstance(pinned, float):
-            raise ValueError("promql: @ needs a vector expression")
+        pinned = _eval(node.expr, metrics, label_cols, one, "@")
         picked = pinned.df.filter(F.col("value").isNotNull())
         out = _at_every_instant(picked, sorted(pinned.labels), metrics, leaf)
         return _Vec(out, pinned.labels)
-    vec = _eval(node.expr, metrics, label_cols, leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: @ needs a vector expression")
+    vec = _eval(node.expr, metrics, label_cols, leaf, "@")
     series = sorted(vec.labels)
     if isinstance(node.at_seconds, str):
         # @ start() / @ end(): the evaluation range's first/last
@@ -2129,7 +2098,7 @@ def _eval_at(node: At, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
         at = F.lit(int(round(node.at_seconds * 1_000_000)))
     s_us = F.unix_micros(F.col("ts"))
     cond = s_us <= at
-    if leaf is not None and hasattr(leaf, "lookback_us"):
+    if hasattr(leaf, "lookback_us"):
         cond = cond & (s_us > at - F.lit(leaf.lookback_us))
     picked = vec.df.filter(cond).groupBy(*[F.col(c) for c in series]).agg(
         F.max(
@@ -2155,7 +2124,7 @@ def _at_every_instant(
     mode each row explodes the grid from the leaf's bound Columns — no
     join; in sample-instant mode a crossJoin against the broadcast
     distinct sample instants."""
-    if leaf is not None and hasattr(leaf, "step_us"):
+    if hasattr(leaf, "step_us"):
         from kafka_metrics_exporter_spark.promql.range_eval import _finish, _grid_seq
 
         seq = _grid_seq(*leaf.bounds, leaf.step_us)
@@ -2166,17 +2135,15 @@ def _at_every_instant(
     return picked.crossJoin(F.broadcast(instants)).select(*series, "ts", "value")
 
 
-def _eval_setop(node: SetOp, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
+def _eval_setop(node: SetOp, metrics: DataFrame, label_cols, leaf) -> _Vec:
     """``and`` / ``or`` / ``unless``: instant-vector set operators.
     Matching is on the FULL label set (or the on/ignoring subset) plus
     the evaluation instant — relationally a left-semi join (and), a
     left-anti join (unless), and a union-with-anti-join (or: left rows
     win, right rows fill the instants/series left lacks).  Values and
     labels come from the winning side, exactly PromQL's rule."""
-    left = _eval(node.left, metrics, label_cols, leaf)
-    right = _eval(node.right, metrics, label_cols, leaf)
-    if isinstance(left, float) or isinstance(right, float):
-        raise ValueError(f"promql: {node.op} needs vector operands")
+    left = _eval(node.left, metrics, label_cols, leaf, node.op)
+    right = _eval(node.right, metrics, label_cols, leaf, node.op)
     if node.match is not None:
         keys = _match_keys(node.match, left, right)
     else:
@@ -2195,6 +2162,44 @@ def _eval_setop(node: SetOp, metrics: DataFrame, label_cols, leaf=None) -> _Vec:
     extra = rf.join(lf.select(*keys, "ts").distinct(), keys + ["ts"], "left_anti")
     out = lf.select(*cols).unionByName(extra.select(*cols))
     return _Vec(out, frozenset(out_labels))
+
+
+#: The kind table: every AST node type (parser.Expr subclass) → its
+#: evaluation and its PromQL rendering.  A new kind adds one row here;
+#: tests/test_promql_kinds.py checks that every kind has one.
+KINDS: dict[type, Kind] = {
+    Scalar: Kind(_eval_scalar, parser._render_scalar),
+    Selector: Kind(_by_leaf("selector"), parser._render_selector),
+    Subquery: Kind(_eval_subquery, parser._render_subquery),
+    Rate: Kind(_eval_rate_kind, parser._render_rate),
+    Deriv: Kind(_by_leaf("deriv"), parser._render_deriv),
+    OverTime: Kind(_by_leaf("over_time"), parser._render_over_time),
+    HoltWinters: Kind(_by_leaf("holt_winters"), parser._render_holt_winters),
+    At: Kind(_eval_at, parser._render_at),
+    Agg: Kind(_eval_agg, parser._render_agg),
+    TopK: Kind(_eval_topk, parser._render_topk),
+    LimitK: Kind(_eval_limitk, parser._render_limitk),
+    Bin: Kind(_eval_bin, parser._render_binary),
+    SetOp: Kind(_eval_setop, parser._render_binary),
+    Cmp: Kind(_eval_cmp, parser._render_cmp),
+    Absent: Kind(_eval_absent, parser._render_call("absent")),
+    Scalarize: Kind(_eval_scalarize, parser._render_call("scalar")),
+    Vectorize: Kind(_eval_vectorize, parser._render_call("vector")),
+    Time: Kind(_eval_time, parser._render_time),
+    DateFn: Kind(_eval_date_fn, parser._render_date_fn),
+    Sort: Kind(_eval_sort, parser._render_sort),
+    MathFn: Kind(_eval_math_fn, parser._render_math_fn),
+    LabelReplace: Kind(_eval_label_fn, parser._render_label_replace),
+    LabelJoin: Kind(_eval_label_fn, parser._render_label_join),
+    Info: Kind(_eval_info, parser._render_info),
+    HistogramQuantile: Kind(
+        _eval_histogram_quantile, parser._render_histogram_quantile
+    ),
+    HistogramFn: Kind(_eval_histogram_fn, parser._render_histogram_fn),
+    HistogramFraction: Kind(
+        _eval_histogram_fn, parser._render_histogram_fraction
+    ),
+}
 
 
 def evaluate_streaming(

@@ -14,18 +14,34 @@ matching), and unary `+`/`-` — plus, beyond the corpus, the counter
 functions `irate`/`increase`, the range-window family
 `sum|avg|min|max|count_over_time(sel[dur])`, and the selector `offset
 <dur>` modifier (day-over-day comparisons).
+
+Each node kind is a frozen dataclass subclassing :class:`Expr`.  Two
+tables hold everything per kind and per name: :data:`FUNCTIONS` maps a
+function name to its kind and its parse routine (``parse_factor`` is
+one lookup in it), and ``compiler.KINDS`` maps a kind to its evaluation
+and its renderer (one of the ``_render_*`` functions here, which
+``to_promql`` looks up).  Adding a function of an existing kind is one
+``FUNCTIONS`` row; a new kind adds its dataclass, parse routine and
+renderer here and its ``KINDS`` row in compiler.py.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import math
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 
 # ---------------------------------------------------------------------------
 # AST
 # ---------------------------------------------------------------------------
+class Expr:
+    """Base of the AST node kinds: each kind is a frozen dataclass
+    subclassing this one, with one row in ``compiler.KINDS``."""
+
+
 @dataclass(frozen=True)
 class Matcher:
     label: str
@@ -34,7 +50,7 @@ class Matcher:
 
 
 @dataclass(frozen=True)
-class Selector:
+class Selector(Expr):
     name: str | None
     matchers: tuple[Matcher, ...] = ()
     # `sel offset 1h`: evaluate the series shifted this many seconds
@@ -43,7 +59,7 @@ class Selector:
 
 
 @dataclass(frozen=True)
-class Subquery:
+class Subquery(Expr):
     """``expr[range:step]`` — evaluate ``expr`` on an aligned ``step``
     grid; the resulting synthetic samples feed the enclosing
     range-vector function exactly like selector samples do.  The step
@@ -56,7 +72,7 @@ class Subquery:
 
 
 @dataclass(frozen=True)
-class Rate:
+class Rate(Expr):
     selector: "Selector | Subquery"
     window_seconds: float
     # 'rate'/'irate' (per-second), 'increase' (raw clamped delta), the
@@ -68,7 +84,7 @@ class Rate:
 
 
 @dataclass(frozen=True)
-class Deriv:
+class Deriv(Expr):
     """deriv(sel[w]) — least-squares slope of the samples in the range —
     or predict_linear(sel[w], t) — the regression line evaluated t
     seconds past the evaluation instant."""
@@ -79,7 +95,7 @@ class Deriv:
 
 
 @dataclass(frozen=True)
-class OverTime:
+class OverTime(Expr):
     op: str  # avg|max|min|sum|count|stddev|stdvar|last|quantile
     selector: "Selector | Subquery"
     window_seconds: float
@@ -87,7 +103,7 @@ class OverTime:
 
 
 @dataclass(frozen=True)
-class HoltWinters:
+class HoltWinters(Expr):
     """``holt_winters(sel[w], sf, tf)`` (Prometheus ≥3 name:
     ``double_exponential_smoothing``) — double exponential smoothing of
     the samples in the trailing range: level factor ``sf``, trend
@@ -100,7 +116,7 @@ class HoltWinters:
 
 
 @dataclass(frozen=True)
-class Agg:
+class Agg(Expr):
     op: str  # sum|avg|min|max|count|stddev|stdvar|quantile|count_values
     expr: "Expr"
     by: tuple[str, ...] | None = None
@@ -112,7 +128,7 @@ class Agg:
 
 
 @dataclass(frozen=True)
-class Absent:
+class Absent(Expr):
     """``absent(expr)``: 1 at every evaluation instant where the inner
     vector has no samples (the alerting staple)."""
 
@@ -120,14 +136,14 @@ class Absent:
 
 
 @dataclass(frozen=True)
-class TopK:
+class TopK(Expr):
     k: int
     expr: "Expr"
     bottom: bool = False
 
 
 @dataclass(frozen=True)
-class LimitK:
+class LimitK(Expr):
     """``limitk(k, v)`` / ``limit_ratio(r, v)`` — the Prometheus 3.x
     experimental sampling aggregations.  ``limitk`` keeps (up to) k
     elements per instant; Prometheus's pick is arbitrary, this engine
@@ -155,7 +171,7 @@ class VectorMatch:
 
 
 @dataclass(frozen=True)
-class Bin:
+class Bin(Expr):
     op: str  # + - * /
     left: "Expr"
     right: "Expr"
@@ -163,7 +179,7 @@ class Bin:
 
 
 @dataclass(frozen=True)
-class SetOp:
+class SetOp(Expr):
     """``and`` / ``or`` / ``unless`` — instant-vector set operators
     (match on the full label set unless a VectorMatch narrows it)."""
 
@@ -174,7 +190,7 @@ class SetOp:
 
 
 @dataclass(frozen=True)
-class MathFn:
+class MathFn(Expr):
     fn: str  # abs|ceil|floor|exp|ln|log2|log10|sqrt|clamp_min|clamp_max|clamp
     expr: "Expr"
     arg: float | None = None  # clamp bound (clamp: the min bound)
@@ -182,7 +198,7 @@ class MathFn:
 
 
 @dataclass(frozen=True)
-class Sort:
+class Sort(Expr):
     """``sort(v)`` / ``sort_desc(v)`` — order the output elements by
     value (Prometheus's instant-query display ordering).  Relational
     result sets are unordered, so this compiles to an ORDER BY on the
@@ -199,7 +215,7 @@ class Sort:
 
 
 @dataclass(frozen=True)
-class At:
+class At(Expr):
     """``expr @ t`` — pin the expression's value as of evaluation time
     ``t`` across the whole evaluation-instant universe.  The parser
     produces it for ``m @ t`` and for range calls like
@@ -216,7 +232,7 @@ class At:
 
 
 @dataclass(frozen=True)
-class DateFn:
+class DateFn(Expr):
     """Prometheus date/time functions: ``timestamp(v)`` (each element's
     sample timestamp as its value) and the calendar family
     ``minute|hour|day_of_week|day_of_month|day_of_year|days_in_month|
@@ -230,7 +246,7 @@ class DateFn:
 
 
 @dataclass(frozen=True)
-class Scalarize:
+class Scalarize(Expr):
     """``scalar(v)`` — the single-element vector's value as a scalar
     per evaluation instant; NaN at instants where the vector has zero
     or multiple elements (Prometheus scalar())."""
@@ -239,7 +255,7 @@ class Scalarize:
 
 
 @dataclass(frozen=True)
-class Vectorize:
+class Vectorize(Expr):
     """``vector(s)`` — a scalar expression as a label-less instant
     vector over the evaluation-instant universe (the `or vector(0)`
     default idiom)."""
@@ -248,13 +264,13 @@ class Vectorize:
 
 
 @dataclass(frozen=True)
-class HistogramQuantile:
+class HistogramQuantile(Expr):
     phi: float
     expr: "Expr"
 
 
 @dataclass(frozen=True)
-class HistogramFn:
+class HistogramFn(Expr):
     """histogram_count / histogram_sum / histogram_avg over a
     native-histogram vector (Prometheus 3.x)."""
 
@@ -263,7 +279,7 @@ class HistogramFn:
 
 
 @dataclass(frozen=True)
-class HistogramFraction:
+class HistogramFraction(Expr):
     """histogram_fraction(lo, hi, v) over a native-histogram vector."""
 
     lo: float
@@ -272,7 +288,7 @@ class HistogramFraction:
 
 
 @dataclass(frozen=True)
-class LabelReplace:
+class LabelReplace(Expr):
     expr: "Expr"
     dst: str
     replacement: str
@@ -281,7 +297,7 @@ class LabelReplace:
 
 
 @dataclass(frozen=True)
-class LabelJoin:
+class LabelJoin(Expr):
     expr: "Expr"
     dst: str
     sep: str
@@ -289,7 +305,7 @@ class LabelJoin:
 
 
 @dataclass(frozen=True)
-class Info:
+class Info(Expr):
     """``info(v[, {data-label-selector}])`` — Prometheus 3.x
     (experimental): join the matching ``target_info`` series' DATA
     labels (everything but the identifying ``instance``/``job``) onto
@@ -301,12 +317,12 @@ class Info:
 
 
 @dataclass(frozen=True)
-class Scalar:
+class Scalar(Expr):
     value: float
 
 
 @dataclass(frozen=True)
-class Cmp:
+class Cmp(Expr):
     expr: "Expr"
     op: str  # > < >= <= == !=
     rhs: "Expr"  # Scalar(c) for the classic `> 0` threshold form
@@ -329,36 +345,16 @@ class Cmp:
 
 
 @dataclass(frozen=True)
-class Time:
+class Time(Expr):
     """``time()`` — the evaluation timestamp in epoch seconds, as a
     label-less vector over the evaluation-instant universe (Prometheus
     returns a scalar; relationally the instant is a column)."""
 
 
-Expr = (
-    Selector | Rate | Deriv | OverTime | Agg | TopK | Bin | SetOp | Scalar
-    | Cmp | LabelReplace | LabelJoin | HistogramQuantile | MathFn | Absent
-    | Subquery | Time | Sort | At | Scalarize | Vectorize | DateFn
-    | HoltWinters
-)
-
-_MATH_FNS = {
-    "abs", "ceil", "floor", "exp", "ln", "log2", "log10", "sqrt", "sgn",
-    # the Prometheus trigonometric family (funcAcos..funcTanh, plus the
-    # degree/radian converters) — element-wise on the sample value
-    "acos", "acosh", "asin", "asinh", "atan", "atanh",
-    "cos", "cosh", "sin", "sinh", "tan", "tanh", "deg", "rad",
-}
-_DATE_FNS = {
-    "timestamp", "minute", "hour", "day_of_week", "day_of_month",
-    "day_of_year", "days_in_month", "month", "year",
-}
-_CLAMP_FNS = {"clamp_min", "clamp_max"}
-
-_AGG_OPS = {
+_AGG_OPS = (
     "sum", "avg", "min", "max", "count", "stddev", "stdvar", "quantile",
     "count_values", "group",
-}
+)
 
 _DUR_UNITS = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0,
               "w": 604800.0, "y": 31536000.0}
@@ -623,10 +619,7 @@ class _Parser:
     def parse_factor(self) -> Expr:
         kind, tok = self.peek()
         if tok == "(":
-            self.next()
-            node = self.parse_expr()
-            self.expect(")")
-            return node
+            return self._call()
         if kind == "number":
             self.next()
             return Scalar(float(tok))
@@ -635,145 +628,36 @@ class _Parser:
             # number literals, so a metric can't be named `inf`
             self.next()
             return Scalar(float(tok.lower()))
-        if kind == "ident":
+        if kind == "ident" and tok in FUNCTIONS:
             # Prometheus reserves only the AGGREGATION keywords (sum,
             # avg, …, topk) — every FUNCTION name doubles as a valid
-            # metric name when not followed by "(", so each function
-            # branch below peeks one token ahead and otherwise falls
-            # through to parse_selector (a metric literally named
-            # `rate`, `sin` or `deg` stays selectable).
-            called = self.tokens[self.i + 1][1] == "("
-            if tok in _AGG_OPS or tok in ("topk", "bottomk"):
-                pass  # reserved keywords: always aggregation syntax
-            elif not called:
-                return self.parse_selector()
-            if tok in _AGG_OPS:
-                return self.parse_agg()
-            if tok in ("rate", "irate", "increase", "delta", "idelta",
-                       "resets", "changes"):
-                return self.parse_rate()
-            if tok in ("deriv", "predict_linear"):
-                return self.parse_deriv()
-            if tok in ("holt_winters", "double_exponential_smoothing"):
+            # metric name when not followed by "(" (a metric literally
+            # named `rate`, `sin` or `deg` stays selectable)
+            node_kind, parse_call = FUNCTIONS[tok]
+            if node_kind in (Agg, TopK) or self.tokens[self.i + 1][1] == "(":
                 self.next()
-                sel, window, at = self._range_call(close=False)
-                self.expect(",")
-                sf = self.signed_number("holt_winters smoothing factor")
-                self.expect(",")
-                tf = self.signed_number("holt_winters trend factor")
-                self.expect(")")
-                if not (0 < sf < 1) or not (0 < tf < 1):
-                    raise SyntaxError(
-                        "promql: holt_winters factors must be in (0, 1)"
-                    )
-                return self._wrap_at(HoltWinters(sel, window, sf, tf), at)
-            if (
-                tok.endswith("_over_time")
-                and tok[: -len("_over_time")]
-                # count_values/group have no *_over_time form in
-                # Prometheus; present_over_time/last_over_time exist
-                # without a matching top-level aggregation
-                in (_AGG_OPS - {"count_values", "group"})
-                | {
-                    "last", "absent", "present", "first", "mad",
-                    "ts_of_max", "ts_of_min", "ts_of_last", "ts_of_first",
-                }
-            ):
-                return self.parse_over_time()
-            if tok in ("topk", "bottomk"):
-                return self.parse_topk()
-            if tok in ("limitk", "limit_ratio"):
-                return self.parse_limitk()
-            if tok in ("label_replace", "label_join"):
-                return self.parse_label_fn()
-            if tok == "info":
-                return self.parse_info()
-            if tok == "histogram_quantile":
-                return self.parse_histogram_quantile()
-            if tok in (
-                "histogram_count", "histogram_sum", "histogram_avg",
-                "histogram_stddev", "histogram_stdvar",
-            ):
-                fn = self.next()[1]
-                self.expect("(")
-                inner = self.parse_expr()
-                self.expect(")")
-                return HistogramFn(fn[len("histogram_"):], inner)
-            if tok == "histogram_fraction":
-                self.next()
-                self.expect("(")
-                lo = self.signed_number("histogram_fraction lower")
-                self.expect(",")
-                hi = self.signed_number("histogram_fraction upper")
-                self.expect(",")
-                inner = self.parse_expr()
-                self.expect(")")
-                return HistogramFraction(lo, hi, inner)
-            if tok in _MATH_FNS | _CLAMP_FNS | {"clamp"}:
-                return self.parse_math_fn()
-            if tok in (
-                "sort", "sort_desc", "sort_by_label", "sort_by_label_desc"
-            ):
-                fn = self.next()[1]
-                self.expect("(")
-                inner = self.parse_expr()
-                by_labels = None
-                if fn.startswith("sort_by_label"):
-                    labels = []
-                    while self.peek()[1] == ",":
-                        labels.append(self._string_arg())
-                    if not labels:
-                        raise SyntaxError(
-                            "promql: sort_by_label needs at least one label"
-                        )
-                    by_labels = tuple(labels)
-                self.expect(")")
-                return Sort(
-                    inner, desc=fn.endswith("_desc"), by_labels=by_labels
-                )
-            if tok == "round":
-                return self.parse_round()
-            if tok in ("scalar", "vector"):
-                fn = self.next()[1]
-                self.expect("(")
-                inner = self.parse_expr()
-                self.expect(")")
-                return Scalarize(inner) if fn == "scalar" else Vectorize(inner)
-            if tok in _DATE_FNS and self.tokens[self.i + 1][1] == "(":
-                fn = self.next()[1]
-                self.expect("(")
-                inner = None
-                if self.peek()[1] != ")":
-                    inner = self.parse_expr()
-                self.expect(")")
-                if fn == "timestamp" and inner is None:
-                    raise SyntaxError("promql: timestamp() requires a vector")
-                return DateFn(fn, inner)
-            if tok == "absent":
-                self.next()
-                self.expect("(")
-                inner = self.parse_expr()
-                self.expect(")")
-                return Absent(inner)
-            if tok == "time" and self.tokens[self.i + 1][1] == "(":
-                self.next()
-                self.expect("(")
-                self.expect(")")
-                return Time()
-            if tok == "pi" and self.tokens[self.i + 1][1] == "(":
-                import math
-
-                self.next()
-                self.expect("(")
-                self.expect(")")
-                return Scalar(math.pi)
-            return self.parse_selector()
-        if tok == "{":
+                return parse_call(self, tok)
+        if kind == "ident" or tok == "{":
             return self.parse_selector()
         raise SyntaxError(f"promql: unexpected token {tok!r}")
 
-    def parse_agg(self) -> Expr:
-        op = self.next()[1]
+    # Function-call routines: each is called with the function name
+    # already consumed and returns its node (see FUNCTIONS).
+    def _call(self) -> Expr:
+        """``(expr)`` — a parenthesized expression, or a one-argument
+        call's argument."""
+        self.expect("(")
+        inner = self.parse_expr()
+        self.expect(")")
+        return inner
+
+    def _no_args(self, node: Expr) -> Expr:
+        """``()`` — the empty argument list of ``time()``/``pi()``."""
+        self.expect("(")
+        self.expect(")")
+        return node
+
+    def parse_agg(self, op: str) -> Expr:
         by = without = None
         if self.peek()[1] in ("by", "without"):
             by, without = self._grouping_clause()
@@ -860,13 +744,11 @@ class _Parser:
     def _wrap_at(node: Expr, at: float | None) -> Expr:
         return At(node, at) if at is not None else node
 
-    def parse_rate(self) -> Expr:
-        fn = self.next()[1]
+    def parse_rate(self, fn: str) -> Expr:
         sel, window, at = self._range_call()
         return self._wrap_at(Rate(sel, window, fn=fn), at)
 
-    def parse_deriv(self) -> Expr:
-        fn = self.next()[1]
+    def parse_deriv(self, fn: str) -> Expr:
         if fn == "deriv":
             sel, window, at = self._range_call()
             return self._wrap_at(Deriv(sel, window), at)
@@ -876,8 +758,18 @@ class _Parser:
         self.expect(")")
         return self._wrap_at(Deriv(sel, window, predict_seconds=horizon), at)
 
-    def parse_over_time(self) -> Expr:
-        fn = self.next()[1]
+    def parse_holt_winters(self, fn: str) -> Expr:
+        sel, window, at = self._range_call(close=False)
+        self.expect(",")
+        sf = self.signed_number("holt_winters smoothing factor")
+        self.expect(",")
+        tf = self.signed_number("holt_winters trend factor")
+        self.expect(")")
+        if not (0 < sf < 1) or not (0 < tf < 1):
+            raise SyntaxError("promql: holt_winters factors must be in (0, 1)")
+        return self._wrap_at(HoltWinters(sel, window, sf, tf), at)
+
+    def parse_over_time(self, fn: str) -> Expr:
         op = fn[: -len("_over_time")]
         if op == "quantile":
             # quantile_over_time(φ, sel[w])
@@ -891,8 +783,7 @@ class _Parser:
         sel, window, at = self._range_call()
         return self._wrap_at(OverTime(op, sel, window), at)
 
-    def parse_topk(self) -> Expr:
-        fn = self.next()[1]
+    def parse_topk(self, fn: str) -> Expr:
         self.expect("(")
         kind, tok = self.next()
         if kind != "number":
@@ -902,8 +793,7 @@ class _Parser:
         self.expect(")")
         return TopK(int(float(tok)), inner, bottom=(fn == "bottomk"))
 
-    def parse_limitk(self) -> Expr:
-        fn = self.next()[1]
+    def parse_limitk(self, fn: str) -> Expr:
         self.expect("(")
         if fn == "limitk":
             kind, tok = self.next()
@@ -921,10 +811,9 @@ class _Parser:
         self.expect(")")
         return LimitK(param, inner, ratio=(fn == "limit_ratio"))
 
-    def parse_round(self) -> Expr:
+    def parse_round(self, fn: str) -> Expr:
         """``round(v[, to_nearest])`` — nearest multiple of to_nearest
         (default 1), halves rounded UP (Prometheus funcRound)."""
-        self.next()
         self.expect("(")
         inner = self.parse_expr()
         arg = 1.0
@@ -936,12 +825,11 @@ class _Parser:
         self.expect(")")
         return MathFn("round", inner, arg=arg)
 
-    def parse_math_fn(self) -> Expr:
-        fn = self.next()[1]
+    def parse_math_fn(self, fn: str) -> Expr:
         self.expect("(")
         inner = self.parse_expr()
         arg = arg2 = None
-        if fn in _CLAMP_FNS:
+        if fn in ("clamp_min", "clamp_max"):
             self.expect(",")
             arg = self.signed_number(f"{fn} bound")
         elif fn == "clamp":
@@ -952,14 +840,47 @@ class _Parser:
         self.expect(")")
         return MathFn(fn, inner, arg=arg, arg2=arg2)
 
-    def parse_histogram_quantile(self) -> Expr:
-        self.next()
+    def parse_sort(self, fn: str) -> Expr:
+        self.expect("(")
+        inner = self.parse_expr()
+        by_labels = None
+        if fn.startswith("sort_by_label"):
+            labels = []
+            while self.peek()[1] == ",":
+                labels.append(self._string_arg())
+            if not labels:
+                raise SyntaxError("promql: sort_by_label needs at least one label")
+            by_labels = tuple(labels)
+        self.expect(")")
+        return Sort(inner, desc=fn.endswith("_desc"), by_labels=by_labels)
+
+    def parse_date_fn(self, fn: str) -> Expr:
+        self.expect("(")
+        inner = None
+        if self.peek()[1] != ")":
+            inner = self.parse_expr()
+        self.expect(")")
+        if fn == "timestamp" and inner is None:
+            raise SyntaxError("promql: timestamp() requires a vector")
+        return DateFn(fn, inner)
+
+    def parse_histogram_quantile(self, fn: str) -> Expr:
         self.expect("(")
         phi = self.signed_number("histogram_quantile φ")
         self.expect(",")
         inner = self.parse_expr()
         self.expect(")")
         return HistogramQuantile(phi, inner)
+
+    def parse_histogram_fraction(self, fn: str) -> Expr:
+        self.expect("(")
+        lo = self.signed_number("histogram_fraction lower")
+        self.expect(",")
+        hi = self.signed_number("histogram_fraction upper")
+        self.expect(",")
+        inner = self.parse_expr()
+        self.expect(")")
+        return HistogramFraction(lo, hi, inner)
 
     def _string_arg(self) -> str:
         self.expect(",")
@@ -968,17 +889,19 @@ class _Parser:
             raise SyntaxError(f"promql: expected a string argument, got {tok!r}")
         return _unquote(tok)
 
-    def parse_label_fn(self) -> Expr:
-        fn = self.next()[1]
+    def parse_label_replace(self, fn: str) -> Expr:
         self.expect("(")
         inner = self.parse_expr()
-        if fn == "label_replace":
-            dst = self._string_arg()
-            repl = self._string_arg()
-            src = self._string_arg()
-            regex = self._string_arg()
-            self.expect(")")
-            return LabelReplace(inner, dst, repl, src, regex)
+        dst = self._string_arg()
+        repl = self._string_arg()
+        src = self._string_arg()
+        regex = self._string_arg()
+        self.expect(")")
+        return LabelReplace(inner, dst, repl, src, regex)
+
+    def parse_label_join(self, fn: str) -> Expr:
+        self.expect("(")
+        inner = self.parse_expr()
         dst = self._string_arg()
         sep = self._string_arg()
         srcs = []
@@ -987,8 +910,7 @@ class _Parser:
         self.expect(")")
         return LabelJoin(inner, dst, sep, tuple(srcs))
 
-    def parse_info(self) -> Expr:
-        self.next()
+    def parse_info(self, fn: str) -> Expr:
         self.expect("(")
         inner = self.parse_expr()
         matchers: tuple[Matcher, ...] = ()
@@ -1070,6 +992,76 @@ class _Parser:
         return At(sel, at) if at is not None else sel
 
 
+#: Function name → (node kind, parse routine).  The routine runs with
+#: the name consumed and returns the call's node.  The names of the Agg
+#: and TopK kinds are reserved keywords; every other name is a function
+#: only when a "(" follows it.
+FUNCTIONS: dict[str, tuple[type, Callable[[_Parser, str], Expr]]] = {
+    **dict.fromkeys(_AGG_OPS, (Agg, _Parser.parse_agg)),
+    **dict.fromkeys(("topk", "bottomk"), (TopK, _Parser.parse_topk)),
+    **dict.fromkeys(("limitk", "limit_ratio"), (LimitK, _Parser.parse_limitk)),
+    **dict.fromkeys(
+        ("rate", "irate", "increase", "delta", "idelta", "resets", "changes"),
+        (Rate, _Parser.parse_rate),
+    ),
+    **dict.fromkeys(("deriv", "predict_linear"), (Deriv, _Parser.parse_deriv)),
+    **dict.fromkeys(
+        ("holt_winters", "double_exponential_smoothing"),
+        (HoltWinters, _Parser.parse_holt_winters),
+    ),
+    # count_values/group have no *_over_time form in Prometheus;
+    # present/last/… exist without a matching top-level aggregation
+    **{
+        f"{op}_over_time": (OverTime, _Parser.parse_over_time)
+        for op in (
+            "sum", "avg", "min", "max", "count", "stddev", "stdvar",
+            "quantile", "last", "absent", "present", "first", "mad",
+            "ts_of_max", "ts_of_min", "ts_of_last", "ts_of_first",
+        )
+    },
+    "label_replace": (LabelReplace, _Parser.parse_label_replace),
+    "label_join": (LabelJoin, _Parser.parse_label_join),
+    "info": (Info, _Parser.parse_info),
+    "histogram_quantile": (HistogramQuantile, _Parser.parse_histogram_quantile),
+    **dict.fromkeys(
+        (
+            "histogram_count", "histogram_sum", "histogram_avg",
+            "histogram_stddev", "histogram_stdvar",
+        ),
+        (HistogramFn, lambda p, name: HistogramFn(name[len("histogram_"):], p._call())),
+    ),
+    "histogram_fraction": (HistogramFraction, _Parser.parse_histogram_fraction),
+    **dict.fromkeys(
+        (
+            "abs", "ceil", "floor", "exp", "ln", "log2", "log10", "sqrt",
+            "sgn", "clamp", "clamp_min", "clamp_max",
+            # the Prometheus trigonometric family (funcAcos..funcTanh,
+            # plus the degree/radian converters)
+            "acos", "acosh", "asin", "asinh", "atan", "atanh", "cos",
+            "cosh", "sin", "sinh", "tan", "tanh", "deg", "rad",
+        ),
+        (MathFn, _Parser.parse_math_fn),
+    ),
+    "round": (MathFn, _Parser.parse_round),
+    **dict.fromkeys(
+        ("sort", "sort_desc", "sort_by_label", "sort_by_label_desc"),
+        (Sort, _Parser.parse_sort),
+    ),
+    **dict.fromkeys(
+        (
+            "timestamp", "minute", "hour", "day_of_week", "day_of_month",
+            "day_of_year", "days_in_month", "month", "year",
+        ),
+        (DateFn, _Parser.parse_date_fn),
+    ),
+    "scalar": (Scalarize, lambda p, name: Scalarize(p._call())),
+    "vector": (Vectorize, lambda p, name: Vectorize(p._call())),
+    "absent": (Absent, lambda p, name: Absent(p._call())),
+    "time": (Time, lambda p, name: p._no_args(Time())),
+    "pi": (Scalar, lambda p, name: p._no_args(Scalar(math.pi))),
+}
+
+
 def _unquote(s: str) -> str:
     body = s[1:-1]
     return body.replace('\\"', '"').replace("\\\\", "\\")
@@ -1119,159 +1111,177 @@ def to_promql(node: Expr) -> str:
     """Render an AST back to PromQL text.  ``parse(to_promql(x)) == x``
     for every AST this parser can produce (durations normalize to
     seconds) — property-tested in tests/test_promql.py."""
-    if isinstance(node, Scalar):
-        return repr(node.value) if node.value != int(node.value) else str(int(node.value))
-    if isinstance(node, Selector):
-        ms_items = [
-            f'{_label_txt(m.label)} {m.op} "{m.value}"'
-            for m in node.matchers
-        ]
-        if node.name is not None and not _LEGACY_IDENT_RE.fullmatch(
-            node.name
-        ):
-            # 3.x UTF-8 metric name: quoted inside the braces
-            parts = "{" + ", ".join(
-                [_quote_name(node.name)] + ms_items
-            ) + "}"
-        else:
-            parts = node.name or ""
-            if ms_items:
-                parts += "{" + ", ".join(ms_items) + "}"
-        if node.offset_seconds:
-            parts += f" offset {_fmt_dur(node.offset_seconds)}"
-        return parts
-    if isinstance(node, Subquery):
-        return (
-            f"({to_promql(node.expr)})"
-            f"[{_fmt_dur(node.range_seconds)}:{_fmt_dur(node.step_seconds)}]"
-        )
-    if isinstance(node, Rate):
-        body = _range_body(node.selector, node.window_seconds)
-        return f"{node.fn}({body})"
-    if isinstance(node, Deriv):
-        body = _range_body(node.selector, node.window_seconds)
-        if node.predict_seconds is None:
-            return f"deriv({body})"
-        t = node.predict_seconds
-        t_s = repr(t) if t != int(t) else str(int(t))
-        return f"predict_linear({body}, {t_s})"
-    if isinstance(node, OverTime):
-        body = _range_body(node.selector, node.window_seconds)
-        if node.op == "quantile":
-            return f"quantile_over_time({node.param!r}, {body})"
-        return f"{node.op}_over_time({body})"
-    if isinstance(node, HoltWinters):
-        body = _range_body(node.selector, node.window_seconds)
-        return f"holt_winters({body}, {node.sf!r}, {node.tf!r})"
-    if isinstance(node, Agg):
-        clause = ""
-        if node.by is not None:
-            clause = f" by ({', '.join(map(_label_txt, node.by))}) "
-        elif node.without is not None:
-            clause = (
-                f" without ({', '.join(map(_label_txt, node.without))}) "
-            )
-        if node.value_label is not None:
-            param = f'"{node.value_label}", '
-        elif node.param is not None:
-            param = f"{node.param!r}, "
-        else:
-            param = ""
-        return f"{node.op}{clause}({param}{to_promql(node.expr)})"
-    if isinstance(node, Absent):
-        return f"absent({to_promql(node.expr)})"
-    if isinstance(node, TopK):
-        fn = "bottomk" if node.bottom else "topk"
-        return f"{fn}({node.k}, {to_promql(node.expr)})"
-    if isinstance(node, LimitK):
-        if node.ratio:
-            return f"limit_ratio({_fmt_num(node.param)}, {to_promql(node.expr)})"
-        return f"limitk({int(node.param)}, {to_promql(node.expr)})"
-    if isinstance(node, Bin):
-        # wrap each operand: comparisons bind looser than arithmetic,
-        # so a Cmp operand is only expressible with its own parens
-        mod = _fmt_match(node.match)
-        return f"(({to_promql(node.left)}) {node.op}{mod} ({to_promql(node.right)}))"
-    if isinstance(node, SetOp):
-        mod = _fmt_match(node.match)
-        return f"(({to_promql(node.left)}) {node.op}{mod} ({to_promql(node.right)}))"
-    if isinstance(node, MathFn):
-        args = "".join(
-            f", {_fmt_num(a)}" for a in (node.arg, node.arg2) if a is not None
-        )
-        return f"{node.fn}({to_promql(node.expr)}{args})"
-    if isinstance(node, Sort):
-        if node.by_labels is not None:
-            fn = "sort_by_label_desc" if node.desc else "sort_by_label"
-            labels = "".join(f', "{l}"' for l in node.by_labels)
-            return f"{fn}({to_promql(node.expr)}{labels})"
-        fn = "sort_desc" if node.desc else "sort"
-        return f"{fn}({to_promql(node.expr)})"
-    if isinstance(node, Scalarize):
-        return f"scalar({to_promql(node.expr)})"
-    if isinstance(node, Vectorize):
-        return f"vector({to_promql(node.expr)})"
-    if isinstance(node, DateFn):
-        inner = to_promql(node.expr) if node.expr is not None else ""
-        return f"{node.fn}({inner})"
-    if isinstance(node, At):
-        inner = node.expr
-        if isinstance(inner, Selector):
-            return f"{to_promql(inner)} @ {_fmt_at(node.at_seconds)}"
-        if isinstance(inner, Rate):
-            body = _range_body(inner.selector, inner.window_seconds, node.at_seconds)
-            return f"{inner.fn}({body})"
-        if isinstance(inner, Deriv):
-            body = _range_body(inner.selector, inner.window_seconds, node.at_seconds)
-            if inner.predict_seconds is None:
-                return f"deriv({body})"
-            return f"predict_linear({body}, {_fmt_num(inner.predict_seconds)})"
-        if isinstance(inner, OverTime):
-            body = _range_body(inner.selector, inner.window_seconds, node.at_seconds)
-            if inner.op == "quantile":
-                return f"quantile_over_time({inner.param!r}, {body})"
-            return f"{inner.op}_over_time({body})"
-        if isinstance(inner, HoltWinters):
-            body = _range_body(inner.selector, inner.window_seconds, node.at_seconds)
-            return f"holt_winters({body}, {inner.sf!r}, {inner.tf!r})"
-        raise TypeError(f"promql: cannot render @ over {inner!r}")
-    if isinstance(node, HistogramQuantile):
-        phi = repr(node.phi) if node.phi != int(node.phi) else str(int(node.phi))
-        return f"histogram_quantile({phi}, {to_promql(node.expr)})"
-    if isinstance(node, HistogramFn):
-        return f"histogram_{node.fn}({to_promql(node.expr)})"
-    if isinstance(node, HistogramFraction):
-        def _num(x: float) -> str:
-            return repr(x) if x != int(x) else str(int(x))
-        return (
-            f"histogram_fraction({_num(node.lo)}, {_num(node.hi)}, "
-            f"{to_promql(node.expr)})"
-        )
-    if isinstance(node, LabelReplace):
-        return (
-            f'label_replace({to_promql(node.expr)}, "{node.dst}", '
-            f'"{node.replacement}", "{node.src}", "{node.regex}")'
-        )
-    if isinstance(node, LabelJoin):
-        srcs = "".join(f', "{s}"' for s in node.srcs)
-        return f'label_join({to_promql(node.expr)}, "{node.dst}", "{node.sep}"{srcs})'
-    if isinstance(node, Info):
-        if node.matchers:
-            ms = ", ".join(
-                f'{m.label}{m.op}"{m.value}"' for m in node.matchers
-            )
-            return f"info({to_promql(node.expr)}, {{{ms}}})"
-        return f"info({to_promql(node.expr)})"
-    if isinstance(node, Cmp):
-        b = " bool" if node.bool_mode else ""
-        mod = _fmt_match(node.match)
-        return (
-            f"(({to_promql(node.expr)}) {node.op}{b}{mod} "
-            f"({to_promql(node.rhs)}))"
-        )
-    if isinstance(node, Time):
-        return "time()"
-    raise TypeError(f"promql: cannot render {node!r}")
+    return _kind(node).render(node)
+
+
+def _kind(node: Expr):
+    """``node``'s row in the kind table, ``compiler.KINDS`` (it sits
+    with the evaluations; compiler.py imports this module)."""
+    from kafka_metrics_exporter_spark.promql.compiler import KINDS
+
+    return KINDS[type(node)]
+
+
+# Renderers, one per node kind (the ``render`` of its KINDS row).  A
+# range-function renderer takes the ``@`` of an enclosing At, which
+# PromQL writes inside the range body: ``rate(m[5m] @ t)``.
+def _render_scalar(node: Scalar) -> str:
+    return _fmt_num(node.value)
+
+
+def _render_selector(node: Selector) -> str:
+    ms_items = [
+        f'{_label_txt(m.label)} {m.op} "{m.value}"' for m in node.matchers
+    ]
+    if node.name is not None and not _LEGACY_IDENT_RE.fullmatch(node.name):
+        # 3.x UTF-8 metric name: quoted inside the braces
+        parts = "{" + ", ".join([_quote_name(node.name)] + ms_items) + "}"
+    else:
+        parts = node.name or ""
+        if ms_items:
+            parts += "{" + ", ".join(ms_items) + "}"
+    if node.offset_seconds:
+        parts += f" offset {_fmt_dur(node.offset_seconds)}"
+    return parts
+
+
+def _render_subquery(node: Subquery) -> str:
+    return (
+        f"({to_promql(node.expr)})"
+        f"[{_fmt_dur(node.range_seconds)}:{_fmt_dur(node.step_seconds)}]"
+    )
+
+
+def _render_rate(node: Rate, at=None) -> str:
+    return f"{node.fn}({_range_body(node.selector, node.window_seconds, at)})"
+
+
+def _render_deriv(node: Deriv, at=None) -> str:
+    body = _range_body(node.selector, node.window_seconds, at)
+    if node.predict_seconds is None:
+        return f"deriv({body})"
+    return f"predict_linear({body}, {_fmt_num(node.predict_seconds)})"
+
+
+def _render_over_time(node: OverTime, at=None) -> str:
+    body = _range_body(node.selector, node.window_seconds, at)
+    if node.op == "quantile":
+        return f"quantile_over_time({node.param!r}, {body})"
+    return f"{node.op}_over_time({body})"
+
+
+def _render_holt_winters(node: HoltWinters, at=None) -> str:
+    body = _range_body(node.selector, node.window_seconds, at)
+    return f"holt_winters({body}, {node.sf!r}, {node.tf!r})"
+
+
+def _render_at(node: At) -> str:
+    if isinstance(node.expr, Selector):
+        return f"{to_promql(node.expr)} @ {_fmt_at(node.at_seconds)}"
+    return _kind(node.expr).render(node.expr, node.at_seconds)
+
+
+def _render_agg(node: Agg) -> str:
+    clause = ""
+    if node.by is not None:
+        clause = f" by ({', '.join(map(_label_txt, node.by))}) "
+    elif node.without is not None:
+        clause = f" without ({', '.join(map(_label_txt, node.without))}) "
+    if node.value_label is not None:
+        param = f'"{node.value_label}", '
+    elif node.param is not None:
+        param = f"{node.param!r}, "
+    else:
+        param = ""
+    return f"{node.op}{clause}({param}{to_promql(node.expr)})"
+
+
+def _render_topk(node: TopK) -> str:
+    fn = "bottomk" if node.bottom else "topk"
+    return f"{fn}({node.k}, {to_promql(node.expr)})"
+
+
+def _render_limitk(node: LimitK) -> str:
+    if node.ratio:
+        return f"limit_ratio({_fmt_num(node.param)}, {to_promql(node.expr)})"
+    return f"limitk({int(node.param)}, {to_promql(node.expr)})"
+
+
+def _render_binary(node: "Bin | SetOp") -> str:
+    # wrap each operand: comparisons bind looser than arithmetic, so a
+    # Cmp operand is only expressible with its own parens
+    mod = _fmt_match(node.match)
+    return f"(({to_promql(node.left)}) {node.op}{mod} ({to_promql(node.right)}))"
+
+
+def _render_cmp(node: Cmp) -> str:
+    b = " bool" if node.bool_mode else ""
+    mod = _fmt_match(node.match)
+    return f"(({to_promql(node.expr)}) {node.op}{b}{mod} ({to_promql(node.rhs)}))"
+
+
+def _render_math_fn(node: MathFn) -> str:
+    args = "".join(
+        f", {_fmt_num(a)}" for a in (node.arg, node.arg2) if a is not None
+    )
+    return f"{node.fn}({to_promql(node.expr)}{args})"
+
+
+def _render_sort(node: Sort) -> str:
+    if node.by_labels is not None:
+        fn = "sort_by_label_desc" if node.desc else "sort_by_label"
+        labels = "".join(f', "{l}"' for l in node.by_labels)
+        return f"{fn}({to_promql(node.expr)}{labels})"
+    fn = "sort_desc" if node.desc else "sort"
+    return f"{fn}({to_promql(node.expr)})"
+
+
+def _render_date_fn(node: DateFn) -> str:
+    inner = to_promql(node.expr) if node.expr is not None else ""
+    return f"{node.fn}({inner})"
+
+
+def _render_histogram_quantile(node: HistogramQuantile) -> str:
+    return f"histogram_quantile({_fmt_num(node.phi)}, {to_promql(node.expr)})"
+
+
+def _render_histogram_fn(node: HistogramFn) -> str:
+    return f"histogram_{node.fn}({to_promql(node.expr)})"
+
+
+def _render_histogram_fraction(node: HistogramFraction) -> str:
+    return (
+        f"histogram_fraction({_fmt_num(node.lo)}, {_fmt_num(node.hi)}, "
+        f"{to_promql(node.expr)})"
+    )
+
+
+def _render_label_replace(node: LabelReplace) -> str:
+    return (
+        f'label_replace({to_promql(node.expr)}, "{node.dst}", '
+        f'"{node.replacement}", "{node.src}", "{node.regex}")'
+    )
+
+
+def _render_label_join(node: LabelJoin) -> str:
+    srcs = "".join(f', "{s}"' for s in node.srcs)
+    return f'label_join({to_promql(node.expr)}, "{node.dst}", "{node.sep}"{srcs})'
+
+
+def _render_info(node: Info) -> str:
+    if node.matchers:
+        ms = ", ".join(f'{m.label}{m.op}"{m.value}"' for m in node.matchers)
+        return f"info({to_promql(node.expr)}, {{{ms}}})"
+    return f"info({to_promql(node.expr)})"
+
+
+def _render_call(fn: str):
+    """Renderer of a one-argument call ``fn(expr)``."""
+    return lambda node: f"{fn}({to_promql(node.expr)})"
+
+
+def _render_time(node: Time) -> str:
+    return "time()"
 
 
 def _fmt_num(x: float) -> str:

@@ -469,7 +469,5 @@ def evaluate_range(
         lookback_us=_us(lookback_seconds),
         bounds=bounds,
     )
-    vec = _eval(plan.ast, metrics, tuple(label_cols), leaf)
-    if isinstance(vec, float):
-        raise ValueError("promql: top-level scalar expressions are not vectors")
+    vec = _eval(plan.ast, metrics, tuple(label_cols), leaf, "a top-level expression")
     return vec.select_shape()

@@ -10,7 +10,10 @@ Here each batch is one narrow stage: ``foreachPartition`` over
 executors and POSTs a payload whenever the next doc would push it past
 ``MAX_BULK_BYTES``, then flushes each index at the end of the
 partition — so a payload's size is bounded by construction at any
-scale, with no shuffle.  The POST goes through a pluggable I/O
+scale, with no shuffle.  A payload the poster fails to deliver (it
+returns ``False``) fails its partition, so the micro-batch fails and
+is retried, never committed with docs missing: delivery is
+at-least-once.  The POST goes through a pluggable I/O
 callback — tests exercise the full pipeline with a capturing poster,
 and the parquet stand-in writer partitions by ``date(created_ts)``
 exactly like daily indexes partition the reference's data.
@@ -56,7 +59,8 @@ def _bulk_payloads(rows, max_bytes: int):
 
 def http_bulk_poster(es_url: str, timeout: float = 30.0, max_retries: int = 10):
     """POST one NDJSON payload to ``{es_url}/{index}/_bulk`` with the
-    reference's retry policy (Code/ElasticSearchAppender.py:100-103)."""
+    reference's retry policy (Code/ElasticSearchAppender.py:100-103);
+    ``False`` once the retries are spent."""
     import time
     import urllib.request
 
@@ -99,7 +103,11 @@ def es_bulk_foreach_batch(
 
         def _post_partition(rows) -> None:
             for index_name, payload in _bulk_payloads(rows, max_bytes):
-                poster(index_name, payload)
+                if not poster(index_name, payload):
+                    raise RuntimeError(
+                        f"es bulk: POST to index {index_name!r} failed; "
+                        f"failing the batch so it is retried"
+                    )
 
         docs.foreachPartition(_post_partition)
 

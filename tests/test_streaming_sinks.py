@@ -165,6 +165,19 @@ def test_es_bulk_foreach_batch_posts_executor_side(metrics_batch, tmp_path):
     assert all(d["mbeanName"].startswith("kafka.server:") for d in docs)
 
 
+def test_es_bulk_failed_post_fails_the_batch(metrics_batch):
+    """A poster that gives up (returns False, as http_bulk_poster does
+    once its retries are spent) makes the foreachBatch writer raise,
+    naming the index, so the micro-batch is retried instead of being
+    committed without its docs."""
+
+    def down(index_name: str, payload: str) -> bool:
+        return False
+
+    with pytest.raises(Exception, match="kafka-jmx-logs-2023-11-14"):
+        es_bulk_foreach_batch(down)(metrics_batch.coalesce(1), 0)
+
+
 def test_es_bulk_payloads_stay_within_the_byte_bound(
     metrics_batch, tmp_path, monkeypatch
 ):

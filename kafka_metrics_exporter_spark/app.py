@@ -1,9 +1,11 @@
 """Daemon entry point (SURVEY §3.1): the reference's ``python main.py
-<args>`` loop re-expressed as Structured Streaming queries.
+<args>`` loop re-expressed as one Structured Streaming query.
 
 Argument surface mirrors the reference's groups (Code/main.py:90-177):
 per-type server lists × MBean patterns build the scrape catalog (J1),
-sink flags pick Kafka / Elasticsearch / parquet outputs, and the poll
+sink flags pick Kafka / Elasticsearch / parquet outputs, each poll
+cycle's one scrape is fanned out to all of them
+(``streaming.pipeline.fan_out`` under ``for_each_batch``), and the poll
 interval becomes the stream trigger (the reference's poll gate,
 Code/JMXScraper.py:186-197, incl. the 15 s floor, Code/main.py:238-239).
 At least one source and one sink are required (Code/main.py:181-187).
@@ -567,79 +569,26 @@ def build_catalog(args: argparse.Namespace) -> list[tuple[str, str]]:
     )
 
 
-def main(argv: list[str] | None = None, spark=None) -> int:
-    args = build_parser().parse_args(argv)
-    if args.curate:
-        if spark is None:
-            from kafka_metrics_exporter_spark.session import get_spark
-
-            spark = get_spark(app_name="spark-metrics-engine")
-        return run_curate(args, spark)
-    if (args.query_promql or args.query_kibana_vis or args.query_dashboard
-            or args.query_kibana_dashboard):
-        if spark is None:
-            from kafka_metrics_exporter_spark.session import get_spark
-
-            spark = get_spark(app_name="spark-metrics-engine")
-        return run_query(args, spark)
-    sinks_enabled = [
-        s for s in (args.kafka_bootstrap_servers, args.es_url, args.sink_parquet) if s
-    ]
-    if not sinks_enabled:
-        raise SystemExit(
-            "at least one sink is required "
-            "(--kafka-bootstrap-servers / --es-url / --sink-parquet)"
-        )
-    # same clean CLI contract as parse_selector_filters /
-    # --curate-budget — not an opaque dict-ctor ValueError at
-    # stream-start time (ADVICE r13)
-    for kv in args.kafka_conn_props:
-        if "=" not in kv:
-            raise SystemExit(
-                f"--kafka-conn-props needs key=value, got {kv!r}"
-            )
-    catalog = build_catalog(args)
-
-    if spark is None:
-        from kafka_metrics_exporter_spark.session import get_spark
-
-        spark = get_spark(app_name="spark-metrics-engine")
-
-    from kafka_metrics_exporter_spark.streaming.pipeline import streaming_metrics
-
-    metrics = streaming_metrics(
-        spark,
-        catalog,
-        fetcher=args.fetcher,
-        timeout=args.jmx_poll_timeout,
-        connect_endpoints=args.connect_endpoints or None,
-        **discovery_options(args),
-    )
-
-    interval = max(args.poll_interval, JMX_POLL_FLOOR_SECS)
-    queries = []
-
-    def trigger(writer):
-        if args.once:
-            return writer.trigger(availableNow=True)
-        return writer.trigger(processingTime=f"{interval} seconds")
-
+def sink_writers(args: argparse.Namespace) -> list:
+    """The configured sinks as ``writer(batch_df, batch_id)`` callables,
+    in the order each micro-batch reaches them: Kafka, ES bulk, daily
+    parquet.  With ``--kibana-url`` the one-time ES/Kibana bootstrap runs
+    here, before the stream starts."""
+    writers = []
     if args.kafka_bootstrap_servers:
-        from kafka_metrics_exporter_spark.sinks.kafka_sink import write_stream_to_kafka
+        from kafka_metrics_exporter_spark.sinks import kafka_sink
 
-        queries.append(
-            trigger(
-                write_stream_to_kafka(
-                    metrics,
-                    args.kafka_bootstrap_servers,
-                    topic=args.kafka_topic,
-                    checkpoint=f"{args.checkpoint}/kafka",
-                    extra=dict(
-                        kv.split("=", 1) for kv in args.kafka_conn_props
-                    ),
-                )
-            ).start()
+        options = kafka_sink.kafka_sink_options(
+            args.kafka_bootstrap_servers,
+            topic=args.kafka_topic,
+            extra=dict(kv.split("=", 1) for kv in args.kafka_conn_props),
         )
+
+        def to_kafka(df, _id) -> None:
+            # looked up per batch: the module attribute is the test seam
+            kafka_sink.write_kafka(kafka_sink.to_kafka_records(df), options)
+
+        writers.append(to_kafka)
     if args.es_url:
         if args.kibana_url:
             # one-time sink DDL bootstrap before streaming starts
@@ -667,28 +616,71 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             http_bulk_poster,
         )
 
-        writer = (
-            metrics.writeStream.foreachBatch(
-                es_bulk_foreach_batch(
-                    http_bulk_poster(
-                        args.es_url, timeout=args.es_bulk_url_timeout
-                    )
-                )
-            ).option("checkpointLocation", f"{args.checkpoint}/es")
-        )
-        queries.append(trigger(writer).start())
+        writers.append(es_bulk_foreach_batch(
+            http_bulk_poster(args.es_url, timeout=args.es_bulk_url_timeout)
+        ))
     if args.sink_parquet:
         from kafka_metrics_exporter_spark.sinks.es_bulk import write_daily_parquet
 
-        writer = (
-            metrics.writeStream.foreachBatch(
-                lambda df, _id: write_daily_parquet(df, args.sink_parquet)
-            ).option("checkpointLocation", f"{args.checkpoint}/parquet")
-        )
-        queries.append(trigger(writer).start())
+        writers.append(lambda df, _id: write_daily_parquet(df, args.sink_parquet))
+    return writers
 
-    for q in queries:
-        q.awaitTermination() if not args.once else q.awaitTermination(600)
+
+def _session(spark):
+    """The caller's session, else the engine's own."""
+    if spark is not None:
+        return spark
+    from kafka_metrics_exporter_spark.session import get_spark
+
+    return get_spark(app_name="spark-metrics-engine")
+
+
+def main(argv: list[str] | None = None, spark=None) -> int:
+    args = build_parser().parse_args(argv)
+    if args.curate:
+        return run_curate(args, _session(spark))
+    if (args.query_promql or args.query_kibana_vis or args.query_dashboard
+            or args.query_kibana_dashboard):
+        return run_query(args, _session(spark))
+    if not (args.kafka_bootstrap_servers or args.es_url or args.sink_parquet):
+        raise SystemExit(
+            "at least one sink is required "
+            "(--kafka-bootstrap-servers / --es-url / --sink-parquet)"
+        )
+    # same clean CLI contract as parse_selector_filters /
+    # --curate-budget — not an opaque dict-ctor ValueError at
+    # stream-start time (ADVICE r13)
+    for kv in args.kafka_conn_props:
+        if "=" not in kv:
+            raise SystemExit(
+                f"--kafka-conn-props needs key=value, got {kv!r}"
+            )
+    catalog = build_catalog(args)
+    spark = _session(spark)
+
+    from kafka_metrics_exporter_spark.streaming.pipeline import (
+        fan_out,
+        for_each_batch,
+        streaming_metrics,
+    )
+
+    metrics = streaming_metrics(
+        spark,
+        catalog,
+        fetcher=args.fetcher,
+        timeout=args.jmx_poll_timeout,
+        connect_endpoints=args.connect_endpoints or None,
+        **discovery_options(args),
+    )
+    interval = max(args.poll_interval, JMX_POLL_FLOOR_SECS)
+    query = for_each_batch(
+        metrics,
+        fan_out(sink_writers(args)),
+        f"{args.checkpoint}/sinks",
+        {"availableNow": True} if args.once
+        else {"processingTime": f"{interval} seconds"},
+    )
+    query.awaitTermination(600 if args.once else None)
     return 0
 
 

@@ -405,6 +405,12 @@ def _duration_seconds(tok: str) -> float:
     )
 
 
+def _is_number(kind: str, tok: str) -> bool:
+    """A number token — Prometheus's lexer also reads Inf/NaN (any
+    case) as number literals, so a metric can't be named `inf`."""
+    return kind == "number" or (kind == "ident" and tok.lower() in ("inf", "nan"))
+
+
 @dataclass
 class _Parser:
     tokens: list[tuple[str, str]]
@@ -459,6 +465,9 @@ class _Parser:
                     at = pt
                 else:
                     at = self.signed_number("@ modifier")
+                    if not math.isfinite(at):
+                        # Prometheus: "timestamp out of bounds for @ modifier"
+                        raise SyntaxError("promql: @ modifier needs a finite timestamp")
                 seen_at = True
             else:
                 return offset, at
@@ -466,14 +475,15 @@ class _Parser:
     def signed_number(self, what: str) -> float:
         """A numeric literal with an optional leading sign — PromQL
         scalar arguments may be negative (`predict_linear(m[1h], -600)`
-        projects into the past) or explicitly positive."""
+        projects into the past) or explicitly positive, and may be
+        ``Inf``/``NaN`` (`clamp_max(m, Inf)`)."""
         sign = 1.0
         kind, tok = self.peek()
         if tok in ("+", "-"):
             self.next()
             sign = -1.0 if tok == "-" else 1.0
             kind, tok = self.peek()
-        if kind != "number":
+        if not _is_number(kind, tok):
             raise SyntaxError(f"promql: {what} requires a numeric literal")
         self.next()
         return sign * float(tok)
@@ -620,14 +630,9 @@ class _Parser:
         kind, tok = self.peek()
         if tok == "(":
             return self._call()
-        if kind == "number":
+        if _is_number(kind, tok):
             self.next()
             return Scalar(float(tok))
-        if kind == "ident" and tok.lower() in ("inf", "nan"):
-            # Prometheus's lexer treats Inf/NaN (case-insensitive) as
-            # number literals, so a metric can't be named `inf`
-            self.next()
-            return Scalar(float(tok.lower()))
         if kind == "ident" and tok in FUNCTIONS:
             # Prometheus reserves only the AGGREGATION keywords (sum,
             # avg, …, topk) — every FUNCTION name doubles as a valid
@@ -1285,6 +1290,10 @@ def _render_time(node: Time) -> str:
 
 
 def _fmt_num(x: float) -> str:
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Inf" if x > 0 else "-Inf"
     return repr(x) if x != int(x) else str(int(x))
 
 

@@ -8,7 +8,9 @@ retries=10, linger.ms=50, default topic ``jmx_data_ingestion_pipeline``
 Spark's built-in Kafka sink replaces the hand-rolled producer loop:
 batching/flushing (the reference's flush-per-500, KafkaAppender.py:47-48)
 is the producer's own linger/batch machinery, and at-least-once delivery
-comes from Structured Streaming checkpointing instead of fire-and-forget.
+comes from Structured Streaming checkpointing instead of fire-and-forget:
+each micro-batch is one batch write, and a failed write fails the batch,
+which is then retried.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ def kafka_sink_options(
     linger_ms: int = 50,
     extra: dict[str, str] | None = None,
 ) -> dict[str, str]:
-    """writeStream.format("kafka") options mirroring the reference's
+    """format("kafka") writer options mirroring the reference's
     producer tuning (Code/KafkaAppender.py:23-25).  ``extra`` carries
     arbitrary producer properties (the reference's --kafka-conn-props,
     Code/main.py:177-178), prefixed ``kafka.`` for the Spark
@@ -60,18 +62,8 @@ def to_kafka_records(metrics: DataFrame) -> DataFrame:
     )
 
 
-def write_stream_to_kafka(
-    metrics: DataFrame,
-    bootstrap_servers: str,
-    topic: str = DEFAULT_TOPIC,
-    checkpoint: str = "/tmp/kme-kafka-checkpoint",
-    **opts,
-):
-    """Attach the Kafka sink to a streaming metrics DataFrame; caller
-    picks the trigger and calls .start()."""
-    return (
-        to_kafka_records(metrics)
-        .writeStream.format("kafka")
-        .options(**kafka_sink_options(bootstrap_servers, topic, **opts))
-        .option("checkpointLocation", checkpoint)
-    )
+def write_kafka(records: DataFrame, options: dict[str, str]) -> None:
+    """Batch-write ``to_kafka_records`` rows with Spark's Kafka
+    connector — the daemon's Kafka writer inside its one
+    ``foreachBatch`` (``streaming.pipeline.fan_out``)."""
+    records.write.format("kafka").options(**options).save()

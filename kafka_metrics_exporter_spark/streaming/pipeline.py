@@ -3,10 +3,18 @@
 The reference's unbounded poll loop — fetch snapshot, fan out to sinks,
 sleep POLL_WAIT (reference Code/main.py:262-287) — becomes:
 
-    readStream("jolokia") → normalize_scrapes → [persisted per batch]
-        ├─ writeStream kafka  (S5)
-        └─ foreachBatch ES bulk (S6)
+    readStream("jolokia") → normalize_scrapes → foreachBatch, persisted per batch
+        ├─ Kafka batch write   (S5)
+        ├─ ES bulk             (S6)
+        └─ daily parquet       (the offline ES stand-in)
     trigger(processingTime=...)  ≙ the poll gate (Code/JMXScraper.py:186-197)
+
+The Kafka branch is a writer inside that ``foreachBatch``, not a
+``writeStream`` of its own: one streaming query carries every sink
+(``for_each_batch`` running ``fan_out``), so each poll cycle scrapes
+every target once and each sink writes that same snapshot, as the
+reference ships one snapshot per poll to Kafka and to ES
+(Code/JMXScraper.py:22,161).
 
 Watermarking is a NEW capability (the reference is stateless and emits
 wall-clock records, SURVEY §2.5 W6): Spark requires it for state
@@ -164,7 +172,7 @@ def with_connect_rest(
     return metrics_batch.unionByName(rest, allowMissingColumns=True)
 
 
-def _for_each_batch(stream: DataFrame, body, checkpoint: str, trigger: dict | None):
+def for_each_batch(stream: DataFrame, body, checkpoint: str, trigger: dict | None):
     """Start ``stream`` with ``body(df, batch_id)`` run on each
     micro-batch, persisted for the body's duration so every plan over it
     shares one source scan; the batch is released even when the body
@@ -183,6 +191,21 @@ def _for_each_batch(stream: DataFrame, body, checkpoint: str, trigger: dict | No
         .foreachBatch(batch_fn)
         .start()
     )
+
+
+def fan_out(writers):
+    """The daemon's micro-batch body: hand the batch to every
+    ``writer(df, batch_id)`` in order.  Run under ``for_each_batch``,
+    the batch is persisted once, so all writers see the same snapshot
+    from one scrape.  A writer that raises fails the micro-batch: it is
+    not committed and is retried for every writer (at-least-once), so
+    the writers ahead of the failing one receive it again."""
+
+    def write_all(df: DataFrame, batch_id: int) -> None:
+        for write in writers:
+            write(df, batch_id)
+
+    return write_all
 
 
 def promql_panels(
@@ -259,7 +282,7 @@ def promql_panels(
         for name, plan in plans.items():
             emit(name, plan.evaluate_range(df, step_seconds, **kw), batch_id)
 
-    return _for_each_batch(stream, panels, checkpoint, trigger)
+    return for_each_batch(stream, panels, checkpoint, trigger)
 
 
 def kibana_panels(
@@ -293,7 +316,7 @@ def kibana_panels(
         for name, plan in plans.items():
             emit(name, plan.evaluate(df, **evaluate_kwargs), batch_id)
 
-    return _for_each_batch(stream, panels, checkpoint, trigger)
+    return for_each_batch(stream, panels, checkpoint, trigger)
 
 
 def streaming_dedup(
@@ -532,7 +555,7 @@ def alert_rules(
         for group in groups:
             _alert_group(group, df, batch_id, hw, state_dir, emit)
 
-    return _for_each_batch(stream, cycle, checkpoint, trigger)
+    return for_each_batch(stream, cycle, checkpoint, trigger)
 
 
 def replay_windowed_rollup(

@@ -3,6 +3,9 @@ cycle through catalog → stream → daily-parquet sink."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from conftest import reference_path
 
@@ -50,6 +53,153 @@ def test_once_cycle_to_parquet(spark, tmp_path):
         "kafka.server",
         "java.lang",
     }
+
+
+@pytest.fixture
+def jolokia_brokers():
+    """Two local Jolokia agents answering ``fake_jolokia_fetcher``'s
+    envelopes; yields their ``host:port`` names and a Counter of GETs
+    per URL, counted in the server (fetches run in worker processes)."""
+    import collections
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from kafka_metrics_exporter_spark.sources.fetchers import fake_jolokia_fetcher
+
+    gets: collections.Counter = collections.Counter()
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            url = f"http://{self.headers['Host']}{self.path}"
+            with lock:
+                gets[url] += 1
+            data = fake_jolokia_fetcher(url).encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+        def log_message(self, *a):  # quiet
+            pass
+
+    servers = [ThreadingHTTPServer(("127.0.0.1", 0), Handler) for _ in range(2)]
+    for srv in servers:
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        yield [f"127.0.0.1:{srv.server_address[1]}" for srv in servers], gets
+    finally:
+        for srv in servers:
+            srv.shutdown()
+            srv.server_close()
+
+
+def _file_poster(directory: str, ok: bool = True):
+    """ES poster factory (``http_bulk_poster``'s shape) that writes each
+    payload it is handed to a file of its own (posters run in worker
+    processes) and reports ``ok``."""
+
+    def factory(es_url, timeout=30.0):
+        def post(index_name: str, payload: str) -> bool:
+            import uuid
+
+            with open(os.path.join(directory, uuid.uuid4().hex), "w") as fh:
+                fh.write(payload)
+            return ok
+
+        return post
+
+    return factory
+
+
+def test_once_cycle_scrapes_each_target_once_for_every_sink(
+        spark, tmp_path, monkeypatch, jolokia_brokers):
+    """One poll cycle is one scrape fanned out to every sink (reference
+    Code/JMXScraper.py:22,161): with the ES and parquet sinks on, each
+    catalog URL is fetched once, and both sinks carry the same records
+    with the same scrape time."""
+    import kafka_metrics_exporter_spark.sinks.es_bulk as es_bulk
+
+    brokers, gets = jolokia_brokers
+    posted = tmp_path / "posted"
+    posted.mkdir()
+    monkeypatch.setattr(es_bulk, "http_bulk_poster", _file_poster(str(posted)))
+    argv = [a for b in brokers for a in ("--jmx-kafka-server", b)]
+    rc = main(
+        argv + ["--es-url", "http://es:9200",
+                "--sink-parquet", str(tmp_path / "out"),
+                "--checkpoint", str(tmp_path / "ckpt"), "--once"],
+        spark=spark,
+    )
+    assert rc == 0
+    catalog = build_catalog(build_parser().parse_args(argv))
+    assert len(catalog) == 4
+    assert dict(gets) == {url: 1 for _, url in catalog}
+
+    docs = [json.loads(line) for p in posted.iterdir()
+            for line in p.read_text().splitlines()[1::2]]
+    rows = spark.read.parquet(str(tmp_path / "out")).select("created_ms").collect()
+    assert len(docs) == len(rows) > 0
+    assert {d["createdDateTime"] for d in docs} == {str(r["created_ms"]) for r in rows}
+    assert len({r["created_ms"] for r in rows}) == 1
+    assert sorted(os.listdir(tmp_path / "ckpt")) == ["sinks"]
+
+
+def test_kafka_sink_writes_each_batch_through_its_writer(spark, tmp_path, monkeypatch):
+    """The Kafka sink is a batch write inside the one foreachBatch: its
+    writer gets the batch's (value, timestamp) records and the producer
+    options, --kafka-conn-props included.  (No Kafka connector or broker
+    is needed: the writer is replaced through its module attribute.)"""
+    import kafka_metrics_exporter_spark.sinks.kafka_sink as kafka_sink
+
+    calls = []
+    monkeypatch.setattr(
+        kafka_sink, "write_kafka",
+        lambda records, options: calls.append(
+            (records.columns, records.count(), options)),
+    )
+    rc = main(
+        ["--jmx-kafka-server", "kafka1:49901", "--fetcher", FAKE,
+         "--kafka-bootstrap-servers", "k1:9092", "--kafka-topic", "t",
+         "--kafka-conn-props", "acks=all",
+         "--sink-parquet", str(tmp_path / "out"),
+         "--checkpoint", str(tmp_path / "ckpt"), "--once"],
+        spark=spark,
+    )
+    assert rc == 0
+    assert len(calls) == 1
+    columns, n_records, options = calls[0]
+    assert columns == ["value", "timestamp"]
+    assert n_records == spark.read.parquet(str(tmp_path / "out")).count() > 0
+    assert options == kafka_sink.kafka_sink_options(
+        "k1:9092", topic="t", extra={"acks": "all"})
+    assert options["kafka.acks"] == "all"
+
+
+def test_failing_sink_fails_the_batch_uncommitted(spark, tmp_path, monkeypatch):
+    """An ES sink whose POST gives up fails the micro-batch: --once
+    raises, the batch is not committed (so a restart re-sends it to
+    every sink), the parquet sink behind ES never ran, and the
+    persisted batch is released."""
+    import kafka_metrics_exporter_spark.sinks.es_bulk as es_bulk
+
+    posted = tmp_path / "posted"
+    posted.mkdir()
+    monkeypatch.setattr(
+        es_bulk, "http_bulk_poster", _file_poster(str(posted), ok=False))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="es bulk"):
+        main(
+            ["--jmx-kafka-server", "kafka1:49901", "--fetcher", FAKE,
+             "--es-url", "http://es:9200",
+             "--sink-parquet", str(tmp_path / "out"),
+             "--checkpoint", str(tmp_path / "ckpt"), "--once"],
+            spark=spark,
+        )
+    assert os.listdir(posted)  # the sink did run and fail
+    assert not (tmp_path / "ckpt" / "sinks" / "commits" / "0").exists()
+    assert not (tmp_path / "out").exists()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_query_mode_requires_metrics_path():
@@ -258,8 +408,6 @@ def test_query_mode_time_macros(spark, tmp_path, capsys):
 # ---------------------------------------------------------------- round 13:
 # K8s discovery wired into the daemon + CLI parity pack.
 
-import json
-import os
 import re
 import time
 

@@ -858,6 +858,41 @@ def test_math_and_clamp_functions(tiny):
         assert _p(_u(_p(e))) == _p(e)
 
 
+def test_non_finite_literals_render():
+    """Inf/-Inf/NaN literals render as Prometheus spells them and parse
+    back (NaN compared with isnan: NaN != NaN)."""
+    import math
+
+    from kafka_metrics_exporter_spark.promql.parser import to_promql
+
+    for src, text in (("m > Inf", "((m) > (Inf))"), ("m < -inf", "((m) < (-Inf))"),
+                      ("-Inf", "-Inf"), ("+Inf", "Inf")):
+        assert to_promql(parse(src)) == text
+        assert parse(text) == parse(src)
+    assert to_promql(parse("NaN")) == "NaN"
+    assert math.isnan(parse(to_promql(parse("nan"))).value)
+    back = parse(to_promql(parse("m == NaN")))
+    assert back.op == "==" and math.isnan(back.rhs.value)
+
+
+def test_non_finite_numeric_arguments():
+    """Inf/NaN are number literals in argument position too, signed or
+    not; an @ timestamp must stay finite, as in Prometheus."""
+    import math
+
+    from kafka_metrics_exporter_spark.promql.parser import to_promql
+
+    hi, lo = parse("clamp_max(m, Inf)"), parse("clamp_min(m, -Inf)")
+    assert (hi.arg, lo.arg) == (math.inf, -math.inf)
+    assert to_promql(hi) == "clamp_max(m, Inf)"
+    assert to_promql(lo) == "clamp_min(m, -Inf)"
+    for n in (hi, lo, parse("clamp(m, -inf, +INF)")):
+        assert parse(to_promql(n)) == n
+    assert math.isnan(parse("clamp_max(m, NaN)").arg)
+    with pytest.raises(SyntaxError, match="finite"):
+        parse("m @ Inf")
+
+
 def test_streaming_aggregation_subset(spark, tmp_path):
     """A compiled dashboard aggregation pointed at a live stream: the
     instant agg becomes a watermarked tumbling-window agg, per batch."""

@@ -237,52 +237,45 @@ def rewrite_metrics(
         ),
     )
 
-    applied = exploded.withColumn(
-        "_rw",
-        compile_rules(rules, lowercase)(
-            F.col("_match_str"), F.col("attr_value").try_cast("double")
-        ),
-    )
-
-    matched = applied.filter(F.col("_rw").isNotNull()).select(
-        F.col("_rw.metric_name").alias("metric_name"),
-        F.col("_rw.labels").alias("labels"),
-        F.col("_rw.value").alias("value"),
-        F.col("_rw.metric_type").alias("metric_type"),
-        "mbean_name",
-        "server_type",
-        "host_name",
-        "created_ts",
-    )
-    if not keep_unmatched:
-        return matched
-
-    # jmx_exporter default naming for unmatched samples:
-    # safeName(domain + "_" + beanProperty values + "_" + attr);
-    # lowercased only when lowercaseOutputName is set, like any other
-    # metric name
-    default_name = F.regexp_replace(
-        F.concat_ws(
+    num_value = F.col("attr_value").try_cast("double")
+    rewritten = compile_rules(rules, lowercase)(F.col("_match_str"), num_value)
+    if keep_unmatched:
+        # jmx_exporter default naming for unmatched samples:
+        # safeName(domain + "_" + beanProperty values + "_" + attr);
+        # lowercased only when lowercaseOutputName is set, like any other
+        # metric name
+        default_name = F.regexp_replace(
+            F.concat_ws(
+                "_",
+                F.col("bean_domain"),
+                F.array_join(F.map_values("bean_props"), "_"),
+                F.col("attr_name"),
+            ),
+            "[^a-zA-Z0-9_]",
             "_",
-            F.col("bean_domain"),
-            F.array_join(F.map_values("bean_props"), "_"),
-            F.col("attr_name"),
-        ),
-        "[^a-zA-Z0-9_]",
-        "_",
-    )
-    if lowercase:
-        default_name = F.lower(default_name)
-    unmatched = applied.filter(
-        F.col("_rw").isNull() & F.col("attr_value").try_cast("double").isNotNull()
-    ).select(
-        default_name.alias("metric_name"),
-        F.create_map().cast("map<string,string>").alias("labels"),
-        F.col("attr_value").try_cast("double").alias("value"),
-        F.lit("UNTYPED").alias("metric_type"),
+        )
+        if lowercase:
+            default_name = F.lower(default_name)
+        rewritten = F.coalesce(
+            rewritten,
+            F.when(
+                num_value.isNotNull(),
+                F.struct(
+                    default_name.alias("metric_name"),
+                    F.create_map().cast("map<string,string>").alias("labels"),
+                    num_value.alias("value"),
+                    F.lit("UNTYPED").alias("metric_type"),
+                ),
+            ),
+        )
+
+    # The generator carries the chain and drops the null (no rule
+    # matched) in one place: a null filter over a projected chain would
+    # get the chain inlined into the Filter and evaluate it twice.
+    return exploded.select(
+        F.inline(F.array_compact(F.array(rewritten))),
         "mbean_name",
         "server_type",
         "host_name",
         "created_ts",
     )
-    return matched.unionByName(unmatched)

@@ -58,35 +58,3 @@ REWRITTEN_SCHEMA = T.StructType(
         T.StructField("metric_type", T.StringType(), True),  # GAUGE/COUNTER/UNTYPED
     ]
 )
-
-# Connect REST status record, one row per task with parent connector
-# fields copied (reference Code/ConnectRESTMetrics.py:121-140).
-CONNECT_STATUS_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType(), False),
-        T.StructField("type", T.StringType(), True),
-        T.StructField(
-            "connector",
-            T.StructType(
-                [
-                    T.StructField("state", T.StringType(), True),
-                    T.StructField("worker_id", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField(
-            "tasks",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("id", T.LongType(), True),
-                        T.StructField("state", T.StringType(), True),
-                        T.StructField("worker_id", T.StringType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)

@@ -215,15 +215,15 @@ class _JolokiaReaderMixin:
         n = min(len(targets), self.parallelism or len(targets))
         return [_SlicePartition(s, execution_ts) for s in _slices(targets, n)]
 
-
-class JolokiaBatchReader(_JolokiaReaderMixin, DataSourceReader):
-    def partitions(self):
-        return self._partitions(int(time.time() * 1000))
-
     def read(self, partition: _SlicePartition):
         yield from _read_partition(
             partition, self.fetcher_ref, self.timeout, self.fetcher_opts
         )
+
+
+class JolokiaBatchReader(_JolokiaReaderMixin, DataSourceReader):
+    def partitions(self):
+        return self._partitions(int(time.time() * 1000))
 
 
 class JolokiaStreamReader(_JolokiaReaderMixin, DataSourceStreamReader):
@@ -240,11 +240,6 @@ class JolokiaStreamReader(_JolokiaReaderMixin, DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         return self._partitions(int(end["ts"]))
-
-    def read(self, partition: _SlicePartition):
-        yield from _read_partition(
-            partition, self.fetcher_ref, self.timeout, self.fetcher_opts
-        )
 
     def commit(self, end: dict):
         pass

@@ -144,34 +144,6 @@ def latest_rollup(metrics: DataFrame) -> DataFrame:
     )
 
 
-def with_connect_rest(
-    metrics_batch: DataFrame,
-    endpoints: list[str],
-    fetcher: str = "kafka_metrics_exporter_spark.sources.fetchers:http_fetcher",
-    timeout: float = 10.0,
-    execution_ts: int | None = None,
-) -> DataFrame:
-    """Merge Connect REST status metrics into a (micro-)batch of
-    normalized Jolokia metrics — the reference folds the REST snapshot
-    into the scraper's data structure each cycle
-    (reference Code/JMXScraper.py:166-183).  Use inside foreachBatch:
-
-        .foreachBatch(lambda df, _id: sink(with_connect_rest(df, eps)))
-    """
-    from kafka_metrics_exporter_spark.sources.connect_rest import connect_rest_scan
-
-    rest = connect_rest_scan(
-        metrics_batch.sparkSession,
-        endpoints,
-        fetcher=fetcher,
-        timeout=timeout,
-        execution_ts=execution_ts,
-    )
-    if not rest.columns:  # no connectors discovered
-        return metrics_batch
-    return metrics_batch.unionByName(rest, allowMissingColumns=True)
-
-
 def for_each_batch(stream: DataFrame, body, checkpoint: str, trigger: dict | None):
     """Start ``stream`` with ``body(df, batch_id)`` run on each
     micro-batch, persisted for the body's duration so every plan over it

@@ -57,14 +57,15 @@ def test_once_cycle_to_parquet(spark, tmp_path):
 
 @pytest.fixture
 def jolokia_brokers():
-    """Two local Jolokia agents answering ``fake_jolokia_fetcher``'s
-    envelopes; yields their ``host:port`` names and a Counter of GETs
-    per URL, counted in the server (fetches run in worker processes)."""
+    """Two local servers answering ``fake_jolokia_fetcher``'s Jolokia
+    envelopes and ``tests/fake_connect.py``'s Connect REST API; yields
+    their ``host:port`` names and a Counter of GETs per URL, counted in
+    the server (fetches run in worker processes)."""
     import collections
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-    from kafka_metrics_exporter_spark.sources.fetchers import fake_jolokia_fetcher
+    from tests.fake_connect_and_jolokia import fetch
 
     gets: collections.Counter = collections.Counter()
     lock = threading.Lock()
@@ -74,7 +75,12 @@ def jolokia_brokers():
             url = f"http://{self.headers['Host']}{self.path}"
             with lock:
                 gets[url] += 1
-            data = fake_jolokia_fetcher(url).encode()
+            body = fetch(url)
+            if body is None:
+                self.send_response(404)
+                self.end_headers()
+                return
+            data = body.encode()
             self.send_response(200)
             self.send_header("Content-Length", str(len(data)))
             self.end_headers()
@@ -143,6 +149,46 @@ def test_once_cycle_scrapes_each_target_once_for_every_sink(
     assert {d["createdDateTime"] for d in docs} == {str(r["created_ms"]) for r in rows}
     assert len({r["created_ms"] for r in rows}) == 1
     assert sorted(os.listdir(tmp_path / "ckpt")) == ["sinks"]
+
+
+def test_once_cycle_merges_connect_rest_endpoint(spark, tmp_path, jolokia_brokers):
+    """A Connect REST endpoint is one more target of the poll cycle: its
+    listing is fetched once and each connector's status once, and its
+    task rows and connector-only row land in the same batch as the
+    broker's rows, keyed and normalized like JMX rows."""
+    (broker, connect), gets = jolokia_brokers
+    argv = ["--jmx-kafka-server", broker]
+    rc = main(
+        argv + ["--connect-rest-endpoint", f"http://{connect}",
+                "--sink-parquet", str(tmp_path / "out"),
+                "--checkpoint", str(tmp_path / "ckpt"), "--once"],
+        spark=spark,
+    )
+    assert rc == 0
+    rest = f"http://{connect}/connectors"
+    catalog = build_catalog(build_parser().parse_args(argv))
+    assert dict(gets) == {
+        **{url: 1 for _, url in catalog},
+        rest: 1,
+        f"{rest}/jdbc-source/status": 1,
+        f"{rest}/s3-sink/status": 1,
+    }
+
+    back = spark.read.parquet(str(tmp_path / "out"))
+    rows = back.filter(back.bean_domain == "kafka.connect.api.rest").collect()
+    prefix = "kafka.connect.api.rest:type=rest-api-metrics"
+    assert sorted(r["mbean_name"] for r in rows) == [
+        f"{prefix},connector=jdbc-source,connector-type=source",
+        f"{prefix},connector=s3-sink,connector-type=sink,task-id=0",
+        f"{prefix},connector=s3-sink,connector-type=sink,task-id=1",
+    ]
+    assert {(r["server_type"], r["host_name"]) for r in rows} == {
+        ("KafkaConnect", connect)}
+    assert {r["attributes"]["connector-status"] for r in rows} == {
+        "RUNNING", "PAUSED"}
+    # the broker's rows share the batch: one scrape time for all
+    assert back.filter(back.server_type == "KafkaBroker").count() > 0
+    assert back.select("created_ms").distinct().count() == 1
 
 
 def test_kafka_sink_writes_each_batch_through_its_writer(spark, tmp_path, monkeypatch):

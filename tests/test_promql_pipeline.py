@@ -98,19 +98,52 @@ def _connect_body(errors: dict[tuple[str, int], int]) -> str:
     )
 
 
+def test_rewrite_metrics_plans_the_rule_chain_once(spark):
+    """The rewrite evaluates the rule chain once per attribute, with or
+    without the unmatched fallback: its executed plan holds each rule's
+    pattern (in RLIKE and regexp_extract calls) as often as the chain
+    alone does."""
+    from kafka_metrics_exporter_spark.rules import compile_rules
+
+    rules, lower = load_rules_file(os.path.join(FIX, "kafka_rules.yml"))
+    url = "http://kafka1:49901/jolokia/read/kafka.server:*"
+    raw = spark.createDataFrame(
+        [(url, "KafkaBroker", T0_MS, 200, _body({"t1": 1000}, 10))],
+        RAW_SCRAPE_SCHEMA,
+    )
+    metrics = normalize_scrapes(raw)
+
+    def calls(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        patterns = sum(plan.count(r.compiled_pattern) for r in rules)
+        return plan.count("RLIKE("), patterns
+
+    chain = spark.createDataFrame([("x",)], ["m"]).select(
+        compile_rules(rules, lower)(F.col("m"), F.lit(1.0)).alias("r")
+    )
+    assert calls(chain) == (len(rules), len(rules) + 31)
+    for keep in (False, True):
+        out = rewrite_metrics(metrics, rules, lowercase=lower, keep_unmatched=keep)
+        assert calls(out) == calls(chain), keep
+
+
 def test_connect_rest_corpus_expr_end_to_end(spark):
     """VERDICT r6 item 6 — the Connect-REST sibling of the Jolokia
     thread above: one micro-batch merging the worker's Jolokia scrape
-    (task-error-metrics beans) with the two-phase REST status scan
-    (S3 list→detail, J5 explode; reference Code/ConnectRESTMetrics.py),
+    (task-error-metrics beans) with the two-phase REST status scan's
+    synthetic Jolokia envelope (S3 list→detail, J5 explode; reference
+    Code/ConnectRESTMetrics.py), both normalized by normalize_scrapes,
     rules-rewritten (fixture twin of configs/connect.yml), then the
     VERBATIM corpus expression (reference
     Kafka_Connect_Dashboard.json:656 family, including its quirky
     '( connector)' spacing) compiled and evaluated with pinned
     values."""
-    from kafka_metrics_exporter_spark.streaming.pipeline import with_connect_rest
+    from kafka_metrics_exporter_spark.sources.connect_rest import (
+        connect_snapshot_body,
+    )
 
     url = "http://connect1:8083/jolokia/read/kafka.connect:*"
+    rest = "http://connect1:8083"
     raw = spark.createDataFrame(
         [
             (
@@ -121,17 +154,19 @@ def test_connect_rest_corpus_expr_end_to_end(spark):
                 _connect_body(
                     {("s3-sink", 0): 3, ("s3-sink", 1): 2, ("jdbc-source", 0): 0}
                 ),
-            )
+            ),
+            # the REST endpoint's row, as the polling source emits it
+            (
+                rest,
+                "KafkaConnect",
+                T0_MS,
+                200,
+                connect_snapshot_body(rest, "tests.fake_connect:fetch"),
+            ),
         ],
         RAW_SCRAPE_SCHEMA,
     )
-    metrics = normalize_scrapes(raw)
-    merged = with_connect_rest(
-        metrics,
-        ["http://connect1:8083"],
-        fetcher="tests.fake_connect:fetch",
-        execution_ts=T0_MS,
-    )
+    merged = normalize_scrapes(raw)
     # the REST phase really fanned out: connector-status rows for both
     # connectors, task rows exploded with parent fields (J5)
     rest_rows = merged.filter(
@@ -143,6 +178,7 @@ def test_connect_rest_corpus_expr_end_to_end(spark):
     assert (
         sum(1 for r in rest_rows if "task-id=" in r["mbean_name"]) == 2
     )  # s3-sink's two tasks
+    assert {r["host_name"] for r in rest_rows} == {"connect1:8083"}
 
     rules, lower = load_rules_file(os.path.join(FIX, "connect_rules.yml"))
     rewritten = rewrite_metrics(merged, rules, lowercase=lower)

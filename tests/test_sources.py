@@ -1,5 +1,6 @@
 """Source tests: catalog build (J1/O1/O3), Jolokia DataSource (S1/S2),
-Connect REST two-phase scan (S3/J4/J5), K8s catalog provider (S4/P6/P7)."""
+Connect REST two-phase scan through that source (S3/J4/J5), K8s catalog
+provider (S4/P6/P7)."""
 
 from __future__ import annotations
 
@@ -9,10 +10,7 @@ import pytest
 from conftest import run_fresh_python
 
 from kafka_metrics_exporter_spark.operators import normalize_scrapes
-from kafka_metrics_exporter_spark.sources.connect_rest import (
-    connect_rest_scan,
-    status_to_jmx_records,
-)
+from kafka_metrics_exporter_spark.sources.connect_rest import connect_snapshot_body
 from kafka_metrics_exporter_spark.sources.jolokia import (
     build_url_catalog,
     read_jolokia,
@@ -178,8 +176,7 @@ def test_jolokia_source_fetches_a_slice_concurrently(spark):
 # --- Connect REST ----------------------------------------------------------
 def test_connect_rest_import_leaves_pandas_unloaded():
     """Every Jolokia source task imports connect_rest, so importing it
-    must not pay for pandas (~0.5 s per new worker); only the
-    mapInPandas fetch needs it."""
+    must not pay for pandas (~0.5 s per new worker)."""
     assert run_fresh_python(
         "import sys\n"
         "import kafka_metrics_exporter_spark.sources.connect_rest\n"
@@ -187,52 +184,78 @@ def test_connect_rest_import_leaves_pandas_unloaded():
     ) == "False"
 
 
-def test_connect_rest_scan_two_phase(spark):
-    scan = connect_rest_scan(
-        spark,
-        ["http://connect1:8083"],
-        fetcher="tests.fake_connect:fetch",
-        execution_ts=1700000000000,
+REST = "kafka.connect.api.rest:type=rest-api-metrics"
+
+
+def _connect_metrics(spark, endpoints, fetcher=None, **kw):
+    """Connect endpoints read by the Jolokia source, then normalized:
+    the daemon's path from Connect REST to metric rows."""
+    return normalize_scrapes(
+        read_jolokia(spark, [], fetcher=fetcher, connect_endpoints=endpoints, **kw)
     )
-    rows = {r["mbean_name"]: r for r in scan.collect()}
+
+
+def test_connect_rest_endpoint_two_phase(spark):
+    rows = {
+        r["mbean_name"]: r
+        for r in _connect_metrics(
+            spark, ["http://connect1:8083"], "tests.fake_connect:fetch"
+        ).collect()
+    }
     # s3-sink has 2 tasks → 2 task rows; jdbc-source has none → 1 row
     assert len(rows) == 3
-    task0 = rows[
-        "kafka.connect.api.rest:type=rest-api-metrics,connector=s3-sink,"
-        "connector-type=sink,task-id=0"
-    ]
+    task0 = rows[f"{REST},connector=s3-sink,connector-type=sink,task-id=0"]
     assert task0["attributes"]["connector-status"] == "RUNNING"
     assert task0["attributes"]["task-status"] == "RUNNING"
+    assert task0["bean_domain"] == "kafka.connect.api.rest"
     assert task0["bean_props"]["connector"] == "s3-sink"
     assert task0["server_type"] == "KafkaConnect"
     assert task0["host_name"] == "connect1:8083"
-    conn_only = rows[
-        "kafka.connect.api.rest:type=rest-api-metrics,connector=jdbc-source,"
-        "connector-type=source"
-    ]
+    assert task0["num_attributes"] == {}
+    conn_only = rows[f"{REST},connector=jdbc-source,connector-type=source"]
     assert conn_only["attributes"] == {"connector-status": "PAUSED"}
 
 
-def test_status_to_jmx_records_explode_keeps_parent(spark):
-    status = spark.createDataFrame(
-        [
-            (
-                "http://c:8083",
-                "conn-a",
-                "sink",
-                "RUNNING",
-                "w1:8083",
-                [(0, "RUNNING", "w1:8083"), (1, "FAILED", "w2:8083")],
-            )
-        ],
-        "endpoint string, name string, connector_type string, connector_state string,"
-        "connector_worker_id string, tasks array<struct<id:long,state:string,worker_id:string>>",
-    )
-    rows = status_to_jmx_records(status).collect()
+def test_connect_rest_task_rows_keep_parent_fields(spark):
+    rows = _connect_metrics(
+        spark, ["http://c:8083"], "tests.fake_connect:fetch_mixed_tasks"
+    ).collect()
     assert len(rows) == 2
     assert all("connector=conn-a" in r["mbean_name"] for r in rows)
-    states = {r["attributes"]["task-status"] for r in rows}
-    assert states == {"RUNNING", "FAILED"}
+    assert all(r["attributes"]["connector-status"] == "RUNNING" for r in rows)
+    tasks = {
+        r["bean_props"]["task-id"]: (
+            r["attributes"]["task-status"], r["attributes"]["task-worker-id"]
+        )
+        for r in rows
+    }
+    assert tasks == {"0": ("RUNNING", "w1:8083"), "1": ("FAILED", "w2:8083")}
+
+
+def test_connect_rest_truncated_listing_fails_only_its_endpoint(spark):
+    """A cut-off ``/connectors`` body is a failed fetch of that endpoint
+    (a 599 row), not an error that fails the poll for every target."""
+    cat = _brokers(["kafka1:49901"])
+    raw = read_jolokia(
+        spark,
+        cat,
+        fetcher="tests.fake_connect_and_jolokia:fetch_truncated_listing",
+        connect_endpoints=["http://connect1:8083"],
+    ).collect()
+    assert [(r["target_url"], r["http_status"]) for r in raw] == [
+        (cat[0][1], 200),
+        ("http://connect1:8083", 599),
+    ]
+    assert raw[1]["body"] is None
+
+
+def test_connect_snapshot_skips_unreadable_status():
+    """A status body that is not valid JSON, or not a JSON object,
+    skips its connector; the endpoint's other connectors stay."""
+    body = connect_snapshot_body("http://c:8083", "tests.fake_connect:fetch_bad_status")
+    assert list(json.loads(body)["value"]) == [
+        f"{REST},connector=jdbc-source,connector-type=source"
+    ]
 
 
 # --- Basic auth + TLS options (S3 auth; reference
@@ -300,20 +323,17 @@ def test_http_fetcher_sends_basic_auth(auth_server):
     )
 
 
-def test_connect_rest_scan_with_auth(spark, auth_server):
-    scan = connect_rest_scan(
-        spark,
-        [auth_server],
-        execution_ts=1700000000000,
-        user="scott",
-        password="tiger",
-    )
-    rows = scan.collect()
+def test_connect_rest_endpoint_with_auth(spark, auth_server):
+    """Basic auth reaches both phases of the Connect scan."""
+    rows = _connect_metrics(
+        spark, [auth_server], user="scott", password="tiger"
+    ).collect()
     assert len(rows) == 1
     assert rows[0]["attributes"]["task-status"] == "RUNNING"
-    # without creds the secured cluster yields nothing (every call 401s)
-    empty = connect_rest_scan(spark, [auth_server], execution_ts=1700000000000)
-    assert empty.count() == 0
+    # without creds the listing 401s: the endpoint's 599 row, no metrics
+    raw = read_jolokia(spark, [], connect_endpoints=[auth_server])
+    assert [r["http_status"] for r in raw.collect()] == [599]
+    assert normalize_scrapes(raw).count() == 0
 
 
 def test_jolokia_datasource_threads_auth_options(spark, auth_server):

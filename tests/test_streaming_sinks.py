@@ -236,24 +236,6 @@ def test_kafka_sink_options_match_reference_tuning():
     assert opts["kafka.linger.ms"] == "50"
 
 
-def test_with_connect_rest_merges_into_batch(metrics_batch):
-    from kafka_metrics_exporter_spark.streaming.pipeline import with_connect_rest
-
-    merged = with_connect_rest(
-        metrics_batch,
-        ["http://connect1:8083"],
-        fetcher="tests.fake_connect:fetch",
-        execution_ts=1700000000000,
-    )
-    rows = merged.collect()
-    assert len(rows) == 4 + 3  # 4 jolokia rows + 3 connect rows
-    domains = {r["bean_domain"] for r in rows}
-    assert "kafka.connect.api.rest" in domains and "kafka.server" in domains
-    # connect rows carry the same metrics schema (normalizable downstream)
-    connect = [r for r in rows if r["bean_domain"] == "kafka.connect.api.rest"]
-    assert all(r["server_type"] == "KafkaConnect" for r in connect)
-
-
 def test_latest_rollup_streaming_update_mode(spark, tmp_path):
     from kafka_metrics_exporter_spark.streaming.pipeline import (
         latest_rollup,

@@ -27,6 +27,14 @@ SERVER_ARG_TO_TYPE = {
     "ksql_servers": "KSQL",
 }
 
+# --jmx-*-poll-mbean dests (per-type pattern overrides)
+MBEAN_ARG_TO_TYPE = {
+    "zk_mbeans": "ZooKeeper",
+    "kafka_mbeans": "KafkaBroker",
+    "connect_mbeans": "KafkaConnect",
+    "ksql_mbeans": "KSQL",
+}
+
 JMX_POLL_FLOOR_SECS = 15  # reference Code/main.py:238-239
 
 
@@ -69,7 +77,8 @@ def build_parser() -> argparse.ArgumentParser:
                      dest="ksql_mbeans", metavar="kafka.*:*")
     # Connect REST basic auth + TLS (reference Code/main.py:159-163)
     src.add_argument("--enable-connect-rest-auth", action="store_true",
-                     help="send basic auth on Connect REST / Jolokia polls")
+                     help="send basic auth on Connect REST requests "
+                          "(never to Jolokia hosts)")
     src.add_argument("--connect-rest-auth-user", default=None)
     src.add_argument("--connect-rest-auth-pass", default=None)
     src.add_argument("--connect-tls-verify", action="store_true",
@@ -363,25 +372,6 @@ def run_query(args: argparse.Namespace, spark) -> int:
     return 0
 
 
-MBEAN_ARG_TO_TYPE = {
-    "zk_mbeans": "ZooKeeper",
-    "kafka_mbeans": "KafkaBroker",
-    "connect_mbeans": "KafkaConnect",
-    "ksql_mbeans": "KSQL",
-}
-
-
-def mbean_overrides(args: argparse.Namespace) -> dict[str, list[str]] | None:
-    """--jmx-*-poll-mbean → build_url_catalog's per-type mbeans dict
-    (reference Code/main.py:144-151); None = library defaults."""
-    out = {
-        stype: getattr(args, attr)
-        for attr, stype in MBEAN_ARG_TO_TYPE.items()
-        if getattr(args, attr)
-    }
-    return out or None
-
-
 def parse_selector_filters(items: list[str]) -> dict[str, str]:
     """--jmx-k8s-{label,field}-filter values ("k1=v1, k2=v2", may
     repeat) → selector dict (reference Code/main.py:130-133)."""
@@ -398,35 +388,6 @@ def parse_selector_filters(items: list[str]) -> dict[str, str]:
             k, v = pair.split("=", 1)
             out[k.strip()] = v.strip()
     return out
-
-
-def discovery_options(args: argparse.Namespace) -> dict:
-    """kwargs for streaming_metrics() wiring K8s discovery + auth; the
-    discovery entries are empty when --jmx-enable-k8s-discovery is off."""
-    opts: dict = {
-        "user": (args.connect_rest_auth_user
-                 if args.enable_connect_rest_auth else None),
-        "password": (args.connect_rest_auth_pass
-                     if args.enable_connect_rest_auth else None),
-        "tls_verify": args.connect_tls_verify,
-        "mbeans": mbean_overrides(args),
-        "common_mbeans": args.common_mbeans,
-    }
-    if args.jmx_enable_k8s_discovery:
-        kwargs: dict = {
-            "label_selectors": parse_selector_filters(args.k8s_label_filters),
-            "field_selectors": parse_selector_filters(args.k8s_field_filters),
-        }
-        if args.jmx_k8s_context:
-            kwargs["context"] = args.jmx_k8s_context
-        opts["discovery"] = args.jmx_k8s_provider
-        opts["discovery_kwargs"] = kwargs
-        opts["discovery_annotations"] = {
-            "enabled_annotation": args.k8s_ann_enabled,
-            "port_annotation": args.k8s_ann_port,
-            "server_type_annotation": args.k8s_ann_server_type,
-        }
-    return opts
 
 
 def run_curate(args: argparse.Namespace, spark) -> int:
@@ -546,7 +507,13 @@ def run_curate(args: argparse.Namespace, spark) -> int:
     return 0
 
 
-def build_catalog(args: argparse.Namespace) -> list[tuple[str, str]]:
+def scrape_source(args: argparse.Namespace) -> dict:
+    """The scrape flags as ``read_jolokia``'s keyword arguments, the
+    catalog included: the --jmx-*-server lists × MBean patterns (J1),
+    the Connect REST basic auth only with --enable-connect-rest-auth
+    (reference Code/main.py:159-163), and K8s discovery only with
+    --jmx-enable-k8s-discovery.  A setting left unset (None) is left
+    out, so ``read_jolokia``'s default applies."""
     from kafka_metrics_exporter_spark.sources.jolokia import build_url_catalog
 
     servers = {
@@ -560,13 +527,42 @@ def build_catalog(args: argparse.Namespace) -> list[tuple[str, str]]:
             "at least one source is required (--jmx-*-server / "
             "--connect-rest-endpoint / --jmx-enable-k8s-discovery)"
         )
-    if not servers:
-        return []
-    return build_url_catalog(
-        servers,
-        mbeans=mbean_overrides(args),
-        common_mbeans=args.common_mbeans,
-    )
+    # --jmx-*-poll-mbean (reference Code/main.py:144-151); None keeps
+    # the library defaults
+    mbeans = {
+        stype: getattr(args, attr)
+        for attr, stype in MBEAN_ARG_TO_TYPE.items()
+        if getattr(args, attr)
+    } or None
+    source: dict = {
+        "catalog": build_url_catalog(
+            servers, mbeans=mbeans, common_mbeans=args.common_mbeans
+        ),
+        "fetcher": args.fetcher,
+        "timeout": args.jmx_poll_timeout,
+        "connect_endpoints": args.connect_endpoints,
+        "tls_verify": args.connect_tls_verify,
+        "mbeans": mbeans,
+        "common_mbeans": args.common_mbeans,
+    }
+    if args.enable_connect_rest_auth:
+        source["user"] = args.connect_rest_auth_user
+        source["password"] = args.connect_rest_auth_pass
+    if args.jmx_enable_k8s_discovery:
+        kwargs: dict = {
+            "label_selectors": parse_selector_filters(args.k8s_label_filters),
+            "field_selectors": parse_selector_filters(args.k8s_field_filters),
+        }
+        if args.jmx_k8s_context:
+            kwargs["context"] = args.jmx_k8s_context
+        source["discovery"] = args.jmx_k8s_provider
+        source["discovery_kwargs"] = kwargs
+        source["discovery_annotations"] = {
+            "enabled_annotation": args.k8s_ann_enabled,
+            "port_annotation": args.k8s_ann_port,
+            "server_type_annotation": args.k8s_ann_server_type,
+        }
+    return {k: v for k, v in source.items() if v is not None}
 
 
 def sink_writers(args: argparse.Namespace) -> list:
@@ -655,7 +651,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             raise SystemExit(
                 f"--kafka-conn-props needs key=value, got {kv!r}"
             )
-    catalog = build_catalog(args)
+    source = scrape_source(args)
     spark = _session(spark)
 
     from kafka_metrics_exporter_spark.streaming.pipeline import (
@@ -664,14 +660,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         streaming_metrics,
     )
 
-    metrics = streaming_metrics(
-        spark,
-        catalog,
-        fetcher=args.fetcher,
-        timeout=args.jmx_poll_timeout,
-        connect_endpoints=args.connect_endpoints or None,
-        **discovery_options(args),
-    )
+    metrics = streaming_metrics(spark, **source)
     interval = max(args.poll_interval, JMX_POLL_FLOOR_SECS)
     query = for_each_batch(
         metrics,

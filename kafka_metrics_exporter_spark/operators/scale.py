@@ -1,24 +1,16 @@
-"""Scale patterns for skew and co-location (SURVEY §4 mapping).
+"""Salted aggregation for skewed keys (SURVEY §4 mapping).
 
-Two techniques the engine leans on at 100 TB, packaged as reusable
-operators with tests demonstrating the plan properties:
-
-- salted aggregation: a hot grouping key (one topic produces 40% of all
-  metrics) overwhelms a single reducer; salting splits each key into S
-  sub-keys for the partial aggregate and recombines in a second, tiny
-  aggregate.  AQE's skew handling covers joins — skewed *aggregations*
-  still need salting.
-- bucketed co-located joins: two fact tables bucketed on the join key
-  join with ZERO exchanges — the physical layout carries the
-  partitioning across jobs.  That is the difference between re-shuffling
-  100 TB every run and never shuffling it at all.
+A hot grouping key (one topic produces 40% of all metrics) overwhelms a
+single reducer; salting splits each key into S sub-keys for the partial
+aggregate and recombines in a second, tiny aggregate.  AQE's skew
+handling covers joins — skewed *aggregations* still need salting.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -68,27 +60,3 @@ def salted_sum_count(
         {"sum_value": F.sum(scaled), "n": F.count(F.lit(1))},
         salt_buckets,
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) on the join key.
-    Subsequent equi-joins between tables bucketed the same way need no
-    exchange — the layout IS the shuffle, paid once at write time."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two co-bucketed tables; with matching bucket specs Spark
-    plans a SortMergeJoin with no Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), on)

@@ -23,8 +23,7 @@ and numeric attributes for Connect rows exactly as for JMX rows.
 from __future__ import annotations
 
 import json
-
-from kafka_metrics_exporter_spark.sources.fetchers import resolve_fetcher
+from urllib.parse import quote
 
 BEAN_NAME = "kafka.connect.api.rest"
 BEAN_TYPE = "rest-api-metrics"
@@ -40,12 +39,7 @@ def _json(body: str | None):
         return None
 
 
-def connect_snapshot_body(
-    endpoint: str,
-    fetcher_ref: str,
-    timeout: float = 10.0,
-    fetcher_opts: dict | None = None,
-) -> str | None:
+def connect_snapshot_body(endpoint: str, get) -> str | None:
     """One endpoint's full status snapshot as a SYNTHETIC Jolokia
     wildcard-read body: ``{"request": {"mbean": "kafka.connect.api.
     rest:*"}, "value": {objectname: attrs, ...}}``.
@@ -56,20 +50,23 @@ def connect_snapshot_body(
     Code/JMXScraper.py:166-183) — here normalize_scrapes consumes the
     envelope with zero special-casing.
 
+    ``get(url) -> body | None`` is the source's fetcher with this
+    target's timeout and Connect options bound.  Each connector name is
+    URL-quoted into its status path, so ``my sink`` is fetched as
+    ``/connectors/my%20sink/status``.
+
     A listing that fails or is not a JSON list fails the whole endpoint
     (None: the source emits its 599 row).  A status body that fails or
     is not a JSON object skips that connector only, as the reference
     skips a failed scrape (Code/JMXScraper.py:163-165).
     """
-    fetcher = resolve_fetcher(fetcher_ref)
-    opts = fetcher_opts or {}
     base = endpoint.rstrip("/")
-    names = _json(fetcher(base + "/connectors", timeout, **opts))
+    names = _json(get(base + "/connectors"))
     if not isinstance(names, list):
         return None
     value: dict[str, dict] = {}
     for name in names:
-        doc = _json(fetcher(f"{base}/connectors/{name}/status", timeout, **opts))
+        doc = _json(get(f"{base}/connectors/{quote(str(name), safe='')}/status"))
         if not isinstance(doc, dict):
             continue
         key = (

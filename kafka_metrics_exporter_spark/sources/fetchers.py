@@ -3,10 +3,13 @@
 A fetcher is ``f(url: str, timeout: float, **opts) -> str | None``
 returning the response body (None on failure — a failed scrape is
 skipped, not retried in-cycle, like the reference
-Code/JMXScraper.py:163-165).  ``opts`` carries per-source connection
-options (``user``/``password`` for basic auth, ``tls_verify``) —
-the reference's session-level HTTPBasicAuth + ``session.verify``
-(Code/ConnectRESTMetrics.py:99-111) surfaced as source options.
+Code/JMXScraper.py:163-165).  ``opts`` carries the connection options
+the Jolokia source binds per target kind: ``tls_verify`` on every
+request, ``user``/``password`` basic auth on Connect REST requests only
+— the reference's HTTPBasicAuth + ``session.verify`` on its Connect
+session (Code/ConnectRESTMetrics.py:99-111).  An option that is not set
+is not passed, so a fetcher that takes only ``(url, timeout)`` serves a
+source with neither auth nor TLS verification.
 
 Fetchers are referenced by ``"module.path:attr"`` strings in source
 options so they survive pickling to executors.  The default is a

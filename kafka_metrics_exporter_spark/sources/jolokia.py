@@ -12,10 +12,15 @@ tasks on the cluster's cores, and a dead host costs one timeout per
 slice, not one per task; on a 1000-executor cluster the same code polls
 100k endpoints per trigger with no driver bottleneck.
 
-Batch:   spark.read.format("jolokia").option(...).load()
-Stream:  spark.readStream.format("jolokia")...  (one poll per micro-
-         batch; the reference's poll gate, Code/JMXScraper.py:186-197,
-         maps to trigger(processingTime=...)).
+``read_jolokia`` is the one way in: its keyword arguments are the
+source's settings, serialized once into the source's options and loaded
+back by the reader.  ``read_jolokia(..., streaming=True)`` polls once
+per micro-batch (the reference's poll gate, Code/JMXScraper.py:186-197,
+maps to trigger(processingTime=...)).  Fetch options are bound by target
+kind: ``tls_verify`` goes on every request, the basic-auth
+``user``/``password`` only on Connect REST requests, as the reference
+sets auth on its Connect session alone (Code/ConnectRESTMetrics.py:
+99-111).
 
 Rows use schema.RAW_SCRAPE_SCHEMA; pipe into operators.normalize_scrapes.
 """
@@ -25,6 +30,7 @@ from __future__ import annotations
 import itertools
 import json
 import time
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -100,12 +106,7 @@ def _slices(items: list, n: int) -> list[list]:
     return [items[a:b] for a, b in zip(bounds, bounds[1:])]
 
 
-def _read_partition(
-    part: _SlicePartition,
-    fetcher_ref: str,
-    timeout: float,
-    fetcher_opts: dict | None = None,
-):
+def _read_partition(part: _SlicePartition, settings: dict):
     from concurrent.futures import ThreadPoolExecutor
 
     # two-phase REST scan collapsed into a synthetic Jolokia body
@@ -115,14 +116,23 @@ def _read_partition(
     )
     from kafka_metrics_exporter_spark.sources.fetchers import resolve_fetcher
 
-    opts = fetcher_opts or {}
-    fetcher = resolve_fetcher(fetcher_ref)
+    fetcher, timeout = resolve_fetcher(settings["fetcher"]), settings["timeout"]
+    # fetch options per target kind: TLS verification on every request,
+    # basic auth on Connect REST only, like the reference's Connect
+    # session (Code/ConnectRESTMetrics.py:99-111); an unset option is
+    # not passed at all
+    jolokia_opts = {"tls_verify": True} if settings["tls_verify"] else {}
+    connect_opts = dict(jolokia_opts)
+    if settings["user"] is not None:
+        connect_opts.update(user=settings["user"], password=settings["password"])
 
     def fetch(target: tuple[str, str, str]) -> str | None:
         kind, _, url = target
         if kind == "connect":
-            return connect_snapshot_body(url, fetcher_ref, timeout, fetcher_opts=opts)
-        return fetcher(url, timeout, **opts)
+            return connect_snapshot_body(
+                url, lambda u: fetcher(u, timeout, **connect_opts)
+            )
+        return fetcher(url, timeout, **jolokia_opts)
 
     with ThreadPoolExecutor(min(len(part.targets), POLL_THREADS)) as pool:
         bodies = list(pool.map(fetch, part.targets))
@@ -134,91 +144,51 @@ def _read_partition(
 
 class _JolokiaReaderMixin:
     def __init__(self, options: dict):
-        self.options = options
-        catalog_json = options.get("catalog")
-        if not catalog_json:
-            raise ValueError(
-                "jolokia source requires .option('catalog', json) — "
-                "a JSON list of [server_type, url] pairs "
-                "(see build_url_catalog)"
-            )
-        self.catalog: list[tuple[str, str]] = [
-            (t, u) for t, u in json.loads(catalog_json)
-        ]
-        self.fetcher_ref = options.get(
-            "fetcher", "kafka_metrics_exporter_spark.sources.fetchers:http_fetcher"
-        )
-        self.timeout = float(options.get("timeout", "10"))
-        # slice count cap; read_jolokia sets it to the cluster's
-        # defaultParallelism, absent means one target per partition
-        self.parallelism = int(options.get("parallelism", "0"))
-        self.connect_endpoints: list[str] = json.loads(
-            options.get("connect_endpoints", "[]")
-        )
-        # basic auth + TLS verify (reference Code/ConnectRESTMetrics.py:
-        # 99-111: HTTPBasicAuth + session.verify, default off)
-        self.fetcher_opts: dict = {}
-        if "auth_user" in options:
-            self.fetcher_opts["user"] = options["auth_user"]
-            self.fetcher_opts["password"] = options.get("auth_password", "")
-        if options.get("tls_verify", "false").lower() in ("true", "1"):
-            self.fetcher_opts["tls_verify"] = True
-        # K8s pod discovery (S4, reference Code/main.py:120-133):
-        # `discovery` is a module:attr ref to a pod lister called with
-        # `discovery_kwargs` — the default CLI wiring points it at
-        # k8s_catalog.discover_pods_k8s.  Resolution happens in
-        # _partitions, i.e. ON EVERY TRIGGER, reproducing the
+        # read_jolokia's keyword arguments, as it serialized them
+        self.settings = {
+            **json.loads(options["settings"]),
+            "password": json.loads(options["password"]),
+        }
+        self.catalog = [(t, u) for t, u in self.settings["catalog"]]
+
+    def _discovered_catalog(self) -> list[tuple[str, str]]:
+        # K8s pod discovery (S4, reference Code/main.py:120-133): called
+        # from _partitions, i.e. ON EVERY TRIGGER, reproducing the
         # reference's per-cycle pod-list refresh (Code/main.py:274-282):
         # a pod added mid-stream joins the next micro-batch's scrape
         # set.  Catalog-sized, driver-side work, like the reference.
-        self.discovery_ref = options.get("discovery")
-        self.discovery_kwargs: dict = json.loads(
-            options.get("discovery_kwargs", "{}")
-        )
-        self.discovery_annotations: dict = json.loads(
-            options.get("discovery_annotations", "{}")
-        )
-        self.discovery_mbeans: dict = json.loads(options.get("mbeans", "{}"))
-        self.common_mbeans = (
-            json.loads(options["common_mbeans"])
-            if "common_mbeans" in options
-            else None
-        )
-
-    def _discovered_catalog(self) -> list[tuple[str, str]]:
         from kafka_metrics_exporter_spark.sources.fetchers import resolve_fetcher
         from kafka_metrics_exporter_spark.sources.k8s_catalog import (
             pods_to_catalog,
         )
 
-        lister = resolve_fetcher(self.discovery_ref)
-        pods = lister(**self.discovery_kwargs)
-        discovered = pods_to_catalog(pods, **self.discovery_annotations)
+        s = self.settings
+        pods = resolve_fetcher(s["discovery"])(**(s["discovery_kwargs"] or {}))
+        discovered = pods_to_catalog(pods, **(s["discovery_annotations"] or {}))
         return build_url_catalog(
-            discovered,
-            mbeans=self.discovery_mbeans or None,
-            common_mbeans=self.common_mbeans,
+            discovered, mbeans=s["mbeans"], common_mbeans=s["common_mbeans"]
         )
 
     def _partitions(self, execution_ts: int):
-        catalog = list(self.catalog)
-        if self.discovery_ref:
+        catalog = self.catalog
+        if self.settings["discovery"]:
             # CLI-provided ∪ freshly-discovered, deduped in order
             # (merge_server_lists semantics at URL granularity)
             catalog = list(
                 dict.fromkeys([*catalog, *self._discovered_catalog()])
             )
         targets = [("jolokia", t, u) for t, u in catalog]
-        targets += [("connect", "KafkaConnect", ep) for ep in self.connect_endpoints]
+        targets += [
+            ("connect", "KafkaConnect", ep)
+            for ep in self.settings["connect_endpoints"]
+        ]
         if not targets:
             return []
-        n = min(len(targets), self.parallelism or len(targets))
+        n = min(len(targets), self.settings["parallelism"])
         return [_SlicePartition(s, execution_ts) for s in _slices(targets, n)]
 
     def read(self, partition: _SlicePartition):
-        yield from _read_partition(
-            partition, self.fetcher_ref, self.timeout, self.fetcher_opts
-        )
+        yield from _read_partition(partition, self.settings)
 
 
 class JolokiaBatchReader(_JolokiaReaderMixin, DataSourceReader):
@@ -246,32 +216,20 @@ class JolokiaStreamReader(_JolokiaReaderMixin, DataSourceStreamReader):
 
 
 class JolokiaDataSource(DataSource):
-    """spark.read/readStream.format("jolokia")
+    """spark.read/readStream.format("jolokia"), configured by
+    ``read_jolokia``, which also documents the settings.
 
-    Options:
-      catalog       — JSON [[server_type, url], ...] (build_url_catalog)
-      fetcher       — "module:attr" fetcher ref (default stdlib urllib GET)
-      timeout       — per-call seconds (default 10, reference Code/main.py:117)
-      parallelism   — internal: the partition count cap; the targets are
-                      cut into min(#targets, parallelism) contiguous
-                      slices, each fetched on up to POLL_THREADS threads
-                      (read_jolokia passes defaultParallelism; absent,
-                      every target is its own partition)
-      auth_user     — basic-auth user (reference ConnectRESTMetrics.py:104-109)
-      auth_password — basic-auth password
-      tls_verify    — "true" to verify TLS certs (default false, like the
-                      reference's session.verify)
-      discovery     — "module:attr" pod-lister ref; resolved EVERY trigger
-                      so the scrape set follows the cluster (reference
-                      Code/main.py:274-282 per-cycle refresh)
-      discovery_kwargs      — JSON kwargs for the lister (label/field
-                              selectors, kube context)
-      discovery_annotations — JSON kwargs for pods_to_catalog (annotation
-                              name overrides, Code/main.py:124-129)
-      mbeans        — JSON {server_type: [pattern, ...]} per-type poll
-                      patterns for DISCOVERED servers
-                      (--jmx-*-poll-mbean, Code/main.py:144-151)
-      common_mbeans — JSON [pattern, ...] appended per discovered host
+    Options (internal; ``read_jolokia`` sets both):
+      settings — JSON object of read_jolokia's keyword arguments except
+                 ``password``, plus ``parallelism``: the partition count
+                 cap, the cluster's defaultParallelism.  The targets are
+                 cut into min(#targets, parallelism) contiguous slices,
+                 each fetched on up to POLL_THREADS threads.
+      password — JSON Connect REST password, an option of its own so
+                 that ``spark.redaction.regex`` masks it.
+
+    Each Jolokia GET carries ``tls_verify``; each Connect REST GET
+    carries ``tls_verify`` and the ``user``/``password`` basic auth.
     """
 
     @classmethod
@@ -295,10 +253,10 @@ def register_jolokia_source(spark: SparkSession) -> None:
 def read_jolokia(
     spark: SparkSession,
     catalog: list[tuple[str, str]],
-    fetcher: str | None = None,
+    fetcher: str = "kafka_metrics_exporter_spark.sources.fetchers:http_fetcher",
     timeout: float = 10.0,
     streaming: bool = False,
-    connect_endpoints: list[str] | None = None,
+    connect_endpoints: Sequence[str] = (),
     user: str | None = None,
     password: str | None = None,
     tls_verify: bool = False,
@@ -308,30 +266,46 @@ def read_jolokia(
     mbeans: dict | None = None,
     common_mbeans: list | None = None,
 ) -> DataFrame:
+    """Raw scrape rows (RAW_SCRAPE_SCHEMA) of one poll cycle, or a stream
+    of one poll cycle per micro-batch with ``streaming``.
+
+    catalog           — [(server_type, url), ...] (build_url_catalog)
+    fetcher           — "module:attr" fetcher ref (default stdlib urllib GET)
+    timeout           — per-call seconds (reference Code/main.py:117)
+    connect_endpoints — Kafka Connect REST base URLs, one target each
+    user, password    — basic auth for Connect REST requests only
+                        (reference ConnectRESTMetrics.py:104-109)
+    tls_verify        — verify TLS certs on every request (default off,
+                        like the reference's session.verify)
+    discovery         — "module:attr" pod-lister ref; resolved EVERY
+                        trigger so the scrape set follows the cluster
+                        (reference Code/main.py:274-282 per-cycle refresh)
+    discovery_kwargs  — kwargs for the lister (label/field selectors,
+                        kube context)
+    discovery_annotations — kwargs for pods_to_catalog (annotation name
+                        overrides, Code/main.py:124-129)
+    mbeans, common_mbeans — build_url_catalog's patterns for DISCOVERED
+                        servers (--jmx-*-poll-mbean, Code/main.py:144-151)
+    """
+    settings = {
+        "catalog": list(catalog),
+        "fetcher": fetcher,
+        "timeout": timeout,
+        "connect_endpoints": list(connect_endpoints),
+        "user": user,
+        "tls_verify": tls_verify,
+        "discovery": discovery,
+        "discovery_kwargs": discovery_kwargs,
+        "discovery_annotations": discovery_annotations,
+        "mbeans": mbeans,
+        "common_mbeans": common_mbeans,
+        "parallelism": spark.sparkContext.defaultParallelism,
+    }
     register_jolokia_source(spark)
     reader = spark.readStream if streaming else spark.read
-    r = (
+    return (
         reader.format("jolokia")
-        .option("catalog", json.dumps(list(catalog)))
-        .option("timeout", str(timeout))
-        .option("parallelism", str(spark.sparkContext.defaultParallelism))
+        .option("settings", json.dumps(settings))
+        .option("password", json.dumps(password))
+        .load()
     )
-    if fetcher:
-        r = r.option("fetcher", fetcher)
-    if connect_endpoints:
-        r = r.option("connect_endpoints", json.dumps(list(connect_endpoints)))
-    if user is not None:
-        r = r.option("auth_user", user).option("auth_password", password or "")
-    if tls_verify:
-        r = r.option("tls_verify", "true")
-    if discovery:
-        r = r.option("discovery", discovery).option(
-            "discovery_kwargs", json.dumps(discovery_kwargs or {})
-        ).option(
-            "discovery_annotations", json.dumps(discovery_annotations or {})
-        )
-        if mbeans:
-            r = r.option("mbeans", json.dumps(mbeans))
-        if common_mbeans is not None:
-            r = r.option("common_mbeans", json.dumps(list(common_mbeans)))
-    return r.load()

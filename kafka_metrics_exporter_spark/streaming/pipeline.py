@@ -33,44 +33,15 @@ from kafka_metrics_exporter_spark.sources.jolokia import read_jolokia
 
 
 def streaming_metrics(
-    spark: SparkSession,
-    catalog: list[tuple[str, str]],
-    fetcher: str | None = None,
-    timeout: float = 10.0,
-    connect_endpoints: list[str] | None = None,
-    user: str | None = None,
-    password: str | None = None,
-    tls_verify: bool = False,
-    discovery: str | None = None,
-    discovery_kwargs: dict | None = None,
-    discovery_annotations: dict | None = None,
-    mbeans: dict | None = None,
-    common_mbeans: list | None = None,
+    spark: SparkSession, catalog: list[tuple[str, str]], **source
 ) -> DataFrame:
     """Streaming normalized-metrics DataFrame: one poll cycle per
-    micro-batch over the scrape catalog; Connect REST endpoints ride
-    as extra source targets emitting synthetic Jolokia envelopes.
-    With ``discovery`` set (a module:attr pod-lister ref), the catalog
-    is re-resolved EVERY trigger — the reference's per-cycle K8s pod
-    refresh (Code/main.py:274-282): a pod added mid-stream appears in
-    the next micro-batch's scrape set."""
-    raw = read_jolokia(
-        spark,
-        catalog,
-        fetcher=fetcher,
-        timeout=timeout,
-        streaming=True,
-        connect_endpoints=connect_endpoints,
-        user=user,
-        password=password,
-        tls_verify=tls_verify,
-        discovery=discovery,
-        discovery_kwargs=discovery_kwargs,
-        discovery_annotations=discovery_annotations,
-        mbeans=mbeans,
-        common_mbeans=common_mbeans,
-    )
-    return normalize_scrapes(raw)
+    micro-batch over the scrape catalog.  ``source`` is
+    ``read_jolokia``'s keyword arguments: Connect REST endpoints ride as
+    extra targets emitting synthetic Jolokia envelopes, and with
+    ``discovery`` set the catalog is re-resolved EVERY trigger — the
+    reference's per-cycle K8s pod refresh (Code/main.py:274-282)."""
+    return normalize_scrapes(read_jolokia(spark, catalog, streaming=True, **source))
 
 
 def windowed_rollup(
@@ -112,34 +83,6 @@ def windowed_rollup(
             "sum_value",
             "max_value",
             "n_samples",
-        )
-    )
-
-
-def latest_rollup(metrics: DataFrame) -> DataFrame:
-    """A6 streaming form: latest sample per (server, host, mbean) —
-    Kibana's pervasive top_hits size=1 (reference ELK/jmx_dashboard
-    .json:88,186,242,452) as an update-mode streaming aggregate.
-
-    ``max_by(value-struct, (ts, tiebreak))`` keeps exactly one row of
-    state per series; emit with outputMode("update") so sinks receive a
-    row whenever a series' latest changes — the live-dashboard
-    semantics.  (The batch twin is operators.latest_per_key.)
-    """
-    ordering = F.struct(F.col("created_ts"), F.col("mbean_name"))
-    payload = F.struct(
-        F.col("created_ts").alias("latest_ts"),
-        F.col("num_attributes").alias("latest_attributes"),
-    )
-    return (
-        metrics.groupBy("server_type", "host_name", "mbean_name")
-        .agg(F.max_by(payload, ordering).alias("_latest"))
-        .select(
-            "server_type",
-            "host_name",
-            "mbean_name",
-            F.col("_latest.latest_ts").alias("latest_ts"),
-            F.col("_latest.latest_attributes").alias("latest_attributes"),
         )
     )
 
@@ -289,31 +232,6 @@ def kibana_panels(
             emit(name, plan.evaluate(df, **evaluate_kwargs), batch_id)
 
     return for_each_batch(stream, panels, checkpoint, trigger)
-
-
-def streaming_dedup(
-    docs: DataFrame,
-    key_cols: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup — the streaming twin of llmdata.dedup's
-    hash-groupBy (an ingest pipeline dedups as documents ARRIVE, not in
-    a nightly batch).  ``dropDuplicatesWithinWatermark`` keeps one row
-    per key and expires its per-key state once the watermark passes the
-    key's last sighting, so state is bounded by the dedup horizon —
-    O(keys per watermark window), not O(all keys ever) — which is what
-    makes it runnable forever on a 100 TB/day firehose.
-
-    Keys default to the md5 of the payload column ``text`` (digest
-    state, not bodies — same trick as the batch exact dedup).
-    """
-    if key_cols is None:
-        docs = docs.withColumn("text_hash", F.md5(F.col("text")))
-        key_cols = ["text_hash"]
-    return docs.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
 
 
 def cascade_rollup(

@@ -120,95 +120,3 @@ def streaming_rate(
             else GroupStateTimeout.NoTimeout
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming as-of alignment: the streaming twin of
-# operators/temporal.asof_join.  Reference rows (tag='r': config /
-# deploy / state-change events) update per-key state; sample rows
-# (tag='l') emit enriched with the latest reference at-or-before them.
-# Union the two tagged streams and feed the result here — state is one
-# (ts, value) pair per key, exactly the batch operator's carry column
-# materialized across micro-batches.
-# ---------------------------------------------------------------------------
-
-_ASOF_OUTPUT_SCHEMA = (
-    "k string, ts timestamp, value double, asof_ts timestamp, ref_value double"
-)
-_ASOF_STATE_SCHEMA = "ref_ts_us long, ref_value double"
-
-
-def _asof_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (k,) = key
-    ref_ts_us, ref_value = state.get if state.exists else (None, None)
-
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
-        return
-    # Within a batch, replay rows in event order; reference rows sort
-    # before samples at an equal timestamp (inclusive at-or-before),
-    # mirroring the batch union window's (_ATS, _SIDE) order.
-    batch = pd.concat(frames).dropna(subset=["ts"])  # NaT guard, as above
-    batch["_side"] = (batch["tag"] != "r").astype(int)  # refs first on ties
-    batch = batch.sort_values(["ts", "_side"], kind="mergesort")
-
-    out_rows = []
-    for _, row in batch.iterrows():
-        ts_us = int(row["ts"].value // 1000)
-        if row["tag"] == "r":
-            # late reference rows must not rewind the carried state
-            if ref_ts_us is None or ts_us >= ref_ts_us:
-                ref_ts_us, ref_value = ts_us, float(row["value"])
-            continue
-        out_rows.append(
-            {
-                "k": k,
-                "ts": row["ts"],
-                "value": float(row["value"]),
-                "asof_ts": (
-                    pd.Timestamp(ref_ts_us * 1000, unit="ns")
-                    if ref_ts_us is not None and ref_ts_us <= ts_us
-                    else pd.NaT
-                ),
-                "ref_value": (
-                    ref_value
-                    if ref_ts_us is not None and ref_ts_us <= ts_us
-                    else None
-                ),
-            }
-        )
-
-    state.update((ref_ts_us, ref_value))
-    yield pd.DataFrame(
-        out_rows,
-        columns=["k", "ts", "value", "asof_ts", "ref_value"],
-    )
-
-
-def streaming_asof(tagged: DataFrame) -> DataFrame:
-    """Stateful as-of alignment over a pre-tagged union stream with
-    columns ``(k string, ts timestamp, value double, tag string)``
-    where tag ∈ {'l' sample, 'r' reference}.
-
-    Output: one row per sample with the latest reference value
-    at-or-before it for the same key (null before the first
-    reference).  State per key is a single (ts, value) pair, expiring
-    never (references stay valid until replaced) — at 100 TB-of-stream
-    scale state size is O(#live keys), not O(#events).
-
-    Caveat (documented, inherent to micro-batching): a reference that
-    arrives in a LATER micro-batch than a sample it precedes
-    event-time-wise cannot retro-enrich that sample in append mode —
-    same contract as the reference's poll-cycle join semantics.
-    """
-    return tagged.groupBy("k").applyInPandasWithState(
-        _asof_fn,
-        outputStructType=_ASOF_OUTPUT_SCHEMA,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -9,7 +9,7 @@ import os
 import pytest
 from conftest import reference_path
 
-from kafka_metrics_exporter_spark.app import build_catalog, build_parser, main
+from kafka_metrics_exporter_spark.app import build_parser, main, scrape_source
 
 FAKE = "kafka_metrics_exporter_spark.sources.fetchers:fake_jolokia_fetcher"
 
@@ -29,7 +29,7 @@ def test_catalog_from_args():
         ["--jmx-kafka-server", "k1:49901", "--jmx-zk-server", "z1:8778",
          "--sink-parquet", "/tmp/x"]
     )
-    cat = build_catalog(args)
+    cat = scrape_source(args)["catalog"]
     types = {t for t, _ in cat}
     assert types == {"KafkaBroker", "ZooKeeper"}
     assert any(u.endswith("java.lang:type=Memory") for _, u in cat)
@@ -59,7 +59,8 @@ def test_once_cycle_to_parquet(spark, tmp_path):
 def jolokia_brokers():
     """Two local servers answering ``fake_jolokia_fetcher``'s Jolokia
     envelopes and ``tests/fake_connect.py``'s Connect REST API; yields
-    their ``host:port`` names and a Counter of GETs per URL, counted in
+    their ``host:port`` names, a Counter of GETs per URL and each URL's
+    list of ``Authorization`` headers (None where absent), recorded in
     the server (fetches run in worker processes)."""
     import collections
     import threading
@@ -68,6 +69,7 @@ def jolokia_brokers():
     from tests.fake_connect_and_jolokia import fetch
 
     gets: collections.Counter = collections.Counter()
+    auth: collections.defaultdict = collections.defaultdict(list)
     lock = threading.Lock()
 
     class Handler(BaseHTTPRequestHandler):
@@ -75,6 +77,7 @@ def jolokia_brokers():
             url = f"http://{self.headers['Host']}{self.path}"
             with lock:
                 gets[url] += 1
+                auth[url].append(self.headers.get("Authorization"))
             body = fetch(url)
             if body is None:
                 self.send_response(404)
@@ -93,7 +96,7 @@ def jolokia_brokers():
     for srv in servers:
         threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
-        yield [f"127.0.0.1:{srv.server_address[1]}" for srv in servers], gets
+        yield [f"127.0.0.1:{srv.server_address[1]}" for srv in servers], gets, auth
     finally:
         for srv in servers:
             srv.shutdown()
@@ -126,7 +129,7 @@ def test_once_cycle_scrapes_each_target_once_for_every_sink(
     with the same scrape time."""
     import kafka_metrics_exporter_spark.sinks.es_bulk as es_bulk
 
-    brokers, gets = jolokia_brokers
+    brokers, gets, _ = jolokia_brokers
     posted = tmp_path / "posted"
     posted.mkdir()
     monkeypatch.setattr(es_bulk, "http_bulk_poster", _file_poster(str(posted)))
@@ -138,7 +141,7 @@ def test_once_cycle_scrapes_each_target_once_for_every_sink(
         spark=spark,
     )
     assert rc == 0
-    catalog = build_catalog(build_parser().parse_args(argv))
+    catalog = scrape_source(build_parser().parse_args(argv))["catalog"]
     assert len(catalog) == 4
     assert dict(gets) == {url: 1 for _, url in catalog}
 
@@ -156,7 +159,7 @@ def test_once_cycle_merges_connect_rest_endpoint(spark, tmp_path, jolokia_broker
     listing is fetched once and each connector's status once, and its
     task rows and connector-only row land in the same batch as the
     broker's rows, keyed and normalized like JMX rows."""
-    (broker, connect), gets = jolokia_brokers
+    (broker, connect), gets, _ = jolokia_brokers
     argv = ["--jmx-kafka-server", broker]
     rc = main(
         argv + ["--connect-rest-endpoint", f"http://{connect}",
@@ -166,7 +169,7 @@ def test_once_cycle_merges_connect_rest_endpoint(spark, tmp_path, jolokia_broker
     )
     assert rc == 0
     rest = f"http://{connect}/connectors"
-    catalog = build_catalog(build_parser().parse_args(argv))
+    catalog = scrape_source(build_parser().parse_args(argv))["catalog"]
     assert dict(gets) == {
         **{url: 1 for _, url in catalog},
         rest: 1,
@@ -189,6 +192,41 @@ def test_once_cycle_merges_connect_rest_endpoint(spark, tmp_path, jolokia_broker
     # the broker's rows share the batch: one scrape time for all
     assert back.filter(back.server_type == "KafkaBroker").count() > 0
     assert back.select("created_ms").distinct().count() == 1
+
+
+def test_connect_auth_goes_only_to_connect_rest(spark, tmp_path, jolokia_brokers):
+    """--enable-connect-rest-auth sends Basic auth on the Connect
+    listing and on every status request, and no Authorization header to
+    the Jolokia broker: the reference sets auth on its Connect REST
+    session only (Code/ConnectRESTMetrics.py:99-111).  Each URL is
+    still fetched once per cycle."""
+    import base64
+
+    (broker, connect), gets, auth = jolokia_brokers
+    argv = ["--jmx-kafka-server", broker]
+    rc = main(
+        argv + ["--connect-rest-endpoint", f"http://{connect}",
+                "--enable-connect-rest-auth",
+                "--connect-rest-auth-user", "u",
+                "--connect-rest-auth-pass", "p",
+                "--sink-parquet", str(tmp_path / "out"),
+                "--checkpoint", str(tmp_path / "ckpt"), "--once"],
+        spark=spark,
+    )
+    assert rc == 0
+    rest = f"http://{connect}/connectors"
+    connect_urls = [rest, f"{rest}/jdbc-source/status", f"{rest}/s3-sink/status"]
+    broker_urls = [
+        url for _, url in scrape_source(build_parser().parse_args(argv))["catalog"]
+    ]
+    assert dict(gets) == {url: 1 for url in broker_urls + connect_urls}
+    basic = "Basic " + base64.b64encode(b"u:p").decode()
+    assert {url: auth[url] for url in connect_urls} == {
+        url: [basic] for url in connect_urls}
+    assert {url: auth[url] for url in broker_urls} == {
+        url: [None] for url in broker_urls}
+    back = spark.read.parquet(str(tmp_path / "out"))
+    assert back.filter(back.bean_domain == "kafka.connect.api.rest").count() == 3
 
 
 def test_kafka_sink_writes_each_batch_through_its_writer(spark, tmp_path, monkeypatch):
@@ -512,13 +550,12 @@ def test_k8s_discovery_counts_as_a_source(tmp_path):
     args = build_parser().parse_args(
         ["--jmx-enable-k8s-discovery", "--sink-parquet", "/tmp/x"]
     )
-    assert build_catalog(args) == []
+    assert scrape_source(args)["catalog"] == []
 
 
 def test_discovery_options_wiring():
     """CLI flags land in the streaming_metrics kwargs: selectors
     parsed, annotations forwarded, auth gated by its enable switch."""
-    from kafka_metrics_exporter_spark.app import discovery_options
 
     args = build_parser().parse_args([
         "--jmx-enable-k8s-discovery",
@@ -534,7 +571,7 @@ def test_discovery_options_wiring():
         "--jmx-kafka-poll-mbean", "kafka.server:*",
         "--sink-parquet", "/tmp/x",
     ])
-    opts = discovery_options(args)
+    opts = scrape_source(args)
     assert opts["discovery"].endswith(":discover_pods_k8s")
     assert opts["discovery_kwargs"] == {
         "label_selectors": {"app": "kafka", "tier": "broker"},
@@ -554,8 +591,8 @@ def test_discovery_options_wiring():
         ["--connect-rest-auth-user", "u1", "--sink-parquet", "/tmp/x",
          "--jmx-kafka-server", "k:1"]
     )
-    opts2 = discovery_options(args2)
-    assert opts2["user"] is None and "discovery" not in opts2
+    opts2 = scrape_source(args2)
+    assert opts2.get("user") is None and "discovery" not in opts2
 
 
 def test_mbean_override_reaches_catalog():
@@ -565,7 +602,7 @@ def test_mbean_override_reaches_catalog():
         "--jmx-default-bean", "java.lang:type=Threading",
         "--sink-parquet", "/tmp/x",
     ])
-    cat = build_catalog(args)
+    cat = scrape_source(args)["catalog"]
     urls = [u for _, u in cat]
     assert any(u.endswith("org.apache.ZooKeeperService:name0=*") for u in urls)
     assert any(u.endswith("java.lang:type=Threading") for u in urls)

@@ -141,6 +141,7 @@ def test_connect_rest_corpus_expr_end_to_end(spark):
     from kafka_metrics_exporter_spark.sources.connect_rest import (
         connect_snapshot_body,
     )
+    from tests import fake_connect
 
     url = "http://connect1:8083/jolokia/read/kafka.connect:*"
     rest = "http://connect1:8083"
@@ -161,7 +162,7 @@ def test_connect_rest_corpus_expr_end_to_end(spark):
                 "KafkaConnect",
                 T0_MS,
                 200,
-                connect_snapshot_body(rest, "tests.fake_connect:fetch"),
+                connect_snapshot_body(rest, fake_connect.fetch),
             ),
         ],
         RAW_SCRAPE_SCHEMA,

@@ -1,5 +1,6 @@
 """Scale-pattern proofs: salted aggregation equals the plain aggregate
-(with a skew-heavy input), and co-bucketed joins plan no exchanges."""
+(with a skew-heavy input), and a selective join gets a runtime bloom
+filter."""
 
 from __future__ import annotations
 
@@ -9,11 +10,7 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_metrics_exporter_spark.operators.scale import (
-    bucketed_join,
-    salted_sum_count,
-    write_bucketed,
-)
+from kafka_metrics_exporter_spark.operators.scale import salted_sum_count
 
 
 def test_salted_agg_matches_plain_agg(spark):
@@ -45,32 +42,6 @@ def test_salted_plan_has_two_aggregate_stages(spark):
     p = buf.getvalue()
     # stage-1 (keys+salt) and stage-2 (keys) aggregates, each partial+final
     assert p.count("HashAggregate") >= 4
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = spark.range(0, 10000).select(
-            F.col("id").alias("k"), (F.col("id") % 97).alias("a")
-        )
-        items = spark.range(0, 30000).select(
-            (F.col("id") % 10000).alias("k"), (F.col("id") % 13).alias("b")
-        )
-        write_bucketed(orders, "t_orders_b", "k", 8, sort_col="k")
-        write_bucketed(items, "t_items_b", "k", 8, sort_col="k")
-
-        joined = bucketed_join(spark, "t_orders_b", "t_items_b", "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        p = buf.getvalue()
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # co-located: layout replaces shuffle
-        assert joined.count() == 30000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_items_b")
 
 
 def test_runtime_bloom_filter_injected_on_selective_join(spark, tmp_path):

@@ -102,14 +102,6 @@ def test_jolokia_source_one_partition_per_core(spark):
         cat = _brokers([f"kafka{i}:49901" for i in range(n_hosts)])
         raw = read_jolokia(spark, cat, fetcher=FAKE_BOTH, connect_endpoints=ENDPOINTS)
         assert raw.rdd.getNumPartitions() == min(n_hosts + len(ENDPOINTS), p)
-    # without the parallelism option every target is its own partition
-    raw = (
-        spark.read.format("jolokia")
-        .option("catalog", json.dumps(cat))
-        .option("fetcher", FAKE_BOTH)
-        .load()
-    )
-    assert raw.rdd.getNumPartitions() == len(cat)
 
 
 def test_jolokia_source_rows_in_catalog_order(spark):
@@ -187,11 +179,11 @@ def test_connect_rest_import_leaves_pandas_unloaded():
 REST = "kafka.connect.api.rest:type=rest-api-metrics"
 
 
-def _connect_metrics(spark, endpoints, fetcher=None, **kw):
+def _connect_metrics(spark, endpoints, **kw):
     """Connect endpoints read by the Jolokia source, then normalized:
     the daemon's path from Connect REST to metric rows."""
     return normalize_scrapes(
-        read_jolokia(spark, [], fetcher=fetcher, connect_endpoints=endpoints, **kw)
+        read_jolokia(spark, [], connect_endpoints=endpoints, **kw)
     )
 
 
@@ -199,7 +191,7 @@ def test_connect_rest_endpoint_two_phase(spark):
     rows = {
         r["mbean_name"]: r
         for r in _connect_metrics(
-            spark, ["http://connect1:8083"], "tests.fake_connect:fetch"
+            spark, ["http://connect1:8083"], fetcher="tests.fake_connect:fetch"
         ).collect()
     }
     # s3-sink has 2 tasks → 2 task rows; jdbc-source has none → 1 row
@@ -218,7 +210,7 @@ def test_connect_rest_endpoint_two_phase(spark):
 
 def test_connect_rest_task_rows_keep_parent_fields(spark):
     rows = _connect_metrics(
-        spark, ["http://c:8083"], "tests.fake_connect:fetch_mixed_tasks"
+        spark, ["http://c:8083"], fetcher="tests.fake_connect:fetch_mixed_tasks"
     ).collect()
     assert len(rows) == 2
     assert all("connector=conn-a" in r["mbean_name"] for r in rows)
@@ -252,7 +244,9 @@ def test_connect_rest_truncated_listing_fails_only_its_endpoint(spark):
 def test_connect_snapshot_skips_unreadable_status():
     """A status body that is not valid JSON, or not a JSON object,
     skips its connector; the endpoint's other connectors stay."""
-    body = connect_snapshot_body("http://c:8083", "tests.fake_connect:fetch_bad_status")
+    from tests.fake_connect import fetch_bad_status
+
+    body = connect_snapshot_body("http://c:8083", fetch_bad_status)
     assert list(json.loads(body)["value"]) == [
         f"{REST},connector=jdbc-source,connector-type=source"
     ]
@@ -336,15 +330,68 @@ def test_connect_rest_endpoint_with_auth(spark, auth_server):
     assert normalize_scrapes(raw).count() == 0
 
 
-def test_jolokia_datasource_threads_auth_options(spark, auth_server):
-    """auth_user/auth_password options reach the executor-side fetcher."""
+def test_jolokia_targets_get_no_connect_credentials(spark, auth_server):
+    """``user``/``password`` are Connect REST credentials: a Jolokia
+    target on the same server is fetched without them (and so 401s),
+    while the Connect endpoint in the same read is authorized."""
     cat = [("KafkaBroker", auth_server + "/jolokia/read/java.lang:type=Memory")]
     rows = read_jolokia(
-        spark, cat, user="scott", password="tiger"
+        spark, cat, connect_endpoints=[auth_server], user="scott", password="tiger"
     ).collect()
-    assert len(rows) == 1 and rows[0]["http_status"] == 200
-    denied = read_jolokia(spark, cat).collect()
-    assert denied[0]["http_status"] == 599  # fetch failed without creds
+    assert [(r["target_url"], r["http_status"]) for r in rows] == [
+        (cat[0][1], 599),
+        (auth_server, 200),
+    ]
+
+
+@pytest.fixture
+def spaced_connect():
+    """Local Connect REST server listing one connector named ``my
+    sink``; it percent-decodes request paths, as Connect's server does."""
+    import threading
+    import urllib.parse
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    bodies = {
+        "/connectors": ["my sink"],
+        "/connectors/my sink/status": {
+            "name": "my sink",
+            "type": "sink",
+            "connector": {"state": "RUNNING", "worker_id": "w1:8083"},
+            "tasks": [{"id": 0, "state": "RUNNING", "worker_id": "w1:8083"}],
+        },
+    }
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            body = bodies.get(urllib.parse.unquote(self.path))
+            if body is None:
+                self.send_response(404)
+                self.end_headers()
+                return
+            data = json.dumps(body).encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+        def log_message(self, *a):  # quiet
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_address[1]}"
+    srv.shutdown()
+    srv.server_close()
+
+
+def test_connect_name_with_space_is_url_quoted(spark, spaced_connect):
+    """A connector named ``my sink`` is fetched as ``my%20sink`` and
+    yields its rows; the raw name would make an invalid URL and the
+    connector would be skipped."""
+    rows = _connect_metrics(spark, [spaced_connect]).collect()
+    assert [(r["bean_props"]["connector"], r["attributes"]["task-status"])
+            for r in rows] == [("my sink", "RUNNING")]
 
 
 # --- K8s catalog -----------------------------------------------------------

@@ -64,110 +64,6 @@ def test_rate_state_spans_microbatches(spark, tmp_path, n_batches):
     assert out["2024-01-01 00:00:40"] == pytest.approx(2.0)
 
 
-def test_streaming_asof_state_spans_microbatches(spark, tmp_path):
-    """streaming_asof: reference state carries across micro-batches —
-    a sample in batch 2 is enriched by the reference from batch 1; a
-    late reference does not rewind state; samples before any reference
-    emit nulls."""
-    from kafka_metrics_exporter_spark.streaming.stateful import streaming_asof
-
-    src = tmp_path / "asof_src"
-    src.mkdir()
-    batches = [
-        # batch 1: sample before any ref (null), then ref v=1, sample after
-        [
-            ("k1", "2024-01-01 00:00:00", 10.0, "l"),
-            ("k1", "2024-01-01 00:00:05", 1.0, "r"),
-            ("k1", "2024-01-01 00:00:10", 20.0, "l"),
-        ],
-        # batch 2: sample enriched by batch-1 ref, then ref v=2, tie-ts sample
-        [
-            ("k1", "2024-01-01 00:00:20", 30.0, "l"),
-            ("k1", "2024-01-01 00:00:25", 2.0, "r"),
-            ("k1", "2024-01-01 00:00:25", 40.0, "l"),  # tie: inclusive
-        ],
-        # batch 3: LATE ref (event-time before the carried one) must not rewind
-        [
-            ("k1", "2024-01-01 00:00:15", 9.0, "r"),
-            ("k1", "2024-01-01 00:00:30", 50.0, "l"),
-        ],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "k string, ts_s string, value double, tag string"
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"b{i}"))
-
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema("k string, ts_s string, value double, tag string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "b*"))
-        .withColumn("ts", F.col("ts_s").cast("timestamp"))
-        .select("k", "ts", "value", "tag")
-    )
-    out_df = streaming_asof(stream)
-    q = (
-        out_df.writeStream.format("memory")
-        .queryName("asof_state")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "asof_ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        str(r["ts"]): (r["ref_value"], str(r["asof_ts"]) if r["asof_ts"] else None)
-        for r in spark.sql("SELECT * FROM asof_state").collect()
-    }
-    assert len(got) == 5
-    assert got["2024-01-01 00:00:00"] == (None, None)  # before first ref
-    assert got["2024-01-01 00:00:10"] == (1.0, "2024-01-01 00:00:05")
-    assert got["2024-01-01 00:00:20"] == (1.0, "2024-01-01 00:00:05")  # cross-batch
-    assert got["2024-01-01 00:00:25"] == (2.0, "2024-01-01 00:00:25")  # tie inclusive
-    assert got["2024-01-01 00:00:30"] == (2.0, "2024-01-01 00:00:25")  # no rewind
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """streaming_dedup: duplicate payloads across micro-batches within
-    the watermark horizon emit once; distinct payloads all survive."""
-    from kafka_metrics_exporter_spark.streaming.pipeline import streaming_dedup
-
-    src = tmp_path / "dedup_src"
-    src.mkdir()
-    batches = [
-        [(1, "2024-01-01 00:00:00", "alpha"), (2, "2024-01-01 00:00:01", "beta")],
-        # batch 2: dup of alpha (suppressed), new gamma (kept)
-        [(3, "2024-01-01 00:00:02", "alpha"), (4, "2024-01-01 00:00:03", "gamma")],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "doc_id bigint, ts_s string, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(src / f"b{i}"))
-
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, ts_s string, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "b*"))
-        .withColumn("ts", F.col("ts_s").cast("timestamp"))
-    )
-    out = streaming_dedup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT text, count(*) AS n FROM dedup_stream GROUP BY text").collect()
-    got = {r["text"]: r["n"] for r in rows}
-    assert got == {"alpha": 1, "beta": 1, "gamma": 1}
-
-
 def test_streaming_cascade_rollup(spark, tmp_path):
     """Chained-window cascade: coarse tier aggregates the fine tier's
     windows (window_time), matching a direct aggregation of the raw."""

@@ -236,39 +236,6 @@ def test_kafka_sink_options_match_reference_tuning():
     assert opts["kafka.linger.ms"] == "50"
 
 
-def test_latest_rollup_streaming_update_mode(spark, tmp_path):
-    from kafka_metrics_exporter_spark.streaming.pipeline import (
-        latest_rollup,
-        streaming_metrics,
-    )
-
-    cat = build_url_catalog({"KafkaBroker": ["kafka1:49901"]}, common_mbeans=[])
-    metrics = streaming_metrics(spark, cat, fetcher=FAKE)
-    q = (
-        latest_rollup(metrics)
-        .writeStream.format("memory")
-        .queryName("latest_smoke")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM latest_smoke").collect()
-    assert len(rows) >= 1
-    assert all(r["latest_ts"] is not None for r in rows)
-
-
-def test_latest_rollup_batch_semantics(metrics_batch):
-    from kafka_metrics_exporter_spark.streaming.pipeline import latest_rollup
-
-    out = {r["host_name"]: r for r in latest_rollup(metrics_batch).collect()}
-    assert len(out) == 2
-    for r in out.values():
-        # newest poll (Count=200) wins
-        assert r["latest_attributes"]["Count"] == 200.0
-
-
 def test_daily_parquet_partition_pruning(spark, tmp_path):
     """The daily-parquet stand-in must give date-filtered queries real
     partition pruning: a one-day filter's scan shows a PartitionFilters
